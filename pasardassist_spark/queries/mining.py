@@ -215,7 +215,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every shuffle and join in the iteration carries an 8-byte key with
     # cheap hashing instead of a variable-length string — the display
     # form ('c<k>'/'s<k>') is built once at the output edge over O(nodes)
-    # rows. Measured at 10x edges (tools/round18_scale.py): the
+    # rows. Measured at 10x edges (tools/scale.py --reps 10): the
     # string-keyed plan ran 5.6x at 10x; long keys cut both scales.
     base = (
         li.join(o, li.l_orderkey == o.o_orderkey)
@@ -236,7 +236,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the checkpointed LogicalRDD drops outputPartitioning/outputOrdering,
     # so every iteration's sort-merge join RE-SHUFFLED and RE-SORTED the
     # full edge-sized frame (measured 7.2x wall at 10x edges,
-    # tools/round18_scale.py); the InMemoryRelation keeps both
+    # tools/scale.py --reps 10); the InMemoryRelation keeps both
     # properties, so each round's join needs ZERO exchange and ZERO sort
     # on the big side — only the node-sized ranks frame moves. Cache
     # hygiene: bench/sweep clearCache between entries (the cache manager

@@ -1,33 +1,24 @@
-"""Cache-discipline contract (r19 item 9): after a sweep-style entry —
-run query, consume result, release — the session holds ZERO lingering
-cached RDDs, including localCheckpoint blocks that clearCache alone
-leaves pinned."""
+"""Cache-discipline contract (r19 item 9): after release_all at a query
+boundary the session holds ZERO lingering cached RDDs, including
+localCheckpoint blocks that clearCache alone leaves pinned."""
 
 from __future__ import annotations
 
-import os
-
 from pasardassist_spark.caching import lingering_rdds, release_all
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 
 
 def test_release_drops_persisted_and_checkpointed(spark):
-    from pasardassist_spark.queries import all_queries
-
-    qs = all_queries()
+    """The test owns its precondition: one frame it persists and one it
+    localCheckpoints (the two pinning kinds operators leave behind), not a
+    registered query whose internals could stop pinning either."""
     release_all(spark)  # clean slate regardless of fixture history
-    # dedup_clusters persists (minhash band frame via connected
-    # components' internals) AND localCheckpoints (CC rounds) — the
-    # worst-case cache producer among the registered queries.
-    qs["dedup_clusters"](spark, SF_DIR).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    assert lingering_rdds(spark) > 0, (
-        "expected the entry to pin cache blocks (persist/localCheckpoint)"
-    )
+    persisted = spark.range(1000).persist()
+    persisted.count()
+    checkpointed = spark.range(1000).localCheckpoint(eager=True)
+    assert lingering_rdds(spark) == 2
     release_all(spark)
     assert lingering_rdds(spark) == 0
+    del persisted, checkpointed
 
 
 def test_clearcache_alone_leaves_checkpoint_blocks(spark):

@@ -9,8 +9,11 @@ artifact (SWEEP_r{N}.json), so each round carries a fresh 287/287 proof
 instead of an r6-era one.
 
 Usage:
-    python tools/full_sweep.py SWEEP_r16.json [sf_dir ...]
-    # default sf_dirs: /root/testdata/sf0.01 /root/testdata/sf0.1
+    python tools/full_sweep.py SWEEP_r16.json [sf_dir ...] [--only NAME ...]
+    # default sf_dirs: the sf0.01 and sf0.1 test tables (TESTDATA.md)
+
+``--only`` re-checks just the named queries (an optimization's touched
+set); a name that is not registered exits non-zero before any Spark work.
 
 Rows-only entries (no oracle SQL) get the driver's weaker check: the query
 runs and its row count and schema are recorded. Results stream to
@@ -30,6 +33,7 @@ hash gate for such names stands at sf0.01 (and in the driver record).
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -38,29 +42,44 @@ import time
 import traceback
 
 ORACLE_BUDGET_S = 120.0
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def main() -> int:
-    out = sys.argv[1] if len(sys.argv) > 1 else "SWEEP.json"
-    sf_dirs = sys.argv[2:] or ["/root/testdata/sf0.01", "/root/testdata/sf0.1"]
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("out", nargs="?", default="SWEEP.json")
+    ap.add_argument("sf_dirs", nargs="*")
+    ap.add_argument("--only", nargs="+", metavar="NAME")
+    args = ap.parse_args()
+    out = args.out
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     import duckdb
 
     from pasardassist_spark import get_spark
     from pasardassist_spark.queries.registry import REGISTRY, _load_all
-    from pasardassist_spark.tables import TABLES
+    from pasardassist_spark.tables import DEFAULT_SF_DIR, TABLES
     from tests import oracle_compare as oc
 
+    testdata = os.path.dirname(os.path.normpath(DEFAULT_SF_DIR))
+    sf_dirs = args.sf_dirs or [
+        os.path.join(testdata, "sf0.01"), os.path.join(testdata, "sf0.1")
+    ]
     _load_all()
+    names = sorted(args.only or REGISTRY)
+    unknown = [n for n in names if n not in REGISTRY]
+    if unknown:
+        print(f"not registered queries: {unknown}", file=sys.stderr)
+        return 2
     spark = get_spark(app_name="full-sweep")
-    names = sorted(REGISTRY)
     results: dict[str, dict] = {}
     if os.path.exists(out + ".jsonl"):  # resume past recorded GREEN names
         with open(out + ".jsonl") as f:
             for line in f:
                 rec = json.loads(line)
                 nm = rec.pop("name")
+                if nm not in names:
+                    continue
                 # only green rows are resumable: a query fixed after a red
                 # sweep must RE-RUN, not carry its stale red into the
                 # regenerated artifact (r17 review)
