@@ -269,9 +269,18 @@ def a11_collection_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     db.service.ts:226-274). Here: ONE job, one shuffle — count, distinct
     owners, conditional volume sum, and min price per supplier (stand-in
     collection), then a broadcast join to the supplier dimension."""
-    li = load(spark, sf_dir, "lineitem")
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    s = load(spark, sf_dir, "supplier")
+    return collection_stats(
+        load(spark, sf_dir, "lineitem"),
+        load(spark, sf_dir, "orders"),
+        load(spark, sf_dir, "supplier"),
+    )
+
+
+def collection_stats(li: DataFrame, o: DataFrame, s: DataFrame) -> DataFrame:
+    """The a11 body over lineitem, orders and supplier frames — plain
+    parquet (the registry query) or the bucketed silver tables
+    (``sources.lake.a11_collection_stats_bucketed``)."""
+    o = o.select("o_orderkey", "o_custkey")
     disc_price = _disc_price()
     zero = F.lit(0).cast("decimal(18,4)")
     stats = (

@@ -157,7 +157,13 @@ def j2_composite_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2: composite-key equi-join — order_events ⟕ orders on (chain,
     baseToken, orderId) (app.service.ts:866-896). Both sides hash-partition
     on the same composite key: one shuffle, reused by the join."""
-    li = load(spark, sf_dir, "lineitem")
+    return composite_key_join(load(spark, sf_dir, "lineitem"))
+
+
+def composite_key_join(li: DataFrame) -> DataFrame:
+    """The j2 body over a lineitem frame — plain parquet (the registry
+    query) or silver bucketed by (l_partkey, l_suppkey)
+    (``sources.lake.j2_composite_key_bucketed``)."""
     g = li.groupBy("l_partkey", "l_suppkey").agg(
         F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("double").alias("ps_qty")
     )

@@ -119,7 +119,6 @@ def st9_lsm_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from pasardassist_spark.operators.latest import latest_per_key
     from pasardassist_spark.streaming import (
         append_into_bucketed_state,
         read_lsm_state,
@@ -143,27 +142,6 @@ def st9_lsm_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(rows, out.schema)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-
-
-def latest_state_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ST4/A6 batch view: entity state as latest-event-per-key (the order
-    state machine Created->{Filled,Cancelled}, tasks.service.ts:367-373,
-    585-591, is equivalently the argmax event per key).  Registry-wise this
-    is merged into ``st4_entity_fold``, whose associative fold subsumes the
-    argmax + per-key aggregates; kept as a helper for the replay-equals-batch
-    pytest (§5.2) and as the simplest statement of the invariant."""
-    ev = load(spark, sf_dir, "events")
-    latest = latest_per_key(ev, ["user_id"], [F.desc("ts"), F.desc("event_id")]).select(
-        "user_id",
-        F.col("event_type").alias("last_event_type"),
-        F.col("value").alias("last_value"),
-        F.col("ts").alias("last_ts"),
-    )
-    aggs = ev.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum(dec2("value")).cast("double").alias("total_value"),
-    )
-    return latest.join(aggs, "user_id")
 
 
 @query(

@@ -1,6 +1,8 @@
 """SparkSession factory — BOTH deployment profiles as code.
 
-``profile="local"`` (default): local[$SPARK_GRAFT_CPUS] for tests/bench.
+``profile="local"`` (default): local[$SPARK_GRAFT_CPUS] for tests/bench;
+unset, the core count is the cores this process may run on
+(``os.sched_getaffinity``).
 ``profile="cluster"``: the same engine sized for the 100 TB deployment
 target (r17 VERDICT #3 — this used to live in comments): shuffle
 parallelism 3x total executor cores (AQE coalesces the excess after
@@ -22,7 +24,7 @@ from pyspark.sql import SparkSession
 
 
 def _cpus() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def broadcast_threshold(largest_dim_bytes: int | None) -> int:

@@ -36,10 +36,6 @@ def write_bucketed(
     )
 
 
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
-
-
 # --- standing silver layout for the hot fact-fact paths ---------------------
 #
 # The two slowest warm queries in the bench (a11_collection_stats and
@@ -47,35 +43,14 @@ def read_table(spark: SparkSession, table: str) -> DataFrame:
 # every run. On a real lake the silver layer is WRITTEN bucketed by the join
 # key once, and every subsequent query consumes the bucketing in place —
 # amortized across thousands of runs, which is exactly the reference's cron
-# workload shape (statisticCollectionItems every 10 min). These helpers
-# materialize that layout; the bench times the query-on-bucketed path
-# separately from the plain-parquet path so both numbers are visible.
+# workload shape (statisticCollectionItems every 10 min). prepare_silver
+# materializes that layout as catalog tables; a consumer reads one by name
+# with ``spark.table("silver_…")``. ``tables.load()`` never substitutes
+# them: the registry queries read plain parquet, and the ``*_bucketed``
+# functions below feed the silver frames into the same query bodies, so the
+# bench times both layouts side by side.
 
 SILVER_BUCKETS = 8  # local test knob; O(10k) at 100 TB, AQE coalesces reads
-
-# Canonical silver layout per base table: the bucket key every consumer of
-# tables.load() gets for free once prepare_silver has run. One layout per
-# table (the dominant join key); specialized layouts (lineitem by
-# (partkey, suppkey) for the j2 self-join) stay dedicated read paths.
-_CANONICAL_SILVER = {
-    "orders": "silver_orders_by_ok",
-    "lineitem": "silver_lineitem_by_ok",
-}
-
-# catalog table -> sf_dir it was built from. The guard that makes the
-# load()-level preference safe: silver is only substituted for a plain
-# parquet read of the SAME sf_dir (tests hop between sf0.001/sf0.01/sf0.1
-# within one session).
-_SILVER_SF: dict[str, str] = {}
-
-
-def silver_table_for(spark: SparkSession, name: str, sf_dir: str) -> str | None:
-    """The catalog name of the prepared canonical silver layout for base
-    table ``name`` at ``sf_dir``, or None if absent/stale/other-sf."""
-    t = _CANONICAL_SILVER.get(name)
-    if t is None or _SILVER_SF.get(t) != sf_dir:
-        return None
-    return t if spark.catalog.tableExists(t) else None
 
 
 def _reset_silver(spark: SparkSession, tables: tuple[str, ...]) -> None:
@@ -87,35 +62,18 @@ def _reset_silver(spark: SparkSession, tables: tuple[str, ...]) -> None:
 
     warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
     for t in tables:
-        _SILVER_SF.pop(t, None)
         spark.sql(f"DROP TABLE IF EXISTS {t}")
         if warehouse:
             shutil.rmtree(f"{warehouse}/{t}", ignore_errors=True)
 
 
-def clear_silver_default(spark: SparkSession) -> None:
-    """Forget the load()-level silver preference (plan-shape tests that
-    compare plain vs bucketed layouts call this to restore the plain
-    baseline; the tables stay in the catalog for explicit read_table use)."""
-    for t in _CANONICAL_SILVER.values():
-        _SILVER_SF.pop(t, None)
-
-
-def prepare_silver(
-    spark: SparkSession,
-    sf_dir: str,
-    n_buckets: int = SILVER_BUCKETS,
-    make_default: bool = True,
-) -> None:
-    """One-time silver write: orders+lineitem bucketed by orderkey (the a11
-    join key) and lineitem bucketed by (partkey, suppkey) (the j2 self-join
-    and group key). Idempotent per session.
-
-    With ``make_default`` (the production posture), tables.load() serves
-    the canonical layouts in place of plain parquet for this sf_dir — every
-    orderkey join in the query mix becomes Exchange-free without callers
-    opting in. Pass False to keep the layouts as explicit read paths only
-    (bench/plan tests that need the plain baseline for comparison)."""
+def prepare_silver(spark: SparkSession, sf_dir: str) -> None:
+    """One-time silver write of ``sf_dir``'s facts as three catalog tables:
+    ``silver_orders_by_ok`` and ``silver_lineitem_by_ok`` bucketed by
+    orderkey (the a11 join key), and ``silver_lineitem_by_ps`` bucketed by
+    (partkey, suppkey) (the j2 self-join and group key). Idempotent per
+    session. Read them by name with ``spark.table``; ``tables.load()`` keeps
+    reading the plain parquet files."""
     _reset_silver(
         spark, ("silver_orders_by_ok", "silver_lineitem_by_ok", "silver_lineitem_by_ps")
     )
@@ -124,64 +82,29 @@ def prepare_silver(
 
     li = load(spark, sf_dir, "lineitem")
     o = load(spark, sf_dir, "orders")
-    write_bucketed(o, "silver_orders_by_ok", ["o_orderkey"], n_buckets)
-    write_bucketed(li, "silver_lineitem_by_ok", ["l_orderkey"], n_buckets)
+    write_bucketed(o, "silver_orders_by_ok", ["o_orderkey"], SILVER_BUCKETS)
+    write_bucketed(li, "silver_lineitem_by_ok", ["l_orderkey"], SILVER_BUCKETS)
     write_bucketed(
-        li, "silver_lineitem_by_ps", ["l_partkey", "l_suppkey"], n_buckets
+        li, "silver_lineitem_by_ps", ["l_partkey", "l_suppkey"], SILVER_BUCKETS
     )
-    if make_default:
-        for t in _CANONICAL_SILVER.values():
-            _SILVER_SF[t] = sf_dir
 
 
 def a11_collection_stats_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """a11 flagship on the silver layout: the lineitem⋈orders join consumes
-    bucket partitioning in place (zero Exchange on the join — plan-tested);
-    the only remaining shuffle is the l_suppkey aggregation."""
-    from pyspark.sql import functions as F
-
-    from pasardassist_spark.queries.aggregates import _disc_price
+    """a11 on the silver layout: the lineitem⋈orders join consumes bucket
+    partitioning in place (zero Exchange on the join — plan-tested)."""
+    from pasardassist_spark.queries.aggregates import collection_stats
     from pasardassist_spark.tables import load
 
-    li = read_table(spark, "silver_lineitem_by_ok")
-    o = read_table(spark, "silver_orders_by_ok").select("o_orderkey", "o_custkey")
-    s = load(spark, sf_dir, "supplier")
-    disc_price = _disc_price()
-    zero = F.lit(0).cast("decimal(18,4)")
-    stats = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy("l_suppkey")
-        .agg(
-            F.count(F.lit(1)).alias("items"),
-            F.countDistinct("o_custkey").alias("owners"),
-            F.sum(F.when(F.col("l_linestatus") == "F", disc_price).otherwise(zero))
-            .cast("double")
-            .alias("trade_volume"),
-            F.min(F.when(F.col("l_returnflag") != "A", F.col("l_extendedprice"))).alias(
-                "lowest_price"
-            ),
-        )
-    )
-    return stats.join(F.broadcast(s), stats.l_suppkey == s.s_suppkey).select(
-        "s_suppkey", "s_name", "items", "owners", "trade_volume", "lowest_price"
-    )
+    li, o = spark.table("silver_lineitem_by_ok"), spark.table("silver_orders_by_ok")
+    return collection_stats(li, o, load(spark, sf_dir, "supplier"))
 
 
 def j2_composite_key_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """j2 on the silver layout: lineitem bucketed by (l_partkey, l_suppkey)
-    makes BOTH the group-by partial aggregation and the self-join consume
-    the bucket partitioning — the whole query plans with zero Exchange."""
-    from pyspark.sql import functions as F
+    """j2 on lineitem bucketed by (l_partkey, l_suppkey): the group-by and
+    the self-join both consume the bucketing — zero Exchange."""
+    from pasardassist_spark.queries.relational import composite_key_join
 
-    li = read_table(spark, "silver_lineitem_by_ps")
-    g = li.groupBy("l_partkey", "l_suppkey").agg(
-        F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("double").alias("ps_qty")
-    )
-    return (
-        li.join(g, ["l_partkey", "l_suppkey"])
-        .filter(F.col("ps_qty") > 100)
-        .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey", "ps_qty")
-    )
+    return composite_key_join(spark.table("silver_lineitem_by_ps"))
 
 
 # --- entity silver: the API layer's default read path -----------------------
@@ -202,16 +125,13 @@ ENTITY_SILVER = {
 
 
 def prepare_entity_silver(
-    spark: SparkSession,
-    tokens: DataFrame,
-    orders: DataFrame,
-    n_buckets: int = SILVER_BUCKETS,
+    spark: SparkSession, tokens: DataFrame, orders: DataFrame
 ) -> None:
     """Write the API entity frames as the bucketed silver layout. One-time
     (per ingest generation) on a real lake; idempotent per session here."""
     _reset_silver(spark, tuple(ENTITY_SILVER))
-    write_bucketed(tokens, "silver_tokens", ENTITY_SILVER["silver_tokens"], n_buckets)
-    write_bucketed(orders, "silver_orders", ENTITY_SILVER["silver_orders"], n_buckets)
+    for table, df in (("silver_tokens", tokens), ("silver_orders", orders)):
+        write_bucketed(df, table, ENTITY_SILVER[table], SILVER_BUCKETS)
 
 
 def write_date_partitioned(df: DataFrame, path: str, ts_col: str = "ts") -> None:

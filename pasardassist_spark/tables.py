@@ -126,15 +126,8 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     _ship_package(spark)
-    # Prefer the prepared bucketed silver layout (sources/lake.py) over the
-    # plain parquet dir: same rows, but the scan carries hash-partitioning
-    # metadata that makes the dominant joins Exchange-free. Only substituted
-    # when prepare_silver(make_default=True) ran for THIS sf_dir.
-    from pasardassist_spark.sources import lake
-
-    silver = lake.silver_table_for(spark, name, sf_dir)
-    if silver is not None:
-        return spark.table(silver)
+    # Always the parquet file: bucketed silver tables (sources/lake.py) are
+    # read by name with spark.table, never substituted here.
     if name == "events":
         # Some generations of events.parquet carry TIMESTAMP(NANOS); Spark
         # refuses that type unless nanosAsLong is set. Harmless for files
@@ -178,9 +171,3 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 # that benefit from staying at the scan.
                 df = df.filter(F.spark_partition_id() >= 0)
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view (for the SQL API path)."""
-    for name in TABLES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)

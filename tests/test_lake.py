@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from pasardassist_spark.plans import plan, shuffle_count
-from pasardassist_spark.sources.lake import read_table, write_bucketed
+from pasardassist_spark.sources.lake import write_bucketed
 from pasardassist_spark.tables import load
 
 
@@ -20,7 +20,7 @@ def test_bucketed_join_is_shuffle_free(spark, sf_dir, tmp_path):
         li.withColumnRenamed("l_orderkey", "o_orderkey"), "bkt_lineitem", ["o_orderkey"], 8
     )
 
-    bo, bl = read_table(spark, "bkt_orders"), read_table(spark, "bkt_lineitem")
+    bo, bl = spark.table("bkt_orders"), spark.table("bkt_lineitem")
     joined = bo.join(bl, "o_orderkey").groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n")
     )
@@ -55,7 +55,7 @@ def test_silver_bucketed_query_variants(spark, sf_dir):
         prepare_silver,
     )
 
-    prepare_silver(spark, sf_dir, make_default=False)  # plain-vs-bucketed comparison needs the plain baseline
+    prepare_silver(spark, sf_dir)
     try:
         j2b = j2_composite_key_bucketed(spark, sf_dir)
         assert shuffle_count(plan(j2b)) == 0, plan(j2b)
@@ -77,6 +77,27 @@ def test_silver_bucketed_query_variants(spark, sf_dir):
         assert {tuple(r) for r in a11b.collect()} == {
             tuple(r) for r in a11_collection_stats(spark, sf_dir).collect()
         }
+    finally:
+        for t in (
+            "silver_orders_by_ok",
+            "silver_lineitem_by_ok",
+            "silver_lineitem_by_ps",
+        ):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_prepare_silver_leaves_load_on_parquet(spark, sf_dir):
+    """prepare_silver only writes catalog tables: load() keeps scanning the
+    sf_dir parquet files — no silver table, no bucket spec in its plan."""
+    from pasardassist_spark.sources.lake import prepare_silver
+
+    prepare_silver(spark, sf_dir)
+    try:
+        for name in ("orders", "lineitem"):
+            p = plan(load(spark, sf_dir, name))
+            assert f"{sf_dir}/{name}.parquet]" in p, p
+            assert "silver_" not in p, p
+            assert "Bucketed" not in p and "SelectedBucketsCount" not in p, p
     finally:
         for t in (
             "silver_orders_by_ok",
@@ -176,10 +197,10 @@ def test_cdc_diff_on_bucketed_snapshots_is_exchange_free(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
-    from pasardassist_spark.sources.lake import prepare_silver, read_table
+    from pasardassist_spark.sources.lake import prepare_silver
 
-    prepare_silver(spark, sf_dir, make_default=False)  # keep later plan tests on the plain baseline
-    o = read_table(spark, "silver_orders_by_ok")
+    prepare_silver(spark, sf_dir)
+    o = spark.table("silver_orders_by_ok")
     price = F.col("o_totalprice").cast("decimal(18,2)")
     a = o.where(F.col("o_orderdate") < "1998-01-01").select(
         "o_orderkey", price.alias("price")

@@ -991,3 +991,30 @@ def test_privacy_kanon_scan_prunes_to_qi(spark, sf_dir):
     p = plan(REGISTRY["privacy_k_anonymity"].fn(spark, sf_dir))
     (schema,) = read_schemas(p)
     assert schema == {"c_nationkey", "c_mktsegment"}
+
+
+def test_documents_fence_keeps_heavy_filter_above_fanout(spark, sf_dir):
+    """The documents pushdown fence (tables.load): once the single-row-group
+    file is fanned out, a heavy text predicate must plan ABOVE the
+    RoundRobin Exchange — spread over the fan-out partitions, not run in
+    the one scan task — while column pruning still reaches the scan."""
+    from pyspark.sql import functions as F
+
+    from pasardassist_spark.tables import _max_scan_tasks, load
+
+    path = f"{sf_dir}/documents.parquet"
+    if _max_scan_tasks(path) >= spark.sparkContext.defaultParallelism:
+        pytest.skip("documents is not fanned out at this parallelism")
+    heavy = F.size(F.split(F.lower(F.col("text")), r"\s+")) > 20
+    df = load(spark, sf_dir, "documents").filter(heavy).select("doc_id")
+    lines = plan(df, "simple").splitlines()
+    (fanout,) = [
+        i for i, ln in enumerate(lines) if "Exchange RoundRobinPartitioning" in ln
+    ]
+    gates = [
+        i for i, ln in enumerate(lines)
+        if re.search(r"\bFilter \(", ln) and "split(lower(text" in ln
+    ]
+    assert gates and all(i < fanout for i in gates), "\n".join(lines)
+    (schema,) = read_schemas(plan(df))
+    assert schema == {"doc_id", "text"}
