@@ -6,7 +6,9 @@
 
 The full run times the HEADLINE queries (one cold and two warm passes), the
 extras pass, the library-operator rows and the ANN block, prints ONE
-summary JSON line and writes the full record to BENCH_LAST.json.
+summary JSON line and writes the full record to BENCH_LAST.json. When an
+ANN row's recall@10 is below the previous record at the same sf and cpus,
+it exits non-zero and leaves BENCH_LAST.json as it was.
 
 The subset run takes the same warm-up and the same timed passes (one cold,
 two warm, the q1 control at the head of each pass) over NAME... only and
@@ -212,6 +214,21 @@ def run_subset(names: list[str]) -> None:
         "cpus": spark.sparkContext.defaultParallelism,
     }))
     spark.stop()
+
+
+def recall_drops(ann: dict, prev: dict) -> dict[str, dict]:
+    """The ANN rows whose recall@10 fell below the previous record's.
+
+    ``prev`` is the BENCH_LAST.json record taken at the same sf and cpus
+    (empty when there is none). A drop is a silent quality regression
+    that no timing flag sees, so ``main`` exits non-zero on any."""
+    before = prev.get("ann") or {}
+    return {
+        name: {"prev": p, "cur": row["recall10"]}
+        for name, row in ann.items()
+        if (p := (before.get(name) or {}).get("recall10")) is not None
+        and row["recall10"] < p
+    }
 
 
 def main() -> None:
@@ -456,6 +473,7 @@ def main() -> None:
         # record against 32-core priors flagged 14 false real_suspects);
         # don't fake deltas
         prev = {}
+    recall_gate = recall_drops(ann, prev)
     prev_times = {**prev.get("queries_warm", {}), **prev.get("queries_extra", {})}
     cur_times = {**warm, **extras}
 
@@ -555,6 +573,7 @@ def main() -> None:
         "regressions_vs": prev.get("round"),
         "host_control": host_control,
         "extras_budget": extras_budget,
+        "ann_recall_drops": recall_gate,
     }
 
     # The driver records only the LAST 2000 characters of stdout and parses
@@ -576,6 +595,7 @@ def main() -> None:
         "extras_total": extras_total,
         "extras_budget": extras_budget,
         "ann": ann,
+        "ann_recall_drops": recall_gate,
         "regressions_n": len(regressions),
         "regressions_real_suspect": sorted(
             n for n, r in regressions.items() if r["verdict"] == "real_suspect"
@@ -596,6 +616,13 @@ def main() -> None:
         summary.pop("queries", None)
         line = json.dumps(summary, separators=(",", ":"))
     print(line)
+
+    # Recall gate: a lower recall@10 than the previous same-sf, same-cpus
+    # record fails the run and leaves that record as the anchor, so the
+    # next run is compared with it again.
+    if recall_gate:
+        print(f"ANN recall@10 dropped: {recall_gate}", file=sys.stderr)
+        sys.exit(1)
 
     # Full record for next run's comparison (best-effort: a read-only
     # checkout must not break the bench output). Only the canonical sf0.1

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W, functions as F
 
 from pasardassist_spark.operators.packing import exclusive_prefix_sum
+from pasardassist_spark.tables import local_frame
 
 _KEY_SHIFT = 1 << 40  # composite rank key: length * SHIFT + id
 
@@ -157,7 +158,8 @@ def pack_bfd(
     blocks, n_packs = _layout_blocks(strategies)
     spark = df.sparkSession
     bdf = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             blocks or [(0, 0, 0, 0, 1)],
             "n_tokens long, s long, e long, off long, mu long",
         )

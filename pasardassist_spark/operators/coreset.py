@@ -33,6 +33,8 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from pasardassist_spark.tables import local_frame
+
 CHECKPOINT_EVERY = 4
 
 
@@ -91,6 +93,6 @@ def kcenter_table(
         (rank, int(i), round(rad, 6))
         for rank, i, rad in kcenter_greedy(df, vec_col, id_col, k)
     ]
-    return spark.createDataFrame(
-        rows, schema="rank INT, center_id BIGINT, radius_before DOUBLE"
+    return local_frame(
+        spark, rows, schema="rank INT, center_id BIGINT, radius_before DOUBLE"
     )

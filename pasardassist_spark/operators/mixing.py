@@ -21,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 
+from pasardassist_spark.tables import local_frame
+
 
 def unimax_allocation(
     sizes: DataFrame,
@@ -48,8 +50,8 @@ def unimax_allocation(
     caps = s.select(
         "k", "s", (F.col("s") * cap_epochs).cast("long").alias("c")
     )
-    sentinel = caps.sparkSession.createDataFrame(
-        [(None, 0, 0)], "k string, s long, c long"
+    sentinel = local_frame(
+        caps.sparkSession, [(None, 0, 0)], "k string, s long, c long"
     )
     w = W.orderBy("c", "k")
     ranked = (

@@ -11,6 +11,15 @@
   query probes L partitions instead of scanning the corpus; recall tunes
   with L and B.
 
+- ``ivf_topk`` / ``ivfpq_topk``: trained indexes (k-means coarse lists,
+  OPQ-rotated product-quantization codes). Training runs on the driver over
+  an id-ordered sample; assignment and encoding are the map passes over the
+  corpus. The query side stays on the driver too: the few query vectors are
+  collected once, IVF-PQ rotates them and computes each query's ADC lookup
+  table in Python, and they return to the plan as one local frame
+  (``tables.local_frame``), so a search against a stored index starts no
+  Python worker and broadcasts nothing read from the corpus.
+
 Dot products use built-in higher-order functions (zip_with + aggregate):
 JVM-evaluated, sequential fold => deterministic. Cosines are rounded to 6
 decimals *before* ranking so rank order is reproducible across engines.
@@ -23,6 +32,8 @@ import random
 
 import pandas as pd  # module-level: pandas_udf resolves string type hints here
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions as F
+
+from pasardassist_spark.tables import local_frame
 
 LSH_SEED = 42
 # 4 tables x 6 planes: on the driver's near-random gaussian embeddings
@@ -105,8 +116,10 @@ def random_projection_buckets(
     wants MORE NARROW tables (collision probability per table must be high
     because a missed pair is gone — there is no query to re-probe)."""
     spark = emb.sparkSession
-    planes = spark.createDataFrame(
-        hyperplanes(dim, LSH_SEED, n_tables, n_planes), "tbl int, plane int, w array<double>"
+    planes = local_frame(
+        spark,
+        hyperplanes(dim, LSH_SEED, n_tables, n_planes),
+        "tbl int, plane int, w array<double>",
     )
     e = emb.select(F.col(id_col), as_double(F.col(vec_col)).alias("v"))
     bit = F.when(dot(F.col("v"), F.col("w")) > 0, 1).otherwise(0)
@@ -296,10 +309,16 @@ def _collect_training_matrix(
     """Sample → driver numpy matrix. Bounded: target x dim doubles (100k x
     64 ≈ 50 MB) regardless of corpus size — the FAISS model, where codebook
     / coarse-quantizer TRAINING is single-node work over a sample and only
-    assignment/encode passes touch the full corpus distributed."""
+    assignment/encode passes touch the full corpus distributed.
+
+    Rows are sorted by id on the driver: k-means++ seeds by row index and
+    a collect returns rows in partition order, so unsorted, the centroids
+    (and every search result) would depend on how the corpus is
+    partitioned."""
     import numpy as np
 
-    pdf = _training_sample(e.select(F.col(vec_col)), id_col, target).toPandas()
+    sample = _training_sample(e.select(F.col(id_col), F.col(vec_col)), id_col, target)
+    pdf = sample.toPandas().sort_values(id_col, kind="stable")
     return np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
 
 
@@ -381,7 +400,8 @@ def ivf_assignments(
     X = _collect_training_matrix(e, id_col, "v")
     C = _kmeans_numpy(X, n_lists, IVF_SEED)
     spark = emb.sparkSession
-    centroids = spark.createDataFrame(
+    centroids = local_frame(
+        spark,
         [(i, [float(x) for x in c]) for i, c in enumerate(C)],
         "list_id int, center array<double>",
     )
@@ -399,7 +419,9 @@ def assign_lists(
     split, factored out so incremental index maintenance (streaming
     arrivals assigned against frozen centroids) and the one-shot build
     share one definition. ``centroids`` is O(n_lists) rows — a driver
-    collect here is metadata, not data."""
+    collect here is metadata, not data; built by ``ivf_assignments`` it is
+    a local frame, so the collect runs no Spark job. The Python work is the
+    ``nearest_list`` pandas UDF over the corpus, once per build."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
@@ -418,6 +440,19 @@ def assign_lists(
 
     e = emb.select(F.col(id_col), as_double(F.col(vec_col)).alias("v"))
     return e.select(F.col(id_col), nearest_list("v").alias("list_id"))
+
+
+def _query_rows(e: DataFrame, query_ids: list[int], id_col: str) -> list[tuple]:
+    """The (id, v) rows of the query ids, collected once and sorted by id.
+    A search has a handful of queries: their vectors belong on the driver,
+    and the plan gets them back as a local frame (never a broadcast of the
+    corpus scan they were filtered from)."""
+    picked = e.filter(F.col(id_col).isin(query_ids)).select(id_col, "v")
+    return sorted((r[0], r[1]) for r in picked.collect())
+
+
+def _query_schema(e: DataFrame, id_col: str) -> str:
+    return f"q_id {e.schema[id_col].dataType.simpleString()}, qv array<double>"
 
 
 def ivf_topk(
@@ -442,8 +477,8 @@ def ivf_topk(
     if assignments is None or centroids is None:
         assignments, centroids = ivf_assignments(emb, n_lists, id_col, vec_col)
     e = emb.select(F.col(id_col), as_double(F.col(vec_col)).alias("v"))
-    q = e.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("q_id"), F.col("v").alias("qv")
+    q = local_frame(
+        emb.sparkSession, _query_rows(e, query_ids, id_col), _query_schema(e, id_col)
     )
     probe_w = W.partitionBy("q_id").orderBy(
         F.desc("c_cos"), F.asc("list_id")
@@ -467,10 +502,9 @@ def ivf_topk(
         .select("q_id", F.col(id_col).alias("neighbor_id"))
         .distinct()
     )
-    qv = e.select(F.col(id_col).alias("q_id"), F.col("v").alias("qv"))
     nv = e.select(F.col(id_col).alias("neighbor_id"), F.col("v").alias("nv"))
     scored = (
-        cand.join(F.broadcast(qv), "q_id")
+        cand.join(F.broadcast(q), "q_id")
         .join(nv, "neighbor_id")
         .select(
             "q_id",
@@ -798,6 +832,23 @@ def pq_encode(
     return e.select(F.col(id_col), encode("v").alias("codes"))
 
 
+def _adc_table(x: list[float], books: list[list[list[float]]], sub: int) -> list[float]:
+    """One query's ADC lookup table: ``lut[s*K + j] = dot(x_s, books[s][j])``
+    for subspace slice ``x_s`` of the (rotated) query. Folded left to right
+    from 0.0 as :func:`dot` folds in the JVM — IEEE doubles and no fused
+    multiply-add on either side — so it is bit-identical to the same table
+    computed by a Spark expression."""
+    lut = []
+    for s, book in enumerate(books):
+        xs = x[s * sub : (s + 1) * sub]
+        for c in book:
+            acc = 0.0
+            for a, b in zip(xs, c):
+                acc = acc + a * b
+            lut.append(acc)
+    return lut
+
+
 def ivfpq_topk(
     emb: DataFrame,
     query_ids: list[int],
@@ -833,11 +884,18 @@ def ivfpq_topk(
     Per stage at 100 TB:
     - index = (id, list_id, codes): built once, bucketed by list_id; the
       scan that serves queries reads codes, never the raw vectors.
-    - the per-query lookup table (m x pq_k partial dots) is tiny and rides
-      a broadcast join; ADC itself is one JVM `aggregate` over the codes
-      array with `element_at` into the table — zero Python per candidate.
+    - query side, on the driver: the query vectors are collected once
+      (sorted by id), rotated with ``x @ R.T``, and each query's lookup
+      table (m x pq_k partial dots, ``_adc_table``) is folded exactly as
+      the JVM ``dot`` folds. ``(q_id, qv, lut)`` enters the plan as one
+      local frame that the probe, ADC and refine joins broadcast — no
+      Python worker and no corpus-side broadcast at search time.
+    - ADC itself is one JVM `aggregate` over the codes array with
+      `element_at` into the table — zero Python per candidate.
     - only refine*k rows per query ever touch raw vectors again.
     """
+    import numpy as np
+
     sub = dim // m
     if books is None:
         books = pq_codebooks(
@@ -849,53 +907,20 @@ def ivfpq_topk(
         codes = pq_encode(emb, books, id_col, vec_col, rotation)
     index = assignments.join(codes, id_col)
 
-    spark = emb.sparkSession
     e = _l2_normalize(
         emb.select(F.col(id_col), as_double(F.col(vec_col)).alias("v"))
     )
-    q = e.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("q_id"), F.col("v").alias("qv")
-    )
+    rows = _query_rows(e, query_ids, id_col)
+    # the ADC lookup table slices the ROTATED query (codes live in rotated
+    # space); probes and refine keep the original vectors — IVF centroids
+    # are unrotated and R preserves exact cosine.
+    X = np.array([v for _, v in rows], dtype=np.float64).reshape(len(rows), dim)
     if rotation is not None:
-        # the ADC lookup table must slice the ROTATED query (codes live in
-        # rotated space); probes and refine keep the original vectors —
-        # IVF centroids are unrotated and R preserves exact cosine.
-        import numpy as np
-        from pyspark.sql.functions import pandas_udf
-
-        _R = np.asarray(rotation, dtype=np.float64)
-
-        @pandas_udf("array<double>")
-        def _rot(v: pd.Series) -> pd.Series:
-            x = np.stack(v.to_numpy()) @ _R.T
-            return pd.Series(list(x))
-
-        q = q.withColumn("qv_lut", _rot("qv"))
-    else:
-        q = q.withColumn("qv_lut", F.col("qv"))
-
-    # Per-query ADC lookup table: lut[s*pq_k + j] = dot(q_sub_s, books[s][j]).
-    book_rows = [
-        (s, j, books[s][j]) for s in range(m) for j in range(pq_k)
-    ]
-    book_df = spark.createDataFrame(book_rows, "s int, j int, c array<double>")
-    lut = (
-        F.broadcast(q)
-        .crossJoin(F.broadcast(book_df))
-        .select(
-            "q_id",
-            (F.col("s") * pq_k + F.col("j")).alias("slot"),
-            dot(
-                F.slice("qv_lut", F.col("s") * sub + 1, sub), F.col("c")
-            ).alias("pd"),
-        )
-        .groupBy("q_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("slot", "pd"))),
-                lambda x: x["pd"],
-            ).alias("lut")
-        )
+        X = X @ np.asarray(rotation, dtype=np.float64).T
+    q = local_frame(
+        emb.sparkSession,
+        [(i, v, _adc_table(x, books, sub)) for (i, v), x in zip(rows, X.tolist())],
+        _query_schema(e, id_col) + ", lut array<double>",
     )
 
     # IVF probe selection (same as ivf_topk): n_probe nearest centroids.
@@ -918,7 +943,7 @@ def ivfpq_topk(
         F.broadcast(probes)
         .join(index, "list_id")
         .filter(F.col(id_col) != F.col("q_id"))
-        .join(F.broadcast(lut), "q_id")
+        .join(F.broadcast(q.select("q_id", "lut")), "q_id")
         .select(
             "q_id",
             F.col(id_col).alias("neighbor_id"),
@@ -941,10 +966,9 @@ def ivfpq_topk(
     )
 
     # Exact refine: only refine*k rows per query read raw vectors.
-    qv = e.select(F.col(id_col).alias("q_id"), F.col("v").alias("qv"))
     nv = e.select(F.col(id_col).alias("neighbor_id"), F.col("v").alias("nv"))
     scored = (
-        shortlist.join(F.broadcast(qv), "q_id")
+        shortlist.join(F.broadcast(q.select("q_id", "qv")), "q_id")
         .join(nv, "neighbor_id")
         .select(
             "q_id",

@@ -41,6 +41,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from pasardassist_spark.tables import local_frame
+
 MAX_PIECE_LEN = 8
 
 
@@ -414,7 +416,8 @@ def vocab_table(spark: SparkSession, probs: dict[str, float]) -> DataFrame:
         ((p, math.log(v)) for p, v in probs.items()),
         key=lambda r: (-round(r[1], 6), r[0]),
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (i + 1, p, round(lp, 6), len(p))
             for i, (p, lp) in enumerate(rows)

@@ -31,7 +31,7 @@ from pasardassist_spark.queries.text import (
     _STOP_SQL,
     _TOKS_SQL,
 )
-from pasardassist_spark.tables import load
+from pasardassist_spark.tables import load, local_frame
 
 MIN_SCORE = 0.4  # keep medium-or-better quality (see text_quality buckets)
 PACK_BUDGET = 512  # tokens per packed training sequence
@@ -2126,7 +2126,8 @@ def curate_robots_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     rules = rules_for(ROBOTS_TXT, ROBOTS_UA)
-    rules_df = spark.createDataFrame(
+    rules_df = local_frame(
+        spark,
         [
             (kind, pat, pattern_to_regex(pat), len(pat))
             for kind, pat in rules

@@ -33,7 +33,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pasardassist_spark.queries.registry import query
-from pasardassist_spark.tables import load
+from pasardassist_spark.tables import load, local_frame
 
 _OUT_SCHEMA = (
     "doc_id long, part_no int, n_parts int, n_chars long, part_md5 string"
@@ -2288,7 +2288,7 @@ def streaming_docgate_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         shutil.rmtree(state_dir, ignore_errors=True)
         shutil.rmtree(admitted_dir, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 # --------------------------------------- attachment-recursion composite

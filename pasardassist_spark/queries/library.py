@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from pasardassist_spark.queries.registry import query
-from pasardassist_spark.tables import load
+from pasardassist_spark.tables import load, local_frame
 
 
 # ------------------------------------------------------------- CEP ------
@@ -261,7 +261,7 @@ def drift_psi_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
         import shutil
 
         shutil.rmtree(state_dir, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 # ------------------------------------------------------- record linkage -
@@ -456,7 +456,7 @@ def cdc_state_travel_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         schema = d.schema
     finally:
         shutil.rmtree(state_dir, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 # ------------------------------------------------- drift trajectory -----

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from pasardassist_spark.operators.skyline import skyline
 from pasardassist_spark.queries.registry import query
-from pasardassist_spark.tables import load
+from pasardassist_spark.tables import load, local_frame
 
 # ---------------------------------------------------------------- skyline
 
@@ -1005,9 +1005,10 @@ def ml_logreg_irls(spark: SparkSession, sf_dir: str) -> DataFrame:
          float(round(b / s, 4)), int(n))
         for name, b, s in zip(names, beta, se)
     ]
-    return spark.createDataFrame(
-        rows, "feature string, beta double, std_err double, "
-              "z double, n_rows long"
+    return local_frame(
+        spark,
+        rows,
+        "feature string, beta double, std_err double, z double, n_rows long",
     )
 
 
@@ -1121,7 +1122,7 @@ def graph_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         counts.append((h, frontier.count()))
         visited = visited.unionByName(frontier).localCheckpoint(eager=True)
-    return spark.createDataFrame(counts, "hop int, n_new long")
+    return local_frame(spark, counts, "hop int, n_new long")
 
 
 LINKPRED_TOP_K = 100
@@ -1465,7 +1466,8 @@ def ml_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("cluster")
     )
-    norms = spark.createDataFrame(
+    norms = local_frame(
+        spark,
         [
             (j, round(sum(x * x for x in c) ** 0.5, 6))
             for j, c in enumerate(cents)
@@ -1552,8 +1554,8 @@ def ml_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
                         cal,
                     )
                 )
-    return spark.createDataFrame(
-        out, "bin_id int, n long, raw_rate double, calibrated double"
+    return local_frame(
+        spark, out, "bin_id int, n long, raw_rate double, calibrated double"
     )
 
 

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from pasardassist_spark.operators import privacy as P
 from pasardassist_spark.queries.registry import query
-from pasardassist_spark.tables import load
+from pasardassist_spark.tables import load, local_frame
 
 QI = ("c_nationkey", "c_mktsegment")
 K_ANON = 5
@@ -329,7 +329,7 @@ def streaming_kanon_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the readout is lazily planned over {tmp}/state parquet, so the
         # state dir must outlive the returned DataFrame's first action —
         # materialize the small readout before removing it
-        out = spark.createDataFrame(out.collect(), out.schema)
+        out = local_frame(spark, out.collect(), out.schema)
         return out
     finally:
         shutil.rmtree(tmp, ignore_errors=True)

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pasardassist_spark.operators.latest import latest_per_key, top_k_per_key
 from pasardassist_spark.operators.pagination import count_and_page, paginate
 from pasardassist_spark.queries.registry import query
-from pasardassist_spark.tables import load
+from pasardassist_spark.tables import load, local_frame
 
 
 # ---------------------------------------------------------------------------
@@ -111,7 +111,8 @@ def f8_key_tuples(spark: SparkSession, sf_dir: str) -> DataFrame:
     semi-join against a literal key DataFrame, which scales to key lists far
     beyond what an OR-chain predicate could."""
     li = load(spark, sf_dir, "lineitem")
-    keys = spark.createDataFrame(
+    keys = local_frame(
+        spark,
         [(1, 1), (2, 1), (3, 2), (10, 1), (42, 1)],
         "l_orderkey long, l_linenumber int",
     )

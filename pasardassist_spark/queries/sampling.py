@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from pasardassist_spark.queries.registry import query
-from pasardassist_spark.tables import load
+from pasardassist_spark.tables import load, local_frame
 
 SAMPLE_BP = 1000  # basis points of 10000 => 10% gate
 CLASS_CAP = 50
@@ -87,8 +87,8 @@ def mix_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle of the corpus at 100 TB."""
     d = load(spark, sf_dir, "documents").select("doc_id", "lang", "source")
     spec = F.broadcast(
-        spark.createDataFrame(
-            [(s, bp) for s, bp in MIX_SPEC_BP.items()], "src string, bp int"
+        local_frame(
+            spark, [(s, bp) for s, bp in MIX_SPEC_BP.items()], "src string, bp int"
         )
     )
     gate = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10).cast(

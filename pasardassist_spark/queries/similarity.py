@@ -6,7 +6,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from pasardassist_spark.operators import similarity as S
 from pasardassist_spark.queries.registry import query
-from pasardassist_spark.tables import load
+from pasardassist_spark.tables import load, local_frame
 
 QUERY_IDS = [0, 1, 2, 3, 4]
 K = 10
@@ -74,8 +74,11 @@ def sim_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the driver sample, applied as a broadcast matmul inside the
     encode pass) aligns the data before the 8 x 4-bit PQ codes; IVF
     prunes to 12 of 16 lists, asymmetric distance scores candidates from
-    codes against a per-query broadcast lookup table (raw vectors never
-    touched), then an exact refine re-ranks the top 480 per query.  The
+    codes against a per-query lookup table (raw vectors never touched),
+    then an exact refine re-ranks the top 480 per query. The query side
+    is computed on the driver: the five query vectors are collected once,
+    rotated, and their lookup tables folded in Python, and they join the
+    plan as one broadcast local frame (operators/similarity.py).  The
     memory-budget scale path: the serving index is m small ints per
     vector (16-32x smaller than the float rows sim_ivf_ann re-reads).
     Recall vs brute force and the OPQ objective/lift are asserted in
@@ -235,6 +238,6 @@ def sim_ivf_autotune(spark: SparkSession, sf_dir: str) -> DataFrame:
             emb, target, K, assignments=assignments, centroids=centroids
         )
         rows.append((int(round(target * 10000)), p, int(round(achieved * 10000))))
-    return spark.createDataFrame(
-        rows, "target_bp int, n_probe int, achieved_bp int"
+    return local_frame(
+        spark, rows, "target_bp int, n_probe int, achieved_bp int"
     )

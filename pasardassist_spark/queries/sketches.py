@@ -17,7 +17,7 @@ from pasardassist_spark.operators.sketches import (
     cm_partition_sketches,
 )
 from pasardassist_spark.queries.registry import query
-from pasardassist_spark.tables import load
+from pasardassist_spark.tables import load, local_frame
 
 
 @query("cm_sketch_freq")  # sketch estimates: rows-only driver check by design
@@ -34,7 +34,7 @@ def cm_sketch_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid = cm_merge(cm_partition_sketches(ev, "event_type"))
     keys = [r.event_type for r in ev.select("event_type").distinct().collect()]
     rows = [(k, cm_estimate(grid, k)) for k in sorted(keys)]
-    return spark.createDataFrame(rows, "event_type string, est_count long")
+    return local_frame(spark, rows, "event_type string, est_count long")
 
 
 # ~6% deterministic row sample: same 16-bit md5 gate as samp_deterministic

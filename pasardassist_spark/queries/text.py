@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from pasardassist_spark.operators import text as X
 from pasardassist_spark.queries.registry import query
-from pasardassist_spark.tables import load
+from pasardassist_spark.tables import load, local_frame
 
 # DuckDB fragments mirroring operators/text.py
 _TOKS_SQL = "string_split_regex(trim(text), '\\s+')"
@@ -1229,8 +1229,8 @@ def wordpiece_train_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load(spark, sf_dir, "documents").select("text")
     vocab, _ = wordpiece_vocab(d, "text", WORDPIECE_MERGES)
-    return spark.createDataFrame(
-        [(i, tok) for i, tok in enumerate(vocab)], "token_id int, token string"
+    return local_frame(
+        spark, [(i, tok) for i, tok in enumerate(vocab)], "token_id int, token string"
     )
 
 

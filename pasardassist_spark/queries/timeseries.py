@@ -13,7 +13,7 @@ from pasardassist_spark.functions.chain import uint256_hex
 from pasardassist_spark.functions.money import dec2
 from pasardassist_spark.operators.latest import latest_per_key
 from pasardassist_spark.queries.registry import query
-from pasardassist_spark.tables import load
+from pasardassist_spark.tables import load, local_frame
 
 
 @query(
@@ -139,7 +139,7 @@ def st9_lsm_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = read_lsm_state(spark, f"{tmp}/state", fold)
         # materialize before the tempdir delete (library.py precedent)
         rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
+        return local_frame(spark, rows, out.schema)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

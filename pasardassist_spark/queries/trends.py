@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from pasardassist_spark.functions.money import dec2
 from pasardassist_spark.queries.registry import query
-from pasardassist_spark.tables import load
+from pasardassist_spark.tables import load, local_frame
 
 
 def _daily(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1240,7 +1240,8 @@ def ts_pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
         ] + [phi_mm]
         pacf.append(phi_mm)
         prev = cur
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(k + 1, round(v, 6)) for k, v in enumerate(pacf)],
         "lag int, pacf double",
     )

@@ -39,6 +39,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from pasardassist_spark.streaming.dedupindex import apply_dedup_batch
 from pasardassist_spark.streaming.generations import COMMIT_MARKER
+from pasardassist_spark.tables import local_frame
 
 _EXTRACT_SCHEMA = "doc_id long, fmt string, text string"
 _COMBINED_SCHEMA = "doc_id long, fmt string, text string, error string"
@@ -131,7 +132,7 @@ def apply_doc_batch(
         # skip extraction entirely and let the dedup gate re-run its
         # idempotent index merges from the slot
         apply_dedup_batch(
-            spark.createDataFrame([], _EXTRACT_SCHEMA),
+            local_frame(spark, [], _EXTRACT_SCHEMA),
             epoch_id, state_dir, admitted_dir, "text", "doc_id",
             keep_generations,
         )

@@ -39,13 +39,14 @@ from pasardassist_spark.streaming.generations import (
     read_latest as _read_generation,
     write_generation as _write_generation,
 )
+from pasardassist_spark.tables import local_frame
 
 
 def register_collection(spark: SparkSession, control_dir: str, collection: str) -> None:
     """The ``TokenRegistered`` handler: append one row to the control table.
     Takes effect at the NEXT micro-batch — no query restart, no new stream."""
     existing = _read_generation(spark, control_dir)
-    row = spark.createDataFrame([(collection,)], "collection string")
+    row = local_frame(spark, [(collection,)], "collection string")
     merged = row if existing is None else existing.unionByName(row).distinct()
     _write_generation(merged, control_dir)
 

@@ -35,6 +35,7 @@ from pasardassist_spark.streaming.generations import (
     read_latest,
     write_generation,
 )
+from pasardassist_spark.tables import local_frame
 
 
 def _merge_compact(
@@ -80,7 +81,8 @@ def apply_batch(
     delta_rows = space_saving_topk(batch_df, key_col, capacity).collect()
     delta = {int(r[key_col]): int(r["est"]) for r in delta_rows}
     merged = _merge_compact(prev, delta, capacity)
-    out = spark.createDataFrame(
+    out = local_frame(
+        spark,
         [(k, v, epoch_id) for k, v in sorted(merged.items())],
         f"{key_col} long, est long, epoch long",
     )

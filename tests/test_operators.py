@@ -194,6 +194,53 @@ def test_ivfpq_recall_vs_brute_force(spark, sf_dir):
         assert len(ns) == len(set(ns)) == 10
 
 
+def test_adc_table_matches_the_jvm_fold(spark):
+    """The driver-side ADC lookup table is bit-identical to the same table
+    folded by Spark's ``dot`` expression, so ADC scores, and the shortlist
+    they rank, equal a Spark-side computation."""
+    import numpy as np
+
+    from pasardassist_spark.tables import local_frame
+
+    rng = np.random.default_rng(3)
+    m, k, sub = 8, 16, 8
+    books = [[list(map(float, rng.standard_normal(sub))) for _ in range(k)] for _ in range(m)]
+    x = list(map(float, rng.standard_normal(m * sub) / 7.0))
+    rows = local_frame(
+        spark,
+        [(s, j, x, books[s][j]) for s in range(m) for j in range(k)],
+        "s int, j int, x array<double>, c array<double>",
+    ).select(
+        "s", "j", S.dot(F.slice("x", F.col("s") * sub + 1, sub), F.col("c")).alias("pd")
+    ).collect()
+    jvm = [r.pd for r in sorted(rows, key=lambda r: (r.s, r.j))]
+    assert S._adc_table(x, books, sub) == jvm
+
+
+def test_ann_build_does_not_depend_on_partitioning(spark, sf_dir):
+    """The training sample is ordered by id before k-means++ seeds on row
+    indexes, so the same corpus in 1 or 7 partitions trains the same
+    centroids, rotation and codebooks and returns the same top-k."""
+    emb = load(spark, sf_dir, "embeddings")
+    qids = [0, 1, 2, 3, 4]
+
+    def build(parts):
+        e = emb.repartition(parts)
+        _, cent = S.ivf_assignments(e)
+        train = S.pq_training_matrix(e)
+        rot = S.opq_rotation(e, 64, sample_X=train)
+        books = S.pq_codebooks(e, 64, rotation=rot, sample_X=train)
+        topk = S.ivfpq_topk(e, qids, 10, 64, rotation=rot, sample_X=train)
+        return (
+            sorted(cent.collect()), rot, books,
+            sorted(topk.collect()), sorted(S.ivf_topk(e, qids, 10).collect()),
+        )
+
+    one, seven = build(1), build(7)
+    for name, a, b in zip(("centroids", "rotation", "books", "ivfpq", "ivf"), one, seven):
+        assert a == b, name
+
+
 def test_opq_rotation_objective_and_lift(spark):
     """OPQ's contract: (a) R is orthogonal, (b) the quantization MSE —
     OPQ's actual objective — improves over no rotation on anisotropic

@@ -1018,3 +1018,79 @@ def test_documents_fence_keeps_heavy_filter_above_fanout(spark, sf_dir):
     assert gates and all(i < fanout for i in gates), "\n".join(lines)
     (schema,) = read_schemas(plan(df))
     assert schema == {"doc_id", "text"}
+
+
+def _broadcast_subtrees(p: str) -> list[str]:
+    """Each BroadcastExchange of a "simple" plan with the nodes below it."""
+    lines = [ln for ln in p.splitlines() if ln.strip()]
+
+    def depth(ln: str) -> int:
+        m = re.search(r"[+:]- ", ln)
+        return m.start() if m else -1
+
+    out = []
+    for i, ln in enumerate(lines):
+        if "BroadcastExchange" in ln:
+            sub = [ln]
+            for below in lines[i + 1 :]:
+                if depth(below) <= depth(ln):
+                    break
+                sub.append(below)
+            out.append("\n".join(sub))
+    return out
+
+
+def test_ann_search_never_broadcasts_the_corpus(spark, sf_dir):
+    """ivf_topk and ivfpq_topk broadcast only query-side frames (the
+    collected query rows, the centroids): a broadcast with the embeddings
+    scan below it ships the corpus to every executor, a driver OOM at
+    scale. The corpus is far above the size threshold there, so the test
+    turns size-based broadcasts off and checks the explicit ones."""
+    from pasardassist_spark.operators import similarity as S
+    from pasardassist_spark.tables import load
+
+    emb = load(spark, sf_dir, "embeddings")
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        for name, df in (
+            ("ivf_topk", S.ivf_topk(emb, [0, 1, 2, 3, 4], 10)),
+            ("ivfpq_topk", S.ivfpq_topk(emb, [0, 1, 2, 3, 4], 10, 64)),
+        ):
+            p = plan(df, "simple")
+            assert "embeddings.parquet" in p
+            subtrees = _broadcast_subtrees(p)
+            assert subtrees, name
+            for sub in subtrees:
+                assert "embeddings.parquet" not in sub, f"{name} broadcasts:\n{sub}"
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
+def test_ivfpq_search_runs_no_python(spark, sf_dir, tmp_path):
+    """Against a stored index, an IVF-PQ search is JVM work only: the
+    rotation and the ADC lookup table are computed on the driver, the
+    query rows and centroids are local frames, so the executed plan has
+    no Python evaluation and no Python-RDD scan."""
+    from pasardassist_spark.operators import similarity as S
+    from pasardassist_spark.plans import executed_plan
+    from pasardassist_spark.tables import load
+
+    emb = load(spark, sf_dir, "embeddings")
+    asg, cent = S.ivf_assignments(emb)
+    train = S.pq_training_matrix(emb)
+    rot = S.opq_rotation(emb, 64, sample_X=train)
+    books = S.pq_codebooks(emb, 64, rotation=rot, sample_X=train)
+    S.pq_encode(emb, books, rotation=rot).write.parquet(str(tmp_path / "codes"))
+    asg.write.parquet(str(tmp_path / "asg"))
+    codes = spark.read.parquet(str(tmp_path / "codes"))
+    asg = spark.read.parquet(str(tmp_path / "asg"))
+    df = S.ivfpq_topk(
+        emb, [0, 1, 2, 3, 4], 10, 64,
+        books=books, assignments=asg, centroids=cent, codes=codes, rotation=rot,
+    )
+    rows = df.collect()
+    assert len(rows) == 50
+    p = executed_plan(df)
+    for node in ("ArrowEvalPython", "BatchEvalPython", "ExistingRDD"):
+        assert node not in p, f"{node} in the search plan:\n{p}"
