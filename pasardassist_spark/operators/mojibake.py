@@ -25,11 +25,9 @@ sequences collapse), so the loop terminates on its own for real text.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
+
+from pasardassist_spark.tables import map_rows
 
 MAX_PASSES = 4
 
@@ -73,16 +71,10 @@ def fix_mojibake(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
     schema = f"{fields}, n_fixes int"
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            fixed, counts = [], []
-            for s in pdf[text_col]:
-                t, n = fix_mojibake_text(s)
-                fixed.append(t)
-                counts.append(n)
-            out = pdf.copy()
-            out[text_col] = fixed
-            out["n_fixes"] = pd.array(counts, dtype="int32")
-            yield out
+    i = df.columns.index(text_col)
 
-    return df.mapInPandas(_batches, schema)
+    def _row(*row):
+        t, n = fix_mojibake_text(row[i])
+        yield (*row[:i], t, *row[i + 1 :], n)
+
+    return map_rows(df, _row, schema)

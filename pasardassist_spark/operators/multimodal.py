@@ -2,9 +2,12 @@
 
 Pattern for image/audio/video at 100 TB: store the raw bytes as a ``binary``
 column (or a pointer into object storage) next to a typed metadata struct,
-and run decode / feature-extraction as Arrow-batched ``mapInPandas`` stages.
-The Spark-side plumbing here — schema, batch iteration, column pruning
-(metadata-only queries never touch the payload column) — is real and tested.
+and run decode / feature-extraction as Arrow-batched ``mapInPandas`` stages:
+per-row codecs go through ``tables.map_rows`` (one function per payload
+row yielding output tuples), the vectorized stubs (``extract_features``,
+``resize_thumbnails``) work on whole pandas batches. The Spark-side
+plumbing here — schema, batch iteration, column pruning (metadata-only
+queries never touch the payload column) — is real and tested.
 
 Decode is REAL for PPM/PGM, uncompressed BMP, and 8-bit PNG via the
 stdlib-only codecs in operators/imagecodec.py (``decode_images`` /
@@ -25,6 +28,8 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
+
+from pasardassist_spark.tables import map_rows
 
 FEATURE_SCHEMA = "doc_id long, kind string, n_bytes long, width int, height int"
 
@@ -98,28 +103,17 @@ def attach_image_payload(
 
     schema = f"{id_col} long, kind string, payload binary"
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            kinds, payloads = [], []
-            for doc_id in pdf[id_col]:
-                seed = int(doc_id) % seed_mod if seed_mod else int(doc_id)
-                w, h, px = synth_raster(seed)
-                if mark_corner and int(doc_id) % mark_corner[0] == mark_corner[1]:
-                    px = b"\xff\xff\xff" + px[3:]
-                r = imagecodec.Raster(w, h, 3, px)
-                fmt = int(doc_id) % 3
-                if fmt == 0:
-                    payloads.append(imagecodec.encode_ppm(r))
-                elif fmt == 1:
-                    payloads.append(imagecodec.encode_bmp(r))
-                else:
-                    payloads.append(imagecodec.encode_png(r))
-                kinds.append(IMAGE_KINDS[fmt])
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "kind": kinds, "payload": payloads}
-            )
+    encoders = (imagecodec.encode_ppm, imagecodec.encode_bmp, imagecodec.encode_png)
 
-    return df.select(id_col).mapInPandas(_batches, schema)
+    def _row(doc_id):
+        seed = int(doc_id) % seed_mod if seed_mod else int(doc_id)
+        w, h, px = synth_raster(seed)
+        if mark_corner and int(doc_id) % mark_corner[0] == mark_corner[1]:
+            px = b"\xff\xff\xff" + px[3:]
+        fmt = int(doc_id) % 3
+        yield doc_id, IMAGE_KINDS[fmt], encoders[fmt](imagecodec.Raster(w, h, 3, px))
+
+    return map_rows(df.select(id_col), _row, schema)
 
 
 DECODE_SCHEMA = (
@@ -135,29 +129,12 @@ def decode_images(df: DataFrame) -> DataFrame:
     payload must decode."""
     from pasardassist_spark.operators import imagecodec
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                "doc_id": [], "kind": [], "width": [], "height": [],
-                "channels": [], "pixel_sum": [],
-            }
-            for doc_id, kind, payload in zip(
-                pdf["doc_id"], pdf["kind"], pdf["payload"]
-            ):
-                r = imagecodec.decode(payload)
-                out["doc_id"].append(doc_id)
-                out["kind"].append(kind)
-                out["width"].append(r.width)
-                out["height"].append(r.height)
-                out["channels"].append(r.channels)
-                out["pixel_sum"].append(
-                    int(np.frombuffer(r.pixels, dtype=np.uint8).sum())
-                )
-            yield pd.DataFrame(out)
+    def _row(doc_id, kind, payload):
+        r = imagecodec.decode(payload)
+        pixel_sum = int(np.frombuffer(r.pixels, dtype=np.uint8).sum())
+        yield doc_id, kind, r.width, r.height, r.channels, pixel_sum
 
-    return df.select("doc_id", "kind", "payload").mapInPandas(
-        _batches, DECODE_SCHEMA
-    )
+    return map_rows(df.select("doc_id", "kind", "payload"), _row, DECODE_SCHEMA)
 
 
 REAL_RESIZE_SCHEMA = (
@@ -173,37 +150,23 @@ def resize_images(df: DataFrame, max_side: int = 16) -> DataFrame:
     decodable image; its byte length is header + out_w*out_h*3."""
     from pasardassist_spark.operators import imagecodec
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                "doc_id": [], "width": [], "height": [],
-                "out_w": [], "out_h": [], "thumb": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                r = imagecodec.decode(payload)
-                scale = min(max_side / max(r.width, r.height), 1.0)
-                ow = max(int(r.width * scale), 1)
-                oh = max(int(r.height * scale), 1)
-                thumb = imagecodec.encode_ppm(
-                    imagecodec.resize_nearest(
-                        r if r.channels == 3 else imagecodec.Raster(
-                            r.width, r.height, 3,
-                            np.repeat(
-                                np.frombuffer(r.pixels, dtype=np.uint8), 3
-                            ).tobytes(),
-                        ),
-                        ow, oh,
-                    )
-                )
-                out["doc_id"].append(doc_id)
-                out["width"].append(r.width)
-                out["height"].append(r.height)
-                out["out_w"].append(ow)
-                out["out_h"].append(oh)
-                out["thumb"].append(thumb)
-            yield pd.DataFrame(out)
+    def _row(doc_id, payload):
+        r = imagecodec.decode(payload)
+        scale = min(max_side / max(r.width, r.height), 1.0)
+        ow = max(int(r.width * scale), 1)
+        oh = max(int(r.height * scale), 1)
+        thumb = imagecodec.encode_ppm(
+            imagecodec.resize_nearest(
+                r if r.channels == 3 else imagecodec.Raster(
+                    r.width, r.height, 3,
+                    np.repeat(np.frombuffer(r.pixels, dtype=np.uint8), 3).tobytes(),
+                ),
+                ow, oh,
+            )
+        )
+        yield doc_id, r.width, r.height, ow, oh, thumb
 
-    return df.select("doc_id", "payload").mapInPandas(_batches, REAL_RESIZE_SCHEMA)
+    return map_rows(df.select("doc_id", "payload"), _row, REAL_RESIZE_SCHEMA)
 
 
 def dhash_raster(width: int, height: int, channels: int, pixels: bytes) -> tuple[int, int]:
@@ -248,18 +211,11 @@ def dhash_images(df: DataFrame) -> DataFrame:
     extends by banding the 64 bits, same LSH discipline as SimHash."""
     from pasardassist_spark.operators import imagecodec
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {"doc_id": [], "dhash_hi": [], "dhash_lo": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                r = imagecodec.decode(payload)
-                hi, lo = dhash_raster(r.width, r.height, r.channels, r.pixels)
-                out["doc_id"].append(doc_id)
-                out["dhash_hi"].append(hi)
-                out["dhash_lo"].append(lo)
-            yield pd.DataFrame(out)
+    def _row(doc_id, payload):
+        r = imagecodec.decode(payload)
+        yield (doc_id, *dhash_raster(r.width, r.height, r.channels, r.pixels))
 
-    return df.select("doc_id", "payload").mapInPandas(_batches, DHASH_SCHEMA)
+    return map_rows(df.select("doc_id", "payload"), _row, DHASH_SCHEMA)
 
 
 def dhash_near_pairs(hashes: DataFrame, max_dist: int = 3) -> DataFrame:
@@ -360,42 +316,26 @@ def video_sample_frames(df: DataFrame, k: int = 4, id_col: str = "doc_id") -> Da
     resize compose directly. mapInPandas; per-row CPU, zero shuffle."""
     from pasardassist_spark.operators import imagecodec, videocodec
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                "doc_id": [], "sample_i": [], "frame_idx": [], "n_frames": [],
-                "width": [], "height": [], "pixel_sum": [],
-            }
-            for doc_id in pdf[id_col]:
-                n, w, h, rasters = synth_video_frames(int(doc_id))
-                payload = videocodec.encode_avi(
-                    [imagecodec.Raster(w, h, 3, px) for px in rasters], fps=10
-                )
-                video = videocodec.decode_avi(payload)
-                if video.width != w or len(video.frames) != n:
-                    # explicit (not assert — must survive python -O): a
-                    # codec regression must fail the task with context,
-                    # never silently emit wrong checksums
-                    raise ValueError(
-                        f"AVI round-trip mismatch for doc {doc_id}: "
-                        f"{video.width}x{len(video.frames)} != {w}x{n}"
-                    )
-                for i, idx in enumerate(
-                    videocodec.sample_frame_indices(len(video.frames), k)
-                ):
-                    fr = video.frames[idx]
-                    out["doc_id"].append(doc_id)
-                    out["sample_i"].append(i)
-                    out["frame_idx"].append(idx)
-                    out["n_frames"].append(n)
-                    out["width"].append(fr.width)
-                    out["height"].append(fr.height)
-                    out["pixel_sum"].append(
-                        int(np.frombuffer(fr.pixels, dtype=np.uint8).sum())
-                    )
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        n, w, h, rasters = synth_video_frames(int(doc_id))
+        payload = videocodec.encode_avi(
+            [imagecodec.Raster(w, h, 3, px) for px in rasters], fps=10
+        )
+        video = videocodec.decode_avi(payload)
+        if video.width != w or len(video.frames) != n:
+            # explicit (not assert — must survive python -O): a
+            # codec regression must fail the task with context,
+            # never silently emit wrong checksums
+            raise ValueError(
+                f"AVI round-trip mismatch for doc {doc_id}: "
+                f"{video.width}x{len(video.frames)} != {w}x{n}"
+            )
+        for i, idx in enumerate(videocodec.sample_frame_indices(len(video.frames), k)):
+            fr = video.frames[idx]
+            pixel_sum = int(np.frombuffer(fr.pixels, dtype=np.uint8).sum())
+            yield doc_id, i, idx, n, fr.width, fr.height, pixel_sum
 
-    return df.select(id_col).mapInPandas(_batches, VIDEO_FRAME_SCHEMA)
+    return map_rows(df.select(id_col), _row, VIDEO_FRAME_SCHEMA)
 
 
 VIDEO_FP_SCHEMA = (
@@ -417,36 +357,18 @@ def video_fingerprints(
     bookends or length see don't."""
     from pasardassist_spark.operators import imagecodec, videocodec
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                "doc_id": [], "n_frames": [],
-                "first_hi": [], "first_lo": [], "last_hi": [], "last_lo": [],
-            }
-            for doc_id in pdf[id_col]:
-                seed = int(doc_id) % seed_mod
-                n, w, h, rasters = synth_video_frames(seed)
-                payload = videocodec.encode_avi(
-                    [imagecodec.Raster(w, h, 3, px) for px in rasters], fps=10
-                )
-                video = videocodec.decode_avi(payload)
-                first = video.frames[0]
-                last = video.frames[-1]
-                fh, fl = dhash_raster(
-                    first.width, first.height, first.channels, first.pixels
-                )
-                lh, ll = dhash_raster(
-                    last.width, last.height, last.channels, last.pixels
-                )
-                out["doc_id"].append(doc_id)
-                out["n_frames"].append(len(video.frames))
-                out["first_hi"].append(fh)
-                out["first_lo"].append(fl)
-                out["last_hi"].append(lh)
-                out["last_lo"].append(ll)
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        n, w, h, rasters = synth_video_frames(int(doc_id) % seed_mod)
+        payload = videocodec.encode_avi(
+            [imagecodec.Raster(w, h, 3, px) for px in rasters], fps=10
+        )
+        video = videocodec.decode_avi(payload)
+        first, last = video.frames[0], video.frames[-1]
+        fh, fl = dhash_raster(first.width, first.height, first.channels, first.pixels)
+        lh, ll = dhash_raster(last.width, last.height, last.channels, last.pixels)
+        yield doc_id, len(video.frames), fh, fl, lh, ll
 
-    return df.select(id_col).mapInPandas(_batches, VIDEO_FP_SCHEMA)
+    return map_rows(df.select(id_col), _row, VIDEO_FP_SCHEMA)
 
 
 def synth_wav_samples(doc_id: int) -> tuple[int, list[int]]:
@@ -484,22 +406,13 @@ def audio_fingerprints(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     robust to uniform re-leveling by construction."""
     from pasardassist_spark.operators import audiocodec
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {"doc_id": [], "fingerprint": []}
-            for doc_id in pdf[id_col]:
-                _seed, _gain, samples = synth_wav_variant(int(doc_id))
-                payload = audiocodec.encode_wav(
-                    audiocodec.PcmAudio(AUDIO_RATE, 1, samples)
-                )
-                decoded = audiocodec.decode_wav(payload)
-                out["doc_id"].append(doc_id)
-                out["fingerprint"].append(
-                    audiocodec.energy_fingerprint(decoded.samples)
-                )
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        _seed, _gain, samples = synth_wav_variant(int(doc_id))
+        payload = audiocodec.encode_wav(audiocodec.PcmAudio(AUDIO_RATE, 1, samples))
+        decoded = audiocodec.decode_wav(payload)
+        yield doc_id, audiocodec.energy_fingerprint(decoded.samples)
 
-    return df.select(id_col).mapInPandas(_batches, FP_SCHEMA)
+    return map_rows(df.select(id_col), _row, FP_SCHEMA)
 
 
 AUDIO_RATE = 8000
@@ -519,29 +432,16 @@ def audio_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     at scale the synth step is whatever fetch produces the bytes."""
     from pasardassist_spark.operators import audiocodec
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                "doc_id": [], "sample_rate": [], "n_samples": [],
-                "duration_ms": [], "sq_sum": [], "zero_crossings": [],
-            }
-            for doc_id in pdf[id_col]:
-                _n, samples = synth_wav_samples(int(doc_id))
-                payload = audiocodec.encode_wav(
-                    audiocodec.PcmAudio(AUDIO_RATE, 1, samples)
-                )
-                f = audiocodec.extract_audio_features(
-                    audiocodec.decode_wav(payload)
-                )
-                out["doc_id"].append(doc_id)
-                out["sample_rate"].append(f.sample_rate)
-                out["n_samples"].append(f.n_samples)
-                out["duration_ms"].append(f.duration_ms)
-                out["sq_sum"].append(f.sq_sum)
-                out["zero_crossings"].append(f.zero_crossings)
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        _n, samples = synth_wav_samples(int(doc_id))
+        payload = audiocodec.encode_wav(audiocodec.PcmAudio(AUDIO_RATE, 1, samples))
+        f = audiocodec.extract_audio_features(audiocodec.decode_wav(payload))
+        yield (
+            doc_id, f.sample_rate, f.n_samples, f.duration_ms, f.sq_sum,
+            f.zero_crossings,
+        )
 
-    return df.select(id_col).mapInPandas(_batches, AUDIO_SCHEMA)
+    return map_rows(df.select(id_col), _row, AUDIO_SCHEMA)
 
 
 def fake_decode(payload: bytes) -> tuple[int, int]:
@@ -647,20 +547,13 @@ def sample_frames(df: DataFrame, n_frames: int = 4) -> DataFrame:
     stub (a fixed-size slice at the offset; ffmpeg plugs in here)."""
     frame_len = 16
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {"doc_id": [], "frame_idx": [], "frame_offset": [], "frame": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                n = max(1, len(payload))
-                for i in range(n_frames):
-                    off = (i * n) // n_frames
-                    out["doc_id"].append(doc_id)
-                    out["frame_idx"].append(i)
-                    out["frame_offset"].append(off)
-                    out["frame"].append(bytes(payload[off : off + frame_len]))
-            yield pd.DataFrame(out)
+    def _row(doc_id, payload):
+        n = max(1, len(payload))
+        for i in range(n_frames):
+            off = (i * n) // n_frames
+            yield doc_id, i, off, bytes(payload[off : off + frame_len])
 
-    return df.select("doc_id", "payload").mapInPandas(_batches, FRAME_SCHEMA)
+    return map_rows(df.select("doc_id", "payload"), _row, FRAME_SCHEMA)
 
 
 def attach_gif_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -679,38 +572,26 @@ def attach_gif_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
         b for i in range(256) for b in (i, (i + 29) % 256, (i + 58) % 256)
     )
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for doc_id in pdf[id_col]:
-                seed = int(doc_id)
-                w = seed % 61 + 4
-                h = (seed * 7) % 53 + 4
-                idx = (
-                    (
-                        np.arange(w, dtype=np.int64) * 7
-                        + np.arange(h, dtype=np.int64).reshape(h, 1) * 13
-                        + seed
-                    )
-                    % 256
-                ).astype(np.uint8).tobytes()
-                payloads.append(
-                    # odd ids store the Appendix E four-pass interlace
-                    # row order (round 14) — pure container layout, the
-                    # decoded raster and hence the oracle are unchanged
-                    gifcodec.encode_gif(
-                        idx, w, h, palette, interlace=seed % 2 == 1
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "kind": ["image/gif"] * len(payloads),
-                    "payload": payloads,
-                }
+    def _row(doc_id):
+        seed = int(doc_id)
+        w = seed % 61 + 4
+        h = (seed * 7) % 53 + 4
+        idx = (
+            (
+                np.arange(w, dtype=np.int64) * 7
+                + np.arange(h, dtype=np.int64).reshape(h, 1) * 13
+                + seed
             )
+            % 256
+        ).astype(np.uint8).tobytes()
+        # odd ids store the Appendix E four-pass interlace row order
+        # (round 14) — pure container layout, the decoded raster and
+        # hence the oracle are unchanged
+        yield doc_id, "image/gif", gifcodec.encode_gif(
+            idx, w, h, palette, interlace=seed % 2 == 1
+        )
 
-    return df.select(id_col).mapInPandas(_batches, schema)
+    return map_rows(df.select(id_col), _row, schema)
 
 
 def attach_jpeg_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -730,38 +611,24 @@ def attach_jpeg_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     schema = f"{id_col} long, kind string, payload binary"
     q16 = np.full((8, 8), 16, dtype=np.int32)
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for doc_id in pdf[id_col]:
-                seed = int(doc_id)
-                w = seed % 57 + 4
-                h = (seed * 11) % 47 + 4
-                bx = np.arange((w + 7) // 8, dtype=np.int64) * 19
-                by = np.arange((h + 7) // 8, dtype=np.int64) * 31
-                blocks = (2 * ((by[:, None] + bx[None, :] + seed) % 128)).astype(
-                    np.uint8
-                )
-                v = np.repeat(np.repeat(blocks, 8, axis=0), 8, axis=1)[:h, :w]
-                rgb = np.repeat(v[:, :, None], 3, axis=2)
-                payloads.append(
-                    jpegcodec.encode_jpeg(
-                        Raster(w, h, 3, rgb.tobytes()),
-                        subsampling="4:2:0",
-                        restart_interval=2,
-                        quant_luma=q16,
-                        quant_chroma=q16,
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "kind": ["image/jpeg"] * len(payloads),
-                    "payload": payloads,
-                }
-            )
+    def _row(doc_id):
+        seed = int(doc_id)
+        w = seed % 57 + 4
+        h = (seed * 11) % 47 + 4
+        bx = np.arange((w + 7) // 8, dtype=np.int64) * 19
+        by = np.arange((h + 7) // 8, dtype=np.int64) * 31
+        blocks = (2 * ((by[:, None] + bx[None, :] + seed) % 128)).astype(np.uint8)
+        v = np.repeat(np.repeat(blocks, 8, axis=0), 8, axis=1)[:h, :w]
+        rgb = np.repeat(v[:, :, None], 3, axis=2)
+        yield doc_id, "image/jpeg", jpegcodec.encode_jpeg(
+            Raster(w, h, 3, rgb.tobytes()),
+            subsampling="4:2:0",
+            restart_interval=2,
+            quant_luma=q16,
+            quant_chroma=q16,
+        )
 
-    return df.select(id_col).mapInPandas(_batches, schema)
+    return map_rows(df.select(id_col), _row, schema)
 
 
 def mjpeg_sample_frames(df: DataFrame, k: int = 4, id_col: str = "doc_id") -> DataFrame:
@@ -790,48 +657,32 @@ def mjpeg_sample_frames(df: DataFrame, k: int = 4, id_col: str = "doc_id") -> Da
         v = np.repeat(np.repeat(blocks, 8, axis=0), 8, axis=1)[:h, :w]
         return Raster(w, h, 3, np.repeat(v[:, :, None], 3, axis=2).tobytes())
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                "doc_id": [], "sample_i": [], "frame_idx": [], "n_frames": [],
-                "width": [], "height": [], "pixel_sum": [],
-            }
-            for doc_id in pdf[id_col]:
-                seed = int(doc_id)
-                n = seed % 6 + 2
-                w = seed % 21 + 4
-                h = (seed * 5) % 19 + 4
-                payload = videocodec.encode_avi(
-                    [_frame(seed, w, h, fr) for fr in range(n)],
-                    fps=10,
-                    codec="mjpg",
-                    jpeg_opts=dict(
-                        subsampling="4:2:0", restart_interval=2,
-                        quant_luma=q16, quant_chroma=q16,
-                    ),
-                )
-                video = videocodec.decode_avi(payload)
-                if video.width != w or len(video.frames) != n:
-                    raise ValueError(
-                        f"MJPEG round-trip mismatch for doc {doc_id}: "
-                        f"{video.width}x{len(video.frames)} != {w}x{n}"
-                    )
-                for i, idx in enumerate(
-                    videocodec.sample_frame_indices(n, k)
-                ):
-                    fr = video.frames[idx]
-                    out["doc_id"].append(doc_id)
-                    out["sample_i"].append(i)
-                    out["frame_idx"].append(idx)
-                    out["n_frames"].append(n)
-                    out["width"].append(fr.width)
-                    out["height"].append(fr.height)
-                    out["pixel_sum"].append(
-                        int(np.frombuffer(fr.pixels, dtype=np.uint8).sum())
-                    )
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        seed = int(doc_id)
+        n = seed % 6 + 2
+        w = seed % 21 + 4
+        h = (seed * 5) % 19 + 4
+        payload = videocodec.encode_avi(
+            [_frame(seed, w, h, fr) for fr in range(n)],
+            fps=10,
+            codec="mjpg",
+            jpeg_opts=dict(
+                subsampling="4:2:0", restart_interval=2,
+                quant_luma=q16, quant_chroma=q16,
+            ),
+        )
+        video = videocodec.decode_avi(payload)
+        if video.width != w or len(video.frames) != n:
+            raise ValueError(
+                f"MJPEG round-trip mismatch for doc {doc_id}: "
+                f"{video.width}x{len(video.frames)} != {w}x{n}"
+            )
+        for i, idx in enumerate(videocodec.sample_frame_indices(n, k)):
+            fr = video.frames[idx]
+            pixel_sum = int(np.frombuffer(fr.pixels, dtype=np.uint8).sum())
+            yield doc_id, i, idx, n, fr.width, fr.height, pixel_sum
 
-    return df.select(id_col).mapInPandas(_batches, VIDEO_FRAME_SCHEMA)
+    return map_rows(df.select(id_col), _row, VIDEO_FRAME_SCHEMA)
 
 
 def attach_jpeg_progressive_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -849,38 +700,24 @@ def attach_jpeg_progressive_payload(df: DataFrame, id_col: str = "doc_id") -> Da
     schema = f"{id_col} long, kind string, payload binary"
     q16 = np.full((8, 8), 16, dtype=np.int32)
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for doc_id in pdf[id_col]:
-                seed = int(doc_id)
-                w = seed % 49 + 4
-                h = (seed * 13) % 41 + 4
-                bx = np.arange((w + 7) // 8, dtype=np.int64) * 23
-                by = np.arange((h + 7) // 8, dtype=np.int64) * 37
-                blocks = (2 * ((by[:, None] + bx[None, :] + seed) % 128)).astype(
-                    np.uint8
-                )
-                v = np.repeat(np.repeat(blocks, 8, axis=0), 8, axis=1)[:h, :w]
-                rgb = np.repeat(v[:, :, None], 3, axis=2)
-                payloads.append(
-                    jpegcodec.encode_jpeg_progressive(
-                        Raster(w, h, 3, rgb.tobytes()),
-                        subsampling="4:2:0",
-                        restart_interval=2,
-                        quant_luma=q16,
-                        quant_chroma=q16,
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "kind": ["image/jpeg"] * len(payloads),
-                    "payload": payloads,
-                }
-            )
+    def _row(doc_id):
+        seed = int(doc_id)
+        w = seed % 49 + 4
+        h = (seed * 13) % 41 + 4
+        bx = np.arange((w + 7) // 8, dtype=np.int64) * 23
+        by = np.arange((h + 7) // 8, dtype=np.int64) * 37
+        blocks = (2 * ((by[:, None] + bx[None, :] + seed) % 128)).astype(np.uint8)
+        v = np.repeat(np.repeat(blocks, 8, axis=0), 8, axis=1)[:h, :w]
+        rgb = np.repeat(v[:, :, None], 3, axis=2)
+        yield doc_id, "image/jpeg", jpegcodec.encode_jpeg_progressive(
+            Raster(w, h, 3, rgb.tobytes()),
+            subsampling="4:2:0",
+            restart_interval=2,
+            quant_luma=q16,
+            quant_chroma=q16,
+        )
 
-    return df.select(id_col).mapInPandas(_batches, schema)
+    return map_rows(df.select(id_col), _row, schema)
 
 
 def audio_features_float(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -894,30 +731,19 @@ def audio_features_float(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     match certifies the float decode normalization bit-for-bit."""
     from pasardassist_spark.operators import audiocodec
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                "doc_id": [], "sample_rate": [], "n_samples": [],
-                "duration_ms": [], "sq_sum": [], "zero_crossings": [],
-            }
-            for doc_id in pdf[id_col]:
-                _n, samples = synth_wav_samples(int(doc_id))
-                payload = audiocodec.encode_wav_float(
-                    audiocodec.PcmAudio(AUDIO_RATE, 1, samples),
-                    bits=32 if int(doc_id) % 2 == 0 else 64,
-                )
-                f = audiocodec.extract_audio_features(
-                    audiocodec.decode_wav(payload)
-                )
-                out["doc_id"].append(doc_id)
-                out["sample_rate"].append(f.sample_rate)
-                out["n_samples"].append(f.n_samples)
-                out["duration_ms"].append(f.duration_ms)
-                out["sq_sum"].append(f.sq_sum)
-                out["zero_crossings"].append(f.zero_crossings)
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        _n, samples = synth_wav_samples(int(doc_id))
+        payload = audiocodec.encode_wav_float(
+            audiocodec.PcmAudio(AUDIO_RATE, 1, samples),
+            bits=32 if int(doc_id) % 2 == 0 else 64,
+        )
+        f = audiocodec.extract_audio_features(audiocodec.decode_wav(payload))
+        yield (
+            doc_id, f.sample_rate, f.n_samples, f.duration_ms, f.sq_sum,
+            f.zero_crossings,
+        )
 
-    return df.select(id_col).mapInPandas(_batches, AUDIO_SCHEMA)
+    return map_rows(df.select(id_col), _row, AUDIO_SCHEMA)
 
 
 def attach_webp_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -935,51 +761,33 @@ def attach_webp_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
     schema = f"{id_col} long, kind string, payload binary"
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for doc_id in pdf[id_col]:
-                seed = int(doc_id)
-                w = seed % 45 + 4
-                h = (seed * 3) % 37 + 4
-                x = np.arange(w)
-                y = np.arange(h).reshape(h, 1)
-                base = (x * 7 + y * 13 + seed) % 256
-                rgb = np.stack(
-                    [base, (base + 29) % 256, (base + 58) % 256], axis=-1
-                ).astype(np.uint8)
-                rast = Raster(w, h, 3, rgb.tobytes())
-                variant = seed % 6
-                if variant == 0:
-                    p = webpcodec.encode_webp_lossless(rast)
-                elif variant == 1:
-                    p = webpcodec.encode_webp_lossless(
-                        rast, subtract_green=True, cache_bits=5
-                    )
-                elif variant == 2:
-                    p = webpcodec.encode_webp_lossless(
-                        rast, predictor_mode=seed % 14
-                    )
-                elif variant == 3:
-                    p = webpcodec.encode_webp_lossless(
-                        rast, color_transform=(32, 16, 8)
-                    )
-                elif variant == 4:
-                    p = webpcodec.encode_webp_lossless(
-                        rast, use_runs=True, cache_bits=4
-                    )
-                else:  # the base formula has <= 256 distinct colors
-                    p = webpcodec.encode_webp_lossless(rast, palette=True)
-                payloads.append(p)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "kind": ["image/webp"] * len(payloads),
-                    "payload": payloads,
-                }
-            )
+    def _row(doc_id):
+        seed = int(doc_id)
+        w = seed % 45 + 4
+        h = (seed * 3) % 37 + 4
+        x = np.arange(w)
+        y = np.arange(h).reshape(h, 1)
+        base = (x * 7 + y * 13 + seed) % 256
+        rgb = np.stack(
+            [base, (base + 29) % 256, (base + 58) % 256], axis=-1
+        ).astype(np.uint8)
+        rast = Raster(w, h, 3, rgb.tobytes())
+        variant = seed % 6
+        if variant == 0:
+            p = webpcodec.encode_webp_lossless(rast)
+        elif variant == 1:
+            p = webpcodec.encode_webp_lossless(rast, subtract_green=True, cache_bits=5)
+        elif variant == 2:
+            p = webpcodec.encode_webp_lossless(rast, predictor_mode=seed % 14)
+        elif variant == 3:
+            p = webpcodec.encode_webp_lossless(rast, color_transform=(32, 16, 8))
+        elif variant == 4:
+            p = webpcodec.encode_webp_lossless(rast, use_runs=True, cache_bits=4)
+        else:  # the base formula has <= 256 distinct colors
+            p = webpcodec.encode_webp_lossless(rast, palette=True)
+        yield doc_id, "image/webp", p
 
-    return df.select(id_col).mapInPandas(_batches, schema)
+    return map_rows(df.select(id_col), _row, schema)
 
 
 def attach_png_variant_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -995,47 +803,34 @@ def attach_png_variant_payload(df: DataFrame, id_col: str = "doc_id") -> DataFra
 
     schema = f"{id_col} long, kind string, payload binary"
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for doc_id in pdf[id_col]:
-                seed = int(doc_id)
-                w = seed % 41 + 4
-                h = (seed * 7) % 31 + 4
-                variant = seed % 4
-                mod = 16 if variant == 3 else 256
-                x = np.arange(w)
-                y = np.arange(h).reshape(h, 1)
-                base = (x * 7 + y * 13 + seed) % mod
-                rgb = np.stack(
-                    [base, (base + 29) % 256, (base + 58) % 256], axis=-1
-                ).astype(np.uint8)
-                r = imagecodec.Raster(w, h, 3, rgb.tobytes())
-                if variant == 0:
-                    payloads.append(imagecodec.encode_png(r))
-                elif variant == 1:
-                    payloads.append(imagecodec.encode_png(r, interlace=True))
-                else:
-                    pal = bytes(
-                        b
-                        for c in range(mod)
-                        for b in (c, (c + 29) % 256, (c + 58) % 256)
-                    )
-                    payloads.append(
-                        imagecodec.encode_png_palette(
-                            base.astype(np.uint8).tobytes(), w, h, pal,
-                            depth=8 if variant == 2 else 4,
-                        )
-                    )
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "kind": ["image/png"] * len(payloads),
-                    "payload": payloads,
-                }
+    def _row(doc_id):
+        seed = int(doc_id)
+        w = seed % 41 + 4
+        h = (seed * 7) % 31 + 4
+        variant = seed % 4
+        mod = 16 if variant == 3 else 256
+        x = np.arange(w)
+        y = np.arange(h).reshape(h, 1)
+        base = (x * 7 + y * 13 + seed) % mod
+        rgb = np.stack(
+            [base, (base + 29) % 256, (base + 58) % 256], axis=-1
+        ).astype(np.uint8)
+        r = imagecodec.Raster(w, h, 3, rgb.tobytes())
+        if variant == 0:
+            p = imagecodec.encode_png(r)
+        elif variant == 1:
+            p = imagecodec.encode_png(r, interlace=True)
+        else:
+            pal = bytes(
+                b for c in range(mod) for b in (c, (c + 29) % 256, (c + 58) % 256)
             )
+            p = imagecodec.encode_png_palette(
+                base.astype(np.uint8).tobytes(), w, h, pal,
+                depth=8 if variant == 2 else 4,
+            )
+        yield doc_id, "image/png", p
 
-    return df.select(id_col).mapInPandas(_batches, schema)
+    return map_rows(df.select(id_col), _row, schema)
 
 
 def gif_sample_frames(df: DataFrame, k: int = 3, id_col: str = "doc_id") -> DataFrame:
@@ -1054,52 +849,32 @@ def gif_sample_frames(df: DataFrame, k: int = 3, id_col: str = "doc_id") -> Data
 
     pal = bytes(b for c in range(256) for b in (c, (c + 29) % 256, (c + 58) % 256))
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                "doc_id": [], "sample_i": [], "frame_idx": [], "n_frames": [],
-                "width": [], "height": [], "pixel_sum": [],
-            }
-            for doc_id in pdf[id_col]:
-                seed = int(doc_id)
-                w = seed % 23 + 10
-                h = (seed * 3) % 19 + 10
-                n = seed % 4 + 2
-                frames = []
-                for fr in range(n):
-                    fw, fh = w - 2 * fr, h - 2 * fr
-                    xs = np.arange(fr, fr + fw, dtype=np.int64)
-                    ys = np.arange(fr, fr + fh, dtype=np.int64).reshape(fh, 1)
-                    idx = ((xs * 7 + ys * 13 + seed + 17 * fr) % 256).astype(
-                        np.uint8
-                    )
-                    frames.append((fr, fr, fw, fh, idx.tobytes()))
-                # odd ids store every frame interlaced (round 14) — pure
-                # container layout, the composited canvases are unchanged
-                payload = gifcodec.encode_gif_animated(
-                    frames, w, h, pal, interlace=seed % 2 == 1
-                )
-                cw, ch, decoded = gifcodec.decode_gif_frames(payload)
-                if (cw, ch, len(decoded)) != (w, h, n):
-                    raise ValueError(
-                        f"animated GIF round-trip mismatch for doc {doc_id}"
-                    )
-                for i, fidx in enumerate(
-                    videocodec.sample_frame_indices(n, k)
-                ):
-                    f = decoded[fidx]
-                    out["doc_id"].append(doc_id)
-                    out["sample_i"].append(i)
-                    out["frame_idx"].append(fidx)
-                    out["n_frames"].append(n)
-                    out["width"].append(f.width)
-                    out["height"].append(f.height)
-                    out["pixel_sum"].append(
-                        int(np.frombuffer(f.pixels, dtype=np.uint8).sum())
-                    )
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        seed = int(doc_id)
+        w = seed % 23 + 10
+        h = (seed * 3) % 19 + 10
+        n = seed % 4 + 2
+        frames = []
+        for fr in range(n):
+            fw, fh = w - 2 * fr, h - 2 * fr
+            xs = np.arange(fr, fr + fw, dtype=np.int64)
+            ys = np.arange(fr, fr + fh, dtype=np.int64).reshape(fh, 1)
+            idx = ((xs * 7 + ys * 13 + seed + 17 * fr) % 256).astype(np.uint8)
+            frames.append((fr, fr, fw, fh, idx.tobytes()))
+        # odd ids store every frame interlaced (round 14) — pure
+        # container layout, the composited canvases are unchanged
+        payload = gifcodec.encode_gif_animated(
+            frames, w, h, pal, interlace=seed % 2 == 1
+        )
+        cw, ch, decoded = gifcodec.decode_gif_frames(payload)
+        if (cw, ch, len(decoded)) != (w, h, n):
+            raise ValueError(f"animated GIF round-trip mismatch for doc {doc_id}")
+        for i, fidx in enumerate(videocodec.sample_frame_indices(n, k)):
+            f = decoded[fidx]
+            pixel_sum = int(np.frombuffer(f.pixels, dtype=np.uint8).sum())
+            yield doc_id, i, fidx, n, f.width, f.height, pixel_sum
 
-    return df.select(id_col).mapInPandas(_batches, VIDEO_FRAME_SCHEMA)
+    return map_rows(df.select(id_col), _row, VIDEO_FRAME_SCHEMA)
 
 
 def audio_g711_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1115,33 +890,18 @@ def audio_g711_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
         "min_pcm int, max_pcm int"
     )
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                "doc_id": [], "law": [], "n_samples": [], "sum_pcm": [],
-                "min_pcm": [], "max_pcm": [],
-            }
-            for doc_id in pdf[id_col]:
-                seed = int(doc_id)
-                n = seed % 181 + 60
-                law = "ulaw" if seed % 2 == 0 else "alaw"
-                codes = bytes((i * 7 + seed) % 256 for i in range(n))
-                payload = audiocodec.encode_wav_g711(codes, 8000, law)
-                au = audiocodec.decode_wav(payload)
-                if len(au.samples) != n:
-                    # raise, not assert (must survive python -O)
-                    raise ValueError(
-                        f"G.711 round-trip length mismatch for doc {doc_id}"
-                    )
-                out["doc_id"].append(doc_id)
-                out["law"].append(law)
-                out["n_samples"].append(n)
-                out["sum_pcm"].append(sum(au.samples))
-                out["min_pcm"].append(min(au.samples))
-                out["max_pcm"].append(max(au.samples))
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        seed = int(doc_id)
+        n = seed % 181 + 60
+        law = "ulaw" if seed % 2 == 0 else "alaw"
+        codes = bytes((i * 7 + seed) % 256 for i in range(n))
+        au = audiocodec.decode_wav(audiocodec.encode_wav_g711(codes, 8000, law))
+        if len(au.samples) != n:
+            # raise, not assert (must survive python -O)
+            raise ValueError(f"G.711 round-trip length mismatch for doc {doc_id}")
+        yield doc_id, law, n, sum(au.samples), min(au.samples), max(au.samples)
 
-    return df.select(id_col).mapInPandas(_batches, schema)
+    return map_rows(df.select(id_col), _row, schema)
 
 
 def audio_adpcm_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1156,32 +916,19 @@ def audio_adpcm_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
     schema = f"{id_col} long, n_samples int, sum_pcm long, last_pcm int"
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                "doc_id": [], "n_samples": [], "sum_pcm": [], "last_pcm": [],
-            }
-            for doc_id in pdf[id_col]:
-                seed = int(doc_id)
-                n_nib = 2 * (seed % 100 + 20)
-                pred0 = (seed * 31) % 65536 - 32768
-                idx0 = seed % 89
-                nibs = bytes((i * 5 + seed) % 16 for i in range(n_nib))
-                payload = audiocodec.encode_wav_ima_adpcm(
-                    nibs, 8000, pred0, idx0
-                )
-                au = audiocodec.decode_wav(payload)
-                if len(au.samples) != n_nib + 1:
-                    raise ValueError(
-                        f"ADPCM round-trip length mismatch for doc {doc_id}"
-                    )
-                out["doc_id"].append(doc_id)
-                out["n_samples"].append(n_nib + 1)
-                out["sum_pcm"].append(sum(au.samples))
-                out["last_pcm"].append(au.samples[-1])
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        seed = int(doc_id)
+        n_nib = 2 * (seed % 100 + 20)
+        pred0 = (seed * 31) % 65536 - 32768
+        idx0 = seed % 89
+        nibs = bytes((i * 5 + seed) % 16 for i in range(n_nib))
+        payload = audiocodec.encode_wav_ima_adpcm(nibs, 8000, pred0, idx0)
+        au = audiocodec.decode_wav(payload)
+        if len(au.samples) != n_nib + 1:
+            raise ValueError(f"ADPCM round-trip length mismatch for doc {doc_id}")
+        yield doc_id, n_nib + 1, sum(au.samples), au.samples[-1]
 
-    return df.select(id_col).mapInPandas(_batches, schema)
+    return map_rows(df.select(id_col), _row, schema)
 
 
 def tiff_page_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1217,65 +964,49 @@ def tiff_page_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
     _pal = np.array(tiffcodec.PALETTE_MAP, dtype=np.uint8)  # (256, 3)
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                "doc_id": [], "page_no": [], "n_pages": [], "width": [],
-                "height": [], "channels": [], "layout": [], "pixel_sum": [],
-            }
-            for doc_id in pdf[id_col]:
-                seed = int(doc_id)
-                w = seed % 19 + 8
-                h = (seed * 3) % 17 + 8
-                palette = seed % 5 == 4
-                ch = 3 if seed % 5 < 3 else 1
-                n_pages = seed % 3 + 1
-                bo = "II" if seed % 2 == 0 else "MM"
-                comp = (1, 5, 32773)[seed % 3]
-                pred = 1 if (seed // 3) % 2 == 0 else 2
-                tiled = seed % 7 < 3
-                pages = [
-                    _synth(w, h, ch, seed + 31 * pg) for pg in range(n_pages)
-                ]
-                payload = tiffcodec.encode_tiff(
-                    pages, byte_order=bo, compression=comp,
-                    predictor=pred,
-                    rows_per_strip=None if tiled else 5,
-                    tile=(16, 16) if tiled else None,
-                    palette=palette,
-                )
-                decoded = tiffcodec.decode_tiff_pages(payload)
-                expected = pages if not palette else [
-                    Raster(
-                        p.width, p.height, 3,
-                        _pal[np.frombuffer(p.pixels, dtype=np.uint8)]
-                        .tobytes(),
-                    )
-                    for p in pages
-                ]
-                if decoded != expected:
-                    # raise, not assert (must survive python -O)
-                    raise ValueError(
-                        f"TIFF round-trip mismatch for doc {doc_id}"
-                    )
-                layout = f"{bo}-{comp}-{pred}" + ("-t" if tiled else "") + (
-                    "-p" if palette else ""
-                )
-                for pg, r in enumerate(decoded):
-                    out["doc_id"].append(doc_id)
-                    out["page_no"].append(pg)
-                    out["n_pages"].append(n_pages)
-                    out["width"].append(r.width)
-                    out["height"].append(r.height)
-                    out["channels"].append(r.channels)
-                    out["layout"].append(layout)
-                    out["pixel_sum"].append(
-                        int(np.frombuffer(r.pixels, dtype=np.uint8)
-                            .astype(np.int64).sum())
-                    )
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        seed = int(doc_id)
+        w = seed % 19 + 8
+        h = (seed * 3) % 17 + 8
+        palette = seed % 5 == 4
+        ch = 3 if seed % 5 < 3 else 1
+        n_pages = seed % 3 + 1
+        bo = "II" if seed % 2 == 0 else "MM"
+        comp = (1, 5, 32773)[seed % 3]
+        pred = 1 if (seed // 3) % 2 == 0 else 2
+        tiled = seed % 7 < 3
+        pages = [_synth(w, h, ch, seed + 31 * pg) for pg in range(n_pages)]
+        payload = tiffcodec.encode_tiff(
+            pages, byte_order=bo, compression=comp,
+            predictor=pred,
+            rows_per_strip=None if tiled else 5,
+            tile=(16, 16) if tiled else None,
+            palette=palette,
+        )
+        decoded = tiffcodec.decode_tiff_pages(payload)
+        expected = pages if not palette else [
+            Raster(
+                p.width, p.height, 3,
+                _pal[np.frombuffer(p.pixels, dtype=np.uint8)].tobytes(),
+            )
+            for p in pages
+        ]
+        if decoded != expected:
+            # raise, not assert (must survive python -O)
+            raise ValueError(f"TIFF round-trip mismatch for doc {doc_id}")
+        layout = f"{bo}-{comp}-{pred}" + ("-t" if tiled else "") + (
+            "-p" if palette else ""
+        )
+        for pg, r in enumerate(decoded):
+            pixel_sum = int(
+                np.frombuffer(r.pixels, dtype=np.uint8).astype(np.int64).sum()
+            )
+            yield (
+                doc_id, pg, n_pages, r.width, r.height, r.channels, layout,
+                pixel_sum,
+            )
 
-    return df.select(id_col).mapInPandas(_batches, schema)
+    return map_rows(df.select(id_col), _row, schema)
 
 
 def attach_jpeg_exif_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1292,43 +1023,35 @@ def attach_jpeg_exif_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame
 
     schema = f"{id_col} long, payload binary"
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                w, h = i % 8 + 4, (i * 3) % 8 + 4
-                v = np.full((h, w, 3), (2 * (i % 128)), dtype=np.uint8)
-                jpeg = jpegcodec.encode_jpeg(Raster(w, h, 3, v.tobytes()))
-                app1 = EX.encode_exif_app1(
-                    byte_order="II" if i % 2 == 0 else "MM",
-                    make=f"CamCo {i % 5}",
-                    model=f"DSLR-{i % 7}",
-                    orientation=i % 8 + 1,
-                    dt_original=(
-                        f"2021:{i % 12 + 1:02d}:{i % 28 + 1:02d} "
-                        f"{i % 24:02d}:{i * 7 % 60:02d}:{i * 13 % 60:02d}"
-                    ),
-                    lat_ref="N" if i % 2 == 0 else "S",
-                    lat_dms=((i % 90, 1), (i * 3 % 60, 1), (i * 77 % 60000, 1000)),
-                    lon_ref="W" if i % 3 == 0 else "E",
-                    lon_dms=((i % 180, 1), (i * 5 % 60, 1), (i * 131 % 60000, 1000)),
-                )
-                jpeg = EX.insert_app1(jpeg, app1)
-                if i % 4 == 0:
-                    # decoys spliced in FRONT of the Exif APP1
-                    decoy = b"XMP\x00 not exif"
-                    decoy_app1 = (
-                        b"\xff\xe1"
-                        + struct.pack(">H", len(decoy) + 2)
-                        + decoy
-                    )
-                    com = b"\xff\xfe" + struct.pack(">H", 9) + b"comment"
-                    jpeg = EX.insert_app1(EX.insert_app1(jpeg, com), decoy_app1)
-                payloads.append(jpeg)
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
+    def _row(doc_id):
+        i = int(doc_id)
+        w, h = i % 8 + 4, (i * 3) % 8 + 4
+        v = np.full((h, w, 3), (2 * (i % 128)), dtype=np.uint8)
+        jpeg = jpegcodec.encode_jpeg(Raster(w, h, 3, v.tobytes()))
+        app1 = EX.encode_exif_app1(
+            byte_order="II" if i % 2 == 0 else "MM",
+            make=f"CamCo {i % 5}",
+            model=f"DSLR-{i % 7}",
+            orientation=i % 8 + 1,
+            dt_original=(
+                f"2021:{i % 12 + 1:02d}:{i % 28 + 1:02d} "
+                f"{i % 24:02d}:{i * 7 % 60:02d}:{i * 13 % 60:02d}"
+            ),
+            lat_ref="N" if i % 2 == 0 else "S",
+            lat_dms=((i % 90, 1), (i * 3 % 60, 1), (i * 77 % 60000, 1000)),
+            lon_ref="W" if i % 3 == 0 else "E",
+            lon_dms=((i % 180, 1), (i * 5 % 60, 1), (i * 131 % 60000, 1000)),
+        )
+        jpeg = EX.insert_app1(jpeg, app1)
+        if i % 4 == 0:
+            # decoys spliced in FRONT of the Exif APP1
+            decoy = b"XMP\x00 not exif"
+            decoy_app1 = b"\xff\xe1" + struct.pack(">H", len(decoy) + 2) + decoy
+            com = b"\xff\xfe" + struct.pack(">H", 9) + b"comment"
+            jpeg = EX.insert_app1(EX.insert_app1(jpeg, com), decoy_app1)
+        yield doc_id, jpeg
 
-    return df.select(id_col).mapInPandas(_batches, schema)
+    return map_rows(df.select(id_col), _row, schema)
 
 
 def extract_exif(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1342,24 +1065,13 @@ def extract_exif(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
         "lat_mas long, lon_ref string, lon_mas long"
     )
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in (
-                id_col, "byte_order", "make", "model", "orientation",
-                "dt_original", "lat_ref", "lat_mas", "lon_ref", "lon_mas",
-            )}
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                meta = EX.parse_exif(bytes(payload)) or {}
-                rows[id_col].append(doc_id)
-                rows["byte_order"].append(meta.get("byte_order"))
-                rows["make"].append(meta.get("make"))
-                rows["model"].append(meta.get("model"))
-                rows["orientation"].append(meta.get("orientation"))
-                rows["dt_original"].append(meta.get("dt_original"))
-                rows["lat_ref"].append(meta.get("lat_ref"))
-                rows["lat_mas"].append(meta.get("lat_mas"))
-                rows["lon_ref"].append(meta.get("lon_ref"))
-                rows["lon_mas"].append(meta.get("lon_mas"))
-            yield pd.DataFrame(rows)
+    fields = (
+        "byte_order", "make", "model", "orientation", "dt_original",
+        "lat_ref", "lat_mas", "lon_ref", "lon_mas",
+    )
 
-    return df.mapInPandas(_batches, schema)
+    def _row(doc_id, payload):
+        meta = EX.parse_exif(bytes(payload)) or {}
+        yield (doc_id, *(meta.get(k) for k in fields))
+
+    return map_rows(df.select(id_col, "payload"), _row, schema)

@@ -9,7 +9,8 @@
   land in 2^B buckets per table; candidates = bucket collisions in any
   table. At 100 TB the bucket id becomes the partition/bucketing key so a
   query probes L partitions instead of scanning the corpus; recall tunes
-  with L and B.
+  with L and B. The query vectors and their bucket codes are computed on
+  the driver and enter the plan as local frames.
 
 - ``ivf_topk`` / ``ivfpq_topk``: trained indexes (k-means coarse lists,
   OPQ-rotated product-quantization codes). Training runs on the driver over
@@ -58,6 +59,16 @@ def dot(a: Column, b: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / F.sqrt(dot(a, a) * dot(b, b))
+
+
+def _fold_dot(a: list[float], b: list[float]) -> float:
+    """``dot`` on the driver: folded left to right from 0.0 as the JVM
+    folds it — IEEE doubles and no fused multiply-add on either side — so
+    the result is bit-identical to the Spark expression's."""
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc = acc + x * y
+    return acc
 
 
 def brute_force_topk(
@@ -131,6 +142,16 @@ def random_projection_buckets(
     )
 
 
+def _bucket_codes(v: list[float], planes) -> list[tuple[int, int]]:
+    """(table, bucket) of one vector on the driver: the twin of
+    :func:`random_projection_buckets`, with each sign taken from
+    :func:`_fold_dot` so it matches the JVM's bit for bit."""
+    codes: dict[int, int] = {}
+    for t, p, w in planes:
+        codes[t] = codes.get(t, 0) | ((_fold_dot(v, w) > 0) << p)
+    return sorted(codes.items())
+
+
 def ann_topk(
     emb: DataFrame,
     query_ids: list[int],
@@ -154,6 +175,12 @@ def ann_topk(
     approaches a table scan — add tables instead. Probing is query-side
     only: the corpus keeps one (table, bucket) row per vector, so the
     bucket id stays the partition key at scale.
+
+    The query side is per query and tiny: the query vectors are collected
+    once (``_query_rows``), their bucket codes are computed on the driver
+    (``_bucket_codes``, signs bit-identical to the JVM's), and both enter
+    the plan as local frames — the probe and re-rank broadcasts carry
+    query rows, never the corpus scan.
     """
     if probe_radius > 2:
         raise ValueError(
@@ -161,6 +188,7 @@ def ann_topk(
             " 3+ the probe count approaches the bucket space and brute force"
             " wins — add tables instead"
         )
+    spark = emb.sparkSession
     buckets = random_projection_buckets(emb, dim, id_col, vec_col)
     probe_masks = [0]
     if probe_radius >= 1:
@@ -171,16 +199,20 @@ def ann_topk(
             for i in range(N_PLANES)
             for j in range(i + 1, N_PLANES)
         ]
-    qb = (
-        buckets.filter(F.col(id_col).isin(query_ids))
-        .select(
-            F.col(id_col).alias("q_id"),
-            "tbl",
-            F.explode(
-                F.array(*[F.col("bucket").bitwiseXOR(F.lit(m)) for m in probe_masks])
-            ).alias("bucket"),
-        )
+    e = emb.select(F.col(id_col), as_double(F.col(vec_col)).alias("v"))
+    rows = _query_rows(e, query_ids, id_col)
+    planes = hyperplanes(dim)
+    qb = local_frame(
+        spark,
+        [
+            (q_id, t, code ^ m)
+            for q_id, v in rows
+            for t, code in _bucket_codes(v, planes)
+            for m in probe_masks
+        ],
+        f"q_id {e.schema[id_col].dataType.simpleString()}, tbl int, bucket long",
     )
+    qv = local_frame(spark, rows, _query_schema(e, id_col))
     cand = (
         F.broadcast(qb)
         .join(buckets, ["tbl", "bucket"])
@@ -188,8 +220,6 @@ def ann_topk(
         .select("q_id", F.col(id_col).alias("neighbor_id"))
         .distinct()
     )
-    e = emb.select(F.col(id_col), as_double(F.col(vec_col)).alias("v"))
-    qv = e.select(F.col(id_col).alias("q_id"), F.col("v").alias("qv"))
     nv = e.select(F.col(id_col).alias("neighbor_id"), F.col("v").alias("nv"))
     scored = (
         cand.join(F.broadcast(qv), "q_id")
@@ -727,10 +757,7 @@ def pq_quantization_mse(
     import numpy as np
 
     sub = dim // m
-    e = _l2_normalize(
-        emb.select(F.col(id_col), as_double(F.col(vec_col)).alias("v"))
-    )
-    X = _collect_training_matrix(e, id_col, "v")
+    X = pq_training_matrix(emb, id_col, vec_col)
     if rotation is not None:
         X = X @ np.asarray(rotation, dtype=np.float64).T
     err = 0.0
@@ -834,19 +861,14 @@ def pq_encode(
 
 def _adc_table(x: list[float], books: list[list[list[float]]], sub: int) -> list[float]:
     """One query's ADC lookup table: ``lut[s*K + j] = dot(x_s, books[s][j])``
-    for subspace slice ``x_s`` of the (rotated) query. Folded left to right
-    from 0.0 as :func:`dot` folds in the JVM — IEEE doubles and no fused
-    multiply-add on either side — so it is bit-identical to the same table
+    for subspace slice ``x_s`` of the (rotated) query. Each entry is a
+    :func:`_fold_dot`, so the table is bit-identical to the same table
     computed by a Spark expression."""
-    lut = []
-    for s, book in enumerate(books):
-        xs = x[s * sub : (s + 1) * sub]
-        for c in book:
-            acc = 0.0
-            for a, b in zip(xs, c):
-                acc = acc + a * b
-            lut.append(acc)
-    return lut
+    return [
+        _fold_dot(x[s * sub : (s + 1) * sub], c)
+        for s, book in enumerate(books)
+        for c in book
+    ]
 
 
 def ivfpq_topk(

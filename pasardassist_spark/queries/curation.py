@@ -31,7 +31,7 @@ from pasardassist_spark.queries.text import (
     _STOP_SQL,
     _TOKS_SQL,
 )
-from pasardassist_spark.tables import load, local_frame
+from pasardassist_spark.tables import load, local_frame, map_rows
 
 MIN_SCORE = 0.4  # keep medium-or-better quality (see text_quality buckets)
 PACK_BUDGET = 512  # tokens per packed training sequence
@@ -1737,28 +1737,16 @@ def src_mbox_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from collections.abc import Iterator as _Iterator
-
-    import pandas as _pd
-
     from pasardassist_spark.operators.emailtext import encode_email, parse_email
     from pasardassist_spark.sources.mbox import read_mbox, write_mbox
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def _compose(it: _Iterator[_pd.DataFrame]) -> _Iterator[_pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {"msg": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                seed = int(doc_id)
-                out["msg"].append(
-                    encode_email(
-                        f"doc {seed}", 1700000000 + seed, text, seed
-                    )
-                )
-            yield _pd.DataFrame(out)
+    def _compose(doc_id, text):
+        seed = int(doc_id)
+        yield (encode_email(f"doc {seed}", 1700000000 + seed, text, seed),)
 
-    staged = d.repartition(8, "doc_id").mapInPandas(_compose, "msg binary")
+    staged = map_rows(d.repartition(8, "doc_id"), _compose, "msg binary")
 
     tmp = tempfile.mkdtemp(prefix="pasard_mbox_")
     atexit.register(shutil.rmtree, tmp, ignore_errors=True)
@@ -1768,26 +1756,17 @@ def src_mbox_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     back = read_mbox(spark, tmp)
 
-    def _extract(it: _Iterator[_pd.DataFrame]) -> _Iterator[_pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                "doc_id": [], "subject": [], "date_epoch": [],
-                "n_chars": [], "body_md5": [],
-            }
-            for raw in pdf["raw"]:
-                doc = parse_email(bytes(raw))
-                if not doc.subject.startswith("doc "):
-                    raise ValueError(f"foreign subject {doc.subject!r}")
-                out["doc_id"].append(int(doc.subject[4:]))
-                out["subject"].append(doc.subject)
-                out["date_epoch"].append(doc.date_epoch)
-                out["n_chars"].append(len(doc.text))
-                out["body_md5"].append(
-                    _hashlib.md5(doc.text.encode("utf-8")).hexdigest()
-                )
-            yield _pd.DataFrame(out)
+    def _extract(raw):
+        doc = parse_email(bytes(raw))
+        if not doc.subject.startswith("doc "):
+            raise ValueError(f"foreign subject {doc.subject!r}")
+        yield (
+            int(doc.subject[4:]), doc.subject, doc.date_epoch, len(doc.text),
+            _hashlib.md5(doc.text.encode("utf-8")).hexdigest(),
+        )
 
-    return back.mapInPandas(
+    return map_rows(
+        back.select("raw"),
         _extract,
         "doc_id long, subject string, date_epoch long, n_chars long, "
         "body_md5 string",

@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pasardassist_spark.operators import dedup as D
 from pasardassist_spark.operators.text import tokens
 from pasardassist_spark.queries.registry import query
-from pasardassist_spark.tables import load
+from pasardassist_spark.tables import load, map_rows
 
 _TOKS = "string_split_regex(trim(text), '\\s+')"
 # distinct 5-gram shingles per doc (docs with >= 5 tokens)
@@ -931,8 +931,6 @@ def dedup_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan); the vectorized chunker is pinned against a byte-at-a-time
     reference, invariants, and the resynchronization property in
     tests/test_chunking.py."""
-    import pandas as pd
-
     from pasardassist_spark.operators.chunking import cdc_chunks
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
@@ -942,33 +940,24 @@ def dedup_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     joined = d.join(prev, "doc_id", "left")
 
-    def _chunk(it):
-        for pdf in it:
-            out = {"doc_id": [], "start": [], "length": [], "digest": []}
-            for doc_id, text, prev_text in zip(
-                pdf["doc_id"], pdf["text"], pdf["prev_text"]
-            ):
-                seed = int(doc_id)
-                data = text.encode("utf-8")
-                if seed % 9 == 7 and prev_text is not None:
-                    # splice the WHOLE previous doc into the middle: a
-                    # genuine partial duplicate at a shifted offset
-                    pb = prev_text.encode("utf-8")
-                    a, b = len(data) // 3, 2 * len(data) // 3
-                    data = data[:a] + pb + data[b:]
-                for start, length, digest in cdc_chunks(data):
-                    out["doc_id"].append(seed)
-                    out["start"].append(start)
-                    out["length"].append(length)
-                    out["digest"].append(digest)
-            yield pd.DataFrame(out)
+    def _chunk(doc_id, text, prev_text):
+        seed = int(doc_id)
+        data = text.encode("utf-8")
+        if seed % 9 == 7 and prev_text is not None:
+            # splice the WHOLE previous doc into the middle: a genuine
+            # partial duplicate at a shifted offset
+            pb = prev_text.encode("utf-8")
+            a, b = len(data) // 3, 2 * len(data) // 3
+            data = data[:a] + pb + data[b:]
+        for start, length, digest in cdc_chunks(data):
+            yield seed, start, length, digest
 
     # persist (r18): three consumers (the shared-digest aggregate, the
     # semi-join left side, the per-doc rollup) — unstaged, the Python
     # chunking pass (the dominant cost, a JVM->Python boundary per guide
     # §4) ran three times. Chunk rows are digest proxies, never payload.
-    chunks = joined.mapInPandas(
-        _chunk, "doc_id long, start long, length long, digest string"
+    chunks = map_rows(
+        joined, _chunk, "doc_id long, start long, length long, digest string"
     ).persist()
     shared = (
         chunks.groupBy("digest")

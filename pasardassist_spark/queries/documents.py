@@ -5,10 +5,12 @@ through one plan.
 
 A real 100 TB training-data crawl is dominated by PDF and Office
 documents; extraction is a pure map pass (no shuffle) that runs at input
-bandwidth.  Spark-side both stages are Arrow-batched ``mapInPandas`` over
-binary payload columns — the plan is scan → project → mapInPandas, one
-stage, no exchange (same shape as the image decode family,
-queries/multimodal.py).
+bandwidth.  Spark-side every query is one per-row Python stage
+(``tables.map_rows``: write the container, parse it back, yield the
+output rows) — the plan is scan → project → mapInPandas, one stage, no
+exchange (same shape as the image decode family, queries/multimodal.py).
+The split-write-extract queries share ``_extract_parts``; the
+normalize-and-renumber ones share ``_normalized_extract``.
 
 Fixture-synthesis pattern (operators/gifcodec.py precedent): every
 document's OWN text is split into pages/paragraphs by closed-form
@@ -27,13 +29,10 @@ model turns into text (SURVEY §2.10 UDF surface / LLM-pipeline family).
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pasardassist_spark.queries.registry import query
-from pasardassist_spark.tables import load, local_frame
+from pasardassist_spark.tables import load, local_frame, map_rows
 
 _OUT_SCHEMA = (
     "doc_id long, part_no int, n_parts int, n_chars long, part_md5 string"
@@ -46,36 +45,55 @@ def _split_bounds(length: int, n: int) -> list[tuple[int, int]]:
     return [(length * p // n, length * (p + 1) // n) for p in range(n)]
 
 
-def _extract_rows(
-    it: Iterator[pd.DataFrame], n_mod: int, encode, extract,
-    id_aware: bool = False,
-) -> Iterator[pd.DataFrame]:
-    for pdf in it:
-        out: dict[str, list] = {
-            "doc_id": [], "part_no": [], "n_parts": [],
-            "n_chars": [], "part_md5": [],
-        }
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            n = int(doc_id) % n_mod + 1
-            parts = [text[a:b] for a, b in _split_bounds(len(text), n)]
-            payload = encode(parts, int(doc_id)) if id_aware else encode(parts)
-            got = extract(payload)
-            if len(got) != n:
-                # raise, not assert (must survive python -O): a parser
-                # regression must fail the task loudly, never emit a
-                # plausible wrong row count
-                raise ValueError(
-                    f"doc {doc_id}: wrote {n} parts, extracted {len(got)}"
-                )
-            for p, ptxt in enumerate(got):
-                out["doc_id"].append(doc_id)
-                out["part_no"].append(p)
-                out["n_parts"].append(n)
-                out["n_chars"].append(len(ptxt))
-                out["part_md5"].append(
-                    hashlib.md5(ptxt.encode("utf-8")).hexdigest()
-                )
-        yield pd.DataFrame(out)
+def _md5(s: str) -> str:
+    return hashlib.md5(s.encode("utf-8")).hexdigest()
+
+
+def _part_rows(doc_id, got: list[str]):
+    """One ``_OUT_SCHEMA`` row per extracted part."""
+    for p, ptxt in enumerate(got):
+        yield doc_id, p, len(got), len(ptxt), _md5(ptxt)
+
+
+def _extract_parts(d: DataFrame, n_mod: int, encode, extract) -> DataFrame:
+    """Split each (doc_id, text) row into doc_id % n_mod + 1 equal
+    character parts, write them with ``encode(parts, doc_id)``, parse
+    the payload back with ``extract`` and emit one ``_OUT_SCHEMA`` row per
+    recovered part."""
+
+    def _row(doc_id, text):
+        n = int(doc_id) % n_mod + 1
+        parts = [text[a:b] for a, b in _split_bounds(len(text), n)]
+        got = extract(encode(parts, int(doc_id)))
+        if len(got) != n:
+            # raise, not assert (must survive python -O): a parser
+            # regression must fail the task loudly, never emit a
+            # plausible wrong row count
+            raise ValueError(f"doc {doc_id}: wrote {n} parts, extracted {len(got)}")
+        yield from _part_rows(doc_id, got)
+
+    return map_rows(d, _row, _OUT_SCHEMA)
+
+
+def _normalized_extract(d: DataFrame, fmt: str, roundtrip) -> DataFrame:
+    """Split each (doc_id, text) row into doc_id % 7 + 1 equal character
+    parts, normalize each part's whitespace, drop the empty ones (the
+    ``_MD_ORACLE`` contract), and write and read them back with
+    ``roundtrip``; a result that differs from what was written fails the
+    task."""
+
+    def _row(doc_id, text):
+        n = int(doc_id) % 7 + 1
+        raw = [text[a:b] for a, b in _split_bounds(len(text), n)]
+        norm = [" ".join(w for w in part.split(" ") if w) for part in raw]
+        kept = [p for p in norm if p]
+        got = roundtrip(kept)
+        if got != kept:
+            # raise, not assert (must survive python -O)
+            raise ValueError(f"{fmt} round-trip mismatch for doc {doc_id}")
+        yield from _part_rows(doc_id, got)
+
+    return map_rows(d, _row, _OUT_SCHEMA)
 
 
 def _oracle(n_mod: int) -> str:
@@ -161,10 +179,7 @@ def doc_pdf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    return d.mapInPandas(
-        lambda it: _extract_rows(it, 3, enc, extract_pdf_pages, id_aware=True),
-        _OUT_SCHEMA,
-    )
+    return _extract_parts(d, 3, enc, extract_pdf_pages)
 
 
 @query("doc_docx_extract", oracle=_oracle(4))
@@ -185,9 +200,8 @@ def doc_docx_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    return d.mapInPandas(
-        lambda it: _extract_rows(it, 4, encode_docx, extract_docx_paragraphs),
-        _OUT_SCHEMA,
+    return _extract_parts(
+        d, 4, lambda parts, _: encode_docx(parts), extract_docx_paragraphs
     )
 
 
@@ -256,33 +270,22 @@ def pipeline_doc_extract_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     schema = "doc_id long, fmt string, n_parts int, text string"
 
-    def _stage(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                "doc_id": [], "fmt": [], "n_parts": [], "text": [],
-            }
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                seed = int(doc_id)
-                if seed % 2 == 0:
-                    fmt, n = "pdf", seed % 3 + 1
-                    parts = [text[a:b] for a, b in _split_bounds(len(text), n)]
-                    # rotate container generations: every other PDF is the
-                    # 1.5 xref-stream + ObjStm layout
-                    got = extract_pdf_pages(
-                        encode_pdf(parts, xref_stream=seed % 4 == 0)
-                    )
-                else:
-                    fmt, n = "docx", seed % 4 + 1
-                    parts = [text[a:b] for a, b in _split_bounds(len(text), n)]
-                    got = extract_docx_paragraphs(encode_docx(parts))
-                out["doc_id"].append(doc_id)
-                out["fmt"].append(fmt)
-                out["n_parts"].append(n)
-                out["text"].append("".join(got))
-            yield pd.DataFrame(out)
+    def _stage(doc_id, text):
+        seed = int(doc_id)
+        if seed % 2 == 0:
+            fmt, n = "pdf", seed % 3 + 1
+            parts = [text[a:b] for a, b in _split_bounds(len(text), n)]
+            # rotate container generations: every other PDF is the 1.5
+            # xref-stream + ObjStm layout
+            got = extract_pdf_pages(encode_pdf(parts, xref_stream=seed % 4 == 0))
+        else:
+            fmt, n = "docx", seed % 4 + 1
+            parts = [text[a:b] for a, b in _split_bounds(len(text), n)]
+            got = extract_docx_paragraphs(encode_docx(parts))
+        yield doc_id, fmt, n, "".join(got)
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    ext = d.mapInPandas(_stage, schema)
+    ext = map_rows(d, _stage, schema)
     toks = X.tokens(F.col("text"))
     n_words = F.size(toks).cast("long")
     mwl = (
@@ -324,9 +327,8 @@ def doc_epub_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    return d.mapInPandas(
-        lambda it: _extract_rows(it, 5, encode_epub, extract_epub_chapters),
-        _OUT_SCHEMA,
+    return _extract_parts(
+        d, 5, lambda parts, _: encode_epub(parts), extract_epub_chapters
     )
 
 
@@ -384,37 +386,10 @@ def doc_markdown_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         extract_markdown_blocks,
     )
 
-    def _stage(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                "doc_id": [], "part_no": [], "n_parts": [],
-                "n_chars": [], "part_md5": [],
-            }
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                n = int(doc_id) % 7 + 1
-                raw = [text[a:b] for a, b in _split_bounds(len(text), n)]
-                norm = [
-                    " ".join(w for w in part.split(" ") if w) for part in raw
-                ]
-                kept = [p for p in norm if p]
-                got = extract_markdown_blocks(encode_markdown(kept))
-                if got != kept:
-                    # raise, not assert (must survive python -O)
-                    raise ValueError(
-                        f"markdown round-trip mismatch for doc {doc_id}"
-                    )
-                for p, ptxt in enumerate(got):
-                    out["doc_id"].append(doc_id)
-                    out["part_no"].append(p)
-                    out["n_parts"].append(len(got))
-                    out["n_chars"].append(len(ptxt))
-                    out["part_md5"].append(
-                        hashlib.md5(ptxt.encode("utf-8")).hexdigest()
-                    )
-            yield pd.DataFrame(out)
-
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    return d.mapInPandas(_stage, _OUT_SCHEMA)
+    return _normalized_extract(
+        d, "markdown", lambda kept: extract_markdown_blocks(encode_markdown(kept))
+    )
 
 
 @query("doc_latex_extract", oracle=_MD_ORACLE)
@@ -435,45 +410,16 @@ def doc_latex_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_docformats.py."""
     from pasardassist_spark.operators.textext import encode_latex, latex_to_text
 
-    def _stage(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                "doc_id": [], "part_no": [], "n_parts": [],
-                "n_chars": [], "part_md5": [],
-            }
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                n = int(doc_id) % 7 + 1
-                raw = [text[a:b] for a, b in _split_bounds(len(text), n)]
-                norm = [
-                    " ".join(w for w in part.split(" ") if w) for part in raw
-                ]
-                kept = [p for p in norm if p]
-                tex = encode_latex(kept)
-                # the writer emits one construct per part separated by
-                # blank lines, which survive extraction as \n\n seams;
-                # normalize each segment's whitespace to recover parts
-                got = [
-                    " ".join(seg.split())
-                    for seg in latex_to_text(tex).split("\n\n")
-                ]
-                got = [g for g in got if g]
-                if got != kept:
-                    # raise, not assert (must survive python -O)
-                    raise ValueError(
-                        f"latex round-trip mismatch for doc {doc_id}"
-                    )
-                for p, ptxt in enumerate(got):
-                    out["doc_id"].append(doc_id)
-                    out["part_no"].append(p)
-                    out["n_parts"].append(len(got))
-                    out["n_chars"].append(len(ptxt))
-                    out["part_md5"].append(
-                        hashlib.md5(ptxt.encode("utf-8")).hexdigest()
-                    )
-            yield pd.DataFrame(out)
+    def _roundtrip(kept: list[str]) -> list[str]:
+        # the writer emits one construct per part separated by blank
+        # lines, which survive extraction as \n\n seams; normalize each
+        # segment's whitespace to recover parts
+        segs = latex_to_text(encode_latex(kept)).split("\n\n")
+        got = [" ".join(seg.split()) for seg in segs]
+        return [g for g in got if g]
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    return d.mapInPandas(_stage, _OUT_SCHEMA)
+    return _normalized_extract(d, "latex", _roundtrip)
 
 
 @query("doc_rtf_extract", oracle=_MD_ORACLE)
@@ -492,41 +438,13 @@ def doc_rtf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_docformats.py."""
     from pasardassist_spark.operators.rtftext import encode_rtf, rtf_to_text
 
-    def _stage(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                "doc_id": [], "part_no": [], "n_parts": [],
-                "n_chars": [], "part_md5": [],
-            }
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                n = int(doc_id) % 7 + 1
-                raw = [text[a:b] for a, b in _split_bounds(len(text), n)]
-                norm = [
-                    " ".join(w for w in part.split(" ") if w) for part in raw
-                ]
-                kept = [p for p in norm if p]
-                got = [
-                    " ".join(seg.split())
-                    for seg in rtf_to_text(encode_rtf(kept)).split("\n")
-                ]
-                got = [g for g in got if g]
-                if got != kept:
-                    # raise, not assert (must survive python -O)
-                    raise ValueError(
-                        f"rtf round-trip mismatch for doc {doc_id}"
-                    )
-                for p, ptxt in enumerate(got):
-                    out["doc_id"].append(doc_id)
-                    out["part_no"].append(p)
-                    out["n_parts"].append(len(got))
-                    out["n_chars"].append(len(ptxt))
-                    out["part_md5"].append(
-                        hashlib.md5(ptxt.encode("utf-8")).hexdigest()
-                    )
-            yield pd.DataFrame(out)
+    def _roundtrip(kept: list[str]) -> list[str]:
+        segs = rtf_to_text(encode_rtf(kept)).split("\n")
+        got = [" ".join(seg.split()) for seg in segs]
+        return [g for g in got if g]
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    return d.mapInPandas(_stage, _OUT_SCHEMA)
+    return _normalized_extract(d, "rtf", _roundtrip)
 
 
 @query(
@@ -579,51 +497,31 @@ def doc_feed_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_chars long, title_md5 string"
     )
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                "doc_id": [], "kind": [], "entry_no": [], "ts_epoch": [],
-                "n_chars": [], "title_md5": [],
-            }
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                seed = int(doc_id)
-                kind = "rss" if seed % 2 == 0 else "atom"
-                n = seed % 5 + 1
-                words = [w for w in text.split(" ") if w]
-                w_ = len(words)
-                entries = []
-                for i in range(n):
-                    a, b = (w_ * i) // n, (w_ * (i + 1)) // n
-                    epoch = 1600000000 + seed * 37 + i * 7919
-                    off = ((seed + i) % 25 - 12) * 30
-                    title = " ".join(words[a:b])
-                    entries.append(
-                        (title, f"http://feed/{seed}/{i}", epoch, off, title)
-                    )
-                xml = (encode_rss if kind == "rss" else encode_atom)(
-                    f"feed-{seed}", entries
-                )
-                got_kind, _, got = parse_feed(xml)
-                if got_kind != kind or [
-                    (e.title, e.ts_epoch) for e in got
-                ] != [(t, ep) for t, _l, ep, _o, _s in entries]:
-                    # raise, not assert (must survive python -O)
-                    raise ValueError(
-                        f"feed round-trip mismatch for doc {doc_id}"
-                    )
-                for e in got:
-                    out["doc_id"].append(doc_id)
-                    out["kind"].append(kind)
-                    out["entry_no"].append(e.entry_no)
-                    out["ts_epoch"].append(e.ts_epoch)
-                    out["n_chars"].append(len(e.title))
-                    out["title_md5"].append(
-                        hashlib.md5(e.title.encode("utf-8")).hexdigest()
-                    )
-            yield pd.DataFrame(out)
+    def _row(doc_id, text):
+        seed = int(doc_id)
+        kind = "rss" if seed % 2 == 0 else "atom"
+        n = seed % 5 + 1
+        words = [w for w in text.split(" ") if w]
+        w_ = len(words)
+        entries = []
+        for i in range(n):
+            a, b = (w_ * i) // n, (w_ * (i + 1)) // n
+            epoch = 1600000000 + seed * 37 + i * 7919
+            off = ((seed + i) % 25 - 12) * 30
+            title = " ".join(words[a:b])
+            entries.append((title, f"http://feed/{seed}/{i}", epoch, off, title))
+        xml = (encode_rss if kind == "rss" else encode_atom)(f"feed-{seed}", entries)
+        got_kind, _, got = parse_feed(xml)
+        if got_kind != kind or [
+            (e.title, e.ts_epoch) for e in got
+        ] != [(t, ep) for t, _l, ep, _o, _s in entries]:
+            # raise, not assert (must survive python -O)
+            raise ValueError(f"feed round-trip mismatch for doc {doc_id}")
+        for e in got:
+            yield doc_id, kind, e.entry_no, e.ts_epoch, len(e.title), _md5(e.title)
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    return d.mapInPandas(_batches, schema)
+    return map_rows(d, _row, schema)
 
 
 @query(
@@ -760,60 +658,40 @@ def pipeline_any_doc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     schema = "doc_id long, fmt string, n_chars long, text_md5 string"
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                "doc_id": [], "fmt": [], "n_chars": [], "text_md5": [],
-            }
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                seed = int(doc_id)
-                fmt = fmts[seed % 12]
-                enc, ext = codecs[fmt]
-                n = seed % 3 + 2
-                words = [w for w in text.split(" ") if w]
-                w_ = len(words)
-                # WORD-boundary splits: rejoining parts must reproduce the
-                # normalized document exactly (character splits would cut
-                # words at part seams)
-                kept = [
-                    " ".join(words[w_ * p // n : w_ * (p + 1) // n])
-                    for p in range(n)
-                ]
-                kept = [p for p in kept if p]
-                payload = enc(kept)
-                # route the EXTRACTION by sniffing the payload, the way a
-                # crawl pipeline routes an unlabeled blob — the known fmt
-                # only checks the sniffer; binary formats sniff on magic
-                # bytes (epub before docx: both are zips, epub is
-                # distinguished by its stored mimetype), text formats on
-                # the RTF magic with markdown/latex left to the router's
-                # declared default ordering
-                sniffed = _sniff_document(payload)
-                if sniffed != fmt:
-                    raise ValueError(
-                        f"sniffer said {sniffed!r}, expected {fmt!r} "
-                        f"(doc {doc_id})"
-                    )
-                got = ext(payload)
-                joined = " ".join(
-                    " ".join(w for w in g.split(" ") if w) for g in got if g
-                )
-                want = " ".join(w for w in text.split(" ") if w)
-                if joined != want:
-                    # raise, not assert (must survive python -O)
-                    raise ValueError(
-                        f"{fmt} dispatcher round-trip mismatch, doc {doc_id}"
-                    )
-                out["doc_id"].append(doc_id)
-                out["fmt"].append(fmt)
-                out["n_chars"].append(len(joined))
-                out["text_md5"].append(
-                    hashlib.md5(joined.encode("utf-8")).hexdigest()
-                )
-            yield pd.DataFrame(out)
+    def _row(doc_id, text):
+        seed = int(doc_id)
+        fmt = fmts[seed % 12]
+        enc, ext = codecs[fmt]
+        n = seed % 3 + 2
+        words = [w for w in text.split(" ") if w]
+        w_ = len(words)
+        # WORD-boundary splits: rejoining parts must reproduce the
+        # normalized document exactly (character splits would cut words
+        # at part seams)
+        kept = [" ".join(words[w_ * p // n : w_ * (p + 1) // n]) for p in range(n)]
+        kept = [p for p in kept if p]
+        payload = enc(kept)
+        # route the EXTRACTION by sniffing the payload, the way a crawl
+        # pipeline routes an unlabeled blob — the known fmt only checks
+        # the sniffer; binary formats sniff on magic bytes (epub before
+        # docx: both are zips, epub is distinguished by its stored
+        # mimetype), text formats on the RTF magic with markdown/latex
+        # left to the router's declared default ordering
+        sniffed = _sniff_document(payload)
+        if sniffed != fmt:
+            raise ValueError(
+                f"sniffer said {sniffed!r}, expected {fmt!r} (doc {doc_id})"
+            )
+        got = ext(payload)
+        joined = " ".join(" ".join(w for w in g.split(" ") if w) for g in got if g)
+        want = " ".join(w for w in text.split(" ") if w)
+        if joined != want:
+            # raise, not assert (must survive python -O)
+            raise ValueError(f"{fmt} dispatcher round-trip mismatch, doc {doc_id}")
+        yield doc_id, fmt, len(joined), _md5(joined)
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    return d.mapInPandas(_batches, schema)
+    return map_rows(d, _row, schema)
 
 
 @query(
@@ -871,54 +749,36 @@ def doc_email_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         "date_epoch long, n_chars long, body_md5 string"
     )
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                "doc_id": [], "msg_no": [], "n_msgs": [], "subject": [],
-                "date_epoch": [], "n_chars": [], "body_md5": [],
-            }
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                seed = int(doc_id)
-                n = seed % 3 + 1
-                words = [w for w in text.split(" ") if w]
-                w_ = len(words)
-                msgs = []
-                for i in range(n):
-                    body = " ".join(words[w_ * i // n : w_ * (i + 1) // n])
-                    msgs.append(
-                        encode_email(
-                            f"msg {seed} {i}",
-                            1700000000 + seed * 97 + i * 61,
-                            body,
-                            seed + i,
-                        )
-                    )
-                got = split_mbox(encode_mbox(msgs))
-                if len(got) != n:
-                    # raise, not assert (must survive python -O)
-                    raise ValueError(
-                        f"doc {doc_id}: wrote {n} messages, split {len(got)}"
-                    )
-                for i, raw in enumerate(got):
-                    doc = parse_email(raw)
-                    if doc.subject != f"msg {seed} {i}":
-                        raise ValueError(
-                            f"doc {doc_id} msg {i}: subject mismatch "
-                            f"{doc.subject!r}"
-                        )
-                    out["doc_id"].append(doc_id)
-                    out["msg_no"].append(i)
-                    out["n_msgs"].append(n)
-                    out["subject"].append(doc.subject)
-                    out["date_epoch"].append(doc.date_epoch)
-                    out["n_chars"].append(len(doc.text))
-                    out["body_md5"].append(
-                        hashlib.md5(doc.text.encode("utf-8")).hexdigest()
-                    )
-            yield pd.DataFrame(out)
+    def _row(doc_id, text):
+        seed = int(doc_id)
+        n = seed % 3 + 1
+        words = [w for w in text.split(" ") if w]
+        w_ = len(words)
+        msgs = []
+        for i in range(n):
+            body = " ".join(words[w_ * i // n : w_ * (i + 1) // n])
+            msgs.append(
+                encode_email(
+                    f"msg {seed} {i}", 1700000000 + seed * 97 + i * 61, body, seed + i,
+                )
+            )
+        got = split_mbox(encode_mbox(msgs))
+        if len(got) != n:
+            # raise, not assert (must survive python -O)
+            raise ValueError(f"doc {doc_id}: wrote {n} messages, split {len(got)}")
+        for i, raw in enumerate(got):
+            doc = parse_email(raw)
+            if doc.subject != f"msg {seed} {i}":
+                raise ValueError(
+                    f"doc {doc_id} msg {i}: subject mismatch {doc.subject!r}"
+                )
+            yield (
+                doc_id, i, n, doc.subject, doc.date_epoch, len(doc.text),
+                _md5(doc.text),
+            )
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    return d.mapInPandas(_batches, schema)
+    return map_rows(d, _row, schema)
 
 
 @query(
@@ -970,48 +830,32 @@ def doc_email_attachments(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_bytes long, content_md5 string"
     )
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                "doc_id": [], "att_no": [], "filename": [], "ctype": [],
-                "n_bytes": [], "content_md5": [],
-            }
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                seed = int(doc_id)
-                n = seed % 3 + 1
-                words = [w for w in text.split(" ") if w]
-                w_ = len(words)
-                atts = [
-                    (
-                        f"slice-{i}.txt",
-                        " ".join(
-                            words[w_ * i // n : w_ * (i + 1) // n]
-                        ).encode("utf-8"),
-                    )
-                    for i in range(n)
-                ]
-                raw = encode_email_with_attachments(
-                    f"atts {seed}", 1700000000 + seed, "carrier body",
-                    atts, qp_body=bool(seed % 2),
-                )
-                if parse_email(raw).text != "carrier body":
-                    raise ValueError(f"doc {doc_id}: body part corrupted")
-                got = extract_attachments(raw)
-                if len(got) != n:
-                    raise ValueError(
-                        f"doc {doc_id}: wrote {n} attachments, got {len(got)}"
-                    )
-                for i, (fname, ctype, data) in enumerate(got):
-                    out["doc_id"].append(doc_id)
-                    out["att_no"].append(i)
-                    out["filename"].append(fname)
-                    out["ctype"].append(ctype)
-                    out["n_bytes"].append(len(data))
-                    out["content_md5"].append(hashlib.md5(data).hexdigest())
-            yield pd.DataFrame(out)
+    def _row(doc_id, text):
+        seed = int(doc_id)
+        n = seed % 3 + 1
+        words = [w for w in text.split(" ") if w]
+        w_ = len(words)
+        atts = [
+            (
+                f"slice-{i}.txt",
+                " ".join(words[w_ * i // n : w_ * (i + 1) // n]).encode("utf-8"),
+            )
+            for i in range(n)
+        ]
+        raw = encode_email_with_attachments(
+            f"atts {seed}", 1700000000 + seed, "carrier body",
+            atts, qp_body=bool(seed % 2),
+        )
+        if parse_email(raw).text != "carrier body":
+            raise ValueError(f"doc {doc_id}: body part corrupted")
+        got = extract_attachments(raw)
+        if len(got) != n:
+            raise ValueError(f"doc {doc_id}: wrote {n} attachments, got {len(got)}")
+        for i, (fname, ctype, data) in enumerate(got):
+            yield doc_id, i, fname, ctype, len(data), hashlib.md5(data).hexdigest()
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    return d.mapInPandas(_batches, schema)
+    return map_rows(d, _row, schema)
 
 
 def _thread_roundtrip(seed: int, text: str) -> dict:
@@ -1122,37 +966,20 @@ def doc_email_threads(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_chars long, body_md5 string"
     )
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                "doc_id": [], "msg_id": [], "parent_id": [], "depth": [],
-                "n_chars": [], "body_md5": [],
-            }
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                seed = int(doc_id)
-                parsed = _thread_roundtrip(seed, text)
-                for mid, doc in parsed.items():
-                    depth, p, hops = 0, doc.in_reply_to, 0
-                    while p is not None:
-                        if p not in parsed or hops > 64:
-                            raise ValueError(
-                                f"doc {doc_id}: broken thread chain at {p!r}"
-                            )
-                        depth += 1
-                        hops += 1
-                        p = parsed[p].in_reply_to
-                    out["doc_id"].append(doc_id)
-                    out["msg_id"].append(mid)
-                    out["parent_id"].append(doc.in_reply_to)
-                    out["depth"].append(depth)
-                    out["n_chars"].append(len(doc.text))
-                    out["body_md5"].append(
-                        hashlib.md5(doc.text.encode("utf-8")).hexdigest()
-                    )
-            yield pd.DataFrame(out)
+    def _row(doc_id, text):
+        parsed = _thread_roundtrip(int(doc_id), text)
+        for mid, doc in parsed.items():
+            depth, p, hops = 0, doc.in_reply_to, 0
+            while p is not None:
+                if p not in parsed or hops > 64:
+                    raise ValueError(f"doc {doc_id}: broken thread chain at {p!r}")
+                depth += 1
+                hops += 1
+                p = parsed[p].in_reply_to
+            yield doc_id, mid, doc.in_reply_to, depth, len(doc.text), _md5(doc.text)
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    return d.mapInPandas(_batches, schema)
+    return map_rows(d, _row, schema)
 
 
 @query(
@@ -1220,50 +1047,30 @@ def pipeline_email_to_sft(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rendered_md5 string"
     )
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                "doc_id": [], "leaf_id": [], "n_turns": [],
-                "assistant_chars": [], "rendered_md5": [],
-            }
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                seed = int(doc_id)
-                parsed = _thread_roundtrip(seed, text)
-                parents = {m.in_reply_to for m in parsed.values()
-                           if m.in_reply_to is not None}
-                leaves = [mid for mid in parsed if mid not in parents]
-                for leaf in leaves:
-                    path, p, hops = [], leaf, 0
-                    while p is not None:
-                        if p not in parsed or hops > 64:
-                            raise ValueError(
-                                f"doc {doc_id}: broken chain at {p!r}"
-                            )
-                        path.append(p)
-                        hops += 1
-                        p = parsed[p].in_reply_to
-                    path.reverse()  # root -> leaf
-                    chunks, a_chars = [], 0
-                    for depth, mid in enumerate(path):
-                        role = "user" if depth % 2 == 0 else "assistant"
-                        body = parsed[mid].text
-                        if role == "assistant":
-                            a_chars += len(body)
-                        chunks.append(
-                            f"<|im_start|>{role}\n{body}<|im_end|>\n"
-                        )
-                    rendered = "".join(chunks)
-                    out["doc_id"].append(doc_id)
-                    out["leaf_id"].append(leaf)
-                    out["n_turns"].append(len(path))
-                    out["assistant_chars"].append(a_chars)
-                    out["rendered_md5"].append(
-                        hashlib.md5(rendered.encode("utf-8")).hexdigest()
-                    )
-            yield pd.DataFrame(out)
+    def _row(doc_id, text):
+        parsed = _thread_roundtrip(int(doc_id), text)
+        parents = {m.in_reply_to for m in parsed.values() if m.in_reply_to is not None}
+        leaves = [mid for mid in parsed if mid not in parents]
+        for leaf in leaves:
+            path, p, hops = [], leaf, 0
+            while p is not None:
+                if p not in parsed or hops > 64:
+                    raise ValueError(f"doc {doc_id}: broken chain at {p!r}")
+                path.append(p)
+                hops += 1
+                p = parsed[p].in_reply_to
+            path.reverse()  # root -> leaf
+            chunks, a_chars = [], 0
+            for depth, mid in enumerate(path):
+                role = "user" if depth % 2 == 0 else "assistant"
+                body = parsed[mid].text
+                if role == "assistant":
+                    a_chars += len(body)
+                chunks.append(f"<|im_start|>{role}\n{body}<|im_end|>\n")
+            yield doc_id, leaf, len(path), a_chars, _md5("".join(chunks))
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    return d.mapInPandas(_batches, schema)
+    return map_rows(d, _row, schema)
 
 
 @query("doc_xlsx_extract", oracle=_oracle(5))
@@ -1285,9 +1092,8 @@ def doc_xlsx_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    return d.mapInPandas(
-        lambda it: _extract_rows(it, 5, encode_xlsx, extract_xlsx_cells),
-        _OUT_SCHEMA,
+    return _extract_parts(
+        d, 5, lambda parts, _: encode_xlsx(parts), extract_xlsx_cells
     )
 
 
@@ -1351,58 +1157,40 @@ def doc_xlsx_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     header = ["name", "qty", "price", "active", "since"]
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                "doc_id": [], "rec_no": [], "name_n_chars": [],
-                "name_md5": [], "qty": [], "price_cents": [],
-                "active": [], "since": [],
-            }
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                seed = int(doc_id)
-                n = seed % 4 + 2
-                d1904 = seed % 2 == 1
-                # same calendar date either way: the 1904 system sits
-                # exactly 1,462 days behind the 1900 system
-                shift = 1462 if d1904 else 0
-                words = [w for w in text.split(" ") if w]
-                w_ = len(words)
-                rows = []
-                for i in range(n):
-                    rows.append([
-                        " ".join(words[w_ * i // n : w_ * (i + 1) // n]),
-                        seed * 7 + i * 13,
-                        float(seed % 100 + i) + 0.25,
-                        (seed + i) % 2 == 0,
-                        ("date", 40000 + seed % 1000 + i * 3 - shift),
-                    ])
-                payload = encode_xlsx_table(header, rows, date1904=d1904)
-                got = extract_xlsx_typed(payload)
-                if len(got) != n + 1 or got[0] != [("s", h) for h in header]:
-                    raise ValueError(
-                        f"doc {doc_id}: header/record shape mismatch"
-                    )
-                for i, cells in enumerate(got[1:]):
-                    kinds = [k for k, _v in cells]
-                    if kinds != ["s", "n", "n", "b", "d"]:
-                        raise ValueError(
-                            f"doc {doc_id} rec {i}: cell typing {kinds}"
-                        )
-                    name = cells[0][1]
-                    out["doc_id"].append(doc_id)
-                    out["rec_no"].append(i)
-                    out["name_n_chars"].append(len(name))
-                    out["name_md5"].append(
-                        hashlib.md5(name.encode("utf-8")).hexdigest()
-                    )
-                    out["qty"].append(int(cells[1][1]))
-                    out["price_cents"].append(round(float(cells[2][1]) * 100))
-                    out["active"].append(cells[3][1] == "TRUE")
-                    out["since"].append(cells[4][1])
-            yield pd.DataFrame(out)
+    def _row(doc_id, text):
+        seed = int(doc_id)
+        n = seed % 4 + 2
+        d1904 = seed % 2 == 1
+        # same calendar date either way: the 1904 system sits exactly
+        # 1,462 days behind the 1900 system
+        shift = 1462 if d1904 else 0
+        words = [w for w in text.split(" ") if w]
+        w_ = len(words)
+        rows = []
+        for i in range(n):
+            rows.append([
+                " ".join(words[w_ * i // n : w_ * (i + 1) // n]),
+                seed * 7 + i * 13,
+                float(seed % 100 + i) + 0.25,
+                (seed + i) % 2 == 0,
+                ("date", 40000 + seed % 1000 + i * 3 - shift),
+            ])
+        got = extract_xlsx_typed(encode_xlsx_table(header, rows, date1904=d1904))
+        if len(got) != n + 1 or got[0] != [("s", h) for h in header]:
+            raise ValueError(f"doc {doc_id}: header/record shape mismatch")
+        for i, cells in enumerate(got[1:]):
+            kinds = [k for k, _v in cells]
+            if kinds != ["s", "n", "n", "b", "d"]:
+                raise ValueError(f"doc {doc_id} rec {i}: cell typing {kinds}")
+            name = cells[0][1]
+            yield (
+                doc_id, i, len(name), _md5(name), int(cells[1][1]),
+                round(float(cells[2][1]) * 100), cells[3][1] == "TRUE",
+                cells[4][1],
+            )
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    return d.mapInPandas(_batches, schema)
+    return map_rows(d, _row, schema)
 
 
 @query("doc_pptx_extract", oracle=_oracle(3))
@@ -1422,9 +1210,8 @@ def doc_pptx_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    return d.mapInPandas(
-        lambda it: _extract_rows(it, 3, encode_pptx, extract_pptx_slides),
-        _OUT_SCHEMA,
+    return _extract_parts(
+        d, 3, lambda parts, _: encode_pptx(parts), extract_pptx_slides
     )
 
 
@@ -1475,45 +1262,29 @@ def doc_pptx_notes(spark: SparkSession, sf_dir: str) -> DataFrame:
         "notes_md5 string"
     )
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                "doc_id": [], "slide_no": [], "slide_md5": [],
-                "has_notes": [], "notes_md5": [],
-            }
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                seed = int(doc_id)
-                n = seed % 3 + 1
-                words = [w for w in text.split(" ") if w]
-                w_ = len(words)
-                slides, notes = [], []
-                for i in range(n):
-                    ws = words[w_ * i // n : w_ * (i + 1) // n]
-                    slides.append(" ".join(ws))
-                    notes.append(
-                        " ".join(reversed(ws)) if (seed + i) % 2 == 0
-                        else None
-                    )
-                payload = encode_pptx(slides, notes)
-                got_s = extract_pptx_slides(payload)
-                got_n = extract_pptx_notes(payload)
-                if got_s != slides or len(got_n) != n:
-                    raise ValueError(f"doc {doc_id}: deck round-trip broke")
-                for i in range(n):
-                    out["doc_id"].append(doc_id)
-                    out["slide_no"].append(i)
-                    out["slide_md5"].append(
-                        hashlib.md5(got_s[i].encode("utf-8")).hexdigest()
-                    )
-                    out["has_notes"].append(got_n[i] is not None)
-                    out["notes_md5"].append(
-                        None if got_n[i] is None else
-                        hashlib.md5(got_n[i].encode("utf-8")).hexdigest()
-                    )
-            yield pd.DataFrame(out)
+    def _row(doc_id, text):
+        seed = int(doc_id)
+        n = seed % 3 + 1
+        words = [w for w in text.split(" ") if w]
+        w_ = len(words)
+        slides, notes = [], []
+        for i in range(n):
+            ws = words[w_ * i // n : w_ * (i + 1) // n]
+            slides.append(" ".join(ws))
+            notes.append(" ".join(reversed(ws)) if (seed + i) % 2 == 0 else None)
+        payload = encode_pptx(slides, notes)
+        got_s = extract_pptx_slides(payload)
+        got_n = extract_pptx_notes(payload)
+        if got_s != slides or len(got_n) != n:
+            raise ValueError(f"doc {doc_id}: deck round-trip broke")
+        for i in range(n):
+            yield (
+                doc_id, i, _md5(got_s[i]), got_n[i] is not None,
+                None if got_n[i] is None else _md5(got_n[i]),
+            )
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    return d.mapInPandas(_batches, schema)
+    return map_rows(d, _row, schema)
 
 
 @query("doc_encrypted_extract", oracle=_oracle(3))
@@ -1577,40 +1348,19 @@ def doc_encrypted_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             hash_algorithm="SHA256" if doc_id % 5 == 0 else "SHA512",
         )
 
-    # _extract_rows takes one extract fn; here format AND password both
-    # depend on the row id, so the loop is inlined id-aware instead
-    def _rows(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib as _hl
-
-        for pdf in it:
-            out: dict[str, list] = {
-                "doc_id": [], "part_no": [], "n_parts": [],
-                "n_chars": [], "part_md5": [],
-            }
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(doc_id)
-                n = i % 3 + 1
-                parts = [
-                    text[a:b] for a, b in _split_bounds(len(text), n)
-                ]
-                payload = enc(parts, i)
-                got = _EXTRACTORS[i % 3](payload, password=f"pw{i % 97}")
-                if got != parts:
-                    raise ValueError(
-                        f"doc {doc_id}: encrypted round-trip mismatch"
-                    )
-                for p, ptxt in enumerate(got):
-                    out["doc_id"].append(doc_id)
-                    out["part_no"].append(p)
-                    out["n_parts"].append(n)
-                    out["n_chars"].append(len(ptxt))
-                    out["part_md5"].append(
-                        _hl.md5(ptxt.encode("utf-8")).hexdigest()
-                    )
-            yield pd.DataFrame(out)
+    # format AND password both depend on the row id, and the check is
+    # the exact parts, not just their count
+    def _row(doc_id, text):
+        i = int(doc_id)
+        n = i % 3 + 1
+        parts = [text[a:b] for a, b in _split_bounds(len(text), n)]
+        got = _EXTRACTORS[i % 3](enc(parts, i), password=f"pw{i % 97}")
+        if got != parts:
+            raise ValueError(f"doc {doc_id}: encrypted round-trip mismatch")
+        yield from _part_rows(doc_id, got)
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    return d.mapInPandas(_rows, _OUT_SCHEMA)
+    return map_rows(d, _row, _OUT_SCHEMA)
 
 
 @query(
@@ -1647,29 +1397,15 @@ def doc_legacy_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     schema = "doc_id long, n_chars long, text_md5 string"
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                "doc_id": [], "n_chars": [], "text_md5": [],
-            }
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                enc_mode = (None, "standard", "cryptoapi")[
-                    int(doc_id) % 3
-                ]
-                got = extract_doc_text(encode_doc(text, encrypt=enc_mode))
-                if got != text:
-                    raise ValueError(
-                        f"doc {doc_id}: .doc round-trip mismatch"
-                    )
-                out["doc_id"].append(doc_id)
-                out["n_chars"].append(len(got))
-                out["text_md5"].append(
-                    hashlib.md5(got.encode("utf-8")).hexdigest()
-                )
-            yield pd.DataFrame(out)
+    def _row(doc_id, text):
+        enc_mode = (None, "standard", "cryptoapi")[int(doc_id) % 3]
+        got = extract_doc_text(encode_doc(text, encrypt=enc_mode))
+        if got != text:
+            raise ValueError(f"doc {doc_id}: .doc round-trip mismatch")
+        yield doc_id, len(got), _md5(got)
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    return d.mapInPandas(_batches, schema)
+    return map_rows(d, _row, schema)
 
 
 @query(
@@ -1732,52 +1468,32 @@ def doc_xls_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cents long"
     )
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                "doc_id": [], "row_": [], "col_": [], "kind": [],
-                "str_md5": [], "cents": [],
-            }
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                seed = int(doc_id)
-                n = seed % 4 + 1
-                words = [w for w in text.split(" ") if w]
-                w_ = len(words)
-                strings = [
-                    " ".join(words[w_ * i // n : w_ * (i + 1) // n])
-                    for i in range(n)
-                ]
-                scells = [(i, 0, i) for i in range(n)] + [(n, 0, 0)]
-                ncells = [(j, 1, float(seed + j) + 0.25) for j in range(2)]
-                enc_mode = (None, "standard", "cryptoapi")[seed % 3]
-                payload = encode_xls(
-                    "Data", scells, strings, ncells, encrypt=enc_mode
-                )
-                got = extract_xls_cells(payload)
-                if len(got) != len(scells) + len(ncells):
-                    raise ValueError(
-                        f"doc {doc_id}: cell count {len(got)} != "
-                        f"{len(scells) + len(ncells)}"
-                    )
-                for sheet, row, col, kind, value in got:
-                    if sheet != "Data":
-                        raise ValueError(f"doc {doc_id}: sheet {sheet!r}")
-                    out["doc_id"].append(doc_id)
-                    out["row_"].append(row)
-                    out["col_"].append(col)
-                    out["kind"].append(kind)
-                    if kind == "s":
-                        out["str_md5"].append(
-                            hashlib.md5(value.encode("utf-8")).hexdigest()
-                        )
-                        out["cents"].append(None)
-                    else:
-                        out["str_md5"].append(None)
-                        out["cents"].append(round(float(value) * 100))
-            yield pd.DataFrame(out)
+    def _row(doc_id, text):
+        seed = int(doc_id)
+        n = seed % 4 + 1
+        words = [w for w in text.split(" ") if w]
+        w_ = len(words)
+        strings = [" ".join(words[w_ * i // n : w_ * (i + 1) // n]) for i in range(n)]
+        scells = [(i, 0, i) for i in range(n)] + [(n, 0, 0)]
+        ncells = [(j, 1, float(seed + j) + 0.25) for j in range(2)]
+        enc_mode = (None, "standard", "cryptoapi")[seed % 3]
+        payload = encode_xls("Data", scells, strings, ncells, encrypt=enc_mode)
+        got = extract_xls_cells(payload)
+        if len(got) != len(scells) + len(ncells):
+            raise ValueError(
+                f"doc {doc_id}: cell count {len(got)} != "
+                f"{len(scells) + len(ncells)}"
+            )
+        for sheet, row, col, kind, value in got:
+            if sheet != "Data":
+                raise ValueError(f"doc {doc_id}: sheet {sheet!r}")
+            if kind == "s":
+                yield doc_id, row, col, kind, _md5(value), None
+            else:
+                yield doc_id, row, col, kind, None, round(float(value) * 100)
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    return d.mapInPandas(_batches, schema)
+    return map_rows(d, _row, schema)
 
 
 @query(
@@ -1824,41 +1540,22 @@ def doc_msg_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_attachments int, att_names_md5 string"
     )
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                "doc_id": [], "subject_md5": [], "body_md5": [],
-                "n_attachments": [], "att_names_md5": [],
-            }
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                seed = int(doc_id)
-                body = " ".join(w for w in text.split(" ") if w)
-                atts = [f"file-{seed}-{i}.bin" for i in range(seed % 3)]
-                got = extract_msg(
-                    encode_msg(
-                        f"mail {seed}", body, "corpus", atts,
-                        rtf_body=seed % 2 == 1,
-                    )
-                )
-                if got.body != body or got.attachments != atts:
-                    raise ValueError(f"doc {doc_id}: .msg round-trip broke")
-                out["doc_id"].append(doc_id)
-                out["subject_md5"].append(
-                    hashlib.md5(got.subject.encode("utf-8")).hexdigest()
-                )
-                out["body_md5"].append(
-                    hashlib.md5(got.body.encode("utf-8")).hexdigest()
-                )
-                out["n_attachments"].append(len(got.attachments))
-                out["att_names_md5"].append(
-                    hashlib.md5(
-                        "|".join(got.attachments).encode("utf-8")
-                    ).hexdigest()
-                )
-            yield pd.DataFrame(out)
+    def _row(doc_id, text):
+        seed = int(doc_id)
+        body = " ".join(w for w in text.split(" ") if w)
+        atts = [f"file-{seed}-{i}.bin" for i in range(seed % 3)]
+        got = extract_msg(
+            encode_msg(f"mail {seed}", body, "corpus", atts, rtf_body=seed % 2 == 1)
+        )
+        if got.body != body or got.attachments != atts:
+            raise ValueError(f"doc {doc_id}: .msg round-trip broke")
+        yield (
+            doc_id, _md5(got.subject), _md5(got.body), len(got.attachments),
+            _md5("|".join(got.attachments)),
+        )
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    return d.mapInPandas(_batches, schema)
+    return map_rows(d, _row, schema)
 
 
 @query(
@@ -1908,43 +1605,26 @@ def doc_cfb_streams(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     schema = "doc_id long, path string, n_bytes long, content_md5 string"
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                "doc_id": [], "path": [], "n_bytes": [], "content_md5": [],
-            }
-            for doc_id, text, lang in zip(
-                pdf["doc_id"], pdf["text"], pdf["lang"]
-            ):
-                seed = int(doc_id)
-                n = seed % 3 + 1
-                words = [w for w in text.split(" ") if w]
-                w_ = len(words)
-                streams = [("body.txt", text.encode("utf-8"))]
-                for i in range(n):
-                    streams.append((
-                        f"part-{i}",
-                        " ".join(
-                            words[w_ * i // n : w_ * (i + 1) // n]
-                        ).encode("utf-8"),
-                    ))
-                streams.append(("meta/lang", str(lang).encode("utf-8")))
-                got = read_cfb(write_cfb(streams))
-                if sorted(got) != sorted(streams):
-                    raise ValueError(
-                        f"doc {doc_id}: CFB round-trip mismatch"
-                    )
-                for path, blob in got:
-                    out["doc_id"].append(doc_id)
-                    out["path"].append(path)
-                    out["n_bytes"].append(len(blob))
-                    out["content_md5"].append(
-                        hashlib.md5(blob).hexdigest()
-                    )
-            yield pd.DataFrame(out)
+    def _row(doc_id, text, lang):
+        seed = int(doc_id)
+        n = seed % 3 + 1
+        words = [w for w in text.split(" ") if w]
+        w_ = len(words)
+        streams = [("body.txt", text.encode("utf-8"))]
+        for i in range(n):
+            streams.append((
+                f"part-{i}",
+                " ".join(words[w_ * i // n : w_ * (i + 1) // n]).encode("utf-8"),
+            ))
+        streams.append(("meta/lang", str(lang).encode("utf-8")))
+        got = read_cfb(write_cfb(streams))
+        if sorted(got) != sorted(streams):
+            raise ValueError(f"doc {doc_id}: CFB round-trip mismatch")
+        for path, blob in got:
+            yield doc_id, path, len(blob), hashlib.md5(blob).hexdigest()
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text", "lang")
-    return d.mapInPandas(_batches, schema)
+    return map_rows(d, _row, schema)
 
 
 @query("doc_odt_extract", oracle=_oracle(4))
@@ -1986,13 +1666,8 @@ def doc_odt_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    return d.mapInPandas(
-        lambda it: _extract_rows(
-            it, 4, enc,
-            lambda p: extract_odt_paragraphs(p, "corpus-pw"),
-            id_aware=True,
-        ),
-        _OUT_SCHEMA,
+    return _extract_parts(
+        d, 4, enc, lambda p: extract_odt_paragraphs(p, "corpus-pw")
     )
 
 
@@ -2046,47 +1721,33 @@ def doc_ics_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         "summary_md5 string, desc_n_chars long"
     )
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                "doc_id": [], "event_no": [], "uid": [],
-                "dtstart_epoch": [], "summary_md5": [], "desc_n_chars": [],
-            }
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                seed = int(doc_id)
-                n = seed % 4 + 1
-                words = [w for w in text.split(" ") if w]
-                norm = " ".join(words)
-                w_ = len(words)
-                evs = []
-                for i in range(n):
-                    a, b = (w_ * i) // n, (w_ * (i + 1)) // n
-                    evs.append((
-                        f"ev-{seed}-{i}@corpus",
-                        1700000000 + seed * 53 + i * 3600,
-                        " ".join(words[a:b]),
-                        norm,
-                    ))
-                got = parse_ics(encode_ics(evs))
-                if [(e.uid, e.dtstart_epoch, e.summary, e.description)
-                        for e in got] != evs:
-                    # raise, not assert (must survive python -O)
-                    raise ValueError(
-                        f"iCalendar round-trip mismatch for doc {doc_id}"
-                    )
-                for e in got:
-                    out["doc_id"].append(doc_id)
-                    out["event_no"].append(e.event_no)
-                    out["uid"].append(e.uid)
-                    out["dtstart_epoch"].append(e.dtstart_epoch)
-                    out["summary_md5"].append(
-                        hashlib.md5(e.summary.encode("utf-8")).hexdigest()
-                    )
-                    out["desc_n_chars"].append(len(e.description))
-            yield pd.DataFrame(out)
+    def _row(doc_id, text):
+        seed = int(doc_id)
+        n = seed % 4 + 1
+        words = [w for w in text.split(" ") if w]
+        norm = " ".join(words)
+        w_ = len(words)
+        evs = []
+        for i in range(n):
+            a, b = (w_ * i) // n, (w_ * (i + 1)) // n
+            evs.append((
+                f"ev-{seed}-{i}@corpus",
+                1700000000 + seed * 53 + i * 3600,
+                " ".join(words[a:b]),
+                norm,
+            ))
+        got = parse_ics(encode_ics(evs))
+        if [(e.uid, e.dtstart_epoch, e.summary, e.description) for e in got] != evs:
+            # raise, not assert (must survive python -O)
+            raise ValueError(f"iCalendar round-trip mismatch for doc {doc_id}")
+        for e in got:
+            yield (
+                doc_id, e.event_no, e.uid, e.dtstart_epoch, _md5(e.summary),
+                len(e.description),
+            )
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    return d.mapInPandas(_batches, schema)
+    return map_rows(d, _row, schema)
 
 
 # ------------------------------------------- streaming doc-gate driver row
@@ -2226,46 +1887,30 @@ def streaming_docgate_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     joined = d.join(prev, "doc_id", "left")
 
-    def _synth(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids: list[int] = []
-            payloads: list[bytes] = []
-            for doc_id, text, prev_text in zip(
-                pdf["doc_id"], pdf["text"], pdf["prev_text"]
-            ):
-                seed = int(doc_id)
-                if seed % 7 == 3:
-                    payload = (
-                        b"BEGIN:VCALENDAR\nVERSION:2.0\nEND:VCALENDAR\n"
-                    )
-                else:
-                    dup = seed % 11 == 5 and prev_text is not None
-                    src = prev_text if dup else text
-                    src_seed = seed - 1 if dup else seed
-                    words: list[str] = []
-                    for i, w in enumerate(
-                        (x for x in src.split(" ") if x), 1
-                    ):
-                        words.append(w)
-                        if i % 3 == 0:
-                            words.append(f"qz{src_seed}x")
-                    body = " ".join(words)
-                    k = seed % 3
-                    if k == 0:
-                        payload = encode_pdf(
-                            [body], xref_stream=seed % 2 == 1
-                        )
-                    elif k == 1:
-                        payload = encode_docx([body])
-                    else:
-                        payload = body.encode("utf-8")
-                ids.append(seed)
-                payloads.append(payload)
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def _synth(doc_id, text, prev_text):
+        seed = int(doc_id)
+        if seed % 7 == 3:
+            payload = b"BEGIN:VCALENDAR\nVERSION:2.0\nEND:VCALENDAR\n"
+        else:
+            dup = seed % 11 == 5 and prev_text is not None
+            src = prev_text if dup else text
+            src_seed = seed - 1 if dup else seed
+            words: list[str] = []
+            for i, w in enumerate((x for x in src.split(" ") if x), 1):
+                words.append(w)
+                if i % 3 == 0:
+                    words.append(f"qz{src_seed}x")
+            body = " ".join(words)
+            k = seed % 3
+            if k == 0:
+                payload = encode_pdf([body], xref_stream=seed % 2 == 1)
+            elif k == 1:
+                payload = encode_docx([body])
+            else:
+                payload = body.encode("utf-8")
+        yield seed, payload
 
-    payloads = joined.mapInPandas(
-        _synth, "doc_id long, payload binary"
-    ).localCheckpoint()
+    payloads = map_rows(joined, _synth, "doc_id long, payload binary").localCheckpoint()
 
     state_dir = tempfile.mkdtemp(prefix="docgate_state_")
     admitted_dir = tempfile.mkdtemp(prefix="docgate_admitted_")
@@ -2354,64 +1999,37 @@ def pipeline_attachment_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         "att_text_md5 string"
     )
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                "doc_id": [], "n_attachments": [],
-                "body_md5": [], "att_text_md5": [],
-            }
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                seed = int(doc_id)
-                n_att = seed % 3
-                words = [w for w in text.split(" ") if w]
-                body = " ".join(words[: len(words) // 2])
-                rest = words[len(words) // 2 :]
-                atts: list[tuple[str, bytes]] = []
-                for i in range(n_att):
-                    part = " ".join(
-                        rest[len(rest) * i // n_att
-                             : len(rest) * (i + 1) // n_att]
-                    )
-                    if i % 2 == 0:
-                        atts.append(
-                            (f"part-{i}.docx", encode_docx([part]))
-                        )
-                    else:
-                        atts.append(
-                            (f"part-{i}.pdf",
-                             encode_pdf([part], xref_stream=True))
-                        )
-                if atts:
-                    payload = encode_email_with_attachments(
-                        f"att {seed}", 1_700_000_000 + seed, body, atts,
-                        qp_body=seed % 2 == 1,
-                    )
-                else:
-                    payload = encode_email(
-                        f"att {seed}", 1_700_000_000 + seed, body, 0
-                    )
-                msg = parse_email(payload)
-                got_body = " ".join(msg.text.split())
-                got_atts = []
-                for _fname, _ctype, blob in extract_attachments(payload):
-                    _fmt, att_text = extract_document(blob)
-                    got_atts.append(att_text)
-                if got_body != body or len(got_atts) != n_att:
-                    raise ValueError(
-                        f"doc {doc_id}: attachment recursion broke "
-                        f"({len(got_atts)} of {n_att} attachments)"
-                    )
-                out["doc_id"].append(doc_id)
-                out["n_attachments"].append(n_att)
-                out["body_md5"].append(
-                    hashlib.md5(got_body.encode("utf-8")).hexdigest()
-                )
-                out["att_text_md5"].append(
-                    hashlib.md5(
-                        "|".join(got_atts).encode("utf-8")
-                    ).hexdigest()
-                )
-            yield pd.DataFrame(out)
+    def _row(doc_id, text):
+        seed = int(doc_id)
+        n_att = seed % 3
+        words = [w for w in text.split(" ") if w]
+        body = " ".join(words[: len(words) // 2])
+        rest = words[len(words) // 2 :]
+        atts: list[tuple[str, bytes]] = []
+        for i in range(n_att):
+            part = " ".join(rest[len(rest) * i // n_att : len(rest) * (i + 1) // n_att])
+            if i % 2 == 0:
+                atts.append((f"part-{i}.docx", encode_docx([part])))
+            else:
+                atts.append((f"part-{i}.pdf", encode_pdf([part], xref_stream=True)))
+        if atts:
+            payload = encode_email_with_attachments(
+                f"att {seed}", 1_700_000_000 + seed, body, atts,
+                qp_body=seed % 2 == 1,
+            )
+        else:
+            payload = encode_email(f"att {seed}", 1_700_000_000 + seed, body, 0)
+        got_body = " ".join(parse_email(payload).text.split())
+        got_atts = [
+            extract_document(blob)[1]
+            for _fname, _ctype, blob in extract_attachments(payload)
+        ]
+        if got_body != body or len(got_atts) != n_att:
+            raise ValueError(
+                f"doc {doc_id}: attachment recursion broke "
+                f"({len(got_atts)} of {n_att} attachments)"
+            )
+        yield doc_id, n_att, _md5(got_body), _md5("|".join(got_atts))
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    return d.mapInPandas(_batches, schema)
+    return map_rows(d, _row, schema)

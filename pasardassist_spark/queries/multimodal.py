@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from pasardassist_spark.operators.multimodal import attach_payload, extract_features
 from pasardassist_spark.queries.registry import query
-from pasardassist_spark.tables import load
+from pasardassist_spark.tables import load, map_rows
 
 
 def _hexval(expr: str) -> str:
@@ -1275,48 +1275,34 @@ def mm_subtitle_cues(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_chars long, text_md5 string"
     )
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _row(doc_id, text):
         import hashlib
 
-        for pdf in it:
-            out: dict[str, list] = {
-                "doc_id": [], "fmt": [], "cue_no": [], "start_ms": [],
-                "end_ms": [], "n_chars": [], "text_md5": [],
-            }
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                seed = int(doc_id)
-                fmt = "srt" if seed % 2 == 0 else "vtt"
-                n = seed % 6 + 2
-                t0 = seed % 997
-                words = [w for w in text.split(" ") if w]
-                w_ = len(words)
-                cues = []
-                for i in range(n):
-                    a, b = (w_ * i) // n, (w_ * (i + 1)) // n
-                    start = 1000 * i + t0
-                    end = start + 900 + (i * 137 + seed) % 1100
-                    cues.append((start, end, " ".join(words[a:b])))
-                payload = (encode_srt if fmt == "srt" else encode_vtt)(cues)
-                got = (parse_srt if fmt == "srt" else parse_vtt)(payload)
-                if [(c.start_ms, c.end_ms, c.text) for c in got] != cues:
-                    # raise, not assert (must survive python -O)
-                    raise ValueError(
-                        f"subtitle round-trip mismatch for doc {doc_id}"
-                    )
-                for c in got:
-                    out["doc_id"].append(doc_id)
-                    out["fmt"].append(fmt)
-                    out["cue_no"].append(c.cue_no)
-                    out["start_ms"].append(c.start_ms)
-                    out["end_ms"].append(c.end_ms)
-                    out["n_chars"].append(len(c.text))
-                    out["text_md5"].append(
-                        hashlib.md5(c.text.encode("utf-8")).hexdigest()
-                    )
-            yield pd.DataFrame(out)
+        seed = int(doc_id)
+        fmt = "srt" if seed % 2 == 0 else "vtt"
+        n = seed % 6 + 2
+        t0 = seed % 997
+        words = [w for w in text.split(" ") if w]
+        w_ = len(words)
+        cues = []
+        for i in range(n):
+            a, b = (w_ * i) // n, (w_ * (i + 1)) // n
+            start = 1000 * i + t0
+            end = start + 900 + (i * 137 + seed) % 1100
+            cues.append((start, end, " ".join(words[a:b])))
+        payload = (encode_srt if fmt == "srt" else encode_vtt)(cues)
+        got = (parse_srt if fmt == "srt" else parse_vtt)(payload)
+        if [(c.start_ms, c.end_ms, c.text) for c in got] != cues:
+            # raise, not assert (must survive python -O)
+            raise ValueError(f"subtitle round-trip mismatch for doc {doc_id}")
+        for c in got:
+            yield (
+                doc_id, fmt, c.cue_no, c.start_ms, c.end_ms, len(c.text),
+                hashlib.md5(c.text.encode("utf-8")).hexdigest(),
+            )
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    return d.mapInPandas(_batches, schema)
+    return map_rows(d, _row, schema)
 
 
 @query(
@@ -1366,47 +1352,35 @@ def mm_midi_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vel_sum long, end_tick long"
     )
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                "doc_id": [], "track_no": [], "n_notes": [],
-                "pitch_sum": [], "vel_sum": [], "end_tick": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                seed = int(doc_id)
-                n_tracks = seed % 3 + 1
-                m = seed % 40 + 10
-                tracks = []
-                for t in range(n_tracks):
-                    ev = []
-                    for j in range(m):
-                        pitch = (j * 7 + seed + t * 13) % 128
-                        vel = (j * 11 + seed) % 127 + 1
-                        d_on = (j * 13 + seed + t) % 480
-                        dur = (j * 17 + seed) % 240 + 1
-                        ev.append((d_on, "note_on", t % 16, pitch, vel))
-                        ev.append((dur, "note_off", t % 16, pitch, 64))
-                    tracks.append(ev)
-                payload = encode_midi(tracks, division=480)
-                div, parsed = parse_midi(payload)
-                if div != 480 or len(parsed) != n_tracks:
-                    # raise, not assert (must survive python -O)
-                    raise ValueError(
-                        f"MIDI round-trip mismatch for doc {doc_id}"
-                    )
-                for t, events in enumerate(parsed):
-                    ons = [e for e in events if e[1] == "note_on"]
-                    end_tick = max(e[0] for e in events if e[1] != "tempo")
-                    out["doc_id"].append(doc_id)
-                    out["track_no"].append(t)
-                    out["n_notes"].append(len(ons))
-                    out["pitch_sum"].append(sum(e[3] for e in ons))
-                    out["vel_sum"].append(sum(e[4] for e in ons))
-                    out["end_tick"].append(end_tick)
-            yield pd.DataFrame(out)
+    def _row(doc_id):
+        seed = int(doc_id)
+        n_tracks = seed % 3 + 1
+        m = seed % 40 + 10
+        tracks = []
+        for t in range(n_tracks):
+            ev = []
+            for j in range(m):
+                pitch = (j * 7 + seed + t * 13) % 128
+                vel = (j * 11 + seed) % 127 + 1
+                d_on = (j * 13 + seed + t) % 480
+                dur = (j * 17 + seed) % 240 + 1
+                ev.append((d_on, "note_on", t % 16, pitch, vel))
+                ev.append((dur, "note_off", t % 16, pitch, 64))
+            tracks.append(ev)
+        div, parsed = parse_midi(encode_midi(tracks, division=480))
+        if div != 480 or len(parsed) != n_tracks:
+            # raise, not assert (must survive python -O)
+            raise ValueError(f"MIDI round-trip mismatch for doc {doc_id}")
+        for t, events in enumerate(parsed):
+            ons = [e for e in events if e[1] == "note_on"]
+            end_tick = max(e[0] for e in events if e[1] != "tempo")
+            yield (
+                doc_id, t, len(ons), sum(e[3] for e in ons),
+                sum(e[4] for e in ons), end_tick,
+            )
 
     d = load(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(_batches, schema)
+    return map_rows(d, _row, schema)
 
 
 @query(
@@ -1500,52 +1474,40 @@ def mm_id3_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
         "album string, year int, track string"
     )
 
-    def _build_and_parse(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in (
-                "doc_id", "version", "title", "artist", "album",
-                "year", "track",
-            )}
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                # r15: ids %10==6 write ID3v2.2 (3-char frame ids,
-                # 3-byte sizes, no flag bytes — the pre-2003 rip
-                # generation), mapped onto the v2.3+ names on read
-                version = 2 if i % 10 == 6 else (3 if i % 2 == 0 else 4)
-                encoding = 0x01 if version in (2, 3) else 0x03
-                frames = {
-                    "TIT2": f"Track {i % 100}",
-                    "TPE1": f"Artist {i % 13}",
-                    "TALB": f"Album {i % 7}",
-                    ("TYER" if version in (2, 3) else "TDRC"):
-                        str(1970 + i % 50),
-                    "TRCK": f"{i % 20 + 1}/12",
-                }
-                # r15 rotation: unsynchronised tags on doc_id%3==0
-                # (v2.3 tag-level / v2.4 frame-level escaping — the
-                # UTF-16 BOM's FF FE really gets escaped on the v2.3
-                # slice) and extended headers on doc_id%5==0, values
-                # unchanged so the same oracle hash certifies the
-                # un-escaping and the header skip
-                tag = ID3.encode_id3v2(
-                    version=version, encoding=encoding, frames=frames,
-                    unsync=i % 3 == 0 and version != 2,
-                    extended_header=i % 5 == 0 and version != 2,
-                )
-                payload = tag + b"\xff\xfb\x90\x00" + bytes(64)  # fake MPEG
-                meta = ID3.parse_id3(payload)
-                rows["doc_id"].append(doc_id)
-                rows["version"].append(meta["version"])
-                rows["title"].append(meta.get("TIT2"))
-                rows["artist"].append(meta.get("TPE1"))
-                rows["album"].append(meta.get("TALB"))
-                year = meta.get("TYER") or meta.get("TDRC")
-                rows["year"].append(int(year) if year else None)
-                rows["track"].append(meta.get("TRCK"))
-            yield pd.DataFrame(rows)
+    def _build_and_parse(doc_id):
+        i = int(doc_id)
+        # r15: ids %10==6 write ID3v2.2 (3-char frame ids, 3-byte sizes,
+        # no flag bytes — the pre-2003 rip generation), mapped onto the
+        # v2.3+ names on read
+        version = 2 if i % 10 == 6 else (3 if i % 2 == 0 else 4)
+        encoding = 0x01 if version in (2, 3) else 0x03
+        frames = {
+            "TIT2": f"Track {i % 100}",
+            "TPE1": f"Artist {i % 13}",
+            "TALB": f"Album {i % 7}",
+            ("TYER" if version in (2, 3) else "TDRC"): str(1970 + i % 50),
+            "TRCK": f"{i % 20 + 1}/12",
+        }
+        # r15 rotation: unsynchronised tags on doc_id%3==0 (v2.3
+        # tag-level / v2.4 frame-level escaping — the UTF-16 BOM's FF FE
+        # really gets escaped on the v2.3 slice) and extended headers on
+        # doc_id%5==0, values unchanged so the same oracle hash certifies
+        # the un-escaping and the header skip
+        tag = ID3.encode_id3v2(
+            version=version, encoding=encoding, frames=frames,
+            unsync=i % 3 == 0 and version != 2,
+            extended_header=i % 5 == 0 and version != 2,
+        )
+        payload = tag + b"\xff\xfb\x90\x00" + bytes(64)  # fake MPEG
+        meta = ID3.parse_id3(payload)
+        year = meta.get("TYER") or meta.get("TDRC")
+        yield (
+            doc_id, meta["version"], meta.get("TIT2"), meta.get("TPE1"),
+            meta.get("TALB"), int(year) if year else None, meta.get("TRCK"),
+        )
 
     d = load(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(_build_and_parse, schema)
+    return map_rows(d, _build_and_parse, schema)
 
 
 @query(
@@ -1625,60 +1587,49 @@ def mm_mp3_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     _MODES = ("stereo", "joint", "dual", "mono")
     _CBR = (64, 96, 128, 160, 32)
 
-    def _build_and_parse(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = (
-            "doc_id", "version", "layer", "sample_rate", "mode",
-            "n_frames", "duration_us", "bitrate_kbps", "vbr_method",
-            "declared_frames",
+    cols = (
+        "version", "layer", "sample_rate", "mode", "n_frames", "duration_us",
+        "bitrate_kbps", "vbr_method", "declared_frames",
+    )
+
+    def _build_and_parse(doc_id):
+        i = int(doc_id)
+        version, sr = _VERS[i % 3]
+        kind = i % 5
+        tag = (
+            encode_id3v2(
+                version=4, encoding=3, frames={"TIT2": f"Track {i % 100}"},
+            )
+            if i % 2 == 1
+            else b""
         )
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                version, sr = _VERS[i % 3]
-                kind = i % 5
-                tag = (
-                    encode_id3v2(
-                        version=4, encoding=3,
-                        frames={"TIT2": f"Track {i % 100}"},
-                    )
-                    if i % 2 == 1
-                    else b""
-                )
-                # r15: Layer I/II rotate onto the CBR slices (VBR
-                # headers are Layer III conventions) — every existing
-                # CBR bitrate is valid in all five layer tables
-                layer = (
-                    2 if kind <= 1 and i % 7 == 0
-                    else 1 if kind <= 1 and i % 7 == 1
-                    else 3
-                )
-                # r15: the i%7==2 CBR sub-slice is FREE FORMAT (bitrate
-                # index 0, fixed frame size recovered by sync scan,
-                # bitrate_kbps NULL)
-                payload = M.encode_mp3(
-                    version=version,
-                    sample_rate=sr,
-                    mode=_MODES[i % 4],
-                    n_frames=6 + i % 10,
-                    bitrate=_CBR[(i // 5) % 5],
-                    vbr="none" if kind <= 1 else
-                        ("vbri" if kind == 4 else "xing"),
-                    id3_tag=tag,
-                    id3v1=i % 3 == 0,
-                    layer=layer,
-                    free_frame_size=(
-                        120 + i % 40 if kind <= 1 and i % 7 == 2 else None
-                    ),
-                )
-                meta = M.parse_mp3(payload)
-                rows["doc_id"].append(doc_id)
-                for k in cols[1:]:
-                    rows[k].append(meta[k])
-            yield pd.DataFrame(rows)
+        # r15: Layer I/II rotate onto the CBR slices (VBR headers are
+        # Layer III conventions) — every existing CBR bitrate is valid in
+        # all five layer tables
+        layer = (
+            2 if kind <= 1 and i % 7 == 0
+            else 1 if kind <= 1 and i % 7 == 1
+            else 3
+        )
+        # r15: the i%7==2 CBR sub-slice is FREE FORMAT (bitrate index 0,
+        # fixed frame size recovered by sync scan, bitrate_kbps NULL)
+        payload = M.encode_mp3(
+            version=version,
+            sample_rate=sr,
+            mode=_MODES[i % 4],
+            n_frames=6 + i % 10,
+            bitrate=_CBR[(i // 5) % 5],
+            vbr="none" if kind <= 1 else ("vbri" if kind == 4 else "xing"),
+            id3_tag=tag,
+            id3v1=i % 3 == 0,
+            layer=layer,
+            free_frame_size=120 + i % 40 if kind <= 1 and i % 7 == 2 else None,
+        )
+        meta = M.parse_mp3(payload)
+        yield (doc_id, *(meta[k] for k in cols))
 
     d = load(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(_build_and_parse, schema)
+    return map_rows(d, _build_and_parse, schema)
 
 
 # ----------------------------------------- streaming image gate driver row
@@ -1764,35 +1715,28 @@ def streaming_imagegate_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
                 px += bytes((v, v, v))
         return Raster(9, 8, 3, bytes(px))
 
-    def _synth(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, payloads = [], []
-            for doc_id, has_prev in zip(pdf["doc_id"], pdf["has_prev"]):
-                i = int(doc_id)
-                key = (i - 1 if i % 5 == 2 and has_prev else i) % 65536
-                r = _raster_for_key(key)
-                k = i % 3
-                if k == 0:
-                    payload = imagecodec.encode_ppm(r)
-                elif k == 1:
-                    # r15: the BMP slice sub-rotates 24-bit / indexed-8
-                    # / BI_RLE8 — same pixels, so admissions (and the
-                    # oracle) are unchanged while the palette and RLE
-                    # decode paths run under the driver hash
-                    sub = (i // 3) % 3
-                    if sub == 0:
-                        payload = imagecodec.encode_bmp(r)
-                    elif sub == 1:
-                        payload = imagecodec.encode_bmp_indexed(r, 8)
-                    else:
-                        payload = imagecodec.encode_bmp_indexed(
-                            r, 8, rle=True
-                        )
-                else:
-                    payload = imagecodec.encode_png(r)
-                ids.append(i)
-                payloads.append(payload)
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def _synth(doc_id, has_prev):
+        i = int(doc_id)
+        key = (i - 1 if i % 5 == 2 and has_prev else i) % 65536
+        r = _raster_for_key(key)
+        k = i % 3
+        if k == 0:
+            payload = imagecodec.encode_ppm(r)
+        elif k == 1:
+            # r15: the BMP slice sub-rotates 24-bit / indexed-8 / BI_RLE8
+            # — same pixels, so admissions (and the oracle) are unchanged
+            # while the palette and RLE decode paths run under the driver
+            # hash
+            sub = (i // 3) % 3
+            if sub == 0:
+                payload = imagecodec.encode_bmp(r)
+            elif sub == 1:
+                payload = imagecodec.encode_bmp_indexed(r, 8)
+            else:
+                payload = imagecodec.encode_bmp_indexed(r, 8, rle=True)
+        else:
+            payload = imagecodec.encode_png(r)
+        yield i, payload
 
     d = load(spark, sf_dir, "documents").select("doc_id")
     # prev-EXISTS via self-join (the oracle's rule — no contiguity
@@ -1800,8 +1744,8 @@ def streaming_imagegate_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev = d.select((F.col("doc_id") + 1).alias("doc_id"),
                     F.lit(True).alias("has_prev"))
     joined = d.join(prev, "doc_id", "left").na.fill({"has_prev": False})
-    payloads = joined.mapInPandas(
-        _synth, "doc_id long, payload binary"
+    payloads = map_rows(
+        joined, _synth, "doc_id long, payload binary"
     ).localCheckpoint()
 
     state_dir = tempfile.mkdtemp(prefix="imggate_state_")
@@ -1868,44 +1812,32 @@ def mm_png_prompt_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id long, model string, prompt string, seed long, via string"
     )
 
-    def _build_parse(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        base = imagecodec.encode_png(
-            Raster(4, 4, 3, bytes(48))
-        )
-        rows: dict[str, list] = {
-            "doc_id": [], "model": [], "prompt": [], "seed": [], "via": [],
-        }
-        for pdf in it:
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                kind = ("tEXt", "zTXt", "iTXt")[i % 3]
-                prompt = f"a scenic {i % 23} with unicode é日"
-                if kind == "iTXt":
-                    chunks = [
-                        pngmeta.encode_text_chunk("model", f"model-v{i % 9}", kind),
-                        pngmeta.encode_text_chunk("prompt", prompt, kind),
-                        pngmeta.encode_text_chunk("seed", str(i % 1000), kind),
-                    ]
-                else:
-                    # latin-1 kinds cannot carry the CJK char: write the
-                    # prompt via iTXt alongside kind-coded model/seed
-                    chunks = [
-                        pngmeta.encode_text_chunk("model", f"model-v{i % 9}", kind),
-                        pngmeta.encode_text_chunk("prompt", prompt, "iTXt"),
-                        pngmeta.encode_text_chunk("seed", str(i % 1000), kind),
-                    ]
-                png = pngmeta.insert_text_chunks(base, chunks)
-                meta = pngmeta.parse_text_chunks(png)
-                rows["doc_id"].append(i)
-                rows["model"].append(meta["model"])
-                rows["prompt"].append(meta["prompt"])
-                rows["seed"].append(int(meta["seed"]))
-                rows["via"].append(kind)
-            yield pd.DataFrame(rows)
-            rows = {k: [] for k in rows}
+    base = imagecodec.encode_png(Raster(4, 4, 3, bytes(48)))
+
+    def _build_parse(doc_id):
+        i = int(doc_id)
+        kind = ("tEXt", "zTXt", "iTXt")[i % 3]
+        prompt = f"a scenic {i % 23} with unicode é日"
+        if kind == "iTXt":
+            chunks = [
+                pngmeta.encode_text_chunk("model", f"model-v{i % 9}", kind),
+                pngmeta.encode_text_chunk("prompt", prompt, kind),
+                pngmeta.encode_text_chunk("prompt", prompt, kind),
+                pngmeta.encode_text_chunk("seed", str(i % 1000), kind),
+            ]
+        else:
+            # latin-1 kinds cannot carry the CJK char: write the prompt
+            # via iTXt alongside kind-coded model/seed
+            chunks = [
+                pngmeta.encode_text_chunk("model", f"model-v{i % 9}", kind),
+                pngmeta.encode_text_chunk("prompt", prompt, "iTXt"),
+                pngmeta.encode_text_chunk("seed", str(i % 1000), kind),
+            ]
+        meta = pngmeta.parse_text_chunks(pngmeta.insert_text_chunks(base, chunks))
+        yield i, meta["model"], meta["prompt"], int(meta["seed"]), kind
 
     d = load(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(_build_parse, schema)
+    return map_rows(d, _build_parse, schema)
 
 
 @query(
@@ -1944,45 +1876,32 @@ def mm_wav_info_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
         "software string, n_samples int"
     )
 
-    def _build_parse(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows: dict[str, list] = {
-                "doc_id": [], "title": [], "artist": [], "created": [],
-                "software": [], "n_samples": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                n = 16 + i % 17  # odd/even lengths rotate
-                # r15: integer-PCM depth rotates 16/8/24/32 by doc_id%4
-                # — n_samples (the only decode-derived column) is
-                # depth-invariant, so the oracle hash also certifies
-                # the widened depth decode
-                depth = (16, 8, 24, 32)[i % 4]
-                samples = [(j * 257 + i) % 4096 - 2048 for j in range(n)]
-                if depth == 8:
-                    samples = [(s >> 8) << 8 for s in samples]
-                wav = AC.encode_wav_depth(
-                    AC.PcmAudio(8000, 1, samples), depth
-                )
-                info = AC.encode_wav_info({
-                    "INAM": f"Take {i % 40}",
-                    "IART": f"Performer {i % 11}",
-                    "ICRD": f"{1990 + i % 35}-{i % 12 + 1:02d}",
-                    "ISFT": f"enc v{i % 5}",
-                })
-                wav = AC.insert_wav_chunk(wav, info)
-                meta = AC.parse_wav_info(wav)
-                decoded = AC.decode_wav(wav)
-                rows["doc_id"].append(i)
-                rows["title"].append(meta.get("INAM"))
-                rows["artist"].append(meta.get("IART"))
-                rows["created"].append(meta.get("ICRD"))
-                rows["software"].append(meta.get("ISFT"))
-                rows["n_samples"].append(len(decoded.samples))
-            yield pd.DataFrame(rows)
+    def _build_parse(doc_id):
+        i = int(doc_id)
+        n = 16 + i % 17  # odd/even lengths rotate
+        # r15: integer-PCM depth rotates 16/8/24/32 by doc_id%4 —
+        # n_samples (the only decode-derived column) is depth-invariant,
+        # so the oracle hash also certifies the widened depth decode
+        depth = (16, 8, 24, 32)[i % 4]
+        samples = [(j * 257 + i) % 4096 - 2048 for j in range(n)]
+        if depth == 8:
+            samples = [(s >> 8) << 8 for s in samples]
+        wav = AC.encode_wav_depth(AC.PcmAudio(8000, 1, samples), depth)
+        info = AC.encode_wav_info({
+            "INAM": f"Take {i % 40}",
+            "IART": f"Performer {i % 11}",
+            "ICRD": f"{1990 + i % 35}-{i % 12 + 1:02d}",
+            "ISFT": f"enc v{i % 5}",
+        })
+        wav = AC.insert_wav_chunk(wav, info)
+        meta = AC.parse_wav_info(wav)
+        yield (
+            i, meta.get("INAM"), meta.get("IART"), meta.get("ICRD"),
+            meta.get("ISFT"), len(AC.decode_wav(wav).samples),
+        )
 
     d = load(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(_build_parse, schema)
+    return map_rows(d, _build_parse, schema)
 
 
 @query(
@@ -2058,71 +1977,52 @@ def mm_mp4_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _BRANDS = ("isom", "mp42", "3gp4")
 
-    def _build_parse(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = (
-            "doc_id", "brand", "movie_duration_ms", "track_id",
-            "handler", "codec", "width", "height", "track_duration_ms",
-        )
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                tracks = [
-                    (1, "vide", "avc1", 320 + 16 * (i % 8),
-                     240 + 16 * (i % 5), 30000, (i % 10 + 1) * 30000),
-                ]
-                if i % 3 >= 1:
-                    tracks.append(
-                        (2, "soun", "mp4a", 0, 0, 48000,
-                         4800 * (1 + i % 7))
-                    )
-                if i % 3 == 2:
-                    tracks.append((3, "text", "tx3g", 0, 0, 1000, i % 997))
-                if i % 5 == 3:
-                    # FRAGMENTED rotation (r15): mvhd/mdhd durations all
-                    # zero, the same per-track durations recovered from
-                    # the moof side through all three sources (trun
-                    # per-sample / tfhd default / trex default cycling
-                    # by track index), movie duration via mvex/mehd —
-                    # the oracle is unchanged, so the hash certifies
-                    # the moof walk produces byte-identical readout
-                    payload = encode_fmp4_meta(
-                        _BRANDS[i % 3],
-                        1000,
-                        1000 + i % 5000,
-                        tracks,
-                        n_fragments=1 + i % 3,
-                        rich_runs=(i // 5) % 2 == 1,
-                        version=(i // 2) % 2,
-                    )
-                else:
-                    payload = encode_mp4_meta(
-                        _BRANDS[i % 3],
-                        1000,
-                        1000 + i % 5000,
-                        tracks,
-                        version=(i // 2) % 2,
-                        moov_largesize=i % 2 == 1,
-                    )
-                meta = parse_mp4_meta(payload)
-                if len(meta.tracks) != len(tracks):
-                    raise ValueError(
-                        f"doc {i}: track count {len(meta.tracks)}"
-                    )
-                for t in meta.tracks:
-                    rows["doc_id"].append(i)
-                    rows["brand"].append(meta.brand)
-                    rows["movie_duration_ms"].append(meta.duration_ms)
-                    rows["track_id"].append(t.track_id)
-                    rows["handler"].append(t.handler)
-                    rows["codec"].append(t.codec)
-                    rows["width"].append(t.width)
-                    rows["height"].append(t.height)
-                    rows["track_duration_ms"].append(t.duration_ms)
-            yield pd.DataFrame(rows)
+    def _build_parse(doc_id):
+        i = int(doc_id)
+        tracks = [
+            (1, "vide", "avc1", 320 + 16 * (i % 8),
+             240 + 16 * (i % 5), 30000, (i % 10 + 1) * 30000),
+        ]
+        if i % 3 >= 1:
+            tracks.append((2, "soun", "mp4a", 0, 0, 48000, 4800 * (1 + i % 7)))
+        if i % 3 == 2:
+            tracks.append((3, "text", "tx3g", 0, 0, 1000, i % 997))
+        if i % 5 == 3:
+            # FRAGMENTED rotation (r15): mvhd/mdhd durations all zero, the
+            # same per-track durations recovered from the moof side
+            # through all three sources (trun per-sample / tfhd default /
+            # trex default cycling by track index), movie duration via
+            # mvex/mehd — the oracle is unchanged, so the hash certifies
+            # the moof walk produces byte-identical readout
+            payload = encode_fmp4_meta(
+                _BRANDS[i % 3],
+                1000,
+                1000 + i % 5000,
+                tracks,
+                n_fragments=1 + i % 3,
+                rich_runs=(i // 5) % 2 == 1,
+                version=(i // 2) % 2,
+            )
+        else:
+            payload = encode_mp4_meta(
+                _BRANDS[i % 3],
+                1000,
+                1000 + i % 5000,
+                tracks,
+                version=(i // 2) % 2,
+                moov_largesize=i % 2 == 1,
+            )
+        meta = parse_mp4_meta(payload)
+        if len(meta.tracks) != len(tracks):
+            raise ValueError(f"doc {i}: track count {len(meta.tracks)}")
+        for t in meta.tracks:
+            yield (
+                i, meta.brand, meta.duration_ms, t.track_id, t.handler,
+                t.codec, t.width, t.height, t.duration_ms,
+            )
 
     d = load(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(_build_parse, schema)
+    return map_rows(d, _build_parse, schema)
 
 
 @query(
@@ -2206,59 +2106,39 @@ def mm_flac_ogg_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     _VORB_RATES = (44100, 48000, 32000, 8000)
     _OPUS_RATES = (48000, 16000, 24000)
 
-    def _build_parse(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = (
-            "doc_id", "container", "codec", "sample_rate", "channels",
-            "bits_per_sample", "duration_ms", "tag_count",
-        )
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                ch = 1 + i % 2
-                if i % 3 == 0:
-                    rate = _FLAC_RATES[(i // 3) % 4]
-                    total = rate * (1 + i % 5) + i % 997
-                    tags = [("TITLE", f"Track {i}")]
-                    if i % 2:
-                        tags.append(("ARTIST", f"Artist {i % 50}"))
-                    payload = encode_flac_meta(
-                        rate, ch, 16 if (i // 2) % 2 == 0 else 24,
-                        total, tags=tags,
-                    )
-                    m = parse_flac_meta(payload)
-                    rows["container"].append("flac")
-                    rows["codec"].append("flac")
-                    rows["sample_rate"].append(m.sample_rate)
-                    rows["channels"].append(m.channels)
-                    rows["bits_per_sample"].append(m.bits_per_sample)
-                    rows["duration_ms"].append(m.duration_ms)
-                    rows["tag_count"].append(len(m.tags))
-                else:
-                    if i % 3 == 1:
-                        # r15: the (doc_id//3)%5==4 sub-slice maps FLAC
-                        # into Ogg (xiph mapping packet, same clock and
-                        # sample formulas as the vorbis slice)
-                        codec = "flac" if (i // 3) % 5 == 4 else "vorbis"
-                        rate = _VORB_RATES[(i // 3) % 4]
-                        samples = rate * (2 + i % 4) + i % 1009
-                    else:
-                        codec, rate = "opus", _OPUS_RATES[(i // 3) % 3]
-                        samples = 48 * (500 + i % 2000)
-                    payload = encode_ogg(codec, rate, ch, samples)
-                    m = parse_ogg_meta(payload)
-                    rows["container"].append("ogg")
-                    rows["codec"].append(m.codec)
-                    rows["sample_rate"].append(m.sample_rate)
-                    rows["channels"].append(m.channels)
-                    rows["bits_per_sample"].append(0)
-                    rows["duration_ms"].append(m.duration_ms)
-                    rows["tag_count"].append(0)
-                rows["doc_id"].append(i)
-            yield pd.DataFrame(rows)
+    def _build_parse(doc_id):
+        i = int(doc_id)
+        ch = 1 + i % 2
+        if i % 3 == 0:
+            rate = _FLAC_RATES[(i // 3) % 4]
+            total = rate * (1 + i % 5) + i % 997
+            tags = [("TITLE", f"Track {i}")]
+            if i % 2:
+                tags.append(("ARTIST", f"Artist {i % 50}"))
+            payload = encode_flac_meta(
+                rate, ch, 16 if (i // 2) % 2 == 0 else 24, total, tags=tags,
+            )
+            m = parse_flac_meta(payload)
+            yield (
+                i, "flac", "flac", m.sample_rate, m.channels,
+                m.bits_per_sample, m.duration_ms, len(m.tags),
+            )
+            return
+        if i % 3 == 1:
+            # r15: the (doc_id//3)%5==4 sub-slice maps FLAC into Ogg
+            # (xiph mapping packet, same clock and sample formulas as the
+            # vorbis slice)
+            codec = "flac" if (i // 3) % 5 == 4 else "vorbis"
+            rate = _VORB_RATES[(i // 3) % 4]
+            samples = rate * (2 + i % 4) + i % 1009
+        else:
+            codec, rate = "opus", _OPUS_RATES[(i // 3) % 3]
+            samples = 48 * (500 + i % 2000)
+        m = parse_ogg_meta(encode_ogg(codec, rate, ch, samples))
+        yield i, "ogg", m.codec, m.sample_rate, m.channels, 0, m.duration_ms, 0
 
     d = load(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(_build_parse, schema)
+    return map_rows(d, _build_parse, schema)
 
 
 @query(
@@ -2334,59 +2214,42 @@ def mm_mkv_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _VCODECS = ("V_VP9", "V_VP8", "V_MPEG4/ISO/AVC")
 
-    def _build_parse(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = (
-            "doc_id", "doctype", "duration_ms", "track_number", "kind",
-            "codec", "width", "height", "sample_rate", "channels",
+    def _build_parse(doc_id):
+        i = int(doc_id)
+        tracks = [
+            (1, "video", _VCODECS[(i // 3) % 3],
+             640 + 16 * (i % 10), 360 + 8 * (i % 10), 0, 0),
+        ]
+        if i % 3 >= 1:
+            tracks.append(
+                (2, "audio", "A_OPUS" if i % 2 == 0 else "A_VORBIS", 0, 0,
+                 48000 if i % 2 == 0 else 44100, 1 + i % 2)
+            )
+        if i % 3 == 2:
+            tracks.append((3, "subtitle", "S_TEXT/UTF8", 0, 0, 0, 0))
+        if i % 5 == 0:
+            dur, scale = 50 * (100 + i % 1000), 50_000_000
+        else:
+            dur, scale = 1000 + i % 10000, 1_000_000
+        payload = encode_mkv_meta(
+            "webm" if i % 2 == 0 else "matroska",
+            dur,
+            tracks,
+            timescale_ns=scale,
+            segment_unknown_size=i % 2 == 1,
+            float32_duration=i % 4 == 2,
         )
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                tracks = [
-                    (1, "video", _VCODECS[(i // 3) % 3],
-                     640 + 16 * (i % 10), 360 + 8 * (i % 10), 0, 0),
-                ]
-                if i % 3 >= 1:
-                    tracks.append(
-                        (2, "audio",
-                         "A_OPUS" if i % 2 == 0 else "A_VORBIS", 0, 0,
-                         48000 if i % 2 == 0 else 44100, 1 + i % 2)
-                    )
-                if i % 3 == 2:
-                    tracks.append(
-                        (3, "subtitle", "S_TEXT/UTF8", 0, 0, 0, 0)
-                    )
-                if i % 5 == 0:
-                    dur, scale = 50 * (100 + i % 1000), 50_000_000
-                else:
-                    dur, scale = 1000 + i % 10000, 1_000_000
-                payload = encode_mkv_meta(
-                    "webm" if i % 2 == 0 else "matroska",
-                    dur,
-                    tracks,
-                    timescale_ns=scale,
-                    segment_unknown_size=i % 2 == 1,
-                    float32_duration=i % 4 == 2,
-                )
-                m = parse_mkv_meta(payload)
-                if len(m.tracks) != len(tracks):
-                    raise ValueError(f"doc {i}: track count")
-                for t in m.tracks:
-                    rows["doc_id"].append(i)
-                    rows["doctype"].append(m.doctype)
-                    rows["duration_ms"].append(m.duration_ms)
-                    rows["track_number"].append(t.number)
-                    rows["kind"].append(t.kind)
-                    rows["codec"].append(t.codec)
-                    rows["width"].append(t.width)
-                    rows["height"].append(t.height)
-                    rows["sample_rate"].append(t.sample_rate)
-                    rows["channels"].append(t.channels)
-            yield pd.DataFrame(rows)
+        m = parse_mkv_meta(payload)
+        if len(m.tracks) != len(tracks):
+            raise ValueError(f"doc {i}: track count")
+        for t in m.tracks:
+            yield (
+                i, m.doctype, m.duration_ms, t.number, t.kind, t.codec,
+                t.width, t.height, t.sample_rate, t.channels,
+            )
 
     d = load(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(_build_parse, schema)
+    return map_rows(d, _build_parse, schema)
 
 
 @query(
@@ -2465,44 +2328,29 @@ def mm_heif_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _BRANDS = ("heic", "avif", "mif1")
 
-    def _build_parse(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = (
-            "doc_id", "brand", "n_items", "item_id", "item_type",
-            "width", "height", "rotation", "bit_depth", "is_primary",
+    def _build_parse(doc_id):
+        i = int(doc_id)
+        img = "hvc1" if i % 3 == 0 else "av01"
+        w, h = 320 + 16 * (i % 8), 240 + 16 * (i % 5)
+        depth = (8, 10, 12)[(i // 3) % 3]
+        items = [(1, img, w, h, (i % 4) * 90, depth)]
+        if i % 2 == 1:
+            items.append((2, img, w // 4, h // 4, None, 8))
+        if i % 3 == 2:
+            items.append((3, "Exif", None, None, None, None))
+        meta = parse_heif_meta(
+            encode_heif_meta(_BRANDS[i % 3], items, 1, wide=i % 5 == 0)
         )
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                img = "hvc1" if i % 3 == 0 else "av01"
-                w, h = 320 + 16 * (i % 8), 240 + 16 * (i % 5)
-                depth = (8, 10, 12)[(i // 3) % 3]
-                items = [(1, img, w, h, (i % 4) * 90, depth)]
-                if i % 2 == 1:
-                    items.append((2, img, w // 4, h // 4, None, 8))
-                if i % 3 == 2:
-                    items.append((3, "Exif", None, None, None, None))
-                payload = encode_heif_meta(
-                    _BRANDS[i % 3], items, 1, wide=i % 5 == 0
-                )
-                meta = parse_heif_meta(payload)
-                if meta.n_items != len(items):
-                    raise ValueError(f"doc {i}: item count {meta.n_items}")
-                for t in meta.items:
-                    rows["doc_id"].append(i)
-                    rows["brand"].append(meta.brand)
-                    rows["n_items"].append(meta.n_items)
-                    rows["item_id"].append(t.item_id)
-                    rows["item_type"].append(t.item_type)
-                    rows["width"].append(t.width)
-                    rows["height"].append(t.height)
-                    rows["rotation"].append(t.rotation)
-                    rows["bit_depth"].append(t.bit_depth)
-                    rows["is_primary"].append(t.is_primary)
-            yield pd.DataFrame(rows)
+        if meta.n_items != len(items):
+            raise ValueError(f"doc {i}: item count {meta.n_items}")
+        for t in meta.items:
+            yield (
+                i, meta.brand, meta.n_items, t.item_id, t.item_type, t.width,
+                t.height, t.rotation, t.bit_depth, t.is_primary,
+            )
 
     d = load(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(_build_parse, schema)
+    return map_rows(d, _build_parse, schema)
 
 
 @query(
@@ -2563,40 +2411,25 @@ def mm_aiff_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _RATES = (44100, 48000, 22050, 96000, 8000, 11025)
 
-    def _build_parse(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = (
-            "doc_id", "form", "channels", "sample_rate",
-            "bits_per_sample", "n_frames", "duration_ms", "name",
-            "author",
+    def _build_parse(doc_id):
+        i = int(doc_id)
+        rate = _RATES[i % 6]
+        m = parse_aiff_meta(encode_aiff_meta(
+            form="aifc" if i % 3 == 2 else "aiff",
+            channels=1 + i % 2,
+            sample_rate=rate,
+            bits=(8, 16, 24, 32)[i % 4],
+            n_frames=rate * (1 + i % 4) + i % 997,
+            name=f"Take {i % 40}" if i % 2 == 1 else None,
+            author=f"Perf {i % 11}" if i % 5 == 0 else None,
+        ))
+        yield (
+            i, m.form, m.channels, m.sample_rate, m.bits_per_sample,
+            m.n_frames, m.duration_ms, m.name, m.author,
         )
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                rate = _RATES[i % 6]
-                payload = encode_aiff_meta(
-                    form="aifc" if i % 3 == 2 else "aiff",
-                    channels=1 + i % 2,
-                    sample_rate=rate,
-                    bits=(8, 16, 24, 32)[i % 4],
-                    n_frames=rate * (1 + i % 4) + i % 997,
-                    name=f"Take {i % 40}" if i % 2 == 1 else None,
-                    author=f"Perf {i % 11}" if i % 5 == 0 else None,
-                )
-                m = parse_aiff_meta(payload)
-                rows["doc_id"].append(i)
-                rows["form"].append(m.form)
-                rows["channels"].append(m.channels)
-                rows["sample_rate"].append(m.sample_rate)
-                rows["bits_per_sample"].append(m.bits_per_sample)
-                rows["n_frames"].append(m.n_frames)
-                rows["duration_ms"].append(m.duration_ms)
-                rows["name"].append(m.name)
-                rows["author"].append(m.author)
-            yield pd.DataFrame(rows)
 
     d = load(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(_build_parse, schema)
+    return map_rows(d, _build_parse, schema)
 
 
 @query(
@@ -2669,43 +2502,24 @@ def mm_ico_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         "width int, height int, bpp int, fmt string, size_bytes long"
     )
 
-    def _build_parse(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = (
-            "doc_id", "kind", "n_entries", "entry_no", "width",
-            "height", "bpp", "fmt", "size_bytes",
-        )
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                n = 1 + i % 3
-                spec = []
-                for k in range(n):
-                    big = i % 4 == 1 and k == 0
-                    png = big or (i + k) % 5 == 0
-                    w = 256 if big else (16, 32, 48)[k]
-                    bpp = 32 if png else (4, 8, 24)[k]
-                    spec.append((w, w, bpp, "png" if png else "dib"))
-                payload = encode_ico(
-                    spec, kind="cursor" if i % 7 == 3 else "icon"
-                )
-                m = parse_ico_meta(payload)
-                if m.n_entries != n:
-                    raise ValueError(f"doc {i}: entry count {m.n_entries}")
-                for k, e in enumerate(m.entries):
-                    rows["doc_id"].append(i)
-                    rows["kind"].append(m.kind)
-                    rows["n_entries"].append(n)
-                    rows["entry_no"].append(k)
-                    rows["width"].append(e.width)
-                    rows["height"].append(e.height)
-                    rows["bpp"].append(e.bpp)
-                    rows["fmt"].append(e.fmt)
-                    rows["size_bytes"].append(e.size_bytes)
-            yield pd.DataFrame(rows)
+    def _build_parse(doc_id):
+        i = int(doc_id)
+        n = 1 + i % 3
+        spec = []
+        for k in range(n):
+            big = i % 4 == 1 and k == 0
+            png = big or (i + k) % 5 == 0
+            w = 256 if big else (16, 32, 48)[k]
+            bpp = 32 if png else (4, 8, 24)[k]
+            spec.append((w, w, bpp, "png" if png else "dib"))
+        m = parse_ico_meta(encode_ico(spec, kind="cursor" if i % 7 == 3 else "icon"))
+        if m.n_entries != n:
+            raise ValueError(f"doc {i}: entry count {m.n_entries}")
+        for k, e in enumerate(m.entries):
+            yield i, m.kind, n, k, e.width, e.height, e.bpp, e.fmt, e.size_bytes
 
     d = load(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(_build_parse, schema)
+    return map_rows(d, _build_parse, schema)
 
 
 @query(
@@ -2773,50 +2587,35 @@ def mm_svg_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         "has_script boolean, title string"
     )
 
-    def _build_parse(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = (
-            "doc_id", "width_px", "height_px", "view_w", "view_h",
-            "n_paths", "n_texts", "n_images", "has_script", "title",
+    def _build_parse(doc_id):
+        i = int(doc_id)
+        unit = i % 4
+        if i % 9 == 4:
+            w = h = None
+        elif unit == 0:
+            w, h = f"{100 + i % 60}px", f"{50 + i % 40}px"
+        elif unit == 1:
+            w = f"{3 * (34 + i % 20)}pt"
+            h = f"{3 * (20 + i % 15)}pt"
+        elif unit == 2:
+            w, h = f"{1 + i % 5}in", f"{1 + i % 3}in"
+        else:
+            w, h = f"{30 + i % 70}%", f"{20 + i % 60}%"
+        vb = (
+            f"0 0 {320 + 16 * (i % 8)} {240 + 16 * (i % 5)}"
+            if i % 2 == 0
+            else None
         )
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                unit = i % 4
-                if i % 9 == 4:
-                    w = h = None
-                elif unit == 0:
-                    w, h = f"{100 + i % 60}px", f"{50 + i % 40}px"
-                elif unit == 1:
-                    w = f"{3 * (34 + i % 20)}pt"
-                    h = f"{3 * (20 + i % 15)}pt"
-                elif unit == 2:
-                    w, h = f"{1 + i % 5}in", f"{1 + i % 3}in"
-                else:
-                    w, h = f"{30 + i % 70}%", f"{20 + i % 60}%"
-                vb = (
-                    f"0 0 {320 + 16 * (i % 8)} {240 + 16 * (i % 5)}"
-                    if i % 2 == 0
-                    else None
-                )
-                payload = encode_svg(
-                    width=w, height=h, view_box=vb,
-                    n_paths=i % 7, n_texts=i % 3, n_images=i % 2,
-                    script=i % 11 == 5, onload=i % 13 == 6,
-                    title=f"Logo {i % 30}" if i % 4 != 0 else None,
-                )
-                m = parse_svg_meta(payload)
-                rows["doc_id"].append(i)
-                rows["width_px"].append(m.width_px)
-                rows["height_px"].append(m.height_px)
-                rows["view_w"].append(m.view_w)
-                rows["view_h"].append(m.view_h)
-                rows["n_paths"].append(m.n_paths)
-                rows["n_texts"].append(m.n_texts)
-                rows["n_images"].append(m.n_images)
-                rows["has_script"].append(m.has_script)
-                rows["title"].append(m.title)
-            yield pd.DataFrame(rows)
+        m = parse_svg_meta(encode_svg(
+            width=w, height=h, view_box=vb,
+            n_paths=i % 7, n_texts=i % 3, n_images=i % 2,
+            script=i % 11 == 5, onload=i % 13 == 6,
+            title=f"Logo {i % 30}" if i % 4 != 0 else None,
+        ))
+        yield (
+            i, m.width_px, m.height_px, m.view_w, m.view_h, m.n_paths,
+            m.n_texts, m.n_images, m.has_script, m.title,
+        )
 
     d = load(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(_build_parse, schema)
+    return map_rows(d, _build_parse, schema)

@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from pasardassist_spark.operators import text as X
 from pasardassist_spark.queries.registry import query
-from pasardassist_spark.tables import load, local_frame
+from pasardassist_spark.tables import load, local_frame, map_rows
 
 # DuckDB fragments mirroring operators/text.py
 _TOKS_SQL = "string_split_regex(trim(text), '\\s+')"
@@ -1861,21 +1861,14 @@ def text_fix_mojibake(spark: SparkSession, sf_dir: str) -> DataFrame:
     by tests/test_mojibake.py."""
     from pasardassist_spark.operators.mojibake import fix_mojibake
 
-    def _corrupt(it):
-        import pandas as pd
-
-        for pdf in it:
-            out_text = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                s = text + MOJIBAKE_PROBE
-                gens = (1, 2, 0)[int(doc_id) % 3]
-                for _ in range(gens):
-                    s = s.encode("utf-8").decode("latin-1")
-                out_text.append(s)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "text": out_text})
+    def _corrupt(doc_id, text):
+        s = text + MOJIBAKE_PROBE
+        for _ in range((1, 2, 0)[int(doc_id) % 3]):
+            s = s.encode("utf-8").decode("latin-1")
+        yield doc_id, s
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    corrupted = d.mapInPandas(_corrupt, "doc_id long, text string")
+    corrupted = map_rows(d, _corrupt, "doc_id long, text string")
     return fix_mojibake(corrupted)
 
 

@@ -5,8 +5,8 @@ Write is one ``part-{pid:05d}.mbox`` per partition via the TaskContext
 id (sources/webdataset.py precedent): framing is the reversible mboxrd
 discipline in operators/emailtext.py (``From `` separators, ``>From``
 quoting, fixed two-byte terminator), so arbitrary message bytes
-round-trip exactly.  Read is ``binaryFile`` + ``split_mbox`` inside an
-Arrow-batched ``mapInPandas`` — one task per mailbox file, no shuffle;
+round-trip exactly.  Read is ``binaryFile`` + ``split_mbox`` inside one
+``tables.map_rows`` stage — one task per mailbox file, no shuffle;
 at 100 TB the scan parallelism is the file count, the layout real
 archives already have (one mbox per mailing-list-month).
 
@@ -23,6 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from pasardassist_spark.operators.emailtext import encode_mbox, split_mbox
+from pasardassist_spark.tables import map_rows
 
 __all__ = ["read_mbox", "write_mbox"]
 
@@ -66,15 +67,9 @@ def read_mbox(spark: SparkSession, path: str) -> DataFrame:
         os.path.join(path, "*.mbox")
     ).select("path", "content")
 
-    def _parse(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {"mbox": [], "msg_no": [], "raw": []}
-            for src_path, blob in zip(pdf["path"], pdf["content"]):
-                base = os.path.basename(str(src_path))
-                for i, msg in enumerate(split_mbox(bytes(blob))):
-                    out["mbox"].append(base)
-                    out["msg_no"].append(i)
-                    out["raw"].append(msg)
-            yield pd.DataFrame(out)
+    def _parse(src_path, blob):
+        base = os.path.basename(str(src_path))
+        for i, msg in enumerate(split_mbox(bytes(blob))):
+            yield base, i, msg
 
-    return files.mapInPandas(_parse, "mbox string, msg_no int, raw binary")
+    return map_rows(files, _parse, "mbox string, msg_no int, raw binary")

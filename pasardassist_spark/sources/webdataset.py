@@ -18,7 +18,7 @@ Scale shape, both directions task-parallel with no driver funnel:
   deterministic for a given row order; the returned manifest (shard,
   n_records, n_bytes) is the only thing that ever reaches the driver.
 - READ: ``binaryFile`` over ``shard-*.tar`` (one task per shard) +
-  ``mapInPandas`` parsing with the stdlib ``tarfile`` module, grouping
+  ``tables.map_rows`` parsing with the stdlib ``tarfile`` module, grouping
   adjacent members into samples.  A sample's unknown-extension members
   are preserved in a map; ``.txt`` decodes as UTF-8, ``.json`` is kept
   raw for the engine's JSON functions, anything else stays binary.
@@ -38,6 +38,8 @@ from collections.abc import Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
+
+from pasardassist_spark.tables import map_rows
 
 __all__ = ["read_webdataset", "write_webdataset"]
 
@@ -112,63 +114,48 @@ def read_webdataset(spark: SparkSession, path: str) -> DataFrame:
         posixpath.join(path, "shard-*.tar")
     ).select("path", "content")
 
-    def _parse(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {"key": [], "txt": [], "json": [], "bin": []}
-            for src_path, blob in zip(pdf["path"], pdf["content"]):
-                try:
-                    tf = tarfile.open(fileobj=io.BytesIO(bytes(blob)), mode="r")
-                except tarfile.TarError as exc:
-                    raise ValueError(
-                        f"corrupt WebDataset shard {src_path}: {exc}"
-                    ) from exc
-                seen: set[str] = set()
-                cur_key: str | None = None
-                cur: dict[str, bytes] = {}
+    def _sample(key: str, cur: dict[str, bytes]):
+        txt, js = cur.get("txt"), cur.get("json")
+        return (
+            key,
+            txt.decode("utf-8") if txt is not None else None,
+            js.decode("utf-8") if js is not None else None,
+            cur.get("bin"),
+        )
 
-                def flush() -> None:
-                    if cur_key is None:
-                        return
-                    out["key"].append(cur_key)
-                    txt = cur.get("txt")
-                    out["txt"].append(
-                        txt.decode("utf-8") if txt is not None else None
-                    )
-                    js = cur.get("json")
-                    out["json"].append(
-                        js.decode("utf-8") if js is not None else None
-                    )
-                    out["bin"].append(cur.get("bin"))
+    def _parse(src_path, blob):
+        try:
+            tf = tarfile.open(fileobj=io.BytesIO(bytes(blob)), mode="r")
+        except tarfile.TarError as exc:
+            raise ValueError(f"corrupt WebDataset shard {src_path}: {exc}") from exc
+        seen: set[str] = set()
+        cur_key: str | None = None
+        cur: dict[str, bytes] = {}
+        with tf:
+            for member in tf:
+                if not member.isfile():
+                    continue
+                base = posixpath.basename(member.name)
+                # WebDataset keys a sample by everything before the FIRST
+                # dot — dotted extensions like '.seg.json' must stay within
+                # one sample, so split('.', 1), not rpartition.
+                key, dot, ext = base.partition(".")
+                if not dot:
+                    raise ValueError(f"WebDataset member without extension: {base}")
+                if key != cur_key:
+                    if key in seen:
+                        raise ValueError(
+                            f"non-adjacent members for key {key!r} in "
+                            f"{src_path} — WebDataset samples must be "
+                            "contiguous"
+                        )
+                    if cur_key is not None:
+                        yield _sample(cur_key, cur)
+                    seen.add(key)
+                    cur_key, cur = key, {}
+                data = tf.extractfile(member)
+                cur[ext] = data.read() if data is not None else b""
+        if cur_key is not None:
+            yield _sample(cur_key, cur)
 
-                with tf:
-                    for member in tf:
-                        if not member.isfile():
-                            continue
-                        base = posixpath.basename(member.name)
-                        # WebDataset keys a sample by everything before the
-                        # FIRST dot — dotted extensions like '.seg.json' must
-                        # stay within one sample, so split('.', 1), not
-                        # rpartition.
-                        key, dot, ext = base.partition(".")
-                        if not dot:
-                            raise ValueError(
-                                f"WebDataset member without extension: {base}"
-                            )
-                        if key != cur_key:
-                            if key in seen:
-                                raise ValueError(
-                                    f"non-adjacent members for key {key!r} in "
-                                    f"{src_path} — WebDataset samples must be "
-                                    "contiguous"
-                                )
-                            flush()
-                            seen.add(key)
-                            cur_key, cur = key, {}
-                        data = tf.extractfile(member)
-                        cur[ext] = data.read() if data is not None else b""
-                    flush()
-            yield pd.DataFrame(out)
-
-    return files.mapInPandas(
-        _parse, "key string, txt string, json string, bin binary"
-    )
+    return map_rows(files, _parse, "key string, txt string, json string, bin binary")

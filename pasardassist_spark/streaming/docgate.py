@@ -5,8 +5,8 @@ into a standing ingest artifact (the imagegate/dedupindex contract):
 
 - EXTRACT: each micro-batch's payloads are sniffed and routed once
   (operators/docsniff.py:extract_document — the same dispatcher the
-  batch family certifies hash-green), an Arrow-batched ``mapInPandas``
-  map pass.  Payloads no parser accepts go to ``<admitted_dir>/_dead``
+  batch family certifies hash-green), one ``tables.map_rows`` map
+  pass.  Payloads no parser accepts go to ``<admitted_dir>/_dead``
   with their error string instead of poisoning the epoch — the
   dead-letter discipline of the retry queue (queries/enrichment.py).
 - QUALITY: the Gopher rule gate (Rae et al. 2021 Table A1 — the same
@@ -30,16 +30,13 @@ extract → gate → dedup policy admits, and replayed epochs are no-ops.
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from pasardassist_spark.streaming.dedupindex import apply_dedup_batch
 from pasardassist_spark.streaming.generations import COMMIT_MARKER
-from pasardassist_spark.tables import local_frame
+from pasardassist_spark.tables import local_frame, map_rows
 
 _EXTRACT_SCHEMA = "doc_id long, fmt string, text string"
 _COMBINED_SCHEMA = "doc_id long, fmt string, text string, error string"
@@ -52,25 +49,16 @@ def extract_batch(batch_df: DataFrame) -> DataFrame:
     result so the parse runs once however many consumers split it."""
     from pasardassist_spark.operators.docsniff import extract_document
 
-    def _both(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                "doc_id": [], "fmt": [], "text": [], "error": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    fmt, text = extract_document(bytes(payload))
-                    err = None
-                except (ValueError, NotImplementedError) as exc:
-                    fmt, text = None, None
-                    err = f"{type(exc).__name__}: {exc}"
-                out["doc_id"].append(doc_id)
-                out["fmt"].append(fmt)
-                out["text"].append(text)
-                out["error"].append(err)
-            yield pd.DataFrame(out)
+    def _both(doc_id, payload):
+        try:
+            fmt, text = extract_document(bytes(payload))
+            err = None
+        except (ValueError, NotImplementedError) as exc:
+            fmt, text = None, None
+            err = f"{type(exc).__name__}: {exc}"
+        yield doc_id, fmt, text, err
 
-    return batch_df.mapInPandas(_both, _COMBINED_SCHEMA)
+    return map_rows(batch_df.select("doc_id", "payload"), _both, _COMBINED_SCHEMA)
 
 
 def gopher_keep(text: Column) -> Column:

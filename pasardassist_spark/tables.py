@@ -9,7 +9,8 @@ parquet file, but every query still goes through ``load`` so the scan layer
 is one swap away from a catalog/Delta table.
 
 Rows built on the driver (lookup tables, trained artifacts, small collected
-readouts) enter plans through ``local_frame`` only.
+readouts) enter plans through ``local_frame`` only; per-row Python work
+(parsers, codecs, fixture synthesis) runs through ``map_rows``.
 """
 
 from __future__ import annotations
@@ -218,6 +219,36 @@ def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFram
     return spark.createDataFrame(
         pa.Table.from_arrays(columns, schema=arrow_schema), schema
     )
+
+
+def map_rows(df: DataFrame, fn, schema: StructType | str) -> DataFrame:
+    """Run the per-row Python function ``fn`` over ``df`` in one
+    Arrow-batched ``mapInPandas`` stage.
+
+    ``fn(*row)`` gets each row's values in ``df.columns`` order and yields
+    zero or more output tuples in the field order of ``schema``. Each
+    pandas batch goes back as a dict of per-column lists passed to
+    ``pd.DataFrame``, so pandas and Arrow infer types from the Python
+    values alone. A batch with no output rows is not sent (pandas types
+    its empty columns float64, which Arrow cannot turn into binary or
+    array columns). An exception raised in ``fn`` fails the task and the
+    action; parsers raise on a bad payload rather than emit a wrong row.
+    Per-partition setup belongs in the closure that builds ``fn``.
+    """
+    if not isinstance(schema, StructType):
+        schema = _parse_datatype_string(schema)
+    names = schema.fieldNames()
+
+    def _batches(it):
+        import pandas as pd
+
+        for pdf in it:
+            rows = zip(*(pdf.iloc[:, i] for i in range(pdf.shape[1])))
+            out = [o for row in rows for o in fn(*row)]
+            if out:
+                yield pd.DataFrame({n: list(c) for n, c in zip(names, zip(*out))})
+
+    return df.mapInPandas(_batches, schema)
 
 
 def _to_arrow_value(dt: DataType):

@@ -1041,11 +1041,12 @@ def _broadcast_subtrees(p: str) -> list[str]:
 
 
 def test_ann_search_never_broadcasts_the_corpus(spark, sf_dir):
-    """ivf_topk and ivfpq_topk broadcast only query-side frames (the
-    collected query rows, the centroids): a broadcast with the embeddings
-    scan below it ships the corpus to every executor, a driver OOM at
-    scale. The corpus is far above the size threshold there, so the test
-    turns size-based broadcasts off and checks the explicit ones."""
+    """ann_topk, ivf_topk and ivfpq_topk broadcast only query-side frames
+    (the collected query rows and their bucket codes, the centroids): a
+    broadcast with the embeddings scan below it ships the corpus to every
+    executor, a driver OOM at scale. The corpus is far above the size
+    threshold there, so the test turns size-based broadcasts off and
+    checks the explicit ones."""
     from pasardassist_spark.operators import similarity as S
     from pasardassist_spark.tables import load
 
@@ -1054,6 +1055,7 @@ def test_ann_search_never_broadcasts_the_corpus(spark, sf_dir):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         for name, df in (
+            ("ann_topk", S.ann_topk(emb, [0, 1, 2, 3, 4], 10, 64)),
             ("ivf_topk", S.ivf_topk(emb, [0, 1, 2, 3, 4], 10)),
             ("ivfpq_topk", S.ivfpq_topk(emb, [0, 1, 2, 3, 4], 10, 64)),
         ):
