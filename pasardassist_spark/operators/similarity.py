@@ -712,7 +712,8 @@ def opq_rotation(
     is 0.505 -> 0.905."""
     import numpy as np
 
-    assert dim % m == 0, f"dim {dim} not divisible into {m} subspaces"
+    if dim % m:
+        raise ValueError(f"dim {dim} not divisible into {m} subspaces")
     sub = dim // m
     X = (
         sample_X
@@ -794,7 +795,8 @@ def pq_codebooks(
     8 sequential MLlib fits cost ~2 s of job-scheduling overhead EACH at
     any data size) — the distributed full pass is only the encode step.
     """
-    assert dim % m == 0, f"dim {dim} not divisible into {m} subspaces"
+    if dim % m:
+        raise ValueError(f"dim {dim} not divisible into {m} subspaces")
     sub = dim // m
     # one sample collect feeds all m subspace fits — the corpus is scanned
     # once for training no matter how many subspaces (and not at all when

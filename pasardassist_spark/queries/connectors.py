@@ -21,7 +21,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 
 from pasardassist_spark.queries.registry import query
-from pasardassist_spark.tables import load
+from pasardassist_spark.tables import export_shards, load
 
 
 @query(
@@ -99,10 +99,7 @@ def src_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text", "lang", "source", "n_chars"
     )
     staged = d.repartition(8, "doc_id")
-    tmp = tempfile.mkdtemp(prefix="pasard_avro_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
-    manifest = write_avro(staged, tmp, codec="deflate").collect()
-    assert sum(m.n_records for m in manifest) > 0
+    tmp = export_shards(write_avro, staged, "pasard_avro_", codec="deflate")
     return read_avro(spark, tmp, d.schema)
 
 
@@ -139,10 +136,7 @@ def src_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         "n_chars",
     )
-    tmp = tempfile.mkdtemp(prefix="pasard_xml_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
-    manifest = write_xml(d.repartition(8, "doc_id"), tmp).collect()
-    assert sum(m.n_records for m in manifest) > 0
+    tmp = export_shards(write_xml, d.repartition(8, "doc_id"), "pasard_xml_")
     return read_xml(spark, tmp, d.schema)
 
 
@@ -171,10 +165,7 @@ def src_arrow_ipc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text", "lang", "source", "n_chars"
     )
     staged = d.repartition(8, "doc_id")
-    tmp = tempfile.mkdtemp(prefix="pasard_arrow_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
-    manifest = write_arrow_ipc(staged, tmp).collect()
-    assert sum(m.n_records for m in manifest) > 0
+    tmp = export_shards(write_arrow_ipc, staged, "pasard_arrow_")
     return read_arrow_ipc(spark, tmp, d.schema)
 
 
@@ -204,8 +195,5 @@ def src_msgpack_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text", "lang", "source", "n_chars"
     )
     staged = d.repartition(8, "doc_id")
-    tmp = tempfile.mkdtemp(prefix="pasard_msgpack_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
-    manifest = write_msgpack(staged, tmp).collect()
-    assert sum(m.n_records for m in manifest) > 0
+    tmp = export_shards(write_msgpack, staged, "pasard_msgpack_")
     return read_msgpack(spark, tmp, d.schema)

@@ -31,7 +31,7 @@ from pasardassist_spark.queries.text import (
     _STOP_SQL,
     _TOKS_SQL,
 )
-from pasardassist_spark.tables import load, local_frame, map_rows
+from pasardassist_spark.tables import export_shards, load, local_frame, map_rows
 
 MIN_SCORE = 0.4  # keep medium-or-better quality (see text_quality buckets)
 PACK_BUDGET = 512  # tokens per packed training sequence
@@ -852,10 +852,6 @@ def src_warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     JSONL. Write is task-parallel (shard per partition), read is
     task-parallel (shard per task) — no driver funnel either way; the
     only collect is the 8-row shard manifest."""
-    import atexit
-    import shutil
-    import tempfile
-
     from pasardassist_spark.sources.warc import read_warc, write_warc
 
     d = load(spark, sf_dir, "documents").select(
@@ -873,10 +869,9 @@ def src_warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         uri.alias("uri"),
     ).repartition(8, "record_id")
 
-    tmp = tempfile.mkdtemp(prefix="pasard_warc_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
-    manifest = write_warc(staged, tmp, uri_col="uri", compress=True).collect()
-    assert sum(m.n_records for m in manifest) > 0
+    tmp = export_shards(
+        write_warc, staged, "pasard_warc_", uri_col="uri", compress=True
+    )
 
     rec = read_warc(spark, tmp)
     u = F.col("target_uri")
@@ -1158,10 +1153,6 @@ def src_tfrecord_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     build feeding a TF/JAX input pipeline. Write and read are both
     task-parallel over shards; the only collect is the shard
     manifest."""
-    import atexit
-    import shutil
-    import tempfile
-
     from pasardassist_spark.sources.tfrecord import (
         read_tfrecord,
         write_tfrecord,
@@ -1171,10 +1162,7 @@ def src_tfrecord_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text", "lang", "source", "n_chars"
     )
     staged = d.repartition(8, "doc_id")
-    tmp = tempfile.mkdtemp(prefix="pasard_tfr_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
-    manifest = write_tfrecord(staged, tmp).collect()
-    assert sum(m.n_records for m in manifest) > 0
+    tmp = export_shards(write_tfrecord, staged, "pasard_tfr_")
     return read_tfrecord(spark, tmp, d.schema)
 
 
@@ -1668,14 +1656,10 @@ def src_webdataset_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     and reconstruct the original rows — metadata recovered via
     get_json_object, binary fidelity surfaced as the hex of the .bin
     member, which the oracle independently recomputes as md5(text).
-    Write is one shard per partition via the TaskContext id, read is one
-    task per shard; only the 8-row manifest reaches the driver. The
+    Write is one shard per partition through tables.write_shards, read
+    is one task per shard; only the 8-row manifest reaches the driver. The
     adjacency invariant (a sample's members contiguous) is enforced on
     read and pytest-pinned along with corrupt-shard contracts."""
-    import atexit
-    import shutil
-    import tempfile
-
     from pasardassist_spark.sources.webdataset import (
         read_webdataset,
         write_webdataset,
@@ -1694,11 +1678,7 @@ def src_webdataset_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unhex(F.md5(F.col("text").cast("binary"))).alias("bin"),
     ).repartition(8, "key")
 
-    tmp = tempfile.mkdtemp(prefix="pasard_wds_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
-    manifest = write_webdataset(staged, tmp).collect()
-    if sum(m.n_records for m in manifest) == 0:
-        raise ValueError("webdataset export wrote no records")
+    tmp = export_shards(write_webdataset, staged, "pasard_wds_")
 
     back = read_webdataset(spark, tmp)
     return back.select(
@@ -1730,12 +1710,9 @@ def src_mbox_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     binaryFile + split_mbox, and fully re-parsed — the FULL original
     text must survive two codec layers (MIME CTE + mbox framing) for
     md5(text) to match the oracle's direct computation on 500 docs.
-    Write one file per partition via TaskContext, read one task per
-    file; only the 8-row manifest reaches the driver."""
-    import atexit
+    Write one file per partition through tables.write_shards, read one
+    task per file; only the 8-row manifest reaches the driver."""
     import hashlib as _hashlib
-    import shutil
-    import tempfile
 
     from pasardassist_spark.operators.emailtext import encode_email, parse_email
     from pasardassist_spark.sources.mbox import read_mbox, write_mbox
@@ -1748,11 +1725,7 @@ def src_mbox_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     staged = map_rows(d.repartition(8, "doc_id"), _compose, "msg binary")
 
-    tmp = tempfile.mkdtemp(prefix="pasard_mbox_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
-    manifest = write_mbox(staged, tmp).collect()
-    if sum(m.n_messages for m in manifest) == 0:
-        raise ValueError("mbox export wrote no messages")
+    tmp = export_shards(write_mbox, staged, "pasard_mbox_")
 
     back = read_mbox(spark, tmp)
 

@@ -5,10 +5,11 @@ ships training corpora in. Built on pyarrow's PUBLIC IPC API
 File format: framed record batches + footer with schema and block
 offsets).
 
-Scale shape mirrors sources/avro.py / warc.py / tfrecord.py: write =
-one ``.arrow`` shard per partition (task-local file, manifest rows back
-— no driver funnel); read = binaryFile scan, one task per shard, the
-footer's block index giving O(1) access to each record batch. The
+Scale shape is the shard layout of ``tables.write_shards``: write = one
+``.arrow`` shard per partition (task-local file, manifest rows back — no
+driver funnel); read = binaryFile scan, one task per shard, the footer's
+block index giving O(1) access to each record batch. The read yields
+whole decoded frames, so it stays a vectorized ``mapInPandas`` stage. The
 100 TB answer is shard sizing at write time, not splitting giant files.
 
 Unlike the hand-rolled Avro/TFRecord codecs this connector deliberately
@@ -46,7 +47,7 @@ from pyspark.sql.types import (
 )
 from pyspark.sql.types import TimestampType
 
-MANIFEST_SCHEMA = "file string, n_records long, n_bytes long"
+from pasardassist_spark.tables import write_shards
 
 
 def _arrow_type(dt) -> pa.DataType:
@@ -83,40 +84,27 @@ def _arrow_schema(schema: StructType) -> pa.Schema:
 
 
 def write_arrow_ipc(df: DataFrame, path: str) -> DataFrame:
-    """Distributed Arrow IPC export: one Feather-v2 shard per partition,
-    manifest rows back (the avro.py/warc.py contract; empty partitions
-    leave no file)."""
+    """Distributed Arrow IPC export: one Feather-v2
+    ``part-{pid:05d}.arrow`` shard per partition through
+    ``tables.write_shards``, which returns the manifest; each pandas
+    batch is written as one record batch, and empty partitions leave no
+    file."""
     os.makedirs(path, exist_ok=True)
     pa_schema = _arrow_schema(df.schema)
 
-    def _write(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        fname = os.path.join(path, f"part-{pid:05d}.arrow")
-        n_rec = 0
-        with pa.OSFile(fname, "wb") as sink:
-            with pa.ipc.new_file(sink, pa_schema) as w:
-                for batch in it:
-                    if not len(batch):
-                        continue
+    def _write(fh, batches) -> int:
+        n = 0
+        with pa.ipc.new_file(fh, pa_schema) as w:
+            for batch in batches:
+                if len(batch):
                     t = pa.Table.from_pandas(
                         batch, schema=pa_schema, preserve_index=False
                     )
                     w.write_table(t)
-                    n_rec += len(batch)
-        if n_rec == 0:
-            os.remove(fname)
-            return
-        yield pd.DataFrame(
-            {
-                "file": [fname],
-                "n_records": [n_rec],
-                "n_bytes": [os.path.getsize(fname)],
-            }
-        )
+                    n += len(batch)
+        return n
 
-    return df.mapInPandas(_write, MANIFEST_SCHEMA)
+    return write_shards(df, path, "part-{:05d}.arrow", _write)
 
 
 def read_arrow_ipc(

@@ -16,13 +16,14 @@ PUBLIC Apache Avro 1.11 specification ("Object Container Files" +
   the spec's required pair; snappy needs an external lib and is NOT
   claimed).
 
-Scale shape mirrors sources/warc.py / tfrecord.py: write = one ``.avro``
-shard per partition (task-local file, manifest rows back — no driver
-funnel); read = binaryFile scan, one task per shard, Arrow-batched
-decode. Avro files ARE splittable at block boundaries in principle, but
-the shard-per-partition layout already yields one task per shard, which
-is the right parallelism when the writer controls shard sizing (the
-100 TB answer is "write enough shards", not "split giant files").
+Scale shape is the shard layout of ``tables.write_shards``: write = one
+``.avro`` shard per partition (task-local file, manifest rows back — no
+driver funnel); read = binaryFile scan, one task per shard, decoded in a
+``tables.map_rows`` stage. Avro files ARE splittable at block
+boundaries in principle, but the shard-per-partition layout already
+yields one task per shard, which is the right parallelism when the
+writer controls shard sizing (the 100 TB answer is "write enough
+shards", not "split giant files").
 
 Reference semantics: the export/import boundary of the reference's
 collection dumps (closest analogue `src/modules/app/app.service.ts`
@@ -55,6 +56,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from pasardassist_spark.tables import map_rows, write_shards
 
 MAGIC = b"Obj\x01"
 # Deterministic marker (fine per spec — uniqueness only matters across
@@ -360,44 +363,20 @@ def read_container(blob: bytes, fields) -> Iterator[dict]:
 
 # ------------------------------------------------------------ DataFrame IO
 
-MANIFEST_SCHEMA = StructType(
-    [
-        StructField("file", StringType(), True),
-        StructField("n_records", LongType(), True),
-        StructField("n_bytes", LongType(), True),
-    ]
-)
-
 
 def write_avro(df: DataFrame, path: str, codec: str = "deflate") -> DataFrame:
-    """Distributed Avro export: one container shard per partition,
-    manifest rows back (the warc.py/tfrecord.py contract)."""
+    """Distributed Avro export: one ``part-{pid:05d}.avro`` container
+    per partition through ``tables.write_shards``, which returns the
+    manifest. Blocks stream straight to the shard file, so task memory
+    stays O(BLOCK_ROWS), not O(partition)."""
     os.makedirs(path, exist_ok=True)
     fields = [(f.name, f.dataType) for f in df.schema.fields]
 
-    def _write(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
+    def _write(fh, batches) -> int:
+        rows = (row for batch in batches for row in batch.itertuples(index=False))
+        return write_container(fh, fields, rows, codec=codec)[0]
 
-        pid = TaskContext.get().partitionId()
-        fname = os.path.join(path, f"part-{pid:05d}.avro")
-
-        def rows():
-            for batch in it:
-                yield from batch.itertuples(index=False)
-
-        # stream blocks straight to the shard file — task memory stays
-        # O(BLOCK_ROWS), not O(partition) (an empty partition leaves no
-        # file behind)
-        with open(fname, "wb") as fh:
-            n_rec, n_bytes = write_container(fh, fields, rows(), codec=codec)
-        if n_rec == 0:
-            os.remove(fname)
-            return
-        yield pd.DataFrame(
-            {"file": [fname], "n_records": [n_rec], "n_bytes": [n_bytes]}
-        )
-
-    return df.mapInPandas(_write, MANIFEST_SCHEMA)
+    return write_shards(df, path, "part-{:05d}.avro", _write)
 
 
 def read_avro(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
@@ -411,14 +390,8 @@ def read_avro(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
     )
     fields = [(f.name, f.dataType) for f in schema.fields]
 
-    def _parse(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in it:
-            rows = []
-            for row in batch.itertuples(index=False):
-                rows.extend(read_container(bytes(row.content), fields))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=[n for n, _ in fields]
-                )
+    def _parse(content):
+        for row in read_container(bytes(content), fields):
+            yield tuple(row.values())  # decode_row fills in field order
 
-    return blobs.mapInPandas(_parse, schema)
+    return map_rows(blobs, _parse, schema)

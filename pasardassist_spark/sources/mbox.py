@@ -1,63 +1,47 @@
 """mbox source/sink — the classic Unix mailbox framing every email
 corpus (Enron, public list archives) ships in.
 
-Write is one ``part-{pid:05d}.mbox`` per partition via the TaskContext
-id (sources/webdataset.py precedent): framing is the reversible mboxrd
-discipline in operators/emailtext.py (``From `` separators, ``>From``
-quoting, fixed two-byte terminator), so arbitrary message bytes
-round-trip exactly.  Read is ``binaryFile`` + ``split_mbox`` inside one
-``tables.map_rows`` stage — one task per mailbox file, no shuffle;
-at 100 TB the scan parallelism is the file count, the layout real
-archives already have (one mbox per mailing-list-month).
+Write is one ``part-{pid:05d}.mbox`` per partition through
+``tables.write_shards``, each message streamed into the file as it is
+framed: framing is the reversible mboxrd discipline in
+operators/emailtext.py (``From `` separators, ``>From`` quoting, fixed
+two-byte terminator), so arbitrary message bytes round-trip exactly.
+Read is ``binaryFile`` + ``split_mbox`` inside one ``tables.map_rows``
+stage — one task per mailbox file, no shuffle; at 100 TB the scan
+parallelism is the file count, the layout real archives already have
+(one mbox per mailing-list-month).
 
-Only the small per-file manifest reaches the driver.
+Only the small per-file manifest (file, n_records, n_bytes) reaches the
+driver.
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
 from pasardassist_spark.operators.emailtext import encode_mbox, split_mbox
-from pasardassist_spark.tables import map_rows
+from pasardassist_spark.tables import map_rows, write_shards
 
 __all__ = ["read_mbox", "write_mbox"]
 
 
 def write_mbox(df: DataFrame, path: str, msg_col: str = "msg") -> DataFrame:
-    """Write one mboxrd file per partition; returns the manifest
-    DataFrame (mbox, n_messages, n_bytes)."""
+    """Write one mboxrd ``part-{pid:05d}.mbox`` per partition, streaming
+    each message into the file; returns the ``tables.write_shards``
+    manifest (file, n_records, n_bytes)."""
     os.makedirs(path, exist_ok=True)
 
-    def _write(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
+    def _write(fh, batches) -> int:
+        n = 0
+        for pdf in batches:
+            for msg in pdf[msg_col]:
+                fh.write(encode_mbox([bytes(msg)]))
+                n += 1
+        return n
 
-        pid = TaskContext.get().partitionId()
-        fname = os.path.join(path, f"part-{pid:05d}.mbox")
-        msgs: list[bytes] = []
-        for pdf in it:
-            msgs.extend(bytes(m) for m in pdf[msg_col])
-        data = encode_mbox(msgs)
-        if msgs:
-            with open(fname, "wb") as f:
-                f.write(data)
-        yield pd.DataFrame(
-            {
-                "mbox": [os.path.basename(fname) if msgs else ""],
-                "n_messages": [len(msgs)],
-                "n_bytes": [len(data) if msgs else 0],
-            }
-        )
-
-    return (
-        df.select(msg_col)
-        .mapInPandas(_write, "mbox string, n_messages long, n_bytes long")
-        .filter("n_messages > 0")
-    )
+    return write_shards(df.select(msg_col), path, "part-{:05d}.mbox", _write)
 
 
 def read_mbox(spark: SparkSession, path: str) -> DataFrame:

@@ -15,13 +15,13 @@ is implemented from the specification:
   The decoder accepts every integer/str/bin/map width, not just the ones
   this writer emits (foreign writers pick freely).
 
-Scale shape mirrors sources/avro.py: write = one ``.msgpack`` shard per
-partition (task-local file, manifest rows back — no driver funnel);
-read = binaryFile scan, one task per shard, Arrow-batched decode under
-an EXPLICIT schema (textio's never-infer contract). MessagePack streams
-are not splittable (no sync markers); the shard-per-partition layout
-already yields one task per shard — the 100 TB answer is "write enough
-shards".
+Scale shape is the shard layout of ``tables.write_shards``: write = one
+``.msgpack`` shard per partition (task-local file, manifest rows back —
+no driver funnel); read = binaryFile scan, one task per shard, decoded
+in a ``tables.map_rows`` stage under an EXPLICIT schema (textio's
+never-infer contract). MessagePack streams are not splittable (no
+sync markers); the shard-per-partition layout already yields one task
+per shard — the 100 TB answer is "write enough shards".
 
 Reference semantics: export/import boundary of the reference's
 collection dumps (`src/modules/app/app.service.ts` export endpoints);
@@ -35,8 +35,6 @@ import os
 import struct
 from typing import Iterator
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     BinaryType,
@@ -47,6 +45,8 @@ from pyspark.sql.types import (
     StringType,
     StructType,
 )
+
+from pasardassist_spark.tables import map_rows, write_shards
 
 # ------------------------------------------------------------- encoder
 
@@ -221,7 +221,6 @@ def decode_stream(buf: bytes) -> Iterator[dict]:
 
 # -------------------------------------------------------------- Spark API
 
-MANIFEST_SCHEMA = "file string, n_records long, n_bytes long"
 _SUPPORTED = (LongType, IntegerType, DoubleType, StringType, BooleanType,
               BinaryType)
 
@@ -237,36 +236,25 @@ def _check_schema(schema: StructType, who: str) -> None:
 
 
 def write_msgpack(df: DataFrame, path: str) -> DataFrame:
-    """Distributed MessagePack export: one row-map stream shard per
-    partition, manifest rows back (the avro.py/warc.py contract)."""
+    """Distributed MessagePack export: one row-map stream
+    ``part-{pid:05d}.msgpack`` per partition through
+    ``tables.write_shards``, which returns the manifest."""
     _check_schema(df.schema, "write_msgpack")
     os.makedirs(path, exist_ok=True)
     fields = [(_enc_str(f.name), f.dataType) for f in df.schema.fields]
 
-    def _write(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
+    def _write(fh, batches) -> int:
+        n = 0
+        for batch in batches:
+            # None-ify pandas NaN/NaT once per batch so the encoder
+            # sees clean Python values
+            batch = batch.astype(object).where(batch.notna(), None)
+            for row in batch.itertuples(index=False):
+                fh.write(encode_row(row, fields))
+                n += 1
+        return n
 
-        pid = TaskContext.get().partitionId()
-        fname = os.path.join(path, f"part-{pid:05d}.msgpack")
-        n_rec = n_bytes = 0
-        with open(fname, "wb") as fh:
-            for batch in it:
-                # None-ify pandas NaN/NaT once per batch so the encoder
-                # sees clean Python values
-                batch = batch.astype(object).where(batch.notna(), None)
-                for row in batch.itertuples(index=False):
-                    b = encode_row(row, fields)
-                    fh.write(b)
-                    n_rec += 1
-                    n_bytes += len(b)
-        if n_rec == 0:
-            os.remove(fname)
-            return
-        yield pd.DataFrame(
-            {"file": [fname], "n_records": [n_rec], "n_bytes": [n_bytes]}
-        )
-
-    return df.mapInPandas(_write, MANIFEST_SCHEMA)
+    return write_shards(df, path, "part-{:05d}.msgpack", _write)
 
 
 def read_msgpack(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
@@ -283,20 +271,15 @@ def read_msgpack(spark: SparkSession, path: str, schema: StructType) -> DataFram
         .select("content")
     )
 
-    def _parse(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in it:
-            rows = []
-            for blob in batch.itertuples(index=False):
-                for m in decode_stream(bytes(blob.content)):
-                    extra = set(m) - known
-                    if extra:
-                        raise ValueError(
-                            "msgpack reader: shard carries unknown "
-                            f"columns {sorted(extra)} not in the "
-                            "explicit schema"
-                        )
-                    rows.append([m.get(n) for n in names])
-            if rows:
-                yield pd.DataFrame(rows, columns=names)
+    def _parse(content):
+        for m in decode_stream(bytes(content)):
+            extra = set(m) - known
+            if extra:
+                raise ValueError(
+                    "msgpack reader: shard carries unknown "
+                    f"columns {sorted(extra)} not in the "
+                    "explicit schema"
+                )
+            yield tuple(m.get(n) for n in names)
 
-    return blobs.mapInPandas(_parse, schema)
+    return map_rows(blobs, _parse, schema)

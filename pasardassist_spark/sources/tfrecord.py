@@ -12,10 +12,11 @@ ecosystem. Stdlib+numpy only, from the PUBLIC specs:
   public protobuf wire format (tag = field<<3|wire_type, varints,
   length-delimited submessages). No protobuf library.
 
-Scale shape mirrors sources/warc.py: write = one .tfrecord shard per
-partition, task-local, manifest rows back; read = binaryFile scan (one
-task per shard — TFRecord is not splittable, parallelism comes from
-shard count) + Arrow-batched record parser. Reference semantics: the
+Scale shape is the shard layout of ``tables.write_shards``: write = one
+.tfrecord shard per partition, task-local, manifest rows back; read =
+binaryFile scan (one task per shard — TFRecord is not splittable,
+parallelism comes from shard count) + a ``tables.map_rows`` record
+parser. Reference semantics: the
 export boundary of a training-data build (the reference's closest
 analogue is its collection export endpoints in app.service.ts); the
 format itself is from the public TensorFlow documentation.
@@ -28,9 +29,8 @@ import struct
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -38,9 +38,10 @@ from pyspark.sql.types import (
     FloatType,
     LongType,
     StringType,
-    StructField,
     StructType,
 )
+
+from pasardassist_spark.tables import map_rows, write_shards
 
 # ----------------------------------------------------------------- CRC32C
 
@@ -249,20 +250,13 @@ def decode_records(blob: bytes) -> Iterator[bytes]:
 
 # ------------------------------------------------------------- spark level
 
-MANIFEST_SCHEMA = StructType(
-    [
-        StructField("file", StringType(), True),
-        StructField("n_records", LongType(), True),
-        StructField("n_bytes", LongType(), True),
-    ]
-)
-
 
 def write_tfrecord(df: DataFrame, path: str) -> DataFrame:
     """Distributed TFRecord export: every input column becomes one
     Example feature (string/binary -> BytesList, integral -> Int64List,
-    float/array<float> -> FloatList), one shard per partition, manifest
-    rows back (sources/warc.py contract)."""
+    float/array<float> -> FloatList), one ``part-{pid:05d}.tfrecord``
+    shard per partition through ``tables.write_shards``, which returns
+    the manifest."""
     os.makedirs(path, exist_ok=True)
     fields = [(f.name, f.dataType) for f in df.schema.fields]
 
@@ -281,34 +275,18 @@ def write_tfrecord(df: DataFrame, path: str) -> DataFrame:
             return list(v)
         raise TypeError(f"tfrecord: unsupported column type {dt}")
 
-    def _write(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
+    def _write(fh, batches) -> int:
+        n = 0
+        for batch in batches:
+            for row in batch.itertuples(index=False):
+                ex = encode_example(
+                    {name: _to_feature(dt, getattr(row, name)) for name, dt in fields}
+                )
+                fh.write(encode_record(ex))
+                n += 1
+        return n
 
-        pid = TaskContext.get().partitionId()
-        fname = os.path.join(path, f"part-{pid:05d}.tfrecord")
-        n_rec = 0
-        n_bytes = 0
-        with open(fname, "wb") as fh:
-            for batch in it:
-                for row in batch.itertuples(index=False):
-                    ex = encode_example(
-                        {
-                            name: _to_feature(dt, getattr(row, name))
-                            for name, dt in fields
-                        }
-                    )
-                    rec = encode_record(ex)
-                    fh.write(rec)
-                    n_rec += 1
-                    n_bytes += len(rec)
-        if n_rec == 0:
-            os.remove(fname)
-            return
-        yield pd.DataFrame(
-            {"file": [fname], "n_records": [n_rec], "n_bytes": [n_bytes]}
-        )
-
-    return df.mapInPandas(_write, MANIFEST_SCHEMA)
+    return write_shards(df, path, "part-{:05d}.tfrecord", _write)
 
 
 def read_tfrecord(
@@ -342,19 +320,9 @@ def read_tfrecord(
             return list(v)
         raise TypeError(f"tfrecord: unsupported column type {dt}")
 
-    def _parse(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in it:
-            rows = []
-            for row in batch.itertuples(index=False):
-                for payload in decode_records(bytes(row.content)):
-                    ex = decode_example(payload)
-                    rows.append(
-                        {
-                            name: _from_feature(dt, ex[name])
-                            for name, dt in fields
-                        }
-                    )
-            if rows:
-                yield pd.DataFrame(rows)
+    def _parse(content):
+        for payload in decode_records(bytes(content)):
+            ex = decode_example(payload)
+            yield tuple(_from_feature(dt, ex[name]) for name, dt in fields)
 
-    return blobs.mapInPandas(_parse, schema)
+    return map_rows(blobs, _parse, schema)

@@ -5,12 +5,13 @@ format, so a correct parser needs no external library.
 
 Scale shape — how the real pipelines shard this format, mirrored here:
 
-- WRITE: one ``.warc`` file per Spark partition, each task serializing
-  and writing its own shard (the Hadoop output pattern); no driver
-  funnel, no shuffle. The returned manifest (file, n_records, n_bytes)
-  is one row per shard — metadata-scale.
-- READ: ``binaryFile`` scan, one row per shard, then an Arrow-batched
-  ``mapInPandas`` parser. A WARC file is record-framed, not
+- WRITE: one ``.warc`` file per Spark partition through
+  ``tables.write_shards``, each task serializing and writing its own
+  shard (the Hadoop output pattern); no driver funnel, no shuffle. The
+  returned manifest (file, n_records, n_bytes) is one row per shard —
+  metadata-scale.
+- READ: ``binaryFile`` scan, one row per shard, then a
+  ``tables.map_rows`` record parser. A WARC file is record-framed, not
   line-framed, so the unit of parallelism is the FILE (exactly as in
   production, where .warc.gz members are non-splittable); parallelism
   comes from shard count, which the writer controls via partitioning.
@@ -29,8 +30,6 @@ import os
 import zlib
 from typing import Iterator
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     LongType,
@@ -38,6 +37,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from pasardassist_spark.tables import map_rows, write_shards
 
 _CRLF = b"\r\n"
 # Fixed, valid ISO 8601 stamp: WARC-Date is mandatory per ISO 28500 but a
@@ -54,15 +55,6 @@ RECORD_SCHEMA = StructType(
         StructField("shard", StringType(), True),
     ]
 )
-
-MANIFEST_SCHEMA = StructType(
-    [
-        StructField("file", StringType(), True),
-        StructField("n_records", LongType(), True),
-        StructField("n_bytes", LongType(), True),
-    ]
-)
-
 
 def encode_record(
     record_id: str,
@@ -161,10 +153,11 @@ def write_warc(
     compress: bool = False,
 ) -> DataFrame:
     """Distributed WARC export: each task serializes its partition into
-    ``<path>/part-<pid>.warc`` and emits one manifest row. Returns the
-    manifest DataFrame (file, n_records, n_bytes) — NOT the data; like
-    any sink, the write is the effect. Caller controls shard count and
-    ordering via the input's partitioning (e.g. repartition(n, key)).
+    ``<path>/part-{pid:05d}.warc`` through ``tables.write_shards``.
+    Returns the manifest DataFrame (file, n_records, n_bytes) — NOT the
+    data; like any sink, the write is the effect. Caller controls shard
+    count and ordering via the input's partitioning (e.g.
+    repartition(n, key)).
 
     ``compress=True`` writes ``.warc.gz`` in the Common Crawl layout:
     one gzip MEMBER per record (mtime pinned to 0 so shards are
@@ -179,59 +172,40 @@ def write_warc(
 
     has_uri = uri_col is not None
 
-    def _write(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
+    def _write(fh, batches) -> int:
+        n = 0
+        for batch in batches:
+            for row in batch.itertuples(index=False):
+                rec = encode_record(
+                    row.rid,
+                    row.pl.encode("utf-8"),
+                    target_uri=row.uri if has_uri else None,
+                )
+                fh.write(gzip.compress(rec, mtime=0) if compress else rec)
+                n += 1
+        return n
 
-        pid = TaskContext.get().partitionId()
-        ext = "warc.gz" if compress else "warc"
-        fname = os.path.join(path, f"part-{pid:05d}.{ext}")
-        n_rec = 0
-        n_bytes = 0
-        with open(fname, "wb") as fh:
-            for batch in it:
-                for row in batch.itertuples(index=False):
-                    rec = encode_record(
-                        row.rid,
-                        row.pl.encode("utf-8"),
-                        target_uri=row.uri if has_uri else None,
-                    )
-                    if compress:
-                        rec = gzip.compress(rec, mtime=0)
-                    fh.write(rec)
-                    n_rec += 1
-                    n_bytes += len(rec)
-        if n_rec == 0:
-            os.remove(fname)  # empty partitions leave no empty shards
-            return
-        yield pd.DataFrame(
-            {"file": [fname], "n_records": [n_rec], "n_bytes": [n_bytes]}
-        )
-
-    return src.mapInPandas(_write, MANIFEST_SCHEMA)
+    ext = "warc.gz" if compress else "warc"
+    return write_shards(src, path, "part-{:05d}." + ext, _write)
 
 
 def read_warc(spark: SparkSession, path: str) -> DataFrame:
-    """Distributed WARC read: binaryFile scan (one row per shard) into an
-    Arrow-batched record parser. The ``shard`` column carries provenance
-    — real pipelines partition-prune and debug by shard path. Shards are
-    sniffed per-file: the gzip magic (1f 8b) routes through the
-    member-splitter, anything else parses as plain WARC — a directory
-    may mix both."""
+    """Distributed WARC read: binaryFile scan (one row per shard) into a
+    ``tables.map_rows`` record parser. The ``shard`` column carries
+    provenance — real pipelines partition-prune and debug by shard path.
+    Shards are sniffed per-file: the gzip magic (1f 8b) routes through
+    the member-splitter, anything else parses as plain WARC — a
+    directory may mix both."""
     blobs = spark.read.format("binaryFile").load(
         os.path.join(path, "*.warc*")
     ).select("path", "content")
 
-    def _parse(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in it:
-            out: list[dict] = []
-            for row in batch.itertuples(index=False):
-                blob = bytes(row.content)
-                if blob[:2] == b"\x1f\x8b":
-                    blob = b"".join(split_gzip_members(blob))
-                for rec in decode_records(blob):
-                    rec["shard"] = row.path
-                    out.append(rec)
-            if out:
-                yield pd.DataFrame(out)
+    def _parse(shard, content):
+        blob = bytes(content)
+        if blob[:2] == b"\x1f\x8b":
+            blob = b"".join(split_gzip_members(blob))
+        for rec in decode_records(blob):
+            # decode_records yields its keys in RECORD_SCHEMA order
+            yield (*rec.values(), shard)
 
-    return blobs.mapInPandas(_parse, RECORD_SCHEMA)
+    return map_rows(blobs, _parse, RECORD_SCHEMA)

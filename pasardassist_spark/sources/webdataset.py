@@ -12,10 +12,10 @@ never by seeking).
 
 Scale shape, both directions task-parallel with no driver funnel:
 
-- WRITE: one tar shard per partition (``mapInPandas`` with the
-  TaskContext partition id naming the shard), members emitted in row
-  order with pinned metadata (mtime 0, uid/gid 0) so shard bytes are
-  deterministic for a given row order; the returned manifest (shard,
+- WRITE: one ``shard-{pid:05d}.tar`` per partition through
+  ``tables.write_shards``, members streamed into the file in row order
+  with pinned metadata (mtime 0, uid/gid 0) so shard bytes are
+  deterministic for a given row order; the returned manifest (file,
   n_records, n_bytes) is the only thing that ever reaches the driver.
 - READ: ``binaryFile`` over ``shard-*.tar`` (one task per shard) +
   ``tables.map_rows`` parsing with the stdlib ``tarfile`` module, grouping
@@ -33,13 +33,10 @@ import io
 import os
 import posixpath
 import tarfile
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
-from pasardassist_spark.tables import map_rows
+from pasardassist_spark.tables import map_rows, write_shards
 
 __all__ = ["read_webdataset", "write_webdataset"]
 
@@ -52,19 +49,15 @@ def write_webdataset(
     json_col: str | None = "json",
     bin_col: str | None = "bin",
 ) -> DataFrame:
-    """Write one ``shard-{pid:05d}.tar`` per partition; returns the
-    manifest DataFrame (shard, n_records, n_bytes)."""
+    """Write one ``shard-{pid:05d}.tar`` per partition, streaming the
+    members into the file; returns the ``tables.write_shards`` manifest
+    (file, n_records, n_bytes)."""
     os.makedirs(path, exist_ok=True)
     cols = [key_col] + [c for c in (txt_col, json_col, bin_col) if c]
 
-    def _write(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        shard = os.path.join(path, f"shard-{pid:05d}.tar")
+    def _write(fh, batches) -> int:
         n = 0
-        buf = io.BytesIO()
-        with tarfile.open(fileobj=buf, mode="w") as tf:
+        with tarfile.open(fileobj=fh, mode="w") as tf:
 
             def add(name: str, data: bytes) -> None:
                 info = tarfile.TarInfo(name)
@@ -73,7 +66,7 @@ def write_webdataset(
                 info.uid = info.gid = 0
                 tf.addfile(info, io.BytesIO(data))
 
-            for pdf in it:
+            for pdf in batches:
                 for row in pdf.itertuples(index=False):
                     d = row._asdict()
                     key = str(d[key_col])
@@ -91,20 +84,9 @@ def write_webdataset(
                     if bin_col and d.get(bin_col) is not None:
                         add(f"{key}.bin", bytes(d[bin_col]))
                     n += 1
-        data = buf.getvalue()
-        if n:
-            with open(shard, "wb") as f:
-                f.write(data)
-        yield pd.DataFrame(
-            {"shard": [os.path.basename(shard) if n else ""],
-             "n_records": [n], "n_bytes": [len(data) if n else 0]}
-        )
+        return n
 
-    return (
-        df.select(*cols)
-        .mapInPandas(_write, "shard string, n_records long, n_bytes long")
-        .filter("n_records > 0")
-    )
+    return write_shards(df.select(*cols), path, "shard-{:05d}.tar", _write)
 
 
 def read_webdataset(spark: SparkSession, path: str) -> DataFrame:

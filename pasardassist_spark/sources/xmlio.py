@@ -12,17 +12,17 @@ references), so the writer raises by name on them rather than silently
 corrupting — the caller strips or base64s such rows first (the documented
 seam, same discipline as the codec families).
 
-Scale shape mirrors sources/avro.py: write = shard per partition with
-manifest rows back (no driver funnel); read = binaryFile scan, one task
-per shard, iterparse streaming so task memory is O(row), with values
-converted under an EXPLICIT schema (textio's never-infer contract).
+Scale shape is the shard layout of ``tables.write_shards``: write = one
+shard per partition with manifest rows back (no driver funnel); read =
+binaryFile scan, one task per shard, iterparse streaming inside a
+``tables.map_rows`` stage, with values converted under an EXPLICIT
+schema (textio's never-infer contract).
 """
 
 from __future__ import annotations
 
 import os
 import re
-from typing import Iterator
 from xml.etree import ElementTree as ET
 from xml.sax.saxutils import escape
 
@@ -40,7 +40,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-MANIFEST_SCHEMA = "file string, n_records long, n_bytes long"
+from pasardassist_spark.tables import map_rows, write_shards
 
 # XML 1.0 Char production: #x9 | #xA | #xD | [#x20-#xD7FF] | ...
 _XML_ILLEGAL = re.compile("[\x00-\x08\x0b\x0c\x0e-\x1f]")
@@ -72,47 +72,33 @@ def _text_to_cell(s: str, dtype):
     return s
 
 
+def _is_null(v) -> bool:
+    return v is None or v is pd.NaT or (isinstance(v, float) and v != v)
+
+
 def write_xml(df: DataFrame, path: str, root: str = "records") -> DataFrame:
-    """Distributed XML export: one shard per partition, manifest rows
-    back (the avro.py/warc.py contract); empty partitions leave no file."""
+    """Distributed XML export: one UTF-8 ``part-{pid:05d}.xml`` shard per
+    partition through ``tables.write_shards``, which returns the
+    manifest; empty partitions leave no file."""
     os.makedirs(path, exist_ok=True)
     fields = [(f.name, f.dataType) for f in df.schema.fields]
 
-    def _write(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
+    def _write(fh, batches) -> int:
+        fh.write(f'<?xml version="1.0" encoding="UTF-8"?>\n<{root}>\n'.encode())
+        n = 0
+        for batch in batches:
+            for row in batch.itertuples(index=False):
+                cells = "".join(
+                    f"<{name}>{_cell_to_text(v, dtype)}</{name}>"
+                    for (name, dtype), v in zip(fields, row)
+                    if not _is_null(v)
+                )
+                fh.write(f"<r>{cells}</r>\n".encode("utf-8"))
+                n += 1
+        fh.write(f"</{root}>\n".encode("utf-8"))
+        return n
 
-        pid = TaskContext.get().partitionId()
-        fname = os.path.join(path, f"part-{pid:05d}.xml")
-        n_rec = 0
-        with open(fname, "w", encoding="utf-8") as fh:
-            fh.write(f'<?xml version="1.0" encoding="UTF-8"?>\n<{root}>\n')
-            for batch in it:
-                for row in batch.itertuples(index=False):
-                    parts = ["<r>"]
-                    for (name, dtype), v in zip(fields, row):
-                        if v is None or v is pd.NaT or (
-                            isinstance(v, float) and v != v
-                        ):
-                            continue
-                        parts.append(
-                            f"<{name}>{_cell_to_text(v, dtype)}</{name}>"
-                        )
-                    parts.append("</r>\n")
-                    fh.write("".join(parts))
-                    n_rec += 1
-            fh.write(f"</{root}>\n")
-        if n_rec == 0:
-            os.remove(fname)
-            return
-        yield pd.DataFrame(
-            {
-                "file": [fname],
-                "n_records": [n_rec],
-                "n_bytes": [os.path.getsize(fname)],
-            }
-        )
-
-    return df.mapInPandas(_write, MANIFEST_SCHEMA)
+    return write_shards(df, path, "part-{:05d}.xml", _write)
 
 
 def read_xml(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
@@ -131,28 +117,21 @@ def read_xml(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
     names = [f.name for f in schema.fields]
     dtypes = {f.name: f.dataType for f in schema.fields}
 
-    def _parse(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in it:
-            rows = []
-            for blob in batch["content"]:
-                stream = io.BytesIO(bytes(blob))
-                try:
-                    for _, elem in ET.iterparse(stream, events=("end",)):
-                        if elem.tag != "r":
-                            continue
-                        row = {}
-                        for child in elem:
-                            if child.tag in dtypes:
-                                row[child.tag] = _text_to_cell(
-                                    child.text or "", dtypes[child.tag]
-                                )
-                        rows.append([row.get(n) for n in names])
-                        elem.clear()
-                except ET.ParseError as exc:
-                    # ParseError subclasses SyntaxError, not ValueError —
-                    # normalize so callers see the textio error contract
-                    raise ValueError(f"malformed XML shard: {exc}") from exc
-            if rows:
-                yield pd.DataFrame(rows, columns=names)
+    def _parse(content):
+        try:
+            for _, elem in ET.iterparse(io.BytesIO(bytes(content)), events=("end",)):
+                if elem.tag != "r":
+                    continue
+                row = {
+                    child.tag: _text_to_cell(child.text or "", dtypes[child.tag])
+                    for child in elem
+                    if child.tag in dtypes
+                }
+                yield tuple(row.get(n) for n in names)
+                elem.clear()
+        except ET.ParseError as exc:
+            # ParseError subclasses SyntaxError, not ValueError —
+            # normalize so callers see the textio error contract
+            raise ValueError(f"malformed XML shard: {exc}") from exc
 
-    return blobs.mapInPandas(_parse, schema)
+    return map_rows(blobs, _parse, schema)

@@ -251,6 +251,54 @@ def map_rows(df: DataFrame, fn, schema: StructType | str) -> DataFrame:
     return df.mapInPandas(_batches, schema)
 
 
+def write_shards(df: DataFrame, path: str, name: str, write) -> DataFrame:
+    """Write each partition of ``df`` to its own file under ``path`` in
+    one ``mapInPandas`` stage; return the manifest, one
+    ``(file, n_records, n_bytes)`` row per file written.
+
+    The task for partition ``pid`` opens ``os.path.join(path,
+    name.format(pid))`` in binary mode and calls ``write(fh, batches)``
+    with the partition's pandas batches; ``write`` returns the number of
+    records it wrote. A partition with no records leaves no file and no
+    manifest row. ``n_bytes`` is the file's size on disk. An exception
+    raised in ``write`` fails the task and the action. This is the file
+    sink layout of Structured Streaming: each task writes its own file
+    and only the manifest reaches the driver.
+    """
+
+    def _write(it):
+        import pandas as pd
+        from pyspark import TaskContext
+
+        file = os.path.join(path, name.format(TaskContext.get().partitionId()))
+        with open(file, "wb") as fh:
+            n = write(fh, it)
+        if n == 0:
+            os.remove(file)
+            return
+        yield pd.DataFrame(
+            {"file": [file], "n_records": [n], "n_bytes": [os.path.getsize(file)]}
+        )
+
+    return df.mapInPandas(_write, "file string, n_records long, n_bytes long")
+
+
+def export_shards(write, df: DataFrame, prefix: str, **options) -> str:
+    """Run the shard sink ``write(df, dir, **options)`` into a fresh
+    temporary directory, removed at interpreter exit, and return the
+    directory. Raises ``ValueError`` when the manifest counts no record:
+    an export that wrote nothing would read back as an empty result."""
+    import atexit
+    import shutil
+    import tempfile
+
+    tmp = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    if sum(m.n_records for m in write(df, tmp, **options).collect()) == 0:
+        raise ValueError(f"{write.__name__} wrote no records to {tmp}")
+    return tmp
+
+
 def _to_arrow_value(dt: DataType):
     """Per-value converter for ``dt``, or None when pyarrow takes the
     Python value as is. Only TIMESTAMP (at any depth) needs one: pyarrow

@@ -193,7 +193,7 @@ def test_mbox_spark_source_roundtrip(spark, tmp_path):
         pd.DataFrame({"msg": msgs})
     ).repartition(3)
     manifest = write_mbox(df, str(tmp_path)).collect()
-    assert sum(m.n_messages for m in manifest) == 20
+    assert sum(m.n_records for m in manifest) == 20
     back = read_mbox(spark, str(tmp_path)).collect()
     assert len(back) == 20
     got = sorted(

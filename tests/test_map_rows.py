@@ -1,7 +1,8 @@
 """``tables.map_rows``: the one per-row Python stage.
 
 Pins (a) that no other function under ``pasardassist_spark/`` hand-writes
-the per-row loop (``for pdf in it:`` with per-column ``append`` lists),
+the per-row loop (any ``for ... in it:`` batch loop with a row loop that
+calls ``append`` or ``extend``),
 and (b) the helper's contract: zero, one or many output rows per input
 row, empty partitions, nulls, binary and array columns, and an exception
 in ``fn`` failing the action.
@@ -21,18 +22,18 @@ PKG = os.path.join(
 )
 
 
-def _is_pdf_loop(node: ast.AST) -> bool:
+def _is_batch_loop(node: ast.AST) -> bool:
     return (
         isinstance(node, ast.For)
         and isinstance(node.target, ast.Name)
-        and node.target.id == "pdf"
         and isinstance(node.iter, ast.Name)
         and node.iter.id == "it"
     )
 
 
 def _appends_per_row(loop: ast.For) -> bool:
-    """A row loop nested in the batch loop that appends to lists."""
+    """A row loop nested in the batch loop that appends to or extends
+    lists."""
     for inner in ast.walk(loop):
         if inner is loop or not isinstance(inner, ast.For):
             continue
@@ -40,7 +41,7 @@ def _appends_per_row(loop: ast.For) -> bool:
             if (
                 isinstance(call, ast.Call)
                 and isinstance(call.func, ast.Attribute)
-                and call.func.attr == "append"
+                and call.func.attr in ("append", "extend")
             ):
                 return True
     return False
@@ -73,7 +74,7 @@ def _hand_written_row_loops(root: str) -> list[str]:
                     node = stack.pop()
                     if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
                         continue
-                    if _is_pdf_loop(node) and _appends_per_row(node):
+                    if _is_batch_loop(node) and _appends_per_row(node):
                         found.append(f"{os.path.relpath(path, root)}:{node.lineno} {fn.name}")
                     stack.extend(ast.iter_child_nodes(node))
     return found
@@ -95,7 +96,20 @@ def test_scan_flags_a_hand_written_loop(tmp_path):
         "            yield out\n"
         "    return _batches\n"
     )
-    assert _hand_written_row_loops(str(tmp_path)) == ["stage.py:3 _batches"]
+    (tmp_path / "reader.py").write_text(
+        "def reader(df):\n"
+        "    def _parse(it):\n"
+        "        for batch in it:\n"
+        "            rows = []\n"
+        "            for blob in batch['content']:\n"
+        "                rows.extend(decode(blob))\n"
+        "            yield rows\n"
+        "    return _parse\n"
+    )
+    assert _hand_written_row_loops(str(tmp_path)) == [
+        "reader.py:3 _parse",
+        "stage.py:3 _batches",
+    ]
 
 
 def _collect(df):

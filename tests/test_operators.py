@@ -291,6 +291,21 @@ def test_opq_rotation_objective_and_lift(spark):
     assert r_opq >= 0.7, r_opq
 
 
+def test_opq_rotation_rejects_an_uneven_split():
+    """The split check is a runtime check: ``python -O`` keeps it."""
+    import pytest
+
+    with pytest.raises(ValueError, match="dim 10 not divisible into 4 subspaces"):
+        S.opq_rotation(None, 10, m=4)
+
+
+def test_pq_codebooks_rejects_an_uneven_split():
+    import pytest
+
+    with pytest.raises(ValueError, match="dim 10 not divisible into 4 subspaces"):
+        S.pq_codebooks(None, 10, m=4)
+
+
 def test_asof_join_semantics(spark):
     from pasardassist_spark.operators.asof import asof_join
 
