@@ -168,8 +168,9 @@ def timed_passes(
     references them, so the operator cannot unpersist eagerly). One long
     session timing hundreds of entries would accumulate those blocks for
     its whole lifetime, shadow-taxing every later entry. release_all drops
-    them (SQL cache AND localCheckpoint block RDDs) BETWEEN entries,
-    outside each timed window; queries are independent, so this also keeps
+    them (SQL cache AND localCheckpoint block RDDs), and removes the
+    entries' scratch directories, BETWEEN entries, outside each timed
+    window; queries are independent, so this also keeps
     the warm numbers honest (no cross-pass cached-plan reuse).
     """
     out = []

@@ -14,12 +14,9 @@ dtype-drift hazard), and the corrupt-record policy is explicit.
 
 from __future__ import annotations
 
-import atexit
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 
+from pasardassist_spark.caching import scratch_dir
 from pasardassist_spark.queries.registry import query
 from pasardassist_spark.tables import export_shards, load
 
@@ -34,15 +31,15 @@ def src_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     newlines. The writer pins the full quoting dialect (quote-doubling)
     and the reader reverses it with multiLine, so the comparison proves
     dialect symmetry, not just happy-path parsing. Side effect and
-    cleanup semantics match src_jsonl_roundtrip (fresh mkdtemp per call,
-    removed at interpreter exit)."""
+    cleanup semantics match src_jsonl_roundtrip (a fresh
+    ``caching.scratch_dir`` per call, removed at the next
+    ``release_all``)."""
     from pasardassist_spark.sources.textio import read_csv, write_csv
 
     d = load(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    tmp = tempfile.mkdtemp(prefix="pasard_csv_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    tmp = scratch_dir("pasard_csv_")
     write_csv(d, tmp)
     return read_csv(spark, tmp, d.schema)
 
@@ -71,8 +68,7 @@ def src_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_returnflag",
         "l_shipdate",
     )
-    tmp = tempfile.mkdtemp(prefix="pasard_orc_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    tmp = scratch_dir("pasard_orc_")
     d.write.mode("overwrite").orc(tmp)
     return spark.read.schema(d.schema).orc(tmp)
 

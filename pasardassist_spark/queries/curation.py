@@ -24,6 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
+from pasardassist_spark.caching import scratch_dir
 from pasardassist_spark.operators import dedup as D
 from pasardassist_spark.operators import text as X
 from pasardassist_spark.queries.registry import query
@@ -498,19 +499,15 @@ def src_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Side effect: building the plan writes the JSONL export (a source
     connector cannot be exercised without bytes on disk). Each call gets a
-    fresh ``mkdtemp`` dir — no cross-run collisions — and the dir is
-    removed at interpreter exit, after any lazy read has materialized."""
-    import atexit
-    import shutil
-    import tempfile
-
+    fresh ``caching.scratch_dir`` — no cross-run collisions — and the dir
+    is removed at the next ``release_all`` (the query boundary), after the
+    lazy read has run."""
     from pasardassist_spark.sources.textio import read_jsonl, write_jsonl
 
     d = load(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    tmp = tempfile.mkdtemp(prefix="pasard_jsonl_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    tmp = scratch_dir("pasard_jsonl_")
     write_jsonl(d, tmp)
     return read_jsonl(spark, tmp, d.schema)
 

@@ -31,8 +31,10 @@ from __future__ import annotations
 import hashlib
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from pasardassist_spark.caching import scratch_dir
 from pasardassist_spark.queries.registry import query
-from pasardassist_spark.tables import load, local_frame, map_rows
+from pasardassist_spark.tables import load, map_rows
 
 _OUT_SCHEMA = (
     "doc_id long, part_no int, n_parts int, n_chars long, part_md5 string"
@@ -1870,9 +1872,6 @@ def streaming_docgate_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-side epochs, but each epoch is a distributed map+join plan —
     at 100 TB this is foreachBatch cadence, not a driver loop over
     rows."""
-    import shutil
-    import tempfile
-
     from pasardassist_spark.operators.docxtext import encode_docx
     from pasardassist_spark.operators.pdftext import encode_pdf
     from pasardassist_spark.streaming.docgate import (
@@ -1912,28 +1911,19 @@ def streaming_docgate_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     payloads = map_rows(joined, _synth, "doc_id long, payload binary").localCheckpoint()
 
-    state_dir = tempfile.mkdtemp(prefix="docgate_state_")
-    admitted_dir = tempfile.mkdtemp(prefix="docgate_admitted_")
-    try:
-        for e in range(4):
-            apply_doc_batch(
-                payloads.filter(F.col("doc_id") % 4 == e),
-                e, state_dir, admitted_dir,
-            )
-        adm = admitted_clean_docs(spark, admitted_dir)
-        out = adm.select(
-            "doc_id",
-            "fmt",
-            F.length("text").cast("long").alias("n_chars"),
-            F.md5(F.col("text").cast("binary")).alias("text_md5"),
+    state_dir = scratch_dir("docgate_state_")
+    admitted_dir = scratch_dir("docgate_admitted_")
+    for e in range(4):
+        apply_doc_batch(
+            payloads.filter(F.col("doc_id") % 4 == e),
+            e, state_dir, admitted_dir,
         )
-        # materialize before deleting the temp state it reads from
-        rows = out.collect()
-        schema = out.schema
-    finally:
-        shutil.rmtree(state_dir, ignore_errors=True)
-        shutil.rmtree(admitted_dir, ignore_errors=True)
-    return local_frame(spark, rows, schema)
+    return admitted_clean_docs(spark, admitted_dir).select(
+        "doc_id",
+        "fmt",
+        F.length("text").cast("long").alias("n_chars"),
+        F.md5(F.col("text").cast("binary")).alias("text_md5"),
+    )
 
 
 # --------------------------------------- attachment-recursion composite

@@ -9,8 +9,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from pasardassist_spark.caching import scratch_dir
 from pasardassist_spark.queries.registry import query
-from pasardassist_spark.tables import load, local_frame
+from pasardassist_spark.tables import load
 
 
 # ------------------------------------------------------------- CEP ------
@@ -228,8 +229,6 @@ def drift_psi_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
     psi_distance. The oracle recomputes PSI closed-form in SQL; the 6-dp
     round absorbs libm ln() ULP skew (the fold itself is sorted-order
     deterministic)."""
-    import tempfile
-
     from pasardassist_spark.streaming.drift import (
         _combine,
         drift_from_state,
@@ -248,20 +247,9 @@ def drift_psi_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(binned.alias("value"))
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
-    state_dir = tempfile.mkdtemp(prefix="drift_psi_state_")
-    try:
-        merge_into_bucketed_state(live, state_dir, ("value",), _combine)
-        out = drift_from_state(spark, state_dir, ref, metric="psi")
-        # materialize the 1-row readout BEFORE deleting the state it reads
-        # from (every invocation builds a fresh temp state; without this
-        # the dirs would accumulate on the shared host run after run)
-        rows = out.collect()
-        schema = out.schema
-    finally:
-        import shutil
-
-        shutil.rmtree(state_dir, ignore_errors=True)
-    return local_frame(spark, rows, schema)
+    state_dir = scratch_dir("drift_psi_state_")
+    merge_into_bucketed_state(live, state_dir, ("value",), _combine)
+    return drift_from_state(spark, state_dir, ref, metric="psi")
 
 
 # ------------------------------------------------------- record linkage -
@@ -408,9 +396,6 @@ def cdc_state_travel_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     store is the streaming upsert sink's layout (SURVEY §2.1 S7/S8); the
     diff itself is one full-outer equi-join, Exchange-free when both
     generations share the bucketed layout."""
-    import shutil
-    import tempfile
-
     from pasardassist_spark.operators.cdc import state_diff
     from pasardassist_spark.streaming.ingest import merge_into_bucketed_state
 
@@ -433,30 +418,23 @@ def cdc_state_travel_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    state_dir = tempfile.mkdtemp(prefix="cdc_travel_state_")
-    try:
-        merge_into_bucketed_state(
-            rollup(o.where(F.col("o_orderdate") < _TRAVEL_SPLIT)),
-            state_dir, ("o_custkey",), sum_combine,
-        )
-        merge_into_bucketed_state(
-            rollup(o.where(F.col("o_orderdate") >= _TRAVEL_SPLIT)),
-            state_dir, ("o_custkey",), sum_combine,
-        )
-        d = state_diff(
-            spark, state_dir, ("o_custkey",), v_old=1, v_new=2,
-            compare_cols=("n_orders", "spend"),
-        ).select(
-            "o_custkey", "change_type",
-            "old_n_orders", F.col("old_spend").cast("double").alias("old_spend"),
-            "new_n_orders", F.col("new_spend").cast("double").alias("new_spend"),
-        )
-        # materialize before deleting the store the plan reads from
-        rows = d.collect()
-        schema = d.schema
-    finally:
-        shutil.rmtree(state_dir, ignore_errors=True)
-    return local_frame(spark, rows, schema)
+    state_dir = scratch_dir("cdc_travel_state_")
+    merge_into_bucketed_state(
+        rollup(o.where(F.col("o_orderdate") < _TRAVEL_SPLIT)),
+        state_dir, ("o_custkey",), sum_combine,
+    )
+    merge_into_bucketed_state(
+        rollup(o.where(F.col("o_orderdate") >= _TRAVEL_SPLIT)),
+        state_dir, ("o_custkey",), sum_combine,
+    )
+    return state_diff(
+        spark, state_dir, ("o_custkey",), v_old=1, v_new=2,
+        compare_cols=("n_orders", "spend"),
+    ).select(
+        "o_custkey", "change_type",
+        "old_n_orders", F.col("old_spend").cast("double").alias("old_spend"),
+        "new_n_orders", F.col("new_spend").cast("double").alias("new_spend"),
+    )
 
 
 # ------------------------------------------------- drift trajectory -----

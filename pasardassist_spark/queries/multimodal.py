@@ -9,6 +9,7 @@ from __future__ import annotations
 import pandas as pd  # module-level: pandas_udf resolves string type hints here
 from pyspark.sql import DataFrame, SparkSession
 
+from pasardassist_spark.caching import scratch_dir
 from pasardassist_spark.operators.multimodal import attach_payload, extract_features
 from pasardassist_spark.queries.registry import query
 from pasardassist_spark.tables import load, map_rows
@@ -1690,9 +1691,6 @@ def streaming_imagegate_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_imagegate.py.  Sequential-composite caveat: 4
     driver-side epochs, each a distributed plan — foreachBatch cadence,
     not a row loop."""
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from pasardassist_spark.operators import imagecodec
@@ -1748,29 +1746,25 @@ def streaming_imagegate_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined, _synth, "doc_id long, payload binary"
     ).localCheckpoint()
 
-    state_dir = tempfile.mkdtemp(prefix="imggate_state_")
-    admitted_dir = tempfile.mkdtemp(prefix="imggate_admitted_")
-    try:
-        for e in range(4):
-            apply_image_batch(
-                payloads.filter(F.col("doc_id") % 4 == e),
-                e, state_dir, admitted_dir,
-            )
-        adm = admitted_images(spark, admitted_dir).join(
-            joined.select("doc_id", "has_prev"), "doc_id"
+    state_dir = scratch_dir("imggate_state_")
+    admitted_dir = scratch_dir("imggate_admitted_")
+    for e in range(4):
+        apply_image_batch(
+            payloads.filter(F.col("doc_id") % 4 == e),
+            e, state_dir, admitted_dir,
         )
-        return adm.select(
-            "doc_id",
-            (
-                F.when(
-                    (F.col("doc_id") % 5 == 2) & F.col("has_prev"),
-                    F.col("doc_id") - 1,
-                ).otherwise(F.col("doc_id")) % 65536
-            ).cast("int").alias("key16"),
-        ).localCheckpoint()
-    finally:
-        shutil.rmtree(state_dir, ignore_errors=True)
-        shutil.rmtree(admitted_dir, ignore_errors=True)
+    adm = admitted_images(spark, admitted_dir).join(
+        joined.select("doc_id", "has_prev"), "doc_id"
+    )
+    return adm.select(
+        "doc_id",
+        (
+            F.when(
+                (F.col("doc_id") % 5 == 2) & F.col("has_prev"),
+                F.col("doc_id") - 1,
+            ).otherwise(F.col("doc_id")) % 65536
+        ).cast("int").alias("key16"),
+    )
 
 
 @query(

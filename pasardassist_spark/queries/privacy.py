@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from pasardassist_spark.operators import privacy as P
 from pasardassist_spark.queries.registry import query
-from pasardassist_spark.tables import load, local_frame
+from pasardassist_spark.tables import load
 
 QI = ("c_nationkey", "c_mktsegment")
 K_ANON = 5
@@ -286,53 +286,35 @@ def streaming_kanon_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
     query, the st8 pattern applied to the release-audit shelf. QI here
     is (event_type, user_id mod 50): a plausible released tuple with
     classes on both sides of k at every test SF."""
-    import os
-    import shutil
-    import tempfile
-
-    from pasardassist_spark.streaming.ingest import read_event_stream
+    from pasardassist_spark.streaming.ingest import (
+        read_event_stream,
+        stage_file_source,
+    )
     from pasardassist_spark.streaming.privacy import (
         k_anonymity_from_state,
         maintain_k_anonymity,
     )
 
-    tmp = tempfile.mkdtemp(prefix="pasard_kanon_")
+    tmp = stage_file_source(sf_dir, "events", "pasard_kanon_")
+    # read_event_stream, not a hand-declared schema: the stream schema
+    # must come from the FILES (ts encodes as TIMESTAMP(NANOS)-as-long
+    # on some testdata generations — the drift case ingest.py stages)
+    stream = read_event_stream(spark, f"{tmp}/src").select(
+        "event_type",
+        F.pmod(F.col("user_id"), F.lit(50)).cast("long")
+        .alias("qi_bucket"),
+    )
+    q = maintain_k_anonymity(
+        stream, KANON_STREAM_QI, f"{tmp}/state", f"{tmp}/ckpt"
+    )
     try:
-        src = os.path.join(tmp, "src")
-        os.makedirs(src)
-        # abspath: os.symlink resolves a RELATIVE target against the
-        # link's directory, not the cwd, and the registry contract allows
-        # any sf_dir path (r17 ADVICE)
-        os.symlink(
-            os.path.abspath(os.path.join(sf_dir, "events.parquet")),
-            os.path.join(src, "events.parquet"),
-        )
-        # read_event_stream, not a hand-declared schema: the stream schema
-        # must come from the FILES (ts encodes as TIMESTAMP(NANOS)-as-long
-        # on some testdata generations — the drift case ingest.py stages)
-        stream = read_event_stream(spark, src).select(
-            "event_type",
-            F.pmod(F.col("user_id"), F.lit(50)).cast("long")
-            .alias("qi_bucket"),
-        )
-        q = maintain_k_anonymity(
-            stream, KANON_STREAM_QI, f"{tmp}/state", f"{tmp}/ckpt"
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            # a mid-replay failure must not leak a running stream
-            q.stop()
-        out = k_anonymity_from_state(
-            spark, f"{tmp}/state", KANON_STREAM_QI, KANON_STREAM_K
-        )
-        # the readout is lazily planned over {tmp}/state parquet, so the
-        # state dir must outlive the returned DataFrame's first action —
-        # materialize the small readout before removing it
-        out = local_frame(spark, out.collect(), out.schema)
-        return out
+        q.processAllAvailable()
     finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        # a mid-replay failure must not leak a running stream
+        q.stop()
+    return k_anonymity_from_state(
+        spark, f"{tmp}/state", KANON_STREAM_QI, KANON_STREAM_K
+    )
 
 
 MONDRIAN_K = 50

@@ -9,11 +9,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from pasardassist_spark.caching import scratch_dir
 from pasardassist_spark.functions.chain import uint256_hex
 from pasardassist_spark.functions.money import dec2
 from pasardassist_spark.operators.latest import latest_per_key
 from pasardassist_spark.queries.registry import query
-from pasardassist_spark.tables import load, local_frame
+from pasardassist_spark.tables import load
 
 
 @query(
@@ -74,24 +75,20 @@ def st1_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     MERGE, streaming/ingest.py) and return the final silver entity table.
     The oracle is the batch argmax — the replay-equals-batch invariant
     (§5.2) as a driver-checked query, not just a unit test."""
-    import os
-    import tempfile
-
     from pasardassist_spark.streaming import (
         maintain_latest_state,
         read_event_stream,
         read_state,
+        stage_file_source,
     )
 
-    tmp = tempfile.mkdtemp(prefix="pasard_replay_")
-    # the file stream source wants a directory; stage the log file into one
-    src = os.path.join(tmp, "src")
-    os.makedirs(src)
-    os.symlink(f"{sf_dir}/events.parquet", os.path.join(src, "events.parquet"))
-    stream = read_event_stream(spark, src)
+    tmp = stage_file_source(sf_dir, "events", "pasard_replay_")
+    stream = read_event_stream(spark, f"{tmp}/src")
     q = maintain_latest_state(stream, f"{tmp}/state", f"{tmp}/ckpt")
-    q.processAllAvailable()
-    q.stop()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
     return read_state(spark, f"{tmp}/state")
 
 
@@ -116,9 +113,6 @@ def st9_lsm_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta-layer + amortized-compaction policy reaches the identical fix
     point as the eager merge (policy interchangeability, the
     BASELINE.md round-16 100x-probe finding's fix)."""
-    import shutil
-    import tempfile
-
     from pasardassist_spark.streaming import (
         append_into_bucketed_state,
         read_lsm_state,
@@ -128,20 +122,14 @@ def st9_lsm_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         return latest_per_key(df, ["user_id"], [F.desc("ts"), F.desc("event_id")])
 
     ev = load(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="pasard_lsm_")
-    try:
-        for b in range(4):
-            batch = ev.filter(F.pmod(F.col("event_id"), F.lit(4)) == b)
-            append_into_bucketed_state(
-                fold(batch), f"{tmp}/state", ["user_id"], fold,
-                epoch_id=b, compact_every=3,
-            )
-        out = read_lsm_state(spark, f"{tmp}/state", fold)
-        # materialize before the tempdir delete (library.py precedent)
-        rows = out.collect()
-        return local_frame(spark, rows, out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    tmp = scratch_dir("pasard_lsm_")
+    for b in range(4):
+        batch = ev.filter(F.pmod(F.col("event_id"), F.lit(4)) == b)
+        append_into_bucketed_state(
+            fold(batch), f"{tmp}/state", ["user_id"], fold,
+            epoch_id=b, compact_every=3,
+        )
+    return read_lsm_state(spark, f"{tmp}/state", fold)
 
 
 @query(
@@ -219,25 +207,22 @@ def st8_incremental_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     The reference recomputes these stats on a 10-min cron
     (tasks.common.ts:124-154); here they are maintained per micro-batch at
     O(batch + touched-state) cost."""
-    import os
-    import tempfile
-
+    from pasardassist_spark.streaming import stage_file_source
     from pasardassist_spark.streaming.stats import (
         collection_stats_from_state,
         maintain_collection_stats,
     )
 
     li_schema = load(spark, sf_dir, "lineitem").schema
-    tmp = tempfile.mkdtemp(prefix="pasard_incstats_")
-    src = os.path.join(tmp, "src")
-    os.makedirs(src)
-    os.symlink(f"{sf_dir}/lineitem.parquet", os.path.join(src, "lineitem.parquet"))
-    stream = spark.readStream.schema(li_schema).parquet(src)
+    tmp = stage_file_source(sf_dir, "lineitem", "pasard_incstats_")
+    stream = spark.readStream.schema(li_schema).parquet(f"{tmp}/src")
     q = maintain_collection_stats(
         stream, load(spark, sf_dir, "orders"), f"{tmp}/state", f"{tmp}/ckpt"
     )
-    q.processAllAvailable()
-    q.stop()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
     return collection_stats_from_state(
         spark, f"{tmp}/state", load(spark, sf_dir, "supplier")
     )
@@ -260,15 +245,15 @@ def st3_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx_users is excluded from the comparison surface (HLL, engine-
     specific; bounded-error asserted in pytest)."""
     import os
-    import tempfile
 
-    from pasardassist_spark.streaming import read_event_stream, streaming_day_rollup
+    from pasardassist_spark.streaming import (
+        read_event_stream,
+        stage_file_source,
+        streaming_day_rollup,
+    )
 
-    tmp = tempfile.mkdtemp(prefix="pasard_st3_")
-    src = os.path.join(tmp, "src")
-    os.makedirs(src)
-    os.symlink(f"{sf_dir}/events.parquet", os.path.join(src, "events.parquet"))
-    stream = read_event_stream(spark, src, max_files_per_trigger=1)
+    tmp = stage_file_source(sf_dir, "events", "pasard_st3_")
+    stream = read_event_stream(spark, f"{tmp}/src", max_files_per_trigger=1)
     agg = streaming_day_rollup(stream)
     name = f"st3_rollup_{os.getpid()}_{abs(hash(sf_dir)) % 10000}"
     q = (
@@ -277,8 +262,10 @@ def st3_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .queryName(name)
         .start()
     )
-    q.processAllAvailable()
-    q.stop()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
     return spark.table(name).select("day", "n_events", "total_value")
 
 
@@ -351,88 +338,85 @@ def streaming_watermark_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB this is the production shape: files-per-trigger cadence,
     state bounded by watermark eviction."""
     import os
-    import shutil
-    import tempfile
 
-    work = tempfile.mkdtemp(prefix="pasard_wm_")
+    work = scratch_dir("pasard_wm_")
+    src = os.path.join(work, "src")
+    os.makedirs(src)
+    ev = load(spark, sf_dir, "events").select("event_id", "value")
+    base = "TIMESTAMP '2024-01-01 00:00:00'"
+    e0 = ev.filter("event_id % 3 = 0").selectExpr(
+        "event_id AS user_id",
+        f"{base} + make_interval(0, 0, 0, "
+        "CAST((event_id DIV 3) % 4 AS INT), "
+        "CAST((event_id DIV 3) % 23 + 1 AS INT), 0, 0) AS ts",
+        "value",
+    ).unionAll(
+        spark.range(1).selectExpr(
+            "CAST(-1 AS BIGINT) AS user_id",
+            f"{base} + make_interval(0, 0, 0, 3, 23, 0, 0) AS ts",
+            "CAST(0.0 AS DOUBLE) AS value",
+        )
+    )
+    late = ev.filter("event_id % 3 = 1").selectExpr(
+        "event_id AS user_id",
+        f"{base} + make_interval(0, 0, 0, "
+        "CAST((event_id DIV 3) % 3 AS INT), 12, 0, 0) AS ts",
+        "value",
+    )
+
+    def _sentinel(days: int, hours: int, uid: int) -> DataFrame:
+        return spark.range(1).selectExpr(
+            f"CAST({uid} AS BIGINT) AS user_id",
+            f"{base} + make_interval(0, 0, 0, {days}, {hours}, 0, 0)"
+            " AS ts",
+            "CAST(0.0 AS DOUBLE) AS value",
+        )
+
+    epochs = [
+        e0,
+        _sentinel(3, 23, -3),  # wedge: day 0 evicts here, max unchanged
+        late,
+        _sentinel(30, 0, -2),
+        _sentinel(40, 0, -2),
+    ]
+    for i, epoch in enumerate(epochs):
+        stage = os.path.join(work, f"stage{i}")
+        epoch.coalesce(1).write.parquet(stage)
+        (part,) = [f for f in os.listdir(stage) if f.endswith(".parquet")]
+        dst = os.path.join(src, f"epoch{i}.parquet")
+        os.rename(os.path.join(stage, part), dst)
+        # batch order = (mtime, path): pin both
+        os.utime(dst, (1_700_000_000 + i * 1000,) * 2)
+    from pasardassist_spark.streaming.ingest import streaming_day_rollup
+
+    stream = (
+        spark.readStream.schema("user_id long, ts timestamp, value double")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    agg = streaming_day_rollup(stream)  # watermark "2 days"
+    name = f"wm_readout_{os.getpid()}_{abs(hash(sf_dir)) % 10000}"
+    q = (
+        agg.writeStream.outputMode("append")
+        .format("memory")
+        .queryName(name)
+        .start()
+    )
     try:
-        src = os.path.join(work, "src")
-        os.makedirs(src)
-        ev = load(spark, sf_dir, "events").select("event_id", "value")
-        base = "TIMESTAMP '2024-01-01 00:00:00'"
-        e0 = ev.filter("event_id % 3 = 0").selectExpr(
-            "event_id AS user_id",
-            f"{base} + make_interval(0, 0, 0, "
-            "CAST((event_id DIV 3) % 4 AS INT), "
-            "CAST((event_id DIV 3) % 23 + 1 AS INT), 0, 0) AS ts",
-            "value",
-        ).unionAll(
-            spark.range(1).selectExpr(
-                "CAST(-1 AS BIGINT) AS user_id",
-                f"{base} + make_interval(0, 0, 0, 3, 23, 0, 0) AS ts",
-                "CAST(0.0 AS DOUBLE) AS value",
-            )
-        )
-        late = ev.filter("event_id % 3 = 1").selectExpr(
-            "event_id AS user_id",
-            f"{base} + make_interval(0, 0, 0, "
-            "CAST((event_id DIV 3) % 3 AS INT), 12, 0, 0) AS ts",
-            "value",
-        )
-
-        def _sentinel(days: int, hours: int, uid: int) -> DataFrame:
-            return spark.range(1).selectExpr(
-                f"CAST({uid} AS BIGINT) AS user_id",
-                f"{base} + make_interval(0, 0, 0, {days}, {hours}, 0, 0)"
-                " AS ts",
-                "CAST(0.0 AS DOUBLE) AS value",
-            )
-
-        epochs = [
-            e0,
-            _sentinel(3, 23, -3),  # wedge: day 0 evicts here, max unchanged
-            late,
-            _sentinel(30, 0, -2),
-            _sentinel(40, 0, -2),
-        ]
-        for i, epoch in enumerate(epochs):
-            stage = os.path.join(work, f"stage{i}")
-            epoch.coalesce(1).write.parquet(stage)
-            (part,) = [f for f in os.listdir(stage) if f.endswith(".parquet")]
-            dst = os.path.join(src, f"epoch{i}.parquet")
-            os.rename(os.path.join(stage, part), dst)
-            # batch order = (mtime, path): pin both
-            os.utime(dst, (1_700_000_000 + i * 1000,) * 2)
-        from pasardassist_spark.streaming.ingest import streaming_day_rollup
-
-        stream = (
-            spark.readStream.schema("user_id long, ts timestamp, value double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        agg = streaming_day_rollup(stream)  # watermark "2 days"
-        name = f"wm_readout_{os.getpid()}_{abs(hash(sf_dir)) % 10000}"
-        q = (
-            agg.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
         q.processAllAvailable()
-        q.stop()
-        return (
-            spark.table(name)
-            .select(
-                F.datediff(F.col("day"), F.lit("2024-01-01").cast("date"))
-                .cast("int")
-                .alias("day_no"),
-                "n_events",
-                "total_value",
-            )
-            .filter(F.col("day_no") <= 3)
-        )
     finally:
-        shutil.rmtree(work, ignore_errors=True)
+        q.stop()
+    return (
+        spark.table(name)
+        .select(
+            F.datediff(F.col("day"), F.lit("2024-01-01").cast("date"))
+            .cast("int")
+            .alias("day_no"),
+            "n_events",
+            "total_value",
+        )
+        .filter(F.col("day_no") <= 3)
+    )
 
 
 @query(

@@ -382,7 +382,9 @@ def write_avro(df: DataFrame, path: str, codec: str = "deflate") -> DataFrame:
 def read_avro(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
     """Distributed Avro read under an EXPLICIT schema (textio's
     never-infer contract); writer schema field names are validated
-    against it per shard."""
+    against it per shard. ``binaryFile`` hands each task its whole shard
+    as one value: task memory is O(shard), and a shard of 2 GiB or more
+    is refused."""
     blobs = (
         spark.read.format("binaryFile")
         .load(os.path.join(path, "*.avro"))

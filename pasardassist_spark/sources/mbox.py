@@ -45,8 +45,10 @@ def write_mbox(df: DataFrame, path: str, msg_col: str = "msg") -> DataFrame:
 
 
 def read_mbox(spark: SparkSession, path: str) -> DataFrame:
-    """One row per message: (mbox, msg_no, raw).  msg_no is the
-    0-based position within its file."""
+    """One row per message: (mbox, msg_no, raw). msg_no is the 0-based
+    position within its file. ``binaryFile`` hands each task its whole
+    shard as one value: task memory is O(shard), and a shard of 2 GiB or
+    more is refused."""
     files = spark.read.format("binaryFile").load(
         os.path.join(path, "*.mbox")
     ).select("path", "content")

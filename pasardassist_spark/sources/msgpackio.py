@@ -261,7 +261,9 @@ def read_msgpack(spark: SparkSession, path: str, schema: StructType) -> DataFram
     """Distributed MessagePack read under an EXPLICIT schema (textio's
     never-infer contract): each shard is a concatenated row-map stream;
     missing keys surface as nulls, unknown keys raise by name (a schema
-    drift should fail loudly, not silently drop a column)."""
+    drift should fail loudly, not silently drop a column).
+    ``binaryFile`` hands each task its whole shard as one value: task
+    memory is O(shard), and a shard of 2 GiB or more is refused."""
     _check_schema(schema, "read_msgpack")
     names = [f.name for f in schema.fields]
     known = set(names)

@@ -294,7 +294,9 @@ def read_tfrecord(
 ) -> DataFrame:
     """Distributed TFRecord read under an EXPLICIT schema (textio's
     never-infer contract): features are pulled from each Example and
-    cast per the schema's field types."""
+    cast per the schema's field types. ``binaryFile`` hands each task
+    its whole shard as one value: task memory is O(shard), and a shard
+    of 2 GiB or more is refused."""
     blobs = spark.read.format("binaryFile").load(
         os.path.join(path, "*.tfrecord")
     ).select("content")

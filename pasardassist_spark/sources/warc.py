@@ -195,7 +195,9 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
     provenance — real pipelines partition-prune and debug by shard path.
     Shards are sniffed per-file: the gzip magic (1f 8b) routes through
     the member-splitter, anything else parses as plain WARC — a
-    directory may mix both."""
+    directory may mix both. ``binaryFile`` hands each task its whole
+    shard as one value: task memory is O(shard), and a shard of 2 GiB or
+    more is refused."""
     blobs = spark.read.format("binaryFile").load(
         os.path.join(path, "*.warc*")
     ).select("path", "content")

@@ -91,7 +91,9 @@ def write_webdataset(
 
 def read_webdataset(spark: SparkSession, path: str) -> DataFrame:
     """Read ``shard-*.tar`` under ``path`` into samples: (key, txt,
-    json, bin) with adjacent members grouped by key prefix."""
+    json, bin) with adjacent members grouped by key prefix.
+    ``binaryFile`` hands each task its whole shard as one value: task
+    memory is O(shard), and a shard of 2 GiB or more is refused."""
     files = spark.read.format("binaryFile").load(
         posixpath.join(path, "shard-*.tar")
     ).select("path", "content")

@@ -103,10 +103,11 @@ def write_xml(df: DataFrame, path: str, root: str = "records") -> DataFrame:
 
 def read_xml(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
     """Distributed XML read under an EXPLICIT schema: binaryFile scan,
-    one task per shard, iterparse streaming (the parser frees each
-    ``<r>`` element after yielding it, so task memory is O(row) even on
-    multi-GB shards).  Unknown child elements are ignored; missing ones
-    become nulls."""
+    one task per shard, iterparse (the parser frees each ``<r>`` element
+    after yielding it). Unknown child elements are ignored; missing ones
+    become nulls. ``binaryFile`` hands each task its whole shard as one
+    value: task memory is O(shard), and a shard of 2 GiB or more is
+    refused."""
     import io
 
     blobs = (

@@ -14,6 +14,7 @@ from pasardassist_spark.streaming.ingest import (
     read_event_stream,
     read_lsm_state,
     read_state,
+    stage_file_source,
     streaming_day_rollup,
 )
 from pasardassist_spark.streaming.stats import (
@@ -29,6 +30,7 @@ __all__ = [
     "append_into_bucketed_state",
     "read_lsm_state",
     "read_state",
+    "stage_file_source",
     "streaming_day_rollup",
     "streaming_dedup",
     "maintain_collection_stats",

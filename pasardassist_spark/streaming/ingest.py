@@ -52,6 +52,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from pasardassist_spark.caching import scratch_dir
 from pasardassist_spark.operators.latest import latest_per_key
 from pasardassist_spark.streaming.generations import (
     apply_retention,
@@ -61,6 +62,22 @@ from pasardassist_spark.streaming.generations import (
     next_version_dir,
     publish_staged,
 )
+
+
+def stage_file_source(sf_dir: str, table: str, prefix: str) -> str:
+    """A fresh ``caching.scratch_dir`` whose ``src`` subdirectory links
+    ``sf_dir``'s ``table`` parquet file, for a file-stream source to
+    read; state and checkpoint go beside ``src``. The link target is
+    absolute: a relative one resolves against the link's directory."""
+    work = scratch_dir(prefix)
+    src = os.path.join(work, "src")
+    os.makedirs(src)
+    os.symlink(
+        os.path.abspath(os.path.join(sf_dir, f"{table}.parquet")),
+        os.path.join(src, f"{table}.parquet"),
+    )
+    return work
+
 
 def read_event_stream(
     spark: SparkSession, src_dir: str, max_files_per_trigger: int = 1

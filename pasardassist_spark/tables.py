@@ -27,6 +27,8 @@ from pyspark.sql.types import (
     _parse_datatype_string,
 )
 
+from pasardassist_spark.caching import scratch_dir, scratch_root
+
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 TABLES = (
@@ -52,17 +54,16 @@ def _ship_package(spark: SparkSession) -> None:
     module-level helpers (pickled by reference), so workers must be able to
     import the package. Zips the package once per session and addPyFile()s
     it — the Spark-idiomatic dependency shipping path, same as on a real
-    cluster."""
+    cluster. The zip lives in the scratch root, not in a query's scratch
+    directory: the application's tasks read it until the process exits."""
     app = spark.sparkContext.applicationId
     if app in _SHIPPED_APPS:
         return
-    import tempfile
     import zipfile
 
     pkg = os.path.dirname(os.path.abspath(__file__))
     root = os.path.dirname(pkg)
-    fd, zpath = tempfile.mkstemp(prefix="pasardassist_spark_", suffix=".zip")
-    os.close(fd)
+    zpath = os.path.join(scratch_root(), f"pasardassist_spark_{app}.zip")
     with zipfile.ZipFile(zpath, "w") as z:
         for dirpath, _, files in os.walk(pkg):
             for f in files:
@@ -285,15 +286,11 @@ def write_shards(df: DataFrame, path: str, name: str, write) -> DataFrame:
 
 def export_shards(write, df: DataFrame, prefix: str, **options) -> str:
     """Run the shard sink ``write(df, dir, **options)`` into a fresh
-    temporary directory, removed at interpreter exit, and return the
-    directory. Raises ``ValueError`` when the manifest counts no record:
-    an export that wrote nothing would read back as an empty result."""
-    import atexit
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix=prefix)
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    ``caching.scratch_dir``, removed at the next ``release_all``, and
+    return the directory. Raises ``ValueError`` when the manifest counts
+    no record: an export that wrote nothing would read back as an empty
+    result."""
+    tmp = scratch_dir(prefix)
     if sum(m.n_records for m in write(df, tmp, **options).collect()) == 0:
         raise ValueError(f"{write.__name__} wrote no records to {tmp}")
     return tmp

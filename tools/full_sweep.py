@@ -155,7 +155,8 @@ def main() -> int:
         # ~300 queries would accumulate those blocks for its lifetime —
         # drop them between entries (queries are independent; r17 review).
         # r19: release_all also drops localCheckpoint block RDDs, which
-        # clearCache leaves pinned (pasardassist_spark/caching.py).
+        # clearCache leaves pinned, and removes the scratch directories
+        # the entry wrote (pasardassist_spark/caching.py).
         from pasardassist_spark.caching import release_all
 
         release_all(spark)
