@@ -15,8 +15,9 @@ buys three things at once:
 
 - batch recompute = one shuffle (groupBy entity, conditional aggregates);
 - streaming = the same fold per micro-batch, merged into bucketed state via
-  ``merge_into_bucketed_state`` (fold(batch) ⊕ state is the associative
-  combine, so out-of-order arrival converges without a retry queue);
+  ``merge_into_bucketed_state`` (``merge_entity_states`` over state ∪
+  fold(batch) is the associative merge, so out-of-order arrival converges
+  without a retry queue);
 - replay-equals-batch testability: fold(all events) == fold(fold(chunk1) ⊕
   fold(chunk2)) by construction.
 
@@ -26,6 +27,8 @@ column cannot be combined with a later delta.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -65,10 +68,11 @@ def fold_entity_state(ev: DataFrame) -> DataFrame:
     )
 
 
-def merge_entity_states(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Associative combine of two entity-state frames (same schema)."""
+def merge_entity_states(*states: DataFrame) -> DataFrame:
+    """Associative merge of entity-state frames (same schema). One frame
+    is the state store's unary fold; two are the binary combine."""
     key = F.struct(F.col("status_ts").alias("ts"), F.col("status_eid").alias("event_id"))
-    return a.unionByName(b).groupBy("user_id").agg(
+    return reduce(DataFrame.unionByName, states).groupBy("user_id").agg(
         F.max_by(F.col("status"), key).alias("status"),
         F.max("status_ts").alias("status_ts"),
         F.max_by(F.col("status_eid"), key).alias("status_eid"),

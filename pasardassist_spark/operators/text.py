@@ -25,9 +25,6 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 
 STOPWORDS: tuple[str, ...] = ("the", "a", "an", "of", "and", "to", "in", "is", "on", "for")
 
-PUNCT_PATTERN = "[.,!?;:]"
-
-
 def tokens(text: Column) -> Column:
     """Whitespace tokenization (trim first so no empty edge tokens)."""
     return F.split(F.trim(text), r"\s+")
@@ -72,10 +69,6 @@ def bpe_ish_tokens(text: Column) -> Column:
 def hits(toks: Column, words: tuple[str, ...]) -> Column:
     """Count of tokens that appear in ``words`` (with multiplicity)."""
     return F.size(F.filter(toks, lambda t: t.isin(*words))).cast("long")
-
-
-def punct_count(text: Column) -> Column:
-    return F.regexp_count(text, F.lit(PUNCT_PATTERN)).cast("long")
 
 
 def quality_score(n_tok: Column, stop_ratio: Column, type_token_ratio: Column) -> Column:

@@ -229,10 +229,7 @@ def drift_psi_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
     psi_distance. The oracle recomputes PSI closed-form in SQL; the 6-dp
     round absorbs libm ln() ULP skew (the fold itself is sorted-order
     deterministic)."""
-    from pasardassist_spark.streaming.drift import (
-        _combine,
-        drift_from_state,
-    )
+    from pasardassist_spark.streaming.drift import _fold, drift_from_state
     from pasardassist_spark.streaming.ingest import merge_into_bucketed_state
 
     ev = load(spark, sf_dir, "events")
@@ -248,7 +245,7 @@ def drift_psi_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
     state_dir = scratch_dir("drift_psi_state_")
-    merge_into_bucketed_state(live, state_dir, ("value",), _combine)
+    merge_into_bucketed_state(live, state_dir, ("value",), _fold)
     return drift_from_state(spark, state_dir, ref, metric="psi")
 
 
@@ -387,7 +384,7 @@ def cdc_state_travel_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     + snapshot_diff): generation 1 is the pre-{_TRAVEL_SPLIT} per-customer
     rollup merged into a REAL bucketed state store, generation 2 folds the
     remaining orders in through merge_into_bucketed_state's associative
-    sum-combine (hard-linked untouched buckets, atomic version publish,
+    sum-fold (hard-linked untouched buckets, atomic version publish,
     retention window = 2). The audit row set — who changed between the two
     retained generations — is re-derived closed-form by the oracle, so the
     hash certifies the versioned reads, the bucketed incremental MERGE,
@@ -406,26 +403,20 @@ def cdc_state_travel_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     def rollup(df: DataFrame) -> DataFrame:
         return df.groupBy("o_custkey").agg(n, spend)
 
-    def sum_combine(prev: DataFrame, delta: DataFrame) -> DataFrame:
-        cols = ["o_custkey", "n_orders", "spend"]
-        return (
-            prev.select(*cols)
-            .unionByName(delta.select(*cols))
-            .groupBy("o_custkey")
-            .agg(
-                F.sum("n_orders").cast("long").alias("n_orders"),
-                F.sum("spend").alias("spend"),
-            )
+    def sum_fold(df: DataFrame) -> DataFrame:
+        return df.groupBy("o_custkey").agg(
+            F.sum("n_orders").cast("long").alias("n_orders"),
+            F.sum("spend").alias("spend"),
         )
 
     state_dir = scratch_dir("cdc_travel_state_")
     merge_into_bucketed_state(
         rollup(o.where(F.col("o_orderdate") < _TRAVEL_SPLIT)),
-        state_dir, ("o_custkey",), sum_combine,
+        state_dir, ("o_custkey",), sum_fold,
     )
     merge_into_bucketed_state(
         rollup(o.where(F.col("o_orderdate") >= _TRAVEL_SPLIT)),
-        state_dir, ("o_custkey",), sum_combine,
+        state_dir, ("o_custkey",), sum_fold,
     )
     return state_diff(
         spark, state_dir, ("o_custkey",), v_old=1, v_new=2,

@@ -658,6 +658,9 @@ def udtf_sentence_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = spark.sql(
         f"SELECT s.* FROM {view}, LATERAL {fn}(doc_id, text) s"
     )
+    # spark.sql analyzes eagerly: the plan no longer needs either name
+    spark.catalog.dropTempView(view)
+    spark.sql(f"DROP TEMPORARY FUNCTION {fn}")
     return out
 
 

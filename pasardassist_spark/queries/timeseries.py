@@ -266,7 +266,11 @@ def st3_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.processAllAvailable()
     finally:
         q.stop()
-    return spark.table(name).select("day", "n_events", "total_value")
+    out = spark.table(name).select("day", "n_events", "total_value")
+    # the analyzed plan holds the sink's rows, not the view: drop it so
+    # repeated calls leave the catalog clean
+    spark.catalog.dropTempView(name)
+    return out
 
 
 @query(
@@ -406,7 +410,7 @@ def streaming_watermark_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.processAllAvailable()
     finally:
         q.stop()
-    return (
+    out = (
         spark.table(name)
         .select(
             F.datediff(F.col("day"), F.lit("2024-01-01").cast("date"))
@@ -417,6 +421,8 @@ def streaming_watermark_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("day_no") <= 3)
     )
+    spark.catalog.dropTempView(name)  # same reason as st3_stream_rollup
+    return out
 
 
 @query(

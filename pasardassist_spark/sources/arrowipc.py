@@ -47,7 +47,7 @@ from pyspark.sql.types import (
 )
 from pyspark.sql.types import TimestampType
 
-from pasardassist_spark.tables import write_shards
+from pasardassist_spark.tables import read_shards, write_shards
 
 
 def _arrow_type(dt) -> pa.DataType:
@@ -113,11 +113,7 @@ def read_arrow_ipc(
     """Distributed Arrow IPC read under an EXPLICIT schema (textio's
     never-infer contract); the shard footer's schema field names are
     validated against it per file."""
-    blobs = (
-        spark.read.format("binaryFile")
-        .load(os.path.join(path, "*.arrow"))
-        .select("content")
-    )
+    blobs = read_shards(spark, path, "*.arrow").select("content")
     names = [f.name for f in schema.fields]
 
     def _parse(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -57,7 +57,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from pasardassist_spark.tables import map_rows, write_shards
+from pasardassist_spark.tables import map_rows, read_shards, write_shards
 
 MAGIC = b"Obj\x01"
 # Deterministic marker (fine per spec — uniqueness only matters across
@@ -385,11 +385,7 @@ def read_avro(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
     against it per shard. ``binaryFile`` hands each task its whole shard
     as one value: task memory is O(shard), and a shard of 2 GiB or more
     is refused."""
-    blobs = (
-        spark.read.format("binaryFile")
-        .load(os.path.join(path, "*.avro"))
-        .select("content")
-    )
+    blobs = read_shards(spark, path, "*.avro").select("content")
     fields = [(f.name, f.dataType) for f in schema.fields]
 
     def _parse(content):

@@ -22,7 +22,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from pasardassist_spark.operators.emailtext import encode_mbox, split_mbox
-from pasardassist_spark.tables import map_rows, write_shards
+from pasardassist_spark.tables import map_rows, read_shards, write_shards
 
 __all__ = ["read_mbox", "write_mbox"]
 
@@ -49,9 +49,7 @@ def read_mbox(spark: SparkSession, path: str) -> DataFrame:
     position within its file. ``binaryFile`` hands each task its whole
     shard as one value: task memory is O(shard), and a shard of 2 GiB or
     more is refused."""
-    files = spark.read.format("binaryFile").load(
-        os.path.join(path, "*.mbox")
-    ).select("path", "content")
+    files = read_shards(spark, path, "*.mbox").select("path", "content")
 
     def _parse(src_path, blob):
         base = os.path.basename(str(src_path))

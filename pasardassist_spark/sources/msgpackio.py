@@ -46,7 +46,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from pasardassist_spark.tables import map_rows, write_shards
+from pasardassist_spark.tables import map_rows, read_shards, write_shards
 
 # ------------------------------------------------------------- encoder
 
@@ -267,11 +267,7 @@ def read_msgpack(spark: SparkSession, path: str, schema: StructType) -> DataFram
     _check_schema(schema, "read_msgpack")
     names = [f.name for f in schema.fields]
     known = set(names)
-    blobs = (
-        spark.read.format("binaryFile")
-        .load(os.path.join(path, "*.msgpack"))
-        .select("content")
-    )
+    blobs = read_shards(spark, path, "*.msgpack").select("content")
 
     def _parse(content):
         for m in decode_stream(bytes(content)):

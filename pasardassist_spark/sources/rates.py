@@ -27,9 +27,3 @@ def rates_dim(nation: DataFrame) -> DataFrame:
         F.col("n_name").alias("currency"),
         (F.lit(101) + F.col("n_nationkey")).alias("rate_centi"),
     )
-
-
-def write_rates_refresh(nation: DataFrame, path: str) -> None:
-    """The scheduled refresh job: full overwrite of the rates dim (the
-    deleteMany + insertMany cycle, db.service.ts:276-280)."""
-    rates_dim(nation).coalesce(1).write.mode("overwrite").parquet(path)

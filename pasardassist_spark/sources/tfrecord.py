@@ -41,7 +41,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from pasardassist_spark.tables import map_rows, write_shards
+from pasardassist_spark.tables import map_rows, read_shards, write_shards
 
 # ----------------------------------------------------------------- CRC32C
 
@@ -297,9 +297,7 @@ def read_tfrecord(
     cast per the schema's field types. ``binaryFile`` hands each task
     its whole shard as one value: task memory is O(shard), and a shard
     of 2 GiB or more is refused."""
-    blobs = spark.read.format("binaryFile").load(
-        os.path.join(path, "*.tfrecord")
-    ).select("content")
+    blobs = read_shards(spark, path, "*.tfrecord").select("content")
     fields = [(f.name, f.dataType) for f in schema.fields]
 
     def _from_feature(dt, v):

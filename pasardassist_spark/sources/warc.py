@@ -38,7 +38,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from pasardassist_spark.tables import map_rows, write_shards
+from pasardassist_spark.tables import map_rows, read_shards, write_shards
 
 _CRLF = b"\r\n"
 # Fixed, valid ISO 8601 stamp: WARC-Date is mandatory per ISO 28500 but a
@@ -198,9 +198,7 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
     directory may mix both. ``binaryFile`` hands each task its whole
     shard as one value: task memory is O(shard), and a shard of 2 GiB or
     more is refused."""
-    blobs = spark.read.format("binaryFile").load(
-        os.path.join(path, "*.warc*")
-    ).select("path", "content")
+    blobs = read_shards(spark, path, "*.warc*").select("path", "content")
 
     def _parse(shard, content):
         blob = bytes(content)

@@ -36,7 +36,7 @@ import tarfile
 
 from pyspark.sql import DataFrame, SparkSession
 
-from pasardassist_spark.tables import map_rows, write_shards
+from pasardassist_spark.tables import map_rows, read_shards, write_shards
 
 __all__ = ["read_webdataset", "write_webdataset"]
 
@@ -94,9 +94,7 @@ def read_webdataset(spark: SparkSession, path: str) -> DataFrame:
     json, bin) with adjacent members grouped by key prefix.
     ``binaryFile`` hands each task its whole shard as one value: task
     memory is O(shard), and a shard of 2 GiB or more is refused."""
-    files = spark.read.format("binaryFile").load(
-        posixpath.join(path, "shard-*.tar")
-    ).select("path", "content")
+    files = read_shards(spark, path, "shard-*.tar").select("path", "content")
 
     def _sample(key: str, cur: dict[str, bytes]):
         txt, js = cur.get("txt"), cur.get("json")

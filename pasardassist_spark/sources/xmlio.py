@@ -40,7 +40,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from pasardassist_spark.tables import map_rows, write_shards
+from pasardassist_spark.tables import map_rows, read_shards, write_shards
 
 # XML 1.0 Char production: #x9 | #xA | #xD | [#x20-#xD7FF] | ...
 _XML_ILLEGAL = re.compile("[\x00-\x08\x0b\x0c\x0e-\x1f]")
@@ -110,11 +110,7 @@ def read_xml(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
     refused."""
     import io
 
-    blobs = (
-        spark.read.format("binaryFile")
-        .load(os.path.join(path, "*.xml"))
-        .select("content")
-    )
+    blobs = read_shards(spark, path, "*.xml").select("content")
     names = [f.name for f in schema.fields]
     dtypes = {f.name: f.dataType for f in schema.fields}
 

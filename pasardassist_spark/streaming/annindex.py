@@ -40,19 +40,14 @@ from pasardassist_spark.streaming.ingest import (
 )
 
 
-def _latest_epoch_wins(prev: DataFrame, delta: DataFrame) -> DataFrame:
-    """Associative per-vec_id merge: the assignment from the highest epoch
+def _latest_epoch_wins(postings: DataFrame) -> DataFrame:
+    """Associative per-vec_id fold: the assignment from the highest epoch
     wins (list_id breaks exact-epoch ties deterministically)."""
-    return (
-        prev.drop("bucket")
-        .unionByName(delta.drop("bucket"))
-        .groupBy("vec_id")
-        .agg(
-            F.max_by(
-                F.col("list_id"), F.struct(F.col("epoch"), F.col("list_id"))
-            ).alias("list_id"),
-            F.max("epoch").alias("epoch"),
-        )
+    return postings.groupBy("vec_id").agg(
+        F.max_by(
+            F.col("list_id"), F.struct(F.col("epoch"), F.col("list_id"))
+        ).alias("list_id"),
+        F.max("epoch").alias("epoch"),
     )
 
 

@@ -53,10 +53,6 @@ from pasardassist_spark.streaming.ingest import (
 )
 
 
-def _distinct_union(prev: DataFrame, delta: DataFrame) -> DataFrame:
-    return prev.drop("bucket").unionByName(delta.drop("bucket")).distinct()
-
-
 def _merge_admitted_evidence(
     admitted: DataFrame,
     id_col: str,
@@ -76,14 +72,14 @@ def _merge_admitted_evidence(
         admitted.select(F.col("_h").alias("content_hash")).distinct(),
         hashes_dir,
         ("content_hash",),
-        _distinct_union,
+        DataFrame.distinct,
         keep_generations,
     )
     merge_into_bucketed_state(
         adm_sigs.select("band", "sig").distinct(),
         sigs_dir,
         ("band", "sig"),
-        _distinct_union,
+        DataFrame.distinct,
         keep_generations,
     )
 
@@ -195,14 +191,14 @@ def apply_dedup_batch(
         admitted.select(F.col("_h").alias("content_hash")).distinct(),
         hashes_dir,
         ("content_hash",),
-        _distinct_union,
+        DataFrame.distinct,
         keep_generations,
     )
     merge_into_bucketed_state(
         sigs.join(adm_ids, id_col, "left_semi").select("band", "sig").distinct(),
         sigs_dir,
         ("band", "sig"),
-        _distinct_union,
+        DataFrame.distinct,
         keep_generations,
     )
 

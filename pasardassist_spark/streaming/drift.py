@@ -35,14 +35,9 @@ from pasardassist_spark.streaming.ingest import (
 )
 
 
-def _combine(prev: DataFrame, delta: DataFrame) -> DataFrame:
-    """Associative merge of two per-value count frames."""
-    return (
-        prev.drop("bucket")
-        .unionByName(delta.drop("bucket"))
-        .groupBy("value")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-    )
+def _fold(counts: DataFrame) -> DataFrame:
+    """Associative re-aggregation of per-value count partials."""
+    return counts.groupBy("value").agg(F.sum("cnt").cast("long").alias("cnt"))
 
 
 def maintain_value_distribution(
@@ -86,7 +81,7 @@ def maintain_value_distribution(
         # count partials are NOT replay-idempotent: the epoch guard makes
         # a foreachBatch retry of a committed merge a no-op
         merge_into_bucketed_state(
-            delta, state_dir, ("value",), _combine, keep_generations,
+            delta, state_dir, ("value",), _fold, keep_generations,
             epoch_id=epoch_id,
         )
         if reference_counts is not None and monitor_dir is not None:

@@ -35,18 +35,13 @@ HLL_LG_K = 12  # shared with hll_user_rollup: ~2.5 KB per sketch, ~1.6% SE
 
 
 def _union_sketches(keys: Sequence[str]):
-    def combine(prev: DataFrame, delta: DataFrame) -> DataFrame:
-        return (
-            prev.drop("bucket")
-            .unionByName(delta.drop("bucket"))
-            .groupBy(*keys)
-            .agg(
-                F.hll_union_agg("sk").alias("sk"),
-                F.sum("n_events").alias("n_events"),
-            )
+    def fold(sketches: DataFrame) -> DataFrame:
+        return sketches.groupBy(*keys).agg(
+            F.hll_union_agg("sk").alias("sk"),
+            F.sum("n_events").alias("n_events"),
         )
 
-    return combine
+    return fold
 
 
 def maintain_distinct_counts(

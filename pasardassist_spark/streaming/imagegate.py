@@ -66,10 +66,6 @@ def _band_rows(hashes: DataFrame) -> DataFrame:
     )
 
 
-def _distinct_union(prev: DataFrame, delta: DataFrame) -> DataFrame:
-    return prev.drop("bucket").unionByName(delta.drop("bucket")).distinct()
-
-
 def _hamming(hi_a, lo_a, hi_b, lo_b) -> F.Column:
     return F.bit_count(hi_a.bitwiseXOR(hi_b)) + F.bit_count(lo_a.bitwiseXOR(lo_b))
 
@@ -98,7 +94,7 @@ def apply_image_batch(
         admitted = _band_rows(dhash_images(spark.read.parquet(slot)))
         merge_into_bucketed_state(
             admitted.drop("doc_id").distinct(), bands_dir, ("band", "val"),
-            _distinct_union, keep_generations,
+            DataFrame.distinct, keep_generations,
         )
         return
 
@@ -161,7 +157,7 @@ def apply_image_batch(
     adm_bands = bands.join(admitted.select("doc_id"), "doc_id", "left_semi")
     merge_into_bucketed_state(
         adm_bands.drop("doc_id").distinct(), bands_dir, ("band", "val"),
-        _distinct_union, keep_generations,
+        DataFrame.distinct, keep_generations,
     )
 
 

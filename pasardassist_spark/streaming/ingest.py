@@ -35,6 +35,14 @@ next decade is an LSM-shaped merge policy on this same layout: append
 per-bucket DELTA files each batch (O(batch) per batch) and fold them into
 the base on an amortized compaction cadence.
 
+One merge contract for every policy: a table's ``fold(df) -> df`` reduces
+a state-schema frame (no ``bucket`` column) to its fix point — an
+IDEMPOTENT, order-insensitive reduction such as latest_per_key, distinct,
+or a groupBy re-aggregation of sums/min/max/sketch unions. The eager merge
+writes ``fold(prev_touched ∪ batch)``, the LSM policy folds base + layers
+on compaction, and ``read_lsm_state`` folds on read — all with the same
+fold object. The ``bucket`` column never leaves this module.
+
 Crash safety: a generation only counts once its ``_COMMITTED`` marker
 exists, written after both the Spark write and the hard-links complete into
 a STAGING dir that is then os.rename()d into its version slot — a crash
@@ -47,6 +55,7 @@ compactor — can ever overwrite a committed generation.
 from __future__ import annotations
 
 import os
+import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
@@ -141,57 +150,116 @@ def _bucket_of(keys: Sequence[str]) -> Column:
 
 
 EPOCH_MARKER = "_EPOCH"  # underscore prefix: invisible to parquet readers
+LSM_LAYERS_MARKER = "_LSM_LAYERS"  # delta layers since the last compaction
 
 
-def _applied_epoch(gen_dir: str) -> int | None:
-    p = os.path.join(gen_dir, EPOCH_MARKER)
+def _marker(gen_dir: str, name: str) -> int | None:
+    p = os.path.join(gen_dir, name)
     if not os.path.exists(p):
         return None
     with open(p) as fh:
         return int(fh.read().strip())
 
 
+def _lsm_layers(gen_dir: str) -> int:
+    return _marker(gen_dir, LSM_LAYERS_MARKER) or 0
+
+
+def _latest_unless_replayed(
+    state_dir: str, epoch_id: int | None
+) -> tuple[str | None, bool]:
+    """(latest committed generation dir or None, whether ``epoch_id`` is
+    already applied there) — the epoch-replay guard of every writer."""
+    versions = _state_versions(state_dir)
+    if not versions:
+        return None, False
+    prev_dir = os.path.join(state_dir, versions[-1])
+    applied = _marker(prev_dir, EPOCH_MARKER) if epoch_id is not None else None
+    return prev_dir, applied is not None and applied >= epoch_id
+
+
+def _publish_generation(
+    state_dir: str,
+    kind: str,
+    staged: DataFrame,
+    keep_generations: int,
+    markers: dict[str, int | None],
+    link_from: str | None = None,
+    skip_buckets: Sequence[int] = (),
+    slot: str | None = None,
+) -> bool:
+    """The one write path of the store: write ``staged`` (carrying the
+    ``bucket`` column) into a per-process ``.<kind>-<pid>`` staging dir,
+    hard-link every bucket of ``link_from`` not in ``skip_buckets``, write
+    the non-None ``markers``, commit, publish, apply retention.
+
+    The commit marker rides inside the os.rename() into the version slot,
+    and the dot-prefixed staging dir is never listed as a generation, so
+    a crash at any step leaves no partial generation. ``slot=None`` takes
+    the next free slot (generations.publish_staged); with a ``slot``
+    (compaction) a lost race removes the staging dir and returns False."""
+    os.makedirs(state_dir, exist_ok=True)
+    tmp_dir = os.path.join(state_dir, f".{kind}-{os.getpid()}")
+    staged.write.partitionBy("bucket").mode("overwrite").parquet(tmp_dir)
+    if link_from is not None:
+        skip = {f"bucket={b}" for b in skip_buckets}
+        for d in os.listdir(link_from):
+            if d.startswith("bucket=") and d not in skip:
+                _link_tree(os.path.join(link_from, d), os.path.join(tmp_dir, d))
+    for name, value in markers.items():
+        if value is not None:
+            with open(os.path.join(tmp_dir, name), "w") as fh:
+                fh.write(str(value))
+    commit(tmp_dir)
+    if slot is None:
+        publish_staged(tmp_dir, state_dir)
+    else:
+        try:
+            os.rename(tmp_dir, slot)  # CAS: fails if the slot was taken
+        except OSError:
+            shutil.rmtree(tmp_dir, ignore_errors=True)
+            return False
+    apply_retention(state_dir, _state_versions(state_dir)[:-1], keep_generations)
+    return True
+
+
 def merge_into_bucketed_state(
     batch_state: DataFrame,
     state_dir: str,
     keys: Sequence[str],
-    combine,
+    fold,
     keep_generations: int = 2,
     epoch_id: int | None = None,
 ) -> None:
     """The generic incremental MERGE: fold a per-batch state delta into the
     bucketed, generational state table.
 
-    ``combine(prev_touched, delta)`` must be an ASSOCIATIVE merge of two
-    state frames (same schema) — argmax for latest-wins fields, sum for
-    counters, min/max for extrema — so replay order cannot change the fix
-    point. Only buckets named by the delta are re-merged and rewritten;
-    untouched buckets hard-link from the previous generation
-    (O(batch + touched-state) I/O per batch). On Delta the body becomes a
-    single MERGE INTO.
+    ``fold(df) -> df`` reduces a state-schema frame to its fix point (see
+    the module docstring); the store computes
+    ``fold(prev_touched ∪ batch_state)`` itself, so the ``bucket`` column
+    never reaches ``fold``. Only buckets named by the delta are re-merged
+    and rewritten; untouched buckets hard-link from the previous
+    generation (O(batch + touched-state) I/O per batch). On Delta the body
+    becomes a single MERGE INTO.
 
     Publication is atomic: the generation is fully staged — Spark write,
     hard-links, AND commit marker — in a temp dir, then os.rename()d into
-    its version slot (same CAS as compact_state). If a concurrent
-    compaction took the slot first, the rename fails and the merge retries
-    with the next slot; compaction preserves logical state, so the staged
-    content stays correct. A committed generation is therefore never
-    overwritten by anyone.
+    its version slot. If a concurrent compaction took the slot first, the
+    rename fails and the merge retries with the next slot; compaction
+    preserves logical state, so the staged content stays correct. A
+    committed generation is therefore never overwritten by anyone.
 
-    ``epoch_id`` (opt-in) makes NON-idempotent combines (sums, counters)
+    ``epoch_id`` (opt-in) makes NON-idempotent folds (sums, counters)
     exactly-once under foreachBatch retries: each generation records the
     epoch that produced it, and a replay whose epoch is <= the recorded
-    one is a no-op. Argmax-style combines don't need it (replay is a
-    natural no-op); sum-style combines DO — a crash between the state
-    commit and the stream's checkpoint commit otherwise double-merges the
-    batch on restart. Compaction carries the marker forward.
+    one is a no-op. Argmax-style folds don't need it (replay is a natural
+    no-op); sum-style folds DO — a crash between the state commit and the
+    stream's checkpoint commit otherwise double-merges the batch on
+    restart. Compaction carries the marker forward.
     """
-    spark = batch_state.sparkSession
-    versions_pre = _state_versions(state_dir)
-    if epoch_id is not None and versions_pre:
-        applied = _applied_epoch(os.path.join(state_dir, versions_pre[-1]))
-        if applied is not None and applied >= epoch_id:
-            return  # replay of an already-merged epoch
+    prev_dir, replayed = _latest_unless_replayed(state_dir, epoch_id)
+    if replayed:
+        return  # replay of an already-merged epoch
     delta = batch_state.withColumn("bucket", _bucket_of(keys))
     # Driver-side METADATA collect: at most N_STATE_BUCKETS small ints
     # (which partitions to merge), never data rows.
@@ -205,44 +273,23 @@ def merge_into_bucketed_state(
         # is a legitimate epoch, found by the round-13 10x docgate
         # replica whose token prefixing starved the Gopher gate.
         return
-    versions = _state_versions(state_dir)
-    prev_dir = os.path.join(state_dir, versions[-1]) if versions else None
     if prev_dir is None:
         merged = delta
     else:
-        prev = spark.read.parquet(prev_dir)
-        prev_touched = prev.filter(F.col("bucket").isin(touched))
-        merged = combine(prev_touched, delta).withColumn("bucket", _bucket_of(keys))
-    # Stage generation N+1 (repartitioned by key so the merge join and the
-    # next read are co-partitioned), link untouched buckets, mark committed,
-    # then atomically publish into the next free version slot.
-    os.makedirs(state_dir, exist_ok=True)
-    tmp_dir = os.path.join(state_dir, f".merge-{os.getpid()}")
-    merged.repartition(*keys).write.partitionBy("bucket").mode("overwrite").parquet(
-        tmp_dir
+        prev_touched = (
+            batch_state.sparkSession.read.parquet(prev_dir)
+            .filter(F.col("bucket").isin(touched))
+            .drop("bucket")
+        )
+        merged = fold(prev_touched.unionByName(batch_state)).withColumn(
+            "bucket", _bucket_of(keys)
+        )
+    # Repartitioned by key so the merge join and the next read are
+    # co-partitioned.
+    _publish_generation(
+        state_dir, "merge", merged.repartition(*keys), keep_generations,
+        {EPOCH_MARKER: epoch_id}, link_from=prev_dir, skip_buckets=touched,
     )
-    if prev_dir is not None:
-        touched_set = {f"bucket={b}" for b in touched}
-        for d in os.listdir(prev_dir):
-            if d.startswith("bucket=") and d not in touched_set:
-                _link_tree(os.path.join(prev_dir, d), os.path.join(tmp_dir, d))
-    if epoch_id is not None:
-        with open(os.path.join(tmp_dir, EPOCH_MARKER), "w") as fh:
-            fh.write(str(epoch_id))
-    commit(tmp_dir)  # marker rides inside the rename: publish is atomic
-    publish_staged(tmp_dir, state_dir)
-    apply_retention(state_dir, _state_versions(state_dir)[:-1], keep_generations)
-
-
-LSM_LAYERS_MARKER = "_LSM_LAYERS"  # delta layers since the last compaction
-
-
-def _lsm_layers(gen_dir: str) -> int:
-    p = os.path.join(gen_dir, LSM_LAYERS_MARKER)
-    if not os.path.exists(p):
-        return 0
-    with open(p) as fh:
-        return int(fh.read().strip())
 
 
 def append_into_bucketed_state(
@@ -264,64 +311,42 @@ def append_into_bucketed_state(
     compaction cadence (every ``compact_every``-th append rewrites the
     store folded — O(state)/compact_every amortized per batch).
 
-    ``fold(df) -> df`` must be an IDEMPOTENT, order-insensitive reduction
-    of a state-schema frame to its fix point (latest_per_key,
-    dropDuplicates, a groupBy re-aggregation) — the unary form of the
-    eager path's binary ``combine`` (combine(a, b) == fold(a UNION b)), so
-    the two policies are interchangeable per table. Readers of an LSM
-    table MUST read through :func:`read_lsm_state`, which applies the same
-    fold over base+layers; read cost grows with layer count, which
+    ``fold`` is the same unary fold the eager merge takes, so the two
+    policies are interchangeable per table. Readers of an LSM table MUST
+    read through :func:`read_lsm_state`, which applies the same fold over
+    base+layers; read cost grows with layer count, which
     ``compact_every`` bounds.
 
     Same atomicity (full staging + commit marker + CAS rename), epoch
     replay guard, retention, and empty-delta no-op as the eager merge.
     """
-    spark = batch_state.sparkSession
-    versions = _state_versions(state_dir)
-    if epoch_id is not None and versions:
-        applied = _applied_epoch(os.path.join(state_dir, versions[-1]))
-        if applied is not None and applied >= epoch_id:
-            return  # replay of an already-applied epoch
+    prev_dir, replayed = _latest_unless_replayed(state_dir, epoch_id)
+    if replayed:
+        return  # replay of an already-applied epoch
     delta = batch_state.withColumn("bucket", _bucket_of(keys))
     if delta.select("bucket").limit(1).count() == 0:
         return  # empty delta: no-op, never an empty generation
-    prev_dir = os.path.join(state_dir, versions[-1]) if versions else None
     layers = _lsm_layers(prev_dir) if prev_dir else 0
-    compacting = prev_dir is not None and layers + 1 >= compact_every
-    os.makedirs(state_dir, exist_ok=True)
-    tmp_dir = os.path.join(state_dir, f".lsm-{os.getpid()}")
-    if prev_dir is None or compacting:
+    if prev_dir is None or layers + 1 >= compact_every:
         # compaction epoch (or first write): fold base + layers + delta to
         # the fix point and rewrite — the amortized O(state) pass
-        frames = delta.drop("bucket")
+        frames = batch_state
         if prev_dir is not None:
             frames = frames.unionByName(
-                spark.read.parquet(prev_dir).drop("bucket")
+                batch_state.sparkSession.read.parquet(prev_dir).drop("bucket")
             )
-        merged = fold(frames).withColumn("bucket", _bucket_of(keys))
-        merged.repartition(*keys).write.partitionBy("bucket").mode(
-            "overwrite"
-        ).parquet(tmp_dir)
-        new_layers = 0
+        staged = fold(frames).withColumn("bucket", _bucket_of(keys)).repartition(*keys)
+        link_from, layers = None, 0
     else:
         # append epoch: one delta file per touched bucket (repartition by
         # the bucket column -> each bucket's rows land in ONE task), then
         # hard-link every prior file forward — O(batch + #files) total
-        delta.repartition(F.col("bucket")).write.partitionBy("bucket").mode(
-            "overwrite"
-        ).parquet(tmp_dir)
-        for d in os.listdir(prev_dir):
-            if d.startswith("bucket="):
-                _link_tree(os.path.join(prev_dir, d), os.path.join(tmp_dir, d))
-        new_layers = layers + 1
-    with open(os.path.join(tmp_dir, LSM_LAYERS_MARKER), "w") as fh:
-        fh.write(str(new_layers))
-    if epoch_id is not None:
-        with open(os.path.join(tmp_dir, EPOCH_MARKER), "w") as fh:
-            fh.write(str(epoch_id))
-    commit(tmp_dir)
-    publish_staged(tmp_dir, state_dir)
-    apply_retention(state_dir, _state_versions(state_dir)[:-1], keep_generations)
+        staged = delta.repartition(F.col("bucket"))
+        link_from, layers = prev_dir, layers + 1
+    _publish_generation(
+        state_dir, "lsm", staged, keep_generations,
+        {LSM_LAYERS_MARKER: layers, EPOCH_MARKER: epoch_id}, link_from=link_from,
+    )
 
 
 def read_lsm_state(
@@ -340,7 +365,6 @@ def maintain_latest_state(
     state_dir: str,
     checkpoint_dir: str,
     keys: Sequence[str] = ("user_id",),
-    order: Sequence[Column] | None = None,
     keep_generations: int = 2,
     backend: str = "auto",
     order_cols: Sequence[str] = ("ts", "event_id"),
@@ -348,8 +372,8 @@ def maintain_latest_state(
     """foreachBatch MERGE: entity state = latest event per key (ST4).
 
     Idempotent under replay: merging the same events twice is a no-op
-    because the fold is an argmax by (event time, event id), mirroring the
-    reference's idempotent upserts (ST2).
+    because the fold is an argmax by ``order_cols`` (event time, event
+    id), mirroring the reference's idempotent upserts (ST2).
 
     Incremental: state is hash-bucketed by key; only buckets containing a
     batch key are re-merged and rewritten — untouched buckets are
@@ -365,10 +389,7 @@ def maintain_latest_state(
     ``"delta"`` = a transactional Delta ``MERGE INTO``
     (streaming/delta_sink.py; requires delta-spark, raises otherwise);
     ``"auto"`` = delta when installed, else generations — the same code
-    deploys on a Delta cluster and in this container. The delta path
-    derives its MERGE condition from ``order_cols`` (the string-column
-    form of the default ``order`` argmax); a custom ``order`` needs
-    matching ``order_cols``.
+    deploys on a Delta cluster and in this container.
     """
     if backend not in ("auto", "generations", "delta", "lsm"):
         raise ValueError(f"unknown backend {backend!r}")
@@ -377,38 +398,23 @@ def maintain_latest_state(
 
         backend = "delta" if delta_available() else "generations"
 
-    def _merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        ordering = order or [F.desc(c) for c in order_cols]
-        batch_latest = latest_per_key(batch_df, list(keys), ordering)
+    def fold(df: DataFrame) -> DataFrame:
+        return latest_per_key(df, list(keys), [F.desc(c) for c in order_cols])
 
+    def _merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        batch_latest = fold(batch_df)
         if backend == "delta":
             from pasardassist_spark.streaming.delta_sink import (
                 merge_latest_into_delta,
             )
 
             merge_latest_into_delta(batch_latest, state_dir, keys, order_cols)
-            return
-
-        if backend == "lsm":
-            append_into_bucketed_state(
-                batch_latest,
-                state_dir,
-                keys,
-                lambda df: latest_per_key(df, list(keys), ordering),
-                keep_generations,
+        else:
+            write = (
+                append_into_bucketed_state if backend == "lsm"
+                else merge_into_bucketed_state
             )
-            return
-
-        def combine(prev: DataFrame, delta: DataFrame) -> DataFrame:
-            return latest_per_key(
-                prev.drop("bucket").unionByName(delta.drop("bucket")),
-                list(keys),
-                ordering,
-            )
-
-        merge_into_bucketed_state(
-            batch_latest, state_dir, keys, combine, keep_generations
-        )
+            write(batch_latest, state_dir, keys, fold, keep_generations)
 
     return (
         stream.writeStream.foreachBatch(_merge_batch)
@@ -428,21 +434,18 @@ def maintain_entity_state(
     is folded by ``fold_entity_state`` (status argmax + additive counters +
     extrema — the reference's per-event $set/$inc mutations,
     tasks.service.ts:367-373,585-591) and merged associatively into the
-    bucketed state table. fold ⊕ merge associativity makes replay and
-    out-of-order arrival converge to the batch fix point."""
+    bucketed state table, whose fold is ``merge_entity_states``. fold ⊕
+    merge associativity makes replay and out-of-order arrival converge to
+    the batch fix point."""
     from pasardassist_spark.operators.fold import (
         fold_entity_state,
         merge_entity_states,
     )
 
     def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        delta = fold_entity_state(batch_df)
-
-        def combine(prev: DataFrame, d: DataFrame) -> DataFrame:
-            return merge_entity_states(prev.drop("bucket"), d.drop("bucket"))
-
         merge_into_bucketed_state(
-            delta, state_dir, ("user_id",), combine, keep_generations
+            fold_entity_state(batch_df), state_dir, ("user_id",),
+            merge_entity_states, keep_generations,
         )
 
     return (
@@ -503,33 +506,15 @@ def compact_state(
     n_buckets = sum(1 for d in os.listdir(cur_dir) if d.startswith("bucket="))
     if n_buckets == 0:
         return True
-    next_dir = next_version_dir(state_dir, versions)
-    tmp_dir = f"{next_dir}.compact-{os.getpid()}"
     salt = F.pmod(F.hash(*[c for c in cur.columns if c != "bucket"]), F.lit(files_per_bucket))
-    (
-        cur.repartition(
-            max(1, n_buckets * files_per_bucket), F.col("bucket"), salt
-        )
-        .write.partitionBy("bucket")
-        .mode("overwrite")
-        .parquet(tmp_dir)
+    return _publish_generation(
+        state_dir,
+        "compact",
+        cur.repartition(max(1, n_buckets * files_per_bucket), F.col("bucket"), salt),
+        keep_generations,
+        # carry the epoch marker forward: compaction preserves logical
+        # state, including which epoch last merged (else a post-compaction
+        # replay of that epoch would double-merge)
+        {EPOCH_MARKER: _marker(cur_dir, EPOCH_MARKER)},
+        slot=next_version_dir(state_dir, versions),
     )
-    # carry the epoch marker forward: compaction preserves logical state,
-    # including which epoch last merged (else a post-compaction replay of
-    # that epoch would double-merge)
-    applied = _applied_epoch(cur_dir)
-    if applied is not None:
-        with open(os.path.join(tmp_dir, EPOCH_MARKER), "w") as fh:
-            fh.write(str(applied))
-    commit(tmp_dir)  # marker rides inside the rename: publish is atomic,
-    # so a concurrent reader can never observe the slot in an
-    # exists-but-uncommitted state
-    try:
-        os.rename(tmp_dir, next_dir)  # CAS: fails if the slot was taken
-    except OSError:
-        import shutil
-
-        shutil.rmtree(tmp_dir, ignore_errors=True)
-        return False
-    apply_retention(state_dir, versions, keep_generations)
-    return True

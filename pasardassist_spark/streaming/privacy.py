@@ -30,16 +30,13 @@ from pasardassist_spark.streaming.ingest import (
 )
 
 
-def _combine(keys: Sequence[str]):
-    def combine(prev: DataFrame, delta: DataFrame) -> DataFrame:
-        return (
-            prev.drop("bucket")
-            .unionByName(delta.drop("bucket"))
-            .groupBy(*keys)
-            .agg(F.sum("class_size").cast("long").alias("class_size"))
+def _fold(keys: Sequence[str]):
+    def fold(counts: DataFrame) -> DataFrame:
+        return counts.groupBy(*keys).agg(
+            F.sum("class_size").cast("long").alias("class_size")
         )
 
-    return combine
+    return fold
 
 
 def maintain_k_anonymity(
@@ -62,7 +59,7 @@ def maintain_k_anonymity(
             F.count(F.lit(1)).cast("long").alias("class_size")
         )
         merge_into_bucketed_state(
-            delta, state_dir, keys, _combine(keys), keep_generations,
+            delta, state_dir, keys, _fold(keys), keep_generations,
             epoch_id=epoch_id,
         )
 

@@ -59,17 +59,12 @@ def _partials(lineitems: DataFrame, orders: DataFrame) -> DataFrame:
     )
 
 
-def _combine(prev: DataFrame, delta: DataFrame) -> DataFrame:
-    """Associative merge of two partial frames (sum, sum, null-safe min)."""
-    return (
-        prev.drop("bucket")
-        .unionByName(delta.drop("bucket"))
-        .groupBy(*_KEYS)
-        .agg(
-            F.sum("items").alias("items"),
-            F.sum("volume").cast("decimal(28,4)").alias("volume"),
-            F.min("lowest").alias("lowest"),
-        )
+def _fold(partials: DataFrame) -> DataFrame:
+    """Associative re-aggregation of partials (sum, sum, null-safe min)."""
+    return partials.groupBy(*_KEYS).agg(
+        F.sum("items").alias("items"),
+        F.sum("volume").cast("decimal(28,4)").alias("volume"),
+        F.min("lowest").alias("lowest"),
     )
 
 
@@ -95,7 +90,7 @@ def maintain_collection_stats(
         # sum partials are NOT replay-idempotent: the epoch guard makes a
         # foreachBatch retry of a committed merge a no-op
         merge_into_bucketed_state(
-            delta, state_dir, _KEYS, _combine, keep_generations,
+            delta, state_dir, _KEYS, _fold, keep_generations,
             epoch_id=epoch_id,
         )
 

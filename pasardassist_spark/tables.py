@@ -148,7 +148,11 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # own SparkSession (not via session.get_spark), so set it here at
         # the scan layer — it is runtime-settable.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    # Resolve against the Python process's current directory, as the
+    # os.path callers (streaming.stage_file_source) do; Spark would resolve
+    # a relative path against the JVM's start-up directory.
+    path = os.path.join(os.path.abspath(sf_dir), f"{name}.parquet")
+    df = spark.read.parquet(path)
     if name == "events":
         df = _normalize_event_time(df)
     if name in _FANOUT_TABLES:
@@ -160,7 +164,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # filters and column pruning below the repartition, so the shuffle
         # carries pruned, filtered rows only.
         target = spark.sparkContext.defaultParallelism
-        if _max_scan_tasks(f"{sf_dir}/{name}.parquet") < target:
+        if _max_scan_tasks(path) < target:
             df = df.repartition(target)
             if name == "documents":
                 # Pushdown fence (r19, measured): Catalyst pushes every
@@ -294,6 +298,19 @@ def export_shards(write, df: DataFrame, prefix: str, **options) -> str:
     if sum(m.n_records for m in write(df, tmp, **options).collect()) == 0:
         raise ValueError(f"{write.__name__} wrote no records to {tmp}")
     return tmp
+
+
+def read_shards(spark: SparkSession, path: str, pattern: str) -> DataFrame:
+    """The read side of ``write_shards``: the ``binaryFile`` frame (path,
+    modificationTime, length, content) of the files in directory ``path``
+    whose names match the glob ``pattern``, one row per shard. The
+    directory is loaded with ``pathGlobFilter``: loading a glob path
+    makes Spark probe ``<glob>/_spark_metadata`` and log a
+    ``FileNotFoundException`` for every read. A directory with no matching
+    shard reads as 0 rows; a missing directory raises PATH_NOT_FOUND."""
+    return (
+        spark.read.format("binaryFile").option("pathGlobFilter", pattern).load(path)
+    )
 
 
 def _to_arrow_value(dt: DataType):

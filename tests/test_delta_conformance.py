@@ -109,16 +109,14 @@ def test_merge_apply_matches_generational_backend(spark, tmp_path):
 
     ordering = [F.desc("ts"), F.desc("event_id")]
 
-    def combine(prev, delta):
-        return latest_per_key(
-            prev.drop("bucket").unionByName(delta.drop("bucket")), ["k"], ordering
-        )
+    def fold(df):
+        return latest_per_key(df, ["k"], ordering)
 
     state_dir = str(tmp_path / "state")
     merged = None
     for batch in BATCHES:
         delta = latest_per_key(_mk(spark, batch), ["k"], ordering)
-        merge_into_bucketed_state(delta, state_dir, ("k",), combine)
+        merge_into_bucketed_state(delta, state_dir, ("k",), fold)
         if merged is None:
             merged = delta
         else:

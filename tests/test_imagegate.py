@@ -1,6 +1,8 @@
 """Streaming image-dedup gate: chunked processing == sequential replay of
-the same policy (independent Python reference), replayed epochs are
-no-ops, and the gate actually rejects cross-container and near duplicates."""
+the same policy (independent Python reference), the foreachBatch entry
+lands the same admitted set and band index as the batch function, replayed
+epochs are no-ops, and the gate actually rejects cross-container and near
+duplicates."""
 
 from __future__ import annotations
 
@@ -17,6 +19,7 @@ from pasardassist_spark.operators import imagecodec as IC
 from pasardassist_spark.streaming.imagegate import (
     admitted_images,
     apply_image_batch,
+    maintain_image_gate,
 )
 
 SEED_MOD = 23  # dense planted duplicates over 100 docs
@@ -85,6 +88,50 @@ def test_chunked_equals_sequential_replay(spark, tmp_path):
     want = _sequential_reference(n, chunks)
     assert got == want
     assert 0 < len(got) < n, "gate admitted everything or nothing"
+
+
+def test_stream_gate_equals_batch_function(spark, tmp_path):
+    from pasardassist_spark.streaming.ingest import read_state
+
+    n = 60
+    corpus = _corpus(spark, n)
+    chunks = [corpus.filter(corpus.doc_id % 3 == k) for k in range(3)]
+    src = tmp_path / "src"
+    src.mkdir()
+    for i, chunk in enumerate(chunks):
+        stage = tmp_path / f"s{i}"
+        chunk.coalesce(1).write.parquet(str(stage))
+        (pq,) = [f for f in os.listdir(stage) if f.endswith(".parquet")]
+        dst = str(src / f"p{i}.parquet")
+        os.rename(str(stage / pq), dst)
+        os.utime(dst, (1_700_000_000 + i * 1000,) * 2)  # batch order = file order
+
+    stream = (
+        spark.readStream.schema("doc_id long, payload binary")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src))
+    )
+    q = maintain_image_gate(
+        stream, str(tmp_path / "state"), str(tmp_path / "ckpt"), str(tmp_path / "adm")
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+    for ep, chunk in enumerate(chunks):
+        apply_image_batch(chunk, ep, str(tmp_path / "bstate"), str(tmp_path / "badm"))
+
+    def admitted(d):
+        return sorted(r.doc_id for r in admitted_images(spark, str(tmp_path / d)).collect())
+
+    def bands(d):
+        st = read_state(spark, os.path.join(str(tmp_path / d), "bands"))
+        return sorted(map(tuple, st.select("band", "val", "dhash_hi", "dhash_lo").collect()))
+
+    assert admitted("adm") == admitted("badm")
+    assert 0 < len(admitted("adm")) < n
+    assert bands("state") == bands("bstate")
 
 
 def test_replayed_epoch_is_noop(spark, tmp_path):

@@ -8,7 +8,8 @@ process leaves no root behind when it exits; (b) a source scan: no
 module under ``pasardassist_spark/`` other than ``caching.py`` calls
 ``tempfile.mkdtemp``/``mkstemp``/``TemporaryDirectory`` or
 ``atexit.register``; (c) the stream replays stage an absolute link, so a
-relative ``sf_dir`` gives the same rows; (d) end to end, the directories
+relative ``sf_dir`` gives the same rows, also after the process changes
+its working directory; (d) end to end, the directories
 three registered queries write are gone after ``release_all``.
 """
 
@@ -158,6 +159,20 @@ def test_stream_replay_reads_a_relative_sf_dir(spark, sf_dir, name, monkeypatch)
     fn = all_queries()[name]
     absolute = _canon(fn(spark, os.path.abspath(sf_dir)).toPandas())
     relative = _canon(fn(spark, os.path.relpath(sf_dir, cwd)).toPandas())
+    release_all(spark)
+    assert absolute and relative == absolute
+
+
+def test_relative_sf_dir_resolves_against_the_python_cwd(spark, sf_dir, monkeypatch):
+    # chdir AFTER the session started: the JVM keeps its start-up
+    # directory, so a relative sf_dir only works when every reader
+    # (tables.load and the stream's staged link) resolves it here
+    parent = os.path.dirname(os.path.abspath(sf_dir))
+    assert spark.sparkContext._jvm.System.getProperty("user.dir") != parent
+    fn = all_queries()["st8_incremental_stats"]
+    absolute = _canon(fn(spark, os.path.abspath(sf_dir)).toPandas())
+    monkeypatch.chdir(parent)
+    relative = _canon(fn(spark, os.path.basename(os.path.abspath(sf_dir))).toPandas())
     release_all(spark)
     assert absolute and relative == absolute
 

@@ -272,33 +272,28 @@ def test_epoch_guard_makes_sum_merges_exactly_once(spark, tmp_path):
 
     state = str(tmp_path / "state")
 
-    def combine(prev: DataFrame, delta: DataFrame):
-        return (
-            prev.drop("bucket")
-            .unionByName(delta.drop("bucket"))
-            .groupBy("k")
-            .agg(F.sum("n").cast("long").alias("n"))
-        )
+    def fold(df: DataFrame):
+        return df.groupBy("k").agg(F.sum("n").cast("long").alias("n"))
 
     def total():
         return read_state(spark, state).groupBy().sum("n").collect()[0][0]
 
     b0 = spark.createDataFrame([(1, 5), (2, 3)], "k long, n long")
-    merge_into_bucketed_state(b0, state, ("k",), combine, epoch_id=0)
+    merge_into_bucketed_state(b0, state, ("k",), fold, epoch_id=0)
     assert total() == 8
-    merge_into_bucketed_state(b0, state, ("k",), combine, epoch_id=0)  # retry
+    merge_into_bucketed_state(b0, state, ("k",), fold, epoch_id=0)  # retry
     assert total() == 8  # not 16
     b1 = spark.createDataFrame([(2, 2)], "k long, n long")
-    merge_into_bucketed_state(b1, state, ("k",), combine, epoch_id=1)
+    merge_into_bucketed_state(b1, state, ("k",), fold, epoch_id=1)
     assert total() == 10
     assert compact_state(spark, state, keep_generations=5)
     # post-compaction replay of epoch 1: still a no-op
-    merge_into_bucketed_state(b1, state, ("k",), combine, epoch_id=1)
+    merge_into_bucketed_state(b1, state, ("k",), fold, epoch_id=1)
     assert total() == 10
     # and epoch 2 still applies after compaction
     merge_into_bucketed_state(
         spark.createDataFrame([(9, 1)], "k long, n long"),
-        state, ("k",), combine, epoch_id=2,
+        state, ("k",), fold, epoch_id=2,
     )
     assert total() == 11
 

@@ -6,8 +6,11 @@ format writer picks its file names and its manifest through
 ``write_shards``), (b) the sink's contract: one
 ``name.format(pid)`` file and one ``(file, n_records, n_bytes)`` row per
 non-empty partition, ``n_bytes`` the size on disk, and an exception in
-``write`` failing the action, and (c) that ``export_shards`` refuses an
-export that wrote no records.
+``write`` failing the action, (c) that ``export_shards`` refuses an
+export that wrote no records, and (d) the read side: no ``binaryFile``
+load of a glob path (Spark logs a ``FileNotFoundException`` probing
+``<glob>/_spark_metadata``), and ``read_shards`` reading a directory with
+no matching shard as 0 rows while a missing directory still raises.
 """
 
 from __future__ import annotations
@@ -73,6 +76,67 @@ def test_scan_flags_an_own_shard_writer(tmp_path):
         "sink.py:5 TaskContext",
         "sink.py:6 TaskContext",
     ]
+
+
+def _glob_shard_loads(root: str) -> list[str]:
+    """``.load(...)`` calls on a ``format("binaryFile")`` reader whose
+    arguments contain a string with ``*``."""
+    found = []
+    for dirpath, _, files in os.walk(root):
+        for f in sorted(files):
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, f)
+            with open(path, encoding="utf-8") as fh:
+                tree = ast.parse(fh.read(), path)
+            for node in ast.walk(tree):
+                if not (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "load"
+                ):
+                    continue
+                binary = any(
+                    isinstance(n, ast.Constant) and n.value == "binaryFile"
+                    for n in ast.walk(node.func.value)
+                )
+                globbed = any(
+                    isinstance(n, ast.Constant) and isinstance(n.value, str) and "*" in n.value
+                    for a in node.args
+                    for n in ast.walk(a)
+                )
+                if binary and globbed:
+                    found.append(f"{os.path.relpath(path, root)}:{node.lineno}")
+    return found
+
+
+def test_no_binary_file_load_of_a_glob_path():
+    offenders = _glob_shard_loads(PKG)
+    assert not offenders, f"load the directory through tables.read_shards: {offenders}"
+
+
+def test_scan_flags_a_glob_binary_file_load(tmp_path):
+    (tmp_path / "reader.py").write_text(
+        "import os\n"
+        "def read(spark, path):\n"
+        "    a = spark.read.format('binaryFile').load(path)\n"
+        "    return spark.read.format('binaryFile').load(\n"
+        "        os.path.join(path, '*.avro'))\n"
+    )
+    assert _glob_shard_loads(str(tmp_path)) == ["reader.py:4"]
+
+
+def test_read_shards_of_a_directory_without_shards_is_empty(spark, tmp_path):
+    from pasardassist_spark.sources.msgpackio import read_msgpack
+
+    (tmp_path / "notes.txt").write_text("not a shard")
+    assert tables.read_shards(spark, str(tmp_path), "*.msgpack").count() == 0
+    assert read_msgpack(spark, str(tmp_path), spark.range(1).schema).count() == 0
+
+
+def test_read_shards_of_a_missing_directory_raises(spark, tmp_path):
+    with pytest.raises(Exception, match="PATH_NOT_FOUND"):
+        tables.read_shards(spark, str(tmp_path / "absent"), "*.msgpack").count()
 
 
 def _line_writer():
