@@ -1,11 +1,11 @@
 from pasardassist_spark.streaming.dedup import streaming_dedup
 from pasardassist_spark.streaming.dynamic import (
-    admitted_events,
     dynamic_collection_sink,
     process_collection_batch,
     register_collection,
     registered_collections,
 )
+from pasardassist_spark.streaming.generations import admitted_events
 from pasardassist_spark.streaming.ingest import (
     append_into_bucketed_state,
     maintain_entity_state,

@@ -24,7 +24,7 @@ shape (crawl in → admit only novel docs → training corpus):
   on A~B~C chains where B also loses to A: C is dropped even though its
   only witness B was itself rejected).
 - admitted docs append to ``admitted_dir`` through the epoch-keyed CAS
-  slots of streaming/dynamic.py — exactly-once under retries — and ONLY
+  slots of streaming/generations.py — exactly-once under retries — and ONLY
   admitted docs' digests/signatures enter the index (rejected dups add
   no new evidence; the index stays O(distinct admitted content)).
 
@@ -45,8 +45,11 @@ from pasardassist_spark.operators.dedup import (
     minhash_signatures,
     shingles,
 )
-from pasardassist_spark.streaming.dynamic import _publish_epoch
-from pasardassist_spark.streaming.generations import commit
+from pasardassist_spark.streaming.generations import (
+    admitted_events,
+    committed_epoch,
+    publish_epoch,
+)
 from pasardassist_spark.streaming.ingest import (
     merge_into_bucketed_state,
     read_state,
@@ -94,14 +97,12 @@ def apply_dedup_batch(
     keep_generations: int = 2,
 ) -> None:
     """One epoch's gate + index merge (see module docstring)."""
-    from pasardassist_spark.streaming.generations import COMMIT_MARKER
-
     spark = batch_df.sparkSession
     hashes_dir = os.path.join(state_dir, "hashes")
     sigs_dir = os.path.join(state_dir, "sigs")
 
-    slot = os.path.join(admitted_dir, f"e{epoch_id:09d}")
-    if os.path.exists(os.path.join(slot, COMMIT_MARKER)):
+    slot = committed_epoch(admitted_dir, epoch_id)
+    if slot is not None:
         # Replay of a committed epoch: skip the whole gate (its decision
         # would be recomputed against an index possibly already containing
         # this batch's own evidence — contaminated AND wasted work). The
@@ -172,15 +173,11 @@ def apply_dedup_batch(
     # part of this batch's own evidence into the index, which would flag
     # the whole replayed batch as dups) — the committed slot IS the
     # decision, and the merges below re-derive their input from it.
-    os.makedirs(admitted_dir, exist_ok=True)
-    staged = os.path.join(admitted_dir, f".stage-{epoch_id}-{os.getpid()}")
-    admitted.drop("_h").write.mode("overwrite").parquet(staged)
-    commit(staged)
-    if not _publish_epoch(staged, admitted_dir, epoch_id):
-        slot = os.path.join(admitted_dir, f"e{epoch_id:09d}")
-        admitted = spark.read.parquet(slot).withColumn(
-            "_h", content_hash(F.col(text_col))
-        )
+    if not publish_epoch(admitted.drop("_h"), admitted_dir, epoch_id):
+        # a concurrent attempt of this epoch won: its slot is the decision
+        admitted = spark.read.parquet(
+            committed_epoch(admitted_dir, epoch_id)
+        ).withColumn("_h", content_hash(F.col(text_col)))
 
     # index grows by the ADMITTED evidence only. Distinct-union merges are
     # idempotent, so running them on every attempt (first run AND replays)
@@ -230,6 +227,4 @@ def maintain_dedup_gate(
 
 def admitted_docs(spark: SparkSession, admitted_dir: str) -> DataFrame | None:
     """Union of committed epoch slots — the deduped corpus."""
-    from pasardassist_spark.streaming.dynamic import admitted_events
-
     return admitted_events(spark, admitted_dir)

@@ -8,13 +8,10 @@ time travel replace the hand-rolled generation/CAS protocol. This module
 is that swap-point, import-gated so the repo runs identically with or
 without delta-spark (this container lacks it; the tests skip-mark).
 
-Environment limitation (re-verified 2026-08-15, round-10 continuation;
-previously rounds 8-9 and the 2026-08-14 round-10 session):
-``importlib.util.find_spec("delta")`` is still None and the
-container still has no package index access — ``pip install delta-spark`` fails at
-name resolution before reaching any index — so the Delta round-trip test
-cannot be un-skipped here. The MERGE *semantics* are conformance-tested
-anyway: ``merge_latest_apply`` expands the identical whenMatched
+Environment limitation: where delta-spark is not installed
+(``importlib.util.find_spec("delta")`` is None), the Delta round-trip test
+is skipped. The MERGE *semantics* are conformance-tested anyway:
+``merge_latest_apply`` expands the identical whenMatched
 condition/action plan engine-neutrally, and
 tests/test_delta_conformance.py pins it batch-by-batch to the
 generational backend and the global argmax on Delta-shaped vectors

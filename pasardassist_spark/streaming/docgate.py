@@ -35,7 +35,10 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from pasardassist_spark.streaming.dedupindex import apply_dedup_batch
-from pasardassist_spark.streaming.generations import COMMIT_MARKER
+from pasardassist_spark.streaming.generations import (
+    admitted_events,
+    committed_epoch,
+)
 from pasardassist_spark.tables import local_frame, map_rows
 
 _EXTRACT_SCHEMA = "doc_id long, fmt string, text string"
@@ -114,8 +117,7 @@ def apply_doc_batch(
     index merges).  ``batch_df`` is (doc_id, payload) rows."""
     spark = batch_df.sparkSession
 
-    slot = os.path.join(admitted_dir, f"e{epoch_id:09d}")
-    if os.path.exists(os.path.join(slot, COMMIT_MARKER)):
+    if committed_epoch(admitted_dir, epoch_id) is not None:
         # committed replay: the slot already holds the extracted text —
         # skip extraction entirely and let the dedup gate re-run its
         # idempotent index merges from the slot
@@ -175,6 +177,4 @@ def admitted_clean_docs(
 ) -> DataFrame | None:
     """Union of committed epoch slots — the extracted, gated, deduped
     text corpus."""
-    from pasardassist_spark.streaming.dynamic import admitted_events
-
     return admitted_events(spark, admitted_dir)

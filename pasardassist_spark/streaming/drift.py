@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from pasardassist_spark.operators.drift import ks_distance, psi_distance
+from pasardassist_spark.streaming.generations import admitted_events, publish_epoch
 from pasardassist_spark.streaming.ingest import (
     merge_into_bucketed_state,
     read_state,
@@ -85,22 +86,10 @@ def maintain_value_distribution(
             epoch_id=epoch_id,
         )
         if reference_counts is not None and monitor_dir is not None:
-            import os
-
-            from pasardassist_spark.streaming.dynamic import _publish_epoch
-            from pasardassist_spark.streaming.generations import commit
-
-            spark = batch_df.sparkSession
             row = drift_from_state(
-                spark, state_dir, reference_counts, metric=metric
+                batch_df.sparkSession, state_dir, reference_counts, metric=metric
             ).withColumn("epoch", F.lit(epoch_id).cast("long"))
-            os.makedirs(monitor_dir, exist_ok=True)
-            staged = os.path.join(
-                monitor_dir, f".stage-{epoch_id}-{os.getpid()}"
-            )
-            row.coalesce(1).write.mode("overwrite").parquet(staged)
-            commit(staged)
-            _publish_epoch(staged, monitor_dir, epoch_id)
+            publish_epoch(row.coalesce(1), monitor_dir, epoch_id)
 
     return (
         stream.writeStream.foreachBatch(_batch)
@@ -113,8 +102,6 @@ def maintain_value_distribution(
 def drift_history(spark: SparkSession, monitor_dir: str) -> DataFrame | None:
     """The per-epoch drift trajectory: union of committed epoch slots
     (uncommitted/crashed slots invisible), one metric row per epoch."""
-    from pasardassist_spark.streaming.dynamic import admitted_events
-
     return admitted_events(spark, monitor_dir)
 
 

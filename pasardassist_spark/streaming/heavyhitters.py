@@ -32,7 +32,8 @@ from pasardassist_spark.queries.analytics import (
     space_saving_topk,
 )
 from pasardassist_spark.streaming.generations import (
-    read_latest,
+    latest_unless_replayed,
+    read_state,
     write_generation,
 )
 from pasardassist_spark.tables import local_frame
@@ -67,26 +68,22 @@ def apply_batch(
     the O(batch) work; only the KB summary reaches the driver), per-key
     sum with the retained summary, re-compact, commit a new generation.
 
-    Exactly-once under foreachBatch retries: every generation row carries
-    the epoch that produced it; a replayed epoch (epoch_id <= the retained
-    epoch — Spark retries the SAME epoch id) is a no-op, so the delta is
+    Exactly-once under foreachBatch retries: every generation records the
+    epoch that produced it (generations.latest_unless_replayed); a replayed
+    epoch (Spark retries the SAME epoch id) is a no-op, so the delta is
     never merged twice."""
-    prev_df = read_latest(spark, state_dir)
+    prev_dir, replayed = latest_unless_replayed(state_dir, epoch_id)
+    if replayed:
+        return  # replay of an already-applied epoch
     prev: dict[int, int] = {}
-    if prev_df is not None:
-        rows = prev_df.collect()
-        if rows and int(rows[0]["epoch"]) >= epoch_id:
-            return  # replay of an already-applied epoch
+    if prev_dir is not None:
+        rows = spark.read.parquet(prev_dir).collect()
         prev = {int(r[key_col]): int(r["est"]) for r in rows}
     delta_rows = space_saving_topk(batch_df, key_col, capacity).collect()
     delta = {int(r[key_col]): int(r["est"]) for r in delta_rows}
     merged = _merge_compact(prev, delta, capacity)
-    out = local_frame(
-        spark,
-        [(k, v, epoch_id) for k, v in sorted(merged.items())],
-        f"{key_col} long, est long, epoch long",
-    )
-    write_generation(out, state_dir, keep=keep_generations)
+    out = local_frame(spark, sorted(merged.items()), f"{key_col} long, est long")
+    write_generation(out, state_dir, keep=keep_generations, epoch_id=epoch_id)
 
 
 def maintain_heavy_hitters(
@@ -120,8 +117,8 @@ def heavy_hitters_from_state(
 ) -> DataFrame:
     """The maintained summary (key, est), largest first — the standing
     top-talkers readout; est carries the MG guarantee above."""
-    st = read_latest(spark, state_dir)
+    st = read_state(spark, state_dir)
     if st is None:
         raise ValueError(f"no committed heavy-hitter state under {state_dir}")
-    key_col = [c for c in st.columns if c not in ("est", "epoch")][0]
-    return st.drop("epoch").orderBy(F.desc("est"), key_col)
+    key_col = [c for c in st.columns if c != "est"][0]
+    return st.orderBy(F.desc("est"), key_col)

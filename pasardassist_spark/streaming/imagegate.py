@@ -36,8 +36,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from pasardassist_spark.streaming.dynamic import _publish_epoch
-from pasardassist_spark.streaming.generations import commit
+from pasardassist_spark.streaming.generations import (
+    admitted_events,
+    committed_epoch,
+    publish_epoch,
+)
 from pasardassist_spark.streaming.ingest import (
     merge_into_bucketed_state,
     read_state,
@@ -81,13 +84,12 @@ def apply_image_batch(
     """One epoch's gate + index merge. ``batch_df`` is (doc_id, payload)
     rows of REAL image bytes; decode happens here, once."""
     from pasardassist_spark.operators.multimodal import dhash_images
-    from pasardassist_spark.streaming.generations import COMMIT_MARKER
 
     spark = batch_df.sparkSession
     bands_dir = os.path.join(state_dir, "bands")
 
-    slot = os.path.join(admitted_dir, f"e{epoch_id:09d}")
-    if os.path.exists(os.path.join(slot, COMMIT_MARKER)):
+    slot = committed_epoch(admitted_dir, epoch_id)
+    if slot is not None:
         # committed replay: the slot IS the decision; only the idempotent
         # index merge re-runs (same crash-window reasoning as the text
         # gate — a first attempt may have died between publish and merge)
@@ -147,12 +149,8 @@ def apply_image_batch(
     rejected = dup_state.unionByName(lose_batch).distinct()
     admitted = batch_df.join(rejected, "doc_id", "left_anti")
 
-    os.makedirs(admitted_dir, exist_ok=True)
-    staged = os.path.join(admitted_dir, f".stage-{epoch_id}-{os.getpid()}")
-    admitted.write.mode("overwrite").parquet(staged)
-    commit(staged)
-    if not _publish_epoch(staged, admitted_dir, epoch_id):
-        admitted = spark.read.parquet(os.path.join(admitted_dir, f"e{epoch_id:09d}"))
+    if not publish_epoch(admitted, admitted_dir, epoch_id):
+        admitted = spark.read.parquet(committed_epoch(admitted_dir, epoch_id))
 
     adm_bands = bands.join(admitted.select("doc_id"), "doc_id", "left_semi")
     merge_into_bucketed_state(
@@ -186,6 +184,4 @@ def maintain_image_gate(
 
 
 def admitted_images(spark: SparkSession, admitted_dir: str) -> DataFrame | None:
-    from pasardassist_spark.streaming.dynamic import admitted_events
-
     return admitted_events(spark, admitted_dir)

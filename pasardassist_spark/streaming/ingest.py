@@ -43,19 +43,14 @@ writes ``fold(prev_touched ∪ batch)``, the LSM policy folds base + layers
 on compaction, and ``read_lsm_state`` folds on read — all with the same
 fold object. The ``bucket`` column never leaves this module.
 
-Crash safety: a generation only counts once its ``_COMMITTED`` marker
-exists, written after both the Spark write and the hard-links complete into
-a STAGING dir that is then os.rename()d into its version slot — a crash
-mid-write leaves an ignored staging directory, never a truncated "latest"
-state (Spark's own ``_SUCCESS`` is insufficient because the links land
-after the job commit), and the rename CAS means no writer — stream or
-compactor — can ever overwrite a committed generation.
+Crash safety, CAS publish and the epoch-replay guard are the committed-
+directory protocol of streaming/generations.py; every write here goes
+through its ``publish``.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
@@ -64,12 +59,16 @@ from pyspark.sql.streaming import StreamingQuery
 from pasardassist_spark.caching import scratch_dir
 from pasardassist_spark.operators.latest import latest_per_key
 from pasardassist_spark.streaming.generations import (
+    EPOCH_MARKER,
     apply_retention,
-    commit,
     committed_versions as _state_versions,
+    latest_unless_replayed,
     link_tree as _link_tree,
     next_version_dir,
-    publish_staged,
+    publish,
+    read_marker,
+    read_state,
+    write_markers,
 )
 
 
@@ -119,63 +118,15 @@ def read_event_stream(
 N_STATE_BUCKETS = 16  # key-hash buckets; at 100 TB this becomes O(1000s)
 
 
-def read_state(
-    spark: SparkSession, state_dir: str, version: int | str | None = None
-) -> DataFrame | None:
-    """Committed generation of the silver entity table, if any — the
-    latest by default, or a specific retained one via ``version`` (an int
-    like 3 or a slot name like "v000003") — Delta-style time travel on
-    the generational store, bounded by ``keep_generations`` retention.
-    Asking for a version outside the retained window raises (listing the
-    retained slots) rather than silently serving a different snapshot.
-    The internal ``bucket`` partition column is dropped from the view."""
-    versions = _state_versions(state_dir)
-    if not versions:
-        return None
-    if version is None:
-        pick = versions[-1]
-    else:
-        pick = version if isinstance(version, str) else f"v{version:06d}"
-        if pick not in versions:
-            raise ValueError(
-                f"version {pick!r} is not a committed retained generation "
-                f"of {state_dir}; retained: {versions}"
-            )
-    df = spark.read.parquet(os.path.join(state_dir, pick))
-    return df.drop("bucket") if "bucket" in df.columns else df
-
-
 def _bucket_of(keys: Sequence[str]) -> Column:
     return F.pmod(F.hash(*[F.col(k) for k in keys]), F.lit(N_STATE_BUCKETS))
 
 
-EPOCH_MARKER = "_EPOCH"  # underscore prefix: invisible to parquet readers
 LSM_LAYERS_MARKER = "_LSM_LAYERS"  # delta layers since the last compaction
 
 
-def _marker(gen_dir: str, name: str) -> int | None:
-    p = os.path.join(gen_dir, name)
-    if not os.path.exists(p):
-        return None
-    with open(p) as fh:
-        return int(fh.read().strip())
-
-
 def _lsm_layers(gen_dir: str) -> int:
-    return _marker(gen_dir, LSM_LAYERS_MARKER) or 0
-
-
-def _latest_unless_replayed(
-    state_dir: str, epoch_id: int | None
-) -> tuple[str | None, bool]:
-    """(latest committed generation dir or None, whether ``epoch_id`` is
-    already applied there) — the epoch-replay guard of every writer."""
-    versions = _state_versions(state_dir)
-    if not versions:
-        return None, False
-    prev_dir = os.path.join(state_dir, versions[-1])
-    applied = _marker(prev_dir, EPOCH_MARKER) if epoch_id is not None else None
-    return prev_dir, applied is not None and applied >= epoch_id
+    return read_marker(gen_dir, LSM_LAYERS_MARKER) or 0
 
 
 def _publish_generation(
@@ -188,37 +139,23 @@ def _publish_generation(
     skip_buckets: Sequence[int] = (),
     slot: str | None = None,
 ) -> bool:
-    """The one write path of the store: write ``staged`` (carrying the
-    ``bucket`` column) into a per-process ``.<kind>-<pid>`` staging dir,
-    hard-link every bucket of ``link_from`` not in ``skip_buckets``, write
-    the non-None ``markers``, commit, publish, apply retention.
+    """The one write path of the store: through generations.publish, write
+    ``staged`` (carrying the ``bucket`` column), hard-link every bucket of
+    ``link_from`` not in ``skip_buckets`` and write the non-None
+    ``markers``; then apply retention. ``slot=None`` takes the next free
+    slot; with a ``slot`` (compaction) a lost race returns False."""
 
-    The commit marker rides inside the os.rename() into the version slot,
-    and the dot-prefixed staging dir is never listed as a generation, so
-    a crash at any step leaves no partial generation. ``slot=None`` takes
-    the next free slot (generations.publish_staged); with a ``slot``
-    (compaction) a lost race removes the staging dir and returns False."""
-    os.makedirs(state_dir, exist_ok=True)
-    tmp_dir = os.path.join(state_dir, f".{kind}-{os.getpid()}")
-    staged.write.partitionBy("bucket").mode("overwrite").parquet(tmp_dir)
-    if link_from is not None:
-        skip = {f"bucket={b}" for b in skip_buckets}
-        for d in os.listdir(link_from):
-            if d.startswith("bucket=") and d not in skip:
-                _link_tree(os.path.join(link_from, d), os.path.join(tmp_dir, d))
-    for name, value in markers.items():
-        if value is not None:
-            with open(os.path.join(tmp_dir, name), "w") as fh:
-                fh.write(str(value))
-    commit(tmp_dir)
-    if slot is None:
-        publish_staged(tmp_dir, state_dir)
-    else:
-        try:
-            os.rename(tmp_dir, slot)  # CAS: fails if the slot was taken
-        except OSError:
-            shutil.rmtree(tmp_dir, ignore_errors=True)
-            return False
+    def write(tmp_dir: str) -> None:
+        staged.write.partitionBy("bucket").mode("overwrite").parquet(tmp_dir)
+        if link_from is not None:
+            skip = {f"bucket={b}" for b in skip_buckets}
+            for d in os.listdir(link_from):
+                if d.startswith("bucket=") and d not in skip:
+                    _link_tree(os.path.join(link_from, d), os.path.join(tmp_dir, d))
+        write_markers(tmp_dir, markers)
+
+    if publish(state_dir, kind, write, slot) is None:
+        return False
     apply_retention(state_dir, _state_versions(state_dir)[:-1], keep_generations)
     return True
 
@@ -242,12 +179,10 @@ def merge_into_bucketed_state(
     generation (O(batch + touched-state) I/O per batch). On Delta the body
     becomes a single MERGE INTO.
 
-    Publication is atomic: the generation is fully staged — Spark write,
-    hard-links, AND commit marker — in a temp dir, then os.rename()d into
-    its version slot. If a concurrent compaction took the slot first, the
-    rename fails and the merge retries with the next slot; compaction
-    preserves logical state, so the staged content stays correct. A
-    committed generation is therefore never overwritten by anyone.
+    Publication is atomic (generations.publish): if a concurrent
+    compaction took the slot first, the merge retries with the next slot;
+    compaction preserves logical state, so the staged content stays
+    correct.
 
     ``epoch_id`` (opt-in) makes NON-idempotent folds (sums, counters)
     exactly-once under foreachBatch retries: each generation records the
@@ -257,7 +192,7 @@ def merge_into_bucketed_state(
     stream's checkpoint commit otherwise double-merges the batch on
     restart. Compaction carries the marker forward.
     """
-    prev_dir, replayed = _latest_unless_replayed(state_dir, epoch_id)
+    prev_dir, replayed = latest_unless_replayed(state_dir, epoch_id)
     if replayed:
         return  # replay of an already-merged epoch
     delta = batch_state.withColumn("bucket", _bucket_of(keys))
@@ -317,10 +252,10 @@ def append_into_bucketed_state(
     base+layers; read cost grows with layer count, which
     ``compact_every`` bounds.
 
-    Same atomicity (full staging + commit marker + CAS rename), epoch
-    replay guard, retention, and empty-delta no-op as the eager merge.
+    Same publish path, epoch replay guard, retention, and empty-delta
+    no-op as the eager merge.
     """
-    prev_dir, replayed = _latest_unless_replayed(state_dir, epoch_id)
+    prev_dir, replayed = latest_unless_replayed(state_dir, epoch_id)
     if replayed:
         return  # replay of an already-applied epoch
     delta = batch_state.withColumn("bucket", _bucket_of(keys))
@@ -436,7 +371,8 @@ def maintain_entity_state(
     tasks.service.ts:367-373,585-591) and merged associatively into the
     bucketed state table, whose fold is ``merge_entity_states``. fold ⊕
     merge associativity makes replay and out-of-order arrival converge to
-    the batch fix point."""
+    the batch fix point. The counters are sums, so the merge carries the
+    epoch guard: a replayed epoch is a no-op, not a second count."""
     from pasardassist_spark.operators.fold import (
         fold_entity_state,
         merge_entity_states,
@@ -445,7 +381,7 @@ def maintain_entity_state(
     def _batch(batch_df: DataFrame, epoch_id: int) -> None:
         merge_into_bucketed_state(
             fold_entity_state(batch_df), state_dir, ("user_id",),
-            merge_entity_states, keep_generations,
+            merge_entity_states, keep_generations, epoch_id=epoch_id,
         )
 
     return (
@@ -488,11 +424,10 @@ def compact_state(
     bucket over that many write tasks, so a hot bucket keeps write and scan
     parallelism). Run it on a cadence, like a Delta OPTIMIZE.
 
-    Concurrency: the new generation is staged in a temp dir and RENAMED
-    into its version slot — if a concurrent micro-batch committed that
-    version first, the rename fails and compaction ABORTS cleanly (returns
-    False; retry next cadence). It never overwrites another writer's
-    commit. ``keep_generations`` must match the stream's setting: retention
+    Concurrency: the new generation is published into the version slot
+    after the one it read — if a concurrent micro-batch committed that
+    version first, compaction ABORTS cleanly (returns False; retry next
+    cadence). ``keep_generations`` must match the stream's setting: retention
     here must not delete history the pipeline is keeping for time travel —
     and must leave enough generations that the concurrent stream's read of
     the pre-compaction generation cannot be reaped mid-job.
@@ -515,6 +450,6 @@ def compact_state(
         # carry the epoch marker forward: compaction preserves logical
         # state, including which epoch last merged (else a post-compaction
         # replay of that epoch would double-merge)
-        {EPOCH_MARKER: _marker(cur_dir, EPOCH_MARKER)},
+        {EPOCH_MARKER: read_marker(cur_dir, EPOCH_MARKER)},
         slot=next_version_dir(state_dir, versions),
     )

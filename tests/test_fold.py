@@ -107,3 +107,47 @@ def test_token_ownership_fold(spark):
     assert t1.tokenMinter == "alice" and t1.n_transfers == 3 and t1.prev_owner == "bob"
     t2 = got["2"]
     assert t2.tokenOwner == "carol" and not t2.is_burned and t2.tokenMinter == "carol"
+
+
+def test_streaming_entity_state_replayed_epoch_counts_once(spark, sf_dir, tmp_path):
+    """A restart after the checkpoint lost its last commit makes Spark
+    replay that epoch; the additive counters (n_clicks, total_purchase)
+    must not count it twice."""
+    from pasardassist_spark.streaming import (
+        maintain_entity_state,
+        read_event_stream,
+        read_state,
+    )
+
+    ev = load(spark, sf_dir, "events")
+    raw = ev.withColumn("ts", F.expr("unix_micros(ts) * CAST(1000 AS BIGINT)"))
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    rows = raw.orderBy("event_id").collect()
+    third = len(rows) // 3 + 1
+    for i in range(3):
+        staging = str(tmp_path / f"stage{i}")
+        spark.createDataFrame(rows[i * third : (i + 1) * third], raw.schema).coalesce(
+            1
+        ).write.parquet(staging)
+        (pq,) = [f for f in os.listdir(staging) if f.endswith(".parquet")]
+        os.rename(os.path.join(staging, pq), os.path.join(src, f"p{i}.parquet"))
+
+    state, ckpt = str(tmp_path / "state"), str(tmp_path / "ckpt")
+
+    def drain():
+        stream = read_event_stream(spark, src, max_files_per_trigger=1)
+        q = maintain_entity_state(stream, state, ckpt)
+        q.processAllAvailable()
+        q.stop()
+
+    drain()
+    commits = os.path.join(ckpt, "commits")
+    last = max((f for f in os.listdir(commits) if f.isdigit()), key=int)
+    assert last == "2"
+    for f in (last, f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, f)):
+            os.remove(os.path.join(commits, f))
+    drain()  # replays epoch 2 into a state that already holds it
+    assert os.path.exists(os.path.join(commits, last))
+    assert _canon(read_state(spark, state)) == _canon(fold_entity_state(ev))

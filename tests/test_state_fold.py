@@ -117,7 +117,7 @@ def test_compaction_crash_before_rename_leaves_no_generation(spark, tmp_path, mo
         commit(gen_dir)
         raise Crash
 
-    monkeypatch.setattr(ing, "commit", commit_then_crash)
+    monkeypatch.setattr("pasardassist_spark.streaming.generations.commit", commit_then_crash)
     with pytest.raises(Crash):
         ing.compact_state(spark, state)
     monkeypatch.undo()

@@ -676,7 +676,7 @@ def test_epoch_log_compaction_preserves_reader(spark, tmp_path):
     import os
     import shutil
 
-    from pasardassist_spark.streaming.dynamic import (
+    from pasardassist_spark.streaming.generations import (
         COMPACT_MANIFEST,
         admitted_events,
         compact_epoch_log,
