@@ -217,6 +217,21 @@ def run_subset(names: list[str]) -> None:
     spark.stop()
 
 
+def tree_round(repo: str) -> str:
+    """The tree a record measures: the short commit id, with a ``-dirty``
+    suffix when tracked files differ from it, so a record taken before
+    the commit does not name its parent; ``unknown`` outside git."""
+    import subprocess
+
+    try:
+        return subprocess.run(
+            ["git", "-C", repo, "describe", "--always", "--dirty"],
+            capture_output=True, text=True, timeout=10,
+        ).stdout.strip() or "unknown"
+    except (OSError, subprocess.SubprocessError):
+        return "unknown"
+
+
 def recall_drops(ann: dict, prev: dict) -> dict[str, dict]:
     """The ANN rows whose recall@10 fell below the previous record's.
 
@@ -631,17 +646,8 @@ def main() -> None:
     # factors must not clobber the round-over-round anchor.
     if sf == 0.1:
         try:
-            import subprocess
-
-            sha = subprocess.run(
-                ["git", "-C", REPO, "rev-parse", "--short", "HEAD"],
-                capture_output=True, text=True, timeout=10,
-            ).stdout.strip() or "unknown"
-        except (OSError, subprocess.SubprocessError):
-            sha = "unknown"
-        try:
             with open(last_path, "w") as f:
-                json.dump({**result, "round": sha}, f, indent=1)
+                json.dump({**result, "round": tree_round(REPO)}, f, indent=1)
         except OSError:
             pass
 

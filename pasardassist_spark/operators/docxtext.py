@@ -44,14 +44,11 @@ import re
 import zipfile
 import xml.etree.ElementTree as ET
 
+from pasardassist_spark.operators.opc import REL, REL_OFFICEDOC, main_part
+
 __all__ = ["encode_docx", "extract_docx_paragraphs", "sniff_docx"]
 
 _W = "http://schemas.openxmlformats.org/wordprocessingml/2006/main"
-_REL = "http://schemas.openxmlformats.org/package/2006/relationships"
-_REL_OFFICEDOC = (
-    "http://schemas.openxmlformats.org/officeDocument/2006/relationships"
-    "/officeDocument"
-)
 
 _OLE2_MAGIC = b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1"
 
@@ -95,7 +92,7 @@ def extract_docx_paragraphs(
         names = set(zf.namelist())
         if "EncryptedPackage" in names or "EncryptionInfo" in names:
             raise NotImplementedError("encrypted OOXML package unsupported")
-        doc_part = _main_part(zf, names)
+        doc_part = main_part(zf, names, "word/document.xml")
         try:
             root = ET.fromstring(zf.read(doc_part))
         except ET.ParseError as exc:
@@ -106,23 +103,6 @@ def extract_docx_paragraphs(
     out: list[str] = []
     _walk_block(body, out)
     return out
-
-
-def _main_part(zf: zipfile.ZipFile, names: set[str]) -> str:
-    """Locate the main document part through the package relationships."""
-    if "_rels/.rels" in names:
-        try:
-            rels = ET.fromstring(zf.read("_rels/.rels"))
-        except ET.ParseError as exc:
-            raise ValueError(f"malformed package rels: {exc}") from exc
-        for rel in rels.iter(f"{{{_REL}}}Relationship"):
-            if rel.get("Type") == _REL_OFFICEDOC:
-                target = (rel.get("Target") or "").lstrip("/")
-                if target in names:
-                    return target
-    if "word/document.xml" in names:  # rels missing/odd: Word's fixed path
-        return "word/document.xml"
-    raise ValueError("OOXML package has no main document part")
 
 
 def _walk_block(node: ET.Element, out: list[str]) -> None:
@@ -169,8 +149,8 @@ _CONTENT_TYPES = (
 
 _RELS = (
     '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-    f'<Relationships xmlns="{_REL}">'
-    f'<Relationship Id="rId1" Type="{_REL_OFFICEDOC}"'
+    f'<Relationships xmlns="{REL}">'
+    f'<Relationship Id="rId1" Type="{REL_OFFICEDOC}"'
     ' Target="word/document.xml"/></Relationships>'
 )
 

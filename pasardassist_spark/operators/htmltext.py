@@ -20,7 +20,7 @@ The real-world seam: production extraction adds language-aware stopword
 density and DOM-subtree scoring (jusText) — that refinement belongs at
 this same function boundary.
 
-Scale shape: ``mapInPandas`` over Arrow batches, map-only (no shuffle);
+Scale shape: one ``tables.map_rows`` stage, map-only (no shuffle);
 one Python parser pass per page, O(bytes). At 100 TB this stage is
 embarrassingly parallel and I/O-bound, exactly like the reference's
 per-event metadata parsing (src/modules/tasks/sub-tasks.service.ts
@@ -30,13 +30,12 @@ token-URI fetch + JSON parse, re-expressed for HTML pages).
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 from html.parser import HTMLParser
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from pasardassist_spark.tables import map_rows
 
 SKIP_TAGS = frozenset({"script", "style", "nav"})
 BLOCK_TAGS = frozenset(
@@ -106,24 +105,11 @@ _OUT_SCHEMA = T.StructType(
 
 
 def extract_main_text(df: DataFrame, html_col: str, id_col: str) -> DataFrame:
-    """Map-only HTML -> main-text extraction over Arrow batches."""
+    """Map-only HTML -> main-text extraction, one ``tables.map_rows``
+    stage."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for doc_id, html in zip(b[id_col], b[html_col]):
-                title, blocks, n_links = extract_page(html)
-                rows.append(
-                    (
-                        int(doc_id),
-                        title,
-                        "\n".join(blocks),
-                        len(blocks),
-                        n_links,
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _OUT_SCHEMA.fields]
-            )
+    def extract(doc_id, html):
+        title, blocks, n_links = extract_page(html)
+        yield int(doc_id), title, "\n".join(blocks), len(blocks), n_links
 
-    return df.mapInPandas(run, schema=_OUT_SCHEMA)
+    return map_rows(df.select(id_col, html_col), extract, _OUT_SCHEMA)

@@ -39,6 +39,8 @@ import re
 import zipfile
 import xml.etree.ElementTree as ET
 
+from pasardassist_spark.operators.opc import REL, REL_OFFICEDOC, main_part, part_rels
+
 __all__ = [
     "encode_pptx",
     "extract_pptx_slides",
@@ -49,8 +51,6 @@ __all__ = [
 _P = "http://schemas.openxmlformats.org/presentationml/2006/main"
 _A = "http://schemas.openxmlformats.org/drawingml/2006/main"
 _R = "http://schemas.openxmlformats.org/officeDocument/2006/relationships"
-_REL = "http://schemas.openxmlformats.org/package/2006/relationships"
-_REL_OFFICEDOC = f"{_R}/officeDocument"
 _REL_SLIDE = f"{_R}/slide"
 _REL_NOTES = f"{_R}/notesSlide"
 
@@ -59,54 +59,6 @@ _OLE2_MAGIC = b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1"
 
 def sniff_pptx(payload: bytes) -> bool:
     return payload[:4] == b"PK\x03\x04"
-
-
-def _resolve(base_dir: str, target: str) -> str:
-    target = target.lstrip("/")
-    if not base_dir:
-        return target
-    parts = (base_dir + "/" + target).split("/")
-    out: list[str] = []
-    for p in parts:
-        if p == "..":
-            if out:
-                out.pop()
-        elif p not in (".", ""):
-            out.append(p)
-    return "/".join(out)
-
-
-def _part_rels(zf: zipfile.ZipFile, names: set[str], part: str) -> dict[str, tuple[str, str]]:
-    d, _, base = part.rpartition("/")
-    rels_name = (d + "/" if d else "") + "_rels/" + base + ".rels"
-    if rels_name not in names:
-        return {}
-    try:
-        rels = ET.fromstring(zf.read(rels_name))
-    except ET.ParseError as exc:
-        raise ValueError(f"malformed part rels {rels_name}: {exc}") from exc
-    out: dict[str, tuple[str, str]] = {}
-    for rel in rels.iter(f"{{{_REL}}}Relationship"):
-        rid, typ, tgt = rel.get("Id"), rel.get("Type"), rel.get("Target") or ""
-        if rid:
-            out[rid] = (typ or "", _resolve(d, tgt))
-    return out
-
-
-def _main_part(zf: zipfile.ZipFile, names: set[str]) -> str:
-    if "_rels/.rels" in names:
-        try:
-            rels = ET.fromstring(zf.read("_rels/.rels"))
-        except ET.ParseError as exc:
-            raise ValueError(f"malformed package rels: {exc}") from exc
-        for rel in rels.iter(f"{{{_REL}}}Relationship"):
-            if rel.get("Type") == _REL_OFFICEDOC:
-                target = (rel.get("Target") or "").lstrip("/")
-                if target in names:
-                    return target
-    if "ppt/presentation.xml" in names:
-        return "ppt/presentation.xml"
-    raise ValueError("OOXML package has no main presentation part")
 
 
 def _slide_text(root: ET.Element) -> str:
@@ -155,12 +107,12 @@ def extract_pptx_slides(
         names = set(zf.namelist())
         if "EncryptedPackage" in names or "EncryptionInfo" in names:
             raise NotImplementedError("encrypted OOXML package unsupported")
-        pres_part = _main_part(zf, names)
+        pres_part = main_part(zf, names, "ppt/presentation.xml")
         try:
             pres = ET.fromstring(zf.read(pres_part))
         except ET.ParseError as exc:
             raise ValueError(f"malformed PresentationML: {exc}") from exc
-        rels = _part_rels(zf, names, pres_part)
+        rels = part_rels(zf, names, pres_part)
         sld_lst = pres.find(f"{{{_P}}}sldIdLst")
         if sld_lst is None:
             return []
@@ -202,12 +154,12 @@ def extract_pptx_notes(payload: bytes) -> list[str | None]:
         names = set(zf.namelist())
         if "EncryptedPackage" in names or "EncryptionInfo" in names:
             raise NotImplementedError("encrypted OOXML package unsupported")
-        pres_part = _main_part(zf, names)
+        pres_part = main_part(zf, names, "ppt/presentation.xml")
         try:
             pres = ET.fromstring(zf.read(pres_part))
         except ET.ParseError as exc:
             raise ValueError(f"malformed PresentationML: {exc}") from exc
-        rels = _part_rels(zf, names, pres_part)
+        rels = part_rels(zf, names, pres_part)
         sld_lst = pres.find(f"{{{_P}}}sldIdLst")
         if sld_lst is None:
             return []
@@ -219,7 +171,7 @@ def extract_pptx_notes(payload: bytes) -> list[str | None]:
                     f"slide id {sld.get('id')!r} has no resolvable r:id"
                 )
             slide_part = rels[rid][1]
-            srels = _part_rels(zf, names, slide_part)
+            srels = part_rels(zf, names, slide_part)
             note_tgt = next(
                 (t for _rid, (typ, t) in srels.items() if typ == _REL_NOTES),
                 None,
@@ -254,8 +206,8 @@ _CT_TMPL = (
 
 _PKG_RELS = (
     '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-    f'<Relationships xmlns="{_REL}">'
-    f'<Relationship Id="rId1" Type="{_REL_OFFICEDOC}"'
+    f'<Relationships xmlns="{REL}">'
+    f'<Relationship Id="rId1" Type="{REL_OFFICEDOC}"'
     ' Target="ppt/presentation.xml"/></Relationships>'
 )
 
@@ -336,7 +288,7 @@ def encode_pptx(
             slide_rels.append((
                 f"ppt/slides/_rels/slide{n - i}.xml.rels",
                 '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-                f'<Relationships xmlns="{_REL}">'
+                f'<Relationships xmlns="{REL}">'
                 f'<Relationship Id="rIdN1" Type="{_REL_NOTES}"'
                 f' Target="../notesSlides/notesSlide{n - i}.xml"/>'
                 "</Relationships>",
@@ -348,7 +300,7 @@ def encode_pptx(
     )
     pres_rels = (
         '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-        f'<Relationships xmlns="{_REL}">'
+        f'<Relationships xmlns="{REL}">'
         + "".join(rels_entries)
         + "</Relationships>"
     )

@@ -41,7 +41,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
-from pasardassist_spark.tables import local_frame
+from pasardassist_spark.operators.bpe import DRIVER_TYPES_MAX
+from pasardassist_spark.tables import local_frame, map_rows
 
 MAX_PIECE_LEN = 8
 
@@ -227,15 +228,6 @@ def prune_vocab(
 
 # ----------------------------------------------------------------- train
 
-# Scale-adaptive strategy switch shared with operators/bpe.py (see
-# bpe.DRIVER_TYPES_MAX): corpus-sized work is the one word_types
-# groupBy; when the type table is metadata-scale the EM refinement runs
-# sequentially on the driver over the SAME _lattice_counts kernel the
-# distributed E-step executes per Arrow batch, while the 10-100 M-type
-# regime (100 TB corpora) keeps the distributed loop unchanged.
-DRIVER_TYPES_MAX = 100_000
-
-
 def _seed_vocab_seq(
     types: list[tuple[str, int]], n_seeds: int, max_piece_len: int
 ) -> dict[str, float]:
@@ -299,10 +291,9 @@ def train_unigram(
     force the distributed loop (the tests' A/B lever)."""
     types_df = types_df.cache()
     seq_types: list[tuple[str, int]] | None = None
-    if types_df.count() <= driver_types_max:
-        seq_types = [
-            (r["word"], int(r["cnt"])) for r in types_df.collect()
-        ]
+    rows = types_df.limit(driver_types_max + 1).collect()
+    if len(rows) <= driver_types_max:
+        seq_types = [(r["word"], int(r["cnt"])) for r in rows]
         types_df.unpersist()
         probs = _seed_vocab_seq(seq_types, n_seeds, max_piece_len)
     else:
@@ -382,32 +373,27 @@ def unigram_encode(
     max_len: int = MAX_PIECE_LEN,
 ) -> DataFrame:
     """Viterbi-encode each document with a trained vocab: per-doc word,
-    piece, and unsegmentable-word counts. Map-only over Arrow batches;
-    the vocab is a closure-captured dict."""
+    piece, and unsegmentable-word counts. One ``tables.map_rows`` stage;
+    the vocab is a closure-captured dict, and each task segments a
+    distinct word once (the closure's cache)."""
     logp = {p: math.log(v) for p, v in probs.items() if v > 0.0}
+    cache: dict[str, tuple[int, bool]] = {}
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict[str, tuple[int, bool]] = {}
-        for b in batches:
-            rows = []
-            for doc_id, text in zip(b[id_col], b[text_col]):
-                words = text.split()
-                np_, nu = 0, 0
-                for w in words:
-                    hit = cache.get(w)
-                    if hit is None:
-                        seg = viterbi_segment(w, logp, max_len)
-                        unk = len(seg) == 1 and seg[0] not in logp
-                        hit = (len(seg), unk)
-                        cache[w] = hit
-                    np_ += hit[0]
-                    nu += hit[1]
-                rows.append((int(doc_id), len(words), np_, nu))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _ENC_SCHEMA.fields]
-            )
+    def encode(doc_id, text):
+        words = text.split()
+        np_, nu = 0, 0
+        for w in words:
+            hit = cache.get(w)
+            if hit is None:
+                seg = viterbi_segment(w, logp, max_len)
+                unk = len(seg) == 1 and seg[0] not in logp
+                hit = (len(seg), unk)
+                cache[w] = hit
+            np_ += hit[0]
+            nu += hit[1]
+        yield int(doc_id), len(words), np_, nu
 
-    return df.mapInPandas(run, schema=_ENC_SCHEMA)
+    return map_rows(df.select(id_col, text_col), encode, _ENC_SCHEMA)
 
 
 def vocab_table(spark: SparkSession, probs: dict[str, float]) -> DataFrame:

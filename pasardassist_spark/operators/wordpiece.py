@@ -3,23 +3,18 @@ longest-match-first encoding (the BERT tokenizer family).
 
 Public algorithm (Schuster & Nakajima 2012; Wu et al. 2016 "Google's
 NMT"; the HuggingFace tokenizers documentation describes the exact
-training loop): identical loop structure to BPE except the next merge
+training loop): the BPE training loop, except that the next merge
 maximizes the LIKELIHOOD score count(ab) / (count(a) * count(b)) rather
 than the raw pair count — preferring pairs whose parts rarely occur
 apart — and word-internal continuation symbols carry the ``##`` prefix.
-Encoding is NOT merge-replay: it is greedy longest-prefix matching
-against the final vocab, with a whole-word fallback to ``[UNK]``.
+Training is therefore the shared merge trainer of operators/bpe.py under
+the ``WORDPIECE`` rule. Encoding is NOT merge-replay: it is greedy
+longest-prefix matching against the final vocab, with a whole-word
+fallback to ``[UNK]``, run through bpe.py's type-grain encode plan.
 
 This completes the subword-tokenizer family next to operators/bpe.py
 (frequency-ranked merges) and operators/unigram.py (EM-pruned unigram
 LM): the three published algorithms production tokenizers use.
-
-Scale shape shared with bpe.py: all corpus-sized work is the ONE
-word-type groupBy (Zipf: types << tokens); each training round is two
-aggregations over the type table plus a 1-row argmax; encoding runs
-once per distinct TYPE through an Arrow-batched pandas UDF against the
-broadcast vocab (greedy matching is inherently per-word sequential —
-Python is justified over types only, never the token stream).
 
 Reference parity: the reference ships no tokenizer (its text surface is
 search regexes, src/modules/app/app.service.ts:446-474); this operator
@@ -28,86 +23,40 @@ belongs to the LLM-training-data extension surface.
 
 from __future__ import annotations
 
-import pandas as pd
+from pyspark.sql import DataFrame, functions as F
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pasardassist_spark.operators.bpe import (
+    BPE,
+    DRIVER_TYPES_MAX,
+    MergeRule,
+    encode_types,
+    train_merges,
+)
 
-# lineage-vs-materialization tradeoff, measured at sf0.1/30 merges (warm):
-# every round 7.0 s, every 2nd 6.0 s, every 3rd 7.4 s, every 5th 7.4 s —
-# two merge transforms of lineage recompute cost about one checkpoint job
-CHECKPOINT_EVERY = 2
 UNK = "[UNK]"
 CONT = "##"
-
-# Scale-adaptive strategy switch shared with operators/bpe.py (see
-# bpe.DRIVER_TYPES_MAX for the rationale): corpus-sized work is the one
-# word-type groupBy; a metadata-scale type table refines sequentially
-# on the driver with semantics the differential tests pin, a 10-100 M
-# type table (the 100 TB regime) runs the distributed loop unchanged.
-DRIVER_TYPES_MAX = 100_000
-
-
-def _train_wp_seq(
-    types: list[tuple[list[str], int]], n_merges: int
-) -> list[tuple[str, str, float]]:
-    """Sequential WordPiece refinement over a collected type table —
-    the exact driver-side scoring the distributed loop already does
-    (same count identity, same float64 score, same tiebreak), minus the
-    per-round Spark job."""
-    merges: list[tuple[str, str, float]] = []
-    for _ in range(n_merges):
-        pair_n: dict[tuple[str, str], int] = {}
-        lasts: dict[str, int] = {}
-        for syms, cnt in types:
-            for pair in zip(syms, syms[1:]):
-                pair_n[pair] = pair_n.get(pair, 0) + cnt
-            if syms:
-                lasts[syms[-1]] = lasts.get(syms[-1], 0) + cnt
-        # count(s) = pair counts where s is LEFT + words ending in s
-        # (the identity the distributed round derives from its one pass)
-        sym_n: dict[str, int] = {}
-        for (left, _right), n in pair_n.items():
-            sym_n[left] = sym_n.get(left, 0) + n
-        for s, n in lasts.items():
-            sym_n[s] = sym_n.get(s, 0) + n
-        best = None  # (-score, left, right): ties (score desc, lexical)
-        for (left, right), n in pair_n.items():
-            if n < 2:  # a score over singletons is noise
-                continue
-            score = float(n) / (float(sym_n[left]) * float(sym_n[right]))
-            key = (-score, left, right)
-            if best is None or key < best:
-                best = key
-        if best is None:
-            break
-        score, left, right = -best[0], best[1], best[2]
-        merges.append((left, right, score))
-        joined = left + _strip_cont(right)
-        nxt: list[tuple[list[str], int]] = []
-        for syms, cnt in types:
-            out: list[str] = []
-            for s in syms:
-                if out and out[-1] == left and s == right:
-                    out[-1] = joined
-                else:
-                    out.append(s)
-            nxt.append((out, cnt))
-        types = nxt
-    return merges
 
 
 def _wp_symbols(word_col) -> F.Column:
     """Initial WordPiece symbolization: first char plain, every later
     char prefixed with the continuation marker."""
-    chars = F.split(word_col, r"(?!^)(?=.)")
     return F.transform(
-        chars,
+        BPE.symbols(word_col),
         lambda c, i: F.when(i == 0, c).otherwise(F.concat(F.lit(CONT), c)),
     )
 
 
 def _strip_cont(sym: str) -> str:
     return sym[len(CONT) :] if sym.startswith(CONT) else sym
+
+
+# the merged symbol keeps LEFT's continuation status; RIGHT's ## marker
+# dissolves into the join (ab / ##ab, never a####b)
+WORDPIECE = MergeRule(
+    symbols=_wp_symbols,
+    score=lambda n_ab, n_a, n_b: float(n_ab) / (float(n_a) * float(n_b)),
+    join=lambda left, right: left + _strip_cont(right),
+)
 
 
 def train_wordpiece(
@@ -119,115 +68,13 @@ def train_wordpiece(
     """Learn ``n_merges`` WordPiece merges; returns [(left, right, score)]
     in merge order. Deterministic: ties break on (score desc, left,
     right); pairs below absolute count 2 stop training (a score over
-    singletons is noise).
+    singletons is noise). The score is float64 over the exact symbol
+    counts of bpe.py's one-aggregation round.
 
-    Per round: ONE aggregation job over the word-TYPE table (the r10
-    verdict directive — the old loop ran a pair aggregation AND a
-    symbol aggregation plus two joins per round).  The single pass
-    emits every adjacent pair PLUS a last-symbol marker row (right =
-    NULL) per word; the collected frame is pair-count metadata —
-    bounded by distinct adjacent symbol pairs, i.e. at most
-    |active vocab|² and Zipf-truncated far below that in practice (the
-    in-memory HuggingFace trainer holds the identical map) — and the
-    per-symbol counts are DERIVED from it driver-side via the exact
-    identity
-
-        count(s) = sum of pair counts where s is the LEFT symbol
-                 + sum of word counts whose LAST symbol is s
-
-    (every occurrence of s in a word is either the left element of one
-    adjacent pair or the word's final symbol; single-symbol words fall
-    entirely into the `lasts` term).  Scoring and the argmax are then
-    pure Python over that metadata map — float64 division, identical
-    to the double arithmetic the old Spark-side plan used."""
-    from pasardassist_spark.operators.text import tokens
-
-    types_df = (
-        corpus.select(F.explode(tokens(F.col(text_col))).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(_wp_symbols(F.col("w")).alias("syms"), "cnt")
-        .localCheckpoint()
-    )
-    if types_df.count() <= driver_types_max:  # count of a materialized RDD
-        rows = types_df.collect()
-        types_df.unpersist()
-        return _train_wp_seq(
-            [(list(r["syms"]), int(r["cnt"])) for r in rows], n_merges
-        )
-    # adjacent pairs + one (last_symbol, NULL) marker row per word, so a
-    # single explode/groupBy computes numerator AND denominator inputs
-    pairs_and_last = F.concat(
-        F.when(
-            F.size("syms") >= 2,
-            F.transform(
-                F.slice("syms", 1, F.size("syms") - 1),
-                lambda x, i: F.struct(
-                    x.alias("left"), F.element_at("syms", i + 2).alias("right")
-                ),
-            ),
-        ).otherwise(F.array().cast("array<struct<left:string,right:string>>")),
-        F.array(
-            F.struct(
-                F.element_at("syms", -1).alias("left"),
-                F.lit(None).cast("string").alias("right"),
-            )
-        ),
-    )
-    prev_ckpt = types_df
-    merges: list[tuple[str, str, float]] = []
-    for i in range(n_merges):
-        rows = (
-            types_df.select(F.explode(pairs_and_last).alias("u"), "cnt")
-            .groupBy("u.left", "u.right")
-            .agg(F.sum("cnt").alias("n"))
-            .collect()
-        )
-        pair_n: dict[tuple[str, str], int] = {}
-        sym_n: dict[str, int] = {}
-        for r in rows:
-            if r.right is None:
-                sym_n[r.left] = sym_n.get(r.left, 0) + r.n
-            else:
-                pair_n[(r.left, r.right)] = r.n
-                sym_n[r.left] = sym_n.get(r.left, 0) + r.n
-        best = None  # (score, left, right); ties break (score desc, left, right)
-        for (left, right), n in pair_n.items():
-            if n < 2:  # a score over singletons is noise
-                continue
-            score = float(n) / (float(sym_n[left]) * float(sym_n[right]))
-            key = (-score, left, right)
-            if best is None or key < best:
-                best = key
-        if best is None:
-            break
-        score, left, right = -best[0], best[1], best[2]
-        merges.append((left, right, score))
-        # merged symbol keeps LEFT's continuation status; RIGHT's ##
-        # marker dissolves into the join (ab / ##ab, never a####b)
-        types_df = _apply_merge_wp(types_df, left, right)
-        if (i + 1) % CHECKPOINT_EVERY == 0:
-            types_df = types_df.localCheckpoint()
-            prev_ckpt.unpersist()
-            prev_ckpt = types_df
-    prev_ckpt.unpersist()
-    return merges
-
-
-def _apply_merge_wp(types_df: DataFrame, left: str, right: str) -> DataFrame:
-    """bpe._apply_merge with WordPiece join semantics: the merged symbol
-    is left + right-without-##."""
-    a, b = F.lit(left), F.lit(right)
-    joined = F.lit(left + _strip_cont(right))
-    merged = F.aggregate(
-        "syms",
-        F.array().cast("array<string>"),
-        lambda acc, x: F.when(
-            (F.size(acc) > 0) & (F.element_at(acc, -1) == a) & (x == b),
-            F.concat(F.slice(acc, 1, F.size(acc) - 1), F.array(joined)),
-        ).otherwise(F.concat(acc, F.array(x))),
-    )
-    return types_df.select(merged.alias("syms"), "cnt")
+    ``driver_types_max``: type tables at or below this size train on the
+    driver (see bpe.DRIVER_TYPES_MAX); pass 0 to force the distributed
+    loop."""
+    return train_merges(corpus, text_col, n_merges, WORDPIECE, driver_types_max)
 
 
 def wordpiece_vocab(
@@ -253,7 +100,7 @@ def wordpiece_vocab(
     vocab: list[str] = [UNK] + [r.s for r in chars]
     seen = set(vocab)
     for left, right, _ in merges:
-        prod = left + _strip_cont(right)
+        prod = WORDPIECE.join(left, right)
         if prod not in seen:
             seen.add(prod)
             vocab.append(prod)
@@ -288,44 +135,20 @@ def encode_word_wp(word: str, vocab: set[str]) -> list[str]:
 def wordpiece_encode(
     corpus: DataFrame, text_col: str, id_col: str, vocab: list[str]
 ) -> DataFrame:
-    """Tokenize the corpus under a trained vocab: word-TYPE-grain greedy
-    matching (Arrow-batched over distinct types with the vocab as a
-    broadcast set), type→pieces joined back on the word equi-key,
-    per-doc order restored by position (the bpe_encode plan shape).
+    """Tokenize the corpus under a trained vocab: ``encode_word_wp`` with
+    the vocab as a closure-captured set, run through bpe.py's type-grain
+    encode plan (``encode_types``).
 
     Returns (id_col, wp_tokens array<string>, n_wp_tokens long,
     n_unk long)."""
-    from pyspark.sql.functions import pandas_udf
-
-    from pasardassist_spark.operators.text import tokens
-
     vset = set(vocab)
-
-    @pandas_udf("array<string>")
-    def _encode(words: pd.Series) -> pd.Series:
-        return words.map(lambda w: encode_word_wp(w, vset))
-
-    doc_words = corpus.select(
-        F.col(id_col),
-        F.posexplode(tokens(F.col(text_col))).alias("pos", "w"),
-    ).filter(F.length("w") > 0)  # empty text -> split yields one "" token
-    types = doc_words.select("w").distinct().select(
-        "w", _encode(F.col("w")).alias("pieces")
-    )
-    return (
-        doc_words.join(types, "w")
-        .groupBy(id_col)
-        .agg(
-            F.flatten(
-                F.array_sort(F.collect_list(F.struct("pos", "pieces"))).pieces
-            ).alias("wp_tokens")
-        )
-        .select(
-            id_col,
-            "wp_tokens",
-            F.size("wp_tokens").cast("long").alias("n_wp_tokens"),
-            F.size(F.filter("wp_tokens", lambda t: t == UNK))
-            .cast("long")
-            .alias("n_unk"),
-        )
+    return encode_types(
+        corpus, text_col, id_col, lambda w: encode_word_wp(w, vset), "wp_tokens"
+    ).select(
+        id_col,
+        "wp_tokens",
+        F.size("wp_tokens").cast("long").alias("n_wp_tokens"),
+        F.size(F.filter("wp_tokens", lambda t: t == UNK))
+        .cast("long")
+        .alias("n_unk"),
     )

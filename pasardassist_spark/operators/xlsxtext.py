@@ -52,12 +52,12 @@ import re
 import zipfile
 import xml.etree.ElementTree as ET
 
+from pasardassist_spark.operators.opc import REL, REL_OFFICEDOC, main_part, part_rels
+
 __all__ = ["encode_xlsx", "extract_xlsx_cells", "sniff_xlsx"]
 
 _S = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
 _R = "http://schemas.openxmlformats.org/officeDocument/2006/relationships"
-_REL = "http://schemas.openxmlformats.org/package/2006/relationships"
-_REL_OFFICEDOC = f"{_R}/officeDocument"
 _REL_WORKSHEET = f"{_R}/worksheet"
 _REL_SHARED = f"{_R}/sharedStrings"
 
@@ -89,55 +89,6 @@ def _si_text(si: ET.Element) -> str:
         elif tag == f"{{{_S}}}r":
             out.extend(t.text or "" for t in child.iter(f"{{{_S}}}t"))
     return "".join(out)
-
-
-def _resolve(base_dir: str, target: str) -> str:
-    target = target.lstrip("/")
-    if not base_dir:
-        return target
-    parts = (base_dir + "/" + target).split("/")
-    out: list[str] = []
-    for p in parts:
-        if p == "..":
-            if out:
-                out.pop()
-        elif p not in (".", ""):
-            out.append(p)
-    return "/".join(out)
-
-
-def _part_rels(zf: zipfile.ZipFile, names: set[str], part: str) -> dict[str, tuple[str, str]]:
-    """rId -> (type, resolved target) for a part's .rels sidecar."""
-    d, _, base = part.rpartition("/")
-    rels_name = (d + "/" if d else "") + "_rels/" + base + ".rels"
-    if rels_name not in names:
-        return {}
-    try:
-        rels = ET.fromstring(zf.read(rels_name))
-    except ET.ParseError as exc:
-        raise ValueError(f"malformed part rels {rels_name}: {exc}") from exc
-    out: dict[str, tuple[str, str]] = {}
-    for rel in rels.iter(f"{{{_REL}}}Relationship"):
-        rid, typ, tgt = rel.get("Id"), rel.get("Type"), rel.get("Target") or ""
-        if rid:
-            out[rid] = (typ or "", _resolve(d, tgt))
-    return out
-
-
-def _main_part(zf: zipfile.ZipFile, names: set[str]) -> str:
-    if "_rels/.rels" in names:
-        try:
-            rels = ET.fromstring(zf.read("_rels/.rels"))
-        except ET.ParseError as exc:
-            raise ValueError(f"malformed package rels: {exc}") from exc
-        for rel in rels.iter(f"{{{_REL}}}Relationship"):
-            if rel.get("Type") == _REL_OFFICEDOC:
-                target = (rel.get("Target") or "").lstrip("/")
-                if target in names:
-                    return target
-    if "xl/workbook.xml" in names:  # rels missing/odd: Excel's fixed path
-        return "xl/workbook.xml"
-    raise ValueError("OOXML package has no main workbook part")
 
 
 def _cell_text(c: ET.Element, shared: list[str]) -> str:
@@ -193,12 +144,12 @@ def extract_xlsx_cells(
         names = set(zf.namelist())
         if "EncryptedPackage" in names or "EncryptionInfo" in names:
             raise NotImplementedError("encrypted OOXML package unsupported")
-        wb_part = _main_part(zf, names)
+        wb_part = main_part(zf, names, "xl/workbook.xml")
         try:
             wb = ET.fromstring(zf.read(wb_part))
         except ET.ParseError as exc:
             raise ValueError(f"malformed SpreadsheetML: {exc}") from exc
-        rels = _part_rels(zf, names, wb_part)
+        rels = part_rels(zf, names, wb_part)
         shared: list[str] = []
         for _rid, (typ, tgt) in rels.items():
             if typ == _REL_SHARED and tgt in names:
@@ -265,8 +216,8 @@ _CONTENT_TYPES = (
 
 _PKG_RELS = (
     '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-    f'<Relationships xmlns="{_REL}">'
-    f'<Relationship Id="rId1" Type="{_REL_OFFICEDOC}"'
+    f'<Relationships xmlns="{REL}">'
+    f'<Relationship Id="rId1" Type="{REL_OFFICEDOC}"'
     ' Target="xl/workbook.xml"/></Relationships>'
 )
 
@@ -352,7 +303,7 @@ def encode_xlsx(cells: list[str]) -> bytes:
     )
     wb_rels = (
         '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-        f'<Relationships xmlns="{_REL}">'
+        f'<Relationships xmlns="{REL}">'
         + "".join(
             f'<Relationship Id="rIdS{i + 1}" Type="{_REL_WORKSHEET}"'
             f' Target="worksheets/sheet{i + 1}.xml"/>'
@@ -477,7 +428,7 @@ def extract_xlsx_typed(payload: bytes) -> list[list[tuple[str, str]]]:
         names = set(zf.namelist())
         if "EncryptedPackage" in names or "EncryptionInfo" in names:
             raise NotImplementedError("encrypted OOXML package unsupported")
-        wb_part = _main_part(zf, names)
+        wb_part = main_part(zf, names, "xl/workbook.xml")
         wb = ET.fromstring(zf.read(wb_part))
         # the workbook's date system declaration (ECMA-376 §18.2.28):
         # Mac-authored files set workbookPr/@date1904 and every serial
@@ -486,7 +437,7 @@ def extract_xlsx_typed(payload: bytes) -> list[list[tuple[str, str]]]:
         date1904 = wpr is not None and (
             (wpr.get("date1904") or "").lower() in ("1", "true")
         )
-        rels = _part_rels(zf, names, wb_part)
+        rels = part_rels(zf, names, wb_part)
         shared: list[str] = []
         for _rid, (typ, tgt) in rels.items():
             if typ == _REL_SHARED and tgt in names:
@@ -599,7 +550,7 @@ def encode_xlsx_table(
     )
     wb_rels = (
         '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-        f'<Relationships xmlns="{_REL}">'
+        f'<Relationships xmlns="{REL}">'
         f'<Relationship Id="rIdS1" Type="{_REL_WORKSHEET}"'
         ' Target="worksheets/sheet1.xml"/>'
         f'<Relationship Id="rIdSS" Type="{_REL_SHARED}"'

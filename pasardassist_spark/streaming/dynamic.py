@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from pasardassist_spark.streaming.generations import (
+    latest_unless_replayed,
     publish_epoch,
     read_state,
     write_generation,
@@ -59,7 +60,8 @@ def process_collection_batch(
     """One micro-batch of the multiplexed ingest (the foreachBatch body,
     module-level so retry semantics are directly testable): admit
     (batch ∪ pending) events whose collection is registered via an
-    epoch-keyed staged publish; park the rest."""
+    epoch-keyed staged publish; park the rest. A replayed epoch leaves the
+    pending table as its first run wrote it."""
     spark = batch_df.sparkSession
     ctrl = read_state(spark, control_dir)
     pending = read_state(spark, pending_dir)
@@ -71,7 +73,8 @@ def process_collection_batch(
         admitted = candidates.join(F.broadcast(key), collection_col, "semi")
         parked = candidates.join(F.broadcast(key), collection_col, "anti")
         publish_epoch(admitted, out_dir, epoch_id)
-    write_generation(parked, pending_dir)
+    if not latest_unless_replayed(pending_dir, epoch_id)[1]:
+        write_generation(parked, pending_dir, epoch_id=epoch_id)
 
 
 def dynamic_collection_sink(

@@ -1,7 +1,8 @@
 """``tables.map_rows``: the one per-row Python stage.
 
 Pins (a) that no other function under ``pasardassist_spark/`` hand-writes
-the per-row loop (any ``for ... in it:`` batch loop with a row loop that
+the per-row loop (a batch loop — ``for ... in it:``, or a loop over any
+parameter of a function handed to ``mapInPandas`` — with a row loop that
 calls ``append`` or ``extend``),
 and (b) the helper's contract: zero, one or many output rows per input
 row, empty partitions, nulls, binary and array columns, and an exception
@@ -22,13 +23,34 @@ PKG = os.path.join(
 )
 
 
-def _is_batch_loop(node: ast.AST) -> bool:
-    return (
+def _is_batch_loop(node: ast.AST, params: set[str]) -> bool:
+    """A loop over ``it``, or over a parameter of a function handed to
+    ``mapInPandas`` that yields per batch (a fold that yields once after
+    its loop is not a per-row stage)."""
+    if not (
         isinstance(node, ast.For)
         and isinstance(node.target, ast.Name)
         and isinstance(node.iter, ast.Name)
-        and node.iter.id == "it"
+    ):
+        return False
+    return node.iter.id == "it" or (
+        node.iter.id in params
+        and any(isinstance(n, (ast.Yield, ast.YieldFrom)) for n in ast.walk(node))
     )
+
+
+def _map_in_pandas_fns(tree: ast.AST) -> set[str]:
+    """Names of the functions a module hands to ``mapInPandas``."""
+    names = set()
+    for call in ast.walk(tree):
+        if (
+            isinstance(call, ast.Call)
+            and isinstance(call.func, ast.Attribute)
+            and call.func.attr == "mapInPandas"
+        ):
+            args = call.args[:1] + [k.value for k in call.keywords if k.arg == "func"]
+            names.update(a.id for a in args if isinstance(a, ast.Name))
+    return names
 
 
 def _appends_per_row(loop: ast.For) -> bool:
@@ -63,18 +85,20 @@ def _hand_written_row_loops(root: str) -> list[str]:
                 and path == os.path.join(PKG, "tables.py")
                 for n in ast.walk(fn)
             }
+            handed = _map_in_pandas_fns(tree)
             for fn in ast.walk(tree):
                 if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
                     continue
                 if id(fn) in helper:
                     continue
+                params = {a.arg for a in fn.args.args} if fn.name in handed else set()
                 # only loops owned by this function, not by a nested def
                 stack = list(ast.iter_child_nodes(fn))
                 while stack:
                     node = stack.pop()
                     if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
                         continue
-                    if _is_batch_loop(node) and _appends_per_row(node):
+                    if _is_batch_loop(node, params) and _appends_per_row(node):
                         found.append(f"{os.path.relpath(path, root)}:{node.lineno} {fn.name}")
                     stack.extend(ast.iter_child_nodes(node))
     return found
@@ -106,9 +130,32 @@ def test_scan_flags_a_hand_written_loop(tmp_path):
         "            yield rows\n"
         "    return _parse\n"
     )
+    (tmp_path / "udf.py").write_text(
+        "def udf(df):\n"
+        "    def run(batches):\n"
+        "        for b in batches:\n"
+        "            rows = []\n"
+        "            for x in b['x']:\n"
+        "                rows.append(x)\n"
+        "            yield rows\n"
+        "    def fold(batches):\n"
+        "        seen = []\n"
+        "        for b in batches:\n"
+        "            for x in b['x']:\n"
+        "                seen.append(x)\n"
+        "        yield seen\n"
+        "    def helper(batches):\n"
+        "        for b in batches:\n"
+        "            for x in b['x']:\n"
+        "                b.append(x)\n"
+        "            yield b\n"
+        "    df.mapInPandas(fold, 'x long')\n"
+        "    return df.mapInPandas(func=run, schema='x long')\n"
+    )
     assert _hand_written_row_loops(str(tmp_path)) == [
         "reader.py:3 _parse",
         "stage.py:3 _batches",
+        "udf.py:3 run",
     ]
 
 

@@ -621,8 +621,9 @@ def test_incremental_collection_stats_equals_batch(spark, sf_dir, tmp_path):
 def test_admitted_sink_exactly_once_under_retry(spark, tmp_path):
     """VERDICT r5 directive #5: a foreachBatch retry (same epoch_id, same
     batch — Spark's retry contract) must NOT double-append to the admitted
-    log; a crashed pre-commit attempt (slot dir without marker) must be
-    invisible to readers and replaced by the retry."""
+    log nor park the batch's unregistered events twice; a crashed
+    pre-commit attempt (slot dir without marker) must be invisible to
+    readers and replaced by the retry."""
     import os
 
     from pasardassist_spark.streaming import (
@@ -630,7 +631,7 @@ def test_admitted_sink_exactly_once_under_retry(spark, tmp_path):
         process_collection_batch,
         register_collection,
     )
-    from pasardassist_spark.streaming.generations import COMMIT_MARKER
+    from pasardassist_spark.streaming.generations import COMMIT_MARKER, read_state
 
     control = str(tmp_path / "control")
     out = str(tmp_path / "out")
@@ -654,6 +655,9 @@ def test_admitted_sink_exactly_once_under_retry(spark, tmp_path):
 
     got = admitted_events(spark, out)
     assert sorted(r.event_id for r in got.collect()) == [1, 3]  # once each
+    # the replay does not park the unregistered event a second time
+    parked = read_state(spark, pending)
+    assert sorted(r.event_id for r in parked.collect()) == [2]
     # exactly one committed slot for the epoch; the junk is gone
     slot = os.path.join(out, "e000000007")
     assert os.path.exists(os.path.join(slot, COMMIT_MARKER))
@@ -666,6 +670,12 @@ def test_admitted_sink_exactly_once_under_retry(spark, tmp_path):
     process_collection_batch(batch2, 8, control, out, pending)
     got2 = admitted_events(spark, out)
     assert sorted(r.event_id for r in got2.collect()) == [1, 3, 9]
+
+    # registering the parked collection admits its event exactly once
+    register_collection(spark, control, "bid")
+    process_collection_batch(batch2.limit(0), 9, control, out, pending)
+    got3 = admitted_events(spark, out)
+    assert sorted(r.event_id for r in got3.collect()) == [1, 2, 3, 9]
 
 
 def test_epoch_log_compaction_preserves_reader(spark, tmp_path):

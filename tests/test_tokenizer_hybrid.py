@@ -6,9 +6,16 @@ distributed loop on the same corpus the sequential path handles."""
 
 from __future__ import annotations
 
+import pytest
+
+from pasardassist_spark.operators import bpe
 from pasardassist_spark.operators import unigram as U
-from pasardassist_spark.operators.bpe import train_bpe_merges
-from pasardassist_spark.operators.wordpiece import train_wordpiece, wordpiece_vocab
+from pasardassist_spark.operators.bpe import bpe_encode, train_bpe_merges
+from pasardassist_spark.operators.wordpiece import (
+    train_wordpiece,
+    wordpiece_encode,
+    wordpiece_vocab,
+)
 
 CORPUS = [
     ("low lower lowest low low",),
@@ -38,6 +45,40 @@ def test_wordpiece_seq_equals_distributed(spark):
     v_seq, _ = wordpiece_vocab(d, "text", 10)
     v_dist, _ = wordpiece_vocab(d, "text", 10, driver_types_max=0)
     assert v_seq == v_dist
+
+
+@pytest.mark.parametrize("train", [train_bpe_merges, train_wordpiece])
+def test_switch_boundary_is_the_exact_type_count(spark, monkeypatch, train):
+    """A type table of exactly ``driver_types_max`` types trains on the
+    driver; one type more than the limit trains distributed; both learn
+    the same merges."""
+    n_types = len({w for (text,) in CORPUS for w in text.split()})
+    spark_loops = []
+    loop = bpe._merge_loop_spark
+
+    def spy(*args):
+        spark_loops.append(args[1:])
+        return loop(*args)
+
+    monkeypatch.setattr(bpe, "_merge_loop_spark", spy)
+    d = _df(spark)
+    at = train(d, "text", 10, driver_types_max=n_types)
+    assert spark_loops == []
+    below = train(d, "text", 10, driver_types_max=n_types - 1)
+    assert len(spark_loops) == 1
+    assert at == below and len(at) > 0
+
+
+def test_blank_and_empty_documents_encode_to_no_row(spark):
+    d = _df(spark)
+    docs = spark.createDataFrame(
+        [(1, "   "), (2, "low newest"), (3, ""), (4, None)], "id long, text string"
+    )
+    bpe_rows = bpe_encode(docs, "text", train_bpe_merges(d, "text", 10), "id")
+    vocab, _ = wordpiece_vocab(d, "text", 10)
+    wp_rows = wordpiece_encode(docs, "text", "id", vocab)
+    assert [r.id for r in bpe_rows.collect()] == [2]
+    assert [r.id for r in wp_rows.collect()] == [2]
 
 
 def test_unigram_seq_equals_distributed(spark):
