@@ -41,8 +41,11 @@ def _to_wei(price: float | int | str):
 
 def _keyword_filter(keyword: str, *cols: Column | str) -> Column:
     """Case-insensitive substring match over any of ``cols`` (the
-    reference's `$regex ... $options: 'i'` filters)."""
-    kw = keyword.lower()
+    reference's `$regex ... $options: 'i'` filters). The keyword goes
+    through Spark's ``lower`` like the columns, so both sides use one
+    case table (Python's ``str.lower`` is a newer Unicode than the
+    JVM's); the literal is constant-folded, so it costs nothing per row."""
+    kw = F.lower(F.lit(keyword))
     pred = F.lit(False)
     for c in cols:
         pred = pred | (F.instr(F.lower(F.col(c) if isinstance(c, str) else c), kw) > 0)
@@ -295,12 +298,9 @@ class PasarQueryService:
 
     # -- quick search (app.service.ts:1288-1310) ----------------------------
     def quick_search(self, keyword: str, k: int = 3) -> DataFrame:
-        kw = keyword.lower()
         return (
             self.tokens.filter(
-                (F.instr(F.lower("name"), kw) > 0)
-                | (F.instr(F.lower("description"), kw) > 0)
-                | (F.instr(F.lower(F.col("creator.name")), kw) > 0)
+                _keyword_filter(keyword, "name", "description", "creator.name")
             )
             .orderBy(F.desc("createTime"), F.desc("tokenId"))
             .limit(k)
@@ -1159,14 +1159,13 @@ class PasarQueryService:
 
     # -- multi-entity quick search (app.service.ts:1274-1317) ----------------
     def quick_search_collections(self, keyword: str, k: int = 3) -> DataFrame:
-        kw = keyword.lower()
         return (
             self.collections.filter(
                 (F.col("owner") == keyword)
                 | (F.col("token") == keyword)
-                | (F.instr(F.lower("name"), kw) > 0)
-                | (F.instr(F.lower(F.col("data.description")), kw) > 0)
-                | (F.instr(F.lower(F.col("creator.name")), kw) > 0)
+                | _keyword_filter(
+                    keyword, "name", "data.description", "creator.name"
+                )
             )
             .orderBy(F.asc("chain"), F.asc("token"))
             .limit(k)

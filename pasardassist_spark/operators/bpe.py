@@ -45,8 +45,8 @@ DRIVER_TYPES_MAX types (a few MB of (word, cnt) pairs), 20 rounds of Spark
 jobs would be pure scheduler overhead over a frame the driver holds
 trivially, so the rounds run as a sequential driver loop with the same
 counts, argmax and merge. One bounded ``limit(max + 1).collect()`` of the
-materialized type table decides the switch and, below it, is the driver
-loop's input.
+type-table aggregate decides the switch and, below it, is the driver
+loop's input; only the distributed loop checkpoints the table.
 
 Differential checks: tests/test_operators.py and tests/test_wordpiece.py
 train on tiny corpora against independent sequential references;
@@ -234,15 +234,13 @@ def train_merges(
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select(rule.symbols(F.col("w")).alias("syms"), "cnt")
-        .localCheckpoint()
     )
     rows = types_df.limit(driver_types_max + 1).collect()
     if len(rows) <= driver_types_max:
-        types_df.unpersist()
         return _merge_loop_driver(
             [(list(r["syms"]), int(r["cnt"])) for r in rows], n_merges, rule
         )
-    return _merge_loop_spark(types_df, n_merges, rule)
+    return _merge_loop_spark(types_df.localCheckpoint(), n_merges, rule)
 
 
 def train_bpe_merges(

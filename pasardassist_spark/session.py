@@ -13,7 +13,27 @@ dim-stats-derived broadcast threshold, and 256 MiB scan splits so a
 
 Shared invariants across profiles: AQE on, UTC session timezone (oracle
 comparability), Arrow for the Pandas-UDF slow path, NANOS-as-long
-parquet reads (the events table encodes TIMESTAMP(NANOS)).
+parquet reads (the events table encodes TIMESTAMP(NANOS)), and two
+Spark 4 defaults turned off because they cost time and do no work the
+engine needs:
+
+- ``spark.sql.icu.caseMappings.enabled=false``: ``lower``/``upper`` take
+  ``UTF8String``'s ASCII fast path, else the JVM's
+  ``String.toLowerCase``/``toUpperCase`` (default locale, as ICU's).
+  With ICU on, the first case mapping in a JVM builds ICU's title-case
+  lookup table: about 650 ms on 4 cores, paid by the first request that
+  lowercases anything. The JVM tables are JDK 17's Unicode 13, so a
+  Unicode 14 letter (U+A7D0) keeps its case; ``initcap`` differs from
+  ICU on some one-to-many mappings and the package does not call it.
+- ``spark.python.sql.dataFrameDebugging.enabled=false`` (static: only
+  the builder can set it): PySpark 4 wraps every ``functions``/
+  ``Column`` call to capture its Python call site for error messages —
+  a conf read, two py4j calls and a stack walk that tries
+  ``import IPython, ipykernel`` (where IPython is installed without
+  ipykernel, the first call imports IPython and every call retries the
+  failing import). Off, building one round of the 10 ``api_serving``
+  endpoint families makes about 1,400 py4j round trips instead of about
+  3,800. Errors lose their "DataFrame query context" block.
 """
 
 from __future__ import annotations
@@ -76,6 +96,9 @@ def build_conf(
         "spark.sql.autoBroadcastJoinThreshold": str(
             broadcast_threshold(largest_dim_bytes)
         ),
+        # both cost time and do no work the engine needs (module docstring)
+        "spark.sql.icu.caseMappings.enabled": "false",
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
     }
     if profile == "local":
         cpus = _cpus()

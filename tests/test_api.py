@@ -812,3 +812,98 @@ def test_route_builder_parity():
         f"ref-only={sorted(set(ref_routes) - set(service.ROUTES))}, "
         f"repo-only={sorted(set(service.ROUTES) - set(ref_routes))}"
     )
+
+
+# Parameters for each endpoint family perfbench's api_serving sends, over
+# the svc_collections fixture (perfbench/api_serving.request_params shape).
+_PAGE = {"page_num": 1, "page_size": 10}
+PERFBENCH_REQUESTS = {
+    "marketplace": {"status": ("BuyNow", "OnAuction"), "collection": "ela-c1",
+                    "sort": "price_asc", "page": _PAGE},
+    "collectibles_by_wallet": {"wallet": "alice", "page": _PAGE},
+    "transactions": {"wallet": "alice", "page": _PAGE},
+    "quick_search": {"keyword": "cat"},
+    "token_order_by_token_id": {"token_id": "1"},
+    "collections_list": {"chain": "ela", "sort": "tradeVolume", "page": _PAGE},
+    "user_statistics": {"wallet": "alice"},
+    "price_history": {"unique_key": "ela-c1-1"},
+    "latest_bids": {"token_id": "2", "page": _PAGE},
+    "market_totals": {},
+}
+
+# Spark jobs per request, counted over each family's job group on the
+# svc_collections fixture when the ceilings were set. A plan change that
+# adds an action or a job-running subquery shows here as a job more.
+# marketplace read 7, 8 or 9 over 20 sessions: which of its query stages
+# AQE still submits after an earlier one finishes is a race, so its
+# ceiling is the highest count seen.
+JOBS_CEILING = {
+    "marketplace": 9,
+    "collectibles_by_wallet": 3,
+    "transactions": 3,
+    "quick_search": 1,
+    "token_order_by_token_id": 5,
+    "collections_list": 8,
+    "user_statistics": 8,
+    "price_history": 2,
+    "latest_bids": 5,
+    "market_totals": 9,
+}
+
+
+def test_perfbench_families_are_all_covered():
+    from perfbench.api_serving import FAMILIES
+
+    assert set(PERFBENCH_REQUESTS) == set(FAMILIES) == set(JOBS_CEILING)
+
+
+def test_building_requests_captures_no_call_site(svc_collections, monkeypatch):
+    """The session turns PySpark's per-call call-site capture off
+    (session.py, ``spark.python.sql.dataFrameDebugging.enabled``): building
+    and running every perfbench family walks the Python stack zero times."""
+    import pyspark.errors.utils as U
+
+    from perfbench.api_serving import build_request
+
+    calls = []
+    monkeypatch.setattr(U, "_capture_call_site", lambda depth: calls.append(depth) or "")
+    for family, params in PERFBENCH_REQUESTS.items():
+        build_request(svc_collections, family, params).collect()
+    assert calls == []
+
+
+def test_jobs_per_request_ceilings(spark, svc_collections):
+    from perfbench.api_serving import build_request
+
+    sc = spark.sparkContext
+    jobs = {}
+    for family, params in PERFBENCH_REQUESTS.items():
+        group = f"jobs-ceiling-{family}"
+        sc.setJobGroup(group, family)
+        try:
+            build_request(svc_collections, family, params).collect()
+        finally:
+            sc._jsc.clearJobGroup()
+        jobs[family] = len(sc.statusTracker().getJobIdsForGroup(group))
+    over = {f: (n, JOBS_CEILING[f]) for f, n in jobs.items() if n > JOBS_CEILING[f]}
+    assert not over, f"jobs per request above the ceiling (got, ceiling): {over}"
+    assert all(n > 0 for n in jobs.values()), jobs
+
+
+def test_keyword_search_matches_a_name_the_jvm_cannot_case_map(spark):
+    """U+A7D0 is Unicode 14: Python's ``str.lower`` maps it to U+A7D1,
+    the JVM's case tables (JDK 17, Unicode 13) leave it as it is. The
+    keyword and the column go through the same ``lower``, so a token is
+    found by its own name whichever table the engine uses."""
+    from pasardassist_spark.api.schemas import TOKENS_SCHEMA
+
+    name = chr(0xA7D0) + " one"
+    tokens = spark.createDataFrame(
+        [_token(tokenId="7", chain="ela", contract="c7", uniqueKey="ela-c7-7",
+                name=name, description="d", tokenOwner="x", tokenMinter="x")],
+        TOKENS_SCHEMA,
+    )
+    s = PasarQueryService(tokens, spark.createDataFrame([], ORDERS_SCHEMA))
+    for kw in (name, chr(0xA7D0)):
+        assert [r.tokenId for r in s.quick_search(kw).collect()] == ["7"]
+        assert [r.tokenId for r in s.search_tokens(kw).collect()] == ["7"]

@@ -11,6 +11,7 @@ AQE's OptimizeSkewedJoin on a hot-key fixture, not just parse.
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from pasardassist_spark.session import broadcast_threshold, build_conf
 
@@ -51,6 +52,88 @@ def test_cluster_profile_sizing_from_env(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_TOTAL_CORES", "512")
     conf = build_conf("cluster")
     assert conf["spark.sql.shuffle.partitions"] == str(3 * 512)
+
+
+@pytest.mark.parametrize("profile", ["local", "cluster"])
+def test_spark4_session_taxes_are_off_in_both_profiles(profile):
+    conf = build_conf(profile, total_cores=8)
+    assert conf["spark.sql.icu.caseMappings.enabled"] == "false"
+    assert conf["spark.python.sql.dataFrameDebugging.enabled"] == "false"
+
+
+def test_debugging_conf_reaches_the_session(spark):
+    """Static conf: it only works when ``get_spark`` puts it on the builder."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert not is_debugging_enabled()
+
+
+def test_lower_upper_without_icu(spark):
+    """``lower``/``upper`` with ICU case mapping off: the ASCII fast path,
+    else the JVM's ``String.toLowerCase``/``toUpperCase``. Pinned over
+    Latin-1, full-mapping, Greek final sigma, Cyrillic, dotted-capital-I
+    and CJK strings; ICU gives the same on each of these."""
+    probes = [
+        # (text, lower, upper)
+        ("Ärger Öl Übel", "ärger öl übel", "ÄRGER ÖL ÜBEL"),
+        ("straße", "straße", "STRASSE"),
+        ("ΟΔΥΣΣΕΥΣ", "οδυσσευς", "ΟΔΥΣΣΕΥΣ"),
+        ("Москва", "москва", "МОСКВА"),
+        ("İstanbul", "i" + chr(0x307) + "stanbul", "İSTANBUL"),
+        ("東京タワー", "東京タワー", "東京タワー"),
+        ("plain ASCII", "plain ascii", "PLAIN ASCII"),
+    ]
+    df = spark.createDataFrame([(t,) for t, _, _ in probes], "s string")
+    got = df.select(F.lower("s").alias("lo"), F.upper("s").alias("up")).collect()
+    assert [(r.lo, r.up) for r in got] == [(lo, up) for _, lo, up in probes]
+
+
+def test_case_mapping_follows_the_jvm_tables(spark):
+    """U+A7D0 is Unicode 14. ICU and Python's ``str.lower`` map it to
+    U+A7D1; the JVM maps it only when its tables have it (JDK 17's are
+    Unicode 13, so there it stays U+A7D0). Keyword search lowercases both
+    sides with Spark's ``lower`` for this reason (tests/test_api.py)."""
+    ch = chr(0xA7D0)
+    jvm_lower = chr(spark.sparkContext._jvm.java.lang.Character.toLowerCase(0xA7D0))
+    (r,) = spark.createDataFrame([(ch,)], "s string").select(
+        F.lower("s").alias("lo")
+    ).collect()
+    assert r.lo == jvm_lower
+    assert ch.lower() == chr(0xA7D1)
+
+
+def test_package_calls_no_initcap():
+    """``initcap`` is the one case function the ICU-off conf changes
+    beyond U+A7D0 (one-to-many title cases such as U+FB03 or U+0149), so
+    the package must not call it without revisiting that conf."""
+    import ast
+    import os
+    import re
+
+    import pasardassist_spark
+
+    sql = re.compile(r"\binitcap\s*\(", re.IGNORECASE)
+    root = os.path.dirname(pasardassist_spark.__file__)
+    hits = []
+    for dirpath, _, files in os.walk(root):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, f)
+            with open(path) as fh:
+                tree = ast.parse(fh.read(), path)
+            for node in ast.walk(tree):
+                name = None
+                if isinstance(node, ast.Call):
+                    fn = node.func
+                    name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)
+                if name == "initcap" or (
+                    isinstance(node, ast.Constant) and isinstance(node.value, str)
+                    and sql.search(node.value)
+                ):
+                    hits.append(f"{os.path.relpath(path, root)}:{node.lineno}")
+    assert not hits, f"initcap calls: {hits}"
 
 
 def test_unknown_profile_raises():

@@ -69,6 +69,28 @@ def test_switch_boundary_is_the_exact_type_count(spark, monkeypatch, train):
     assert at == below and len(at) > 0
 
 
+@pytest.mark.parametrize("train", [train_bpe_merges, train_wordpiece])
+def test_driver_path_checkpoints_nothing(spark, monkeypatch, train):
+    """The driver/distributed switch reads the word-type aggregate with a
+    bounded collect before anything is materialized: a table that trains
+    on the driver pays no checkpoint job and pins no RDD."""
+    from pasardassist_spark.caching import lingering_rdds
+
+    d = _df(spark)
+    checkpoints = []
+    real = type(d).localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        checkpoints.append(self)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(d), "localCheckpoint", spy)
+    before = lingering_rdds(spark)
+    assert train(d, "text", 10)
+    assert checkpoints == []
+    assert lingering_rdds(spark) == before
+
+
 def test_blank_and_empty_documents_encode_to_no_row(spark):
     d = _df(spark)
     docs = spark.createDataFrame(
