@@ -13,11 +13,12 @@ oracles document.
 Scale notes (100 TB): this is a single hash-shuffle on the key columns; AQE
 skew-join/partition-split handles hot keys. When the downstream consumer
 joins on the same keys, the shuffle is reused (same hash partitioning), so
-latest_per_key + join costs one shuffle of the big side, not two. For
-heavily-skewed event logs prefer the two-phase variant: map-side
-``max_by(struct(order_cols), struct(all))`` partial aggregation — Spark's
-partial-agg does that automatically for ``max_by``, which is the
-``reduce_by_key`` form below.
+latest_per_key + join costs one shuffle of the big side, not two. Hot keys
+do not reach that shuffle whole: for ``row_number() = 1`` Spark 4 plans a
+partial ``WindowGroupLimit`` before the exchange (each map task keeps its
+local top row per key) and a final one after it, so a key ships at most
+one row per map task however many events it owns
+(tests/test_plans.py pins both nodes in the executed plan).
 """
 
 from __future__ import annotations

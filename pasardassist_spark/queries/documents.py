@@ -1874,10 +1874,8 @@ def streaming_docgate_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows."""
     from pasardassist_spark.operators.docxtext import encode_docx
     from pasardassist_spark.operators.pdftext import encode_pdf
-    from pasardassist_spark.streaming.docgate import (
-        admitted_clean_docs,
-        apply_doc_batch,
-    )
+    from pasardassist_spark.streaming.docgate import apply_doc_batch
+    from pasardassist_spark.streaming.generations import admitted_events
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     prev = d.select(
@@ -1918,7 +1916,7 @@ def streaming_docgate_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
             payloads.filter(F.col("doc_id") % 4 == e),
             e, state_dir, admitted_dir,
         )
-    return admitted_clean_docs(spark, admitted_dir).select(
+    return admitted_events(spark, admitted_dir).select(
         "doc_id",
         "fmt",
         F.length("text").cast("long").alias("n_chars"),

@@ -223,29 +223,25 @@ def drift_psi_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population-stability-index drift readout through the FULL state
     path (streaming/drift.py:drift_from_state): the live sample's binned
     value counts ('click' events, {_PSI_BIN}-wide bins) are merged into a
-    real generational state store (the same merge the streaming monitor
-    runs per micro-batch), read back, full-outer-joined against the
-    frozen reference ('view' events), and scored by operators/drift.py:
-    psi_distance. The oracle recomputes PSI closed-form in SQL; the 6-dp
-    round absorbs libm ln() ULP skew (the fold itself is sorted-order
-    deterministic)."""
-    from pasardassist_spark.streaming.drift import _fold, drift_from_state
-    from pasardassist_spark.streaming.ingest import merge_into_bucketed_state
+    real generational state store by the streaming monitor's own epoch
+    function (streaming/drift.py:apply_value_batch, run as epoch 0), read
+    back, full-outer-joined against the frozen reference ('view' events),
+    and scored by operators/drift.py:psi_distance. The oracle recomputes
+    PSI closed-form in SQL; the 6-dp round absorbs libm ln() ULP skew (the
+    fold itself is sorted-order deterministic)."""
+    from pasardassist_spark.streaming.drift import apply_value_batch, drift_from_state
 
     ev = load(spark, sf_dir, "events")
     binned = F.floor(F.col("value") / _PSI_BIN) * _PSI_BIN
-    live = (
-        ev.where(F.col("event_type") == "click")
-        .groupBy(binned.alias("value"))
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
     ref = (
         ev.where(F.col("event_type") == "view")
         .groupBy(binned.alias("value"))
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
     state_dir = scratch_dir("drift_psi_state_")
-    merge_into_bucketed_state(live, state_dir, ("value",), _fold)
+    apply_value_batch(
+        ev.where(F.col("event_type") == "click"), 0, state_dir, quantize=_PSI_BIN
+    )
     return drift_from_state(spark, state_dir, ref, metric="psi")
 
 

@@ -164,20 +164,20 @@ def dedup_fuzzy_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     # worse. The distinct-name frame feeds 3 consumers (both band sides
     # + the diagonal) — persisted, decision-sized (r18 staging rule).
     names = p.select(F.col("p_name").alias("nm"), "name_len").distinct().persist()
+    # the band join's id columns carry NAMES here: rename them at once so
+    # no later expression reads a name column under a part-key name
     cand_nm = band_self_join(
         names,
         keys=[],
         id_col="nm",
         value_col="name_len",
         eps=float(FUZZY_MAX_DIST),
-    )
+    ).withColumnsRenamed({"id_a": "nm_a", "id_b": "nm_b"})
     # thresholded levenshtein: banded DP that abandons a pair the moment
     # the distance provably exceeds the bound (returns -1) — O(k·n) per
     # pair instead of O(n²)
-    d = F.levenshtein(F.col("id_a"), F.col("id_b"), threshold=FUZZY_MAX_DIST)
-    half = cand_nm.select(
-        F.col("id_a").alias("nm_a"), F.col("id_b").alias("nm_b"), d.alias("d")
-    ).filter(F.col("d") >= 0)
+    d = F.levenshtein(F.col("nm_a"), F.col("nm_b"), threshold=FUZZY_MAX_DIST)
+    half = cand_nm.select("nm_a", "nm_b", d.alias("d")).filter(F.col("d") >= 0)
     m = half.unionByName(
         half.select(
             F.col("nm_b").alias("nm_a"), F.col("nm_a").alias("nm_b"), "d"

@@ -1695,10 +1695,8 @@ def streaming_imagegate_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pasardassist_spark.operators import imagecodec
     from pasardassist_spark.operators.imagecodec import Raster
-    from pasardassist_spark.streaming.imagegate import (
-        admitted_images,
-        apply_image_batch,
-    )
+    from pasardassist_spark.streaming.generations import admitted_events
+    from pasardassist_spark.streaming.imagegate import apply_image_batch
 
     def _raster_for_key(key16: int) -> Raster:
         bits = key16 * 0x0001_0001_0001_0001
@@ -1753,7 +1751,7 @@ def streaming_imagegate_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
             payloads.filter(F.col("doc_id") % 4 == e),
             e, state_dir, admitted_dir,
         )
-    adm = admitted_images(spark, admitted_dir).join(
+    adm = admitted_events(spark, admitted_dir).join(
         joined.select("doc_id", "has_prev"), "doc_id"
     )
     return adm.select(

@@ -11,6 +11,8 @@ engines share one source of truth.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from pasardassist_spark.operators import privacy as P
@@ -286,13 +288,14 @@ def streaming_kanon_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
     query, the st8 pattern applied to the release-audit shelf. QI here
     is (event_type, user_id mod 50): a plausible released tuple with
     classes on both sides of k at every test SF."""
+    from pasardassist_spark.streaming.generations import start_epochs
     from pasardassist_spark.streaming.ingest import (
         read_event_stream,
         stage_file_source,
     )
     from pasardassist_spark.streaming.privacy import (
+        apply_kanon_batch,
         k_anonymity_from_state,
-        maintain_k_anonymity,
     )
 
     tmp = stage_file_source(sf_dir, "events", "pasard_kanon_")
@@ -304,9 +307,9 @@ def streaming_kanon_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.pmod(F.col("user_id"), F.lit(50)).cast("long")
         .alias("qi_bucket"),
     )
-    q = maintain_k_anonymity(
-        stream, KANON_STREAM_QI, f"{tmp}/state", f"{tmp}/ckpt"
-    )
+    q = start_epochs(stream, f"{tmp}/ckpt", partial(
+        apply_kanon_batch, state_dir=f"{tmp}/state", qi=KANON_STREAM_QI
+    ))
     try:
         q.processAllAvailable()
     finally:

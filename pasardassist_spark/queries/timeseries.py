@@ -7,6 +7,8 @@ against, each with a DuckDB oracle.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from pasardassist_spark.caching import scratch_dir
@@ -170,7 +172,8 @@ def st4_entity_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     associative fold — status argmax (with its key, so folds merge), additive
     counters, decimal-exact conditional sum, extrema. One shuffle batch-side;
     the identical fold runs per micro-batch in streaming
-    (maintain_entity_state) and merges into bucketed state."""
+    (streaming/ingest.py:apply_entity_batch) and merges into bucketed
+    state."""
     from pasardassist_spark.operators.fold import fold_entity_state
 
     ev = load(spark, sf_dir, "events")
@@ -207,18 +210,20 @@ def st8_incremental_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     The reference recomputes these stats on a 10-min cron
     (tasks.common.ts:124-154); here they are maintained per micro-batch at
     O(batch + touched-state) cost."""
-    from pasardassist_spark.streaming import stage_file_source
-    from pasardassist_spark.streaming.stats import (
+    from pasardassist_spark.streaming import (
+        apply_stats_batch,
         collection_stats_from_state,
-        maintain_collection_stats,
+        stage_file_source,
+        start_epochs,
     )
 
     li_schema = load(spark, sf_dir, "lineitem").schema
     tmp = stage_file_source(sf_dir, "lineitem", "pasard_incstats_")
     stream = spark.readStream.schema(li_schema).parquet(f"{tmp}/src")
-    q = maintain_collection_stats(
-        stream, load(spark, sf_dir, "orders"), f"{tmp}/state", f"{tmp}/ckpt"
-    )
+    q = start_epochs(stream, f"{tmp}/ckpt", partial(
+        apply_stats_batch, state_dir=f"{tmp}/state",
+        orders=load(spark, sf_dir, "orders"),
+    ))
     try:
         q.processAllAvailable()
     finally:

@@ -1,14 +1,13 @@
 from pasardassist_spark.streaming.dedup import streaming_dedup
 from pasardassist_spark.streaming.dynamic import (
-    dynamic_collection_sink,
     process_collection_batch,
     register_collection,
     registered_collections,
 )
-from pasardassist_spark.streaming.generations import admitted_events
+from pasardassist_spark.streaming.generations import admitted_events, start_epochs
 from pasardassist_spark.streaming.ingest import (
     append_into_bucketed_state,
-    maintain_entity_state,
+    apply_entity_batch,
     maintain_latest_state,
     merge_into_bucketed_state,
     read_event_stream,
@@ -18,13 +17,14 @@ from pasardassist_spark.streaming.ingest import (
     streaming_day_rollup,
 )
 from pasardassist_spark.streaming.stats import (
+    apply_stats_batch,
     collection_stats_from_state,
-    maintain_collection_stats,
 )
 
 __all__ = [
+    "start_epochs",
     "read_event_stream",
-    "maintain_entity_state",
+    "apply_entity_batch",
     "maintain_latest_state",
     "merge_into_bucketed_state",
     "append_into_bucketed_state",
@@ -33,10 +33,9 @@ __all__ = [
     "stage_file_source",
     "streaming_day_rollup",
     "streaming_dedup",
-    "maintain_collection_stats",
+    "apply_stats_batch",
     "collection_stats_from_state",
     "admitted_events",
-    "dynamic_collection_sink",
     "process_collection_batch",
     "register_collection",
     "registered_collections",

@@ -31,7 +31,6 @@ operators.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from pasardassist_spark.operators.similarity import assign_lists, ivf_topk
 from pasardassist_spark.streaming.ingest import (
@@ -51,38 +50,29 @@ def _latest_epoch_wins(postings: DataFrame) -> DataFrame:
     )
 
 
-def maintain_ivf_index(
-    stream: DataFrame,
+def apply_ivf_batch(
+    batch_df: DataFrame,
+    epoch_id: int,
     state_dir: str,
-    checkpoint_dir: str,
     centroids: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     keep_generations: int = 2,
-) -> StreamingQuery:
-    """Start the posting-table maintenance job: every micro-batch of
-    (id, vector) rows is assigned against the FROZEN ``centroids`` and
-    merged into the generational store at ``state_dir``. Restarts resume
-    from the stream checkpoint; replays converge (see module docstring)."""
-
-    def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        delta = assign_lists(batch_df, centroids, id_col, vec_col).select(
-            F.col(id_col).alias("vec_id"),
-            "list_id",
-            F.lit(epoch_id).cast("long").alias("epoch"),
-        )
-        # epoch_id: the merge is idempotent anyway (max_by fold), but the
-        # guard short-circuits an exact replay to a no-op read
-        merge_into_bucketed_state(
-            delta, state_dir, ("vec_id",), _latest_epoch_wins,
-            keep_generations, epoch_id=epoch_id,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
+) -> None:
+    """One epoch of posting-table maintenance: the batch's (id, vector)
+    rows are assigned against the FROZEN ``centroids`` and merged into the
+    generational store at ``state_dir``. Replays converge (see module
+    docstring)."""
+    delta = assign_lists(batch_df, centroids, id_col, vec_col).select(
+        F.col(id_col).alias("vec_id"),
+        "list_id",
+        F.lit(epoch_id).cast("long").alias("epoch"),
+    )
+    # epoch_id: the merge is idempotent anyway (max_by fold), but the
+    # guard short-circuits an exact replay to a no-op read
+    merge_into_bucketed_state(
+        delta, state_dir, ("vec_id",), _latest_epoch_wins,
+        keep_generations, epoch_id=epoch_id,
     )
 
 

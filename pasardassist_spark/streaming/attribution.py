@@ -43,23 +43,24 @@ _COND = (
 )
 
 
-def attribution_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Streaming form: both sides watermarked, range-bounded join state."""
-    clicks, purchases = _sides(events)
-    c = clicks.withWatermark("click_ts", watermark).alias("clicks")
-    p = purchases.withWatermark("purchase_ts", watermark).alias("purchases")
-    return p.join(c, F.expr(_COND)).select(
-        "purchases.user_id", "purchase_id", "purchase_ts", "purchase_value",
-        "click_id", "click_ts",
-    )
-
-
-def attribution_batch(events: DataFrame) -> DataFrame:
-    """Batch twin on the landed table — the equivalence oracle."""
-    clicks, purchases = _sides(events)
+def _join(clicks: DataFrame, purchases: DataFrame) -> DataFrame:
     return purchases.alias("purchases").join(
         clicks.alias("clicks"), F.expr(_COND)
     ).select(
         "purchases.user_id", "purchase_id", "purchase_ts", "purchase_value",
         "click_id", "click_ts",
     )
+
+
+def attribution_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
+    """Streaming form: both sides watermarked, range-bounded join state."""
+    clicks, purchases = _sides(events)
+    return _join(
+        clicks.withWatermark("click_ts", watermark),
+        purchases.withWatermark("purchase_ts", watermark),
+    )
+
+
+def attribution_batch(events: DataFrame) -> DataFrame:
+    """Batch twin on the landed table — the equivalence oracle."""
+    return _join(*_sides(events))

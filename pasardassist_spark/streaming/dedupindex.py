@@ -36,8 +36,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql import DataFrame, Window as W, functions as F
 
 from pasardassist_spark.operators.dedup import (
     content_hash,
@@ -45,11 +44,7 @@ from pasardassist_spark.operators.dedup import (
     minhash_signatures,
     shingles,
 )
-from pasardassist_spark.streaming.generations import (
-    admitted_events,
-    committed_epoch,
-    publish_epoch,
-)
+from pasardassist_spark.streaming.generations import committed_epoch, publish_epoch
 from pasardassist_spark.streaming.ingest import (
     merge_into_bucketed_state,
     read_state,
@@ -92,8 +87,8 @@ def apply_dedup_batch(
     epoch_id: int,
     state_dir: str,
     admitted_dir: str,
-    text_col: str,
-    id_col: str,
+    text_col: str = "text",
+    id_col: str = "doc_id",
     keep_generations: int = 2,
 ) -> None:
     """One epoch's gate + index merge (see module docstring)."""
@@ -198,33 +193,3 @@ def apply_dedup_batch(
         DataFrame.distinct,
         keep_generations,
     )
-
-
-def maintain_dedup_gate(
-    stream: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    admitted_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    keep_generations: int = 2,
-) -> StreamingQuery:
-    """Start the corpus-ingest dedup gate (see module docstring)."""
-
-    def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        apply_dedup_batch(
-            batch_df, epoch_id, state_dir, admitted_dir,
-            text_col, id_col, keep_generations,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )
-
-
-def admitted_docs(spark: SparkSession, admitted_dir: str) -> DataFrame | None:
-    """Union of committed epoch slots — the deduped corpus."""
-    return admitted_events(spark, admitted_dir)

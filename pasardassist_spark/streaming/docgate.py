@@ -31,14 +31,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql import Column, DataFrame, functions as F
 
 from pasardassist_spark.streaming.dedupindex import apply_dedup_batch
-from pasardassist_spark.streaming.generations import (
-    admitted_events,
-    committed_epoch,
-)
+from pasardassist_spark.streaming.generations import committed_epoch
 from pasardassist_spark.tables import local_frame, map_rows
 
 _EXTRACT_SCHEMA = "doc_id long, fmt string, text string"
@@ -148,33 +144,3 @@ def apply_doc_batch(
         clean, epoch_id, state_dir, admitted_dir, "text", "doc_id",
         keep_generations,
     )
-
-
-def maintain_doc_gate(
-    stream: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    admitted_dir: str,
-    keep_generations: int = 2,
-) -> StreamingQuery:
-    """Start the document-ingest gate (see module docstring)."""
-
-    def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        apply_doc_batch(
-            batch_df, epoch_id, state_dir, admitted_dir, keep_generations
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )
-
-
-def admitted_clean_docs(
-    spark: SparkSession, admitted_dir: str
-) -> DataFrame | None:
-    """Union of committed epoch slots — the extracted, gated, deduped
-    text corpus."""
-    return admitted_events(spark, admitted_dir)

@@ -17,8 +17,8 @@ counts and runs the shared exact-integer KS core
 are inherited from the store's checkpointed offsets + CAS staged publish.
 
 State cardinality is O(distinct values). For continuous physical
-measurements at 100 TB, quantize the value to a fixed grid in
-``value_expr`` (the standard binned-ECDF monitor; KS on the binned
+measurements at 100 TB, quantize the value to a fixed grid with
+``quantize`` (the standard binned-ECDF monitor; KS on the binned
 distribution bounds the unbinned D within one bin's mass) — the monitor
 itself is agnostic to the grid.
 """
@@ -26,10 +26,9 @@ itself is agnostic to the grid.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from pasardassist_spark.operators.drift import ks_distance, psi_distance
-from pasardassist_spark.streaming.generations import admitted_events, publish_epoch
+from pasardassist_spark.streaming.generations import publish_epoch
 from pasardassist_spark.streaming.ingest import (
     merge_into_bucketed_state,
     read_state,
@@ -41,19 +40,19 @@ def _fold(counts: DataFrame) -> DataFrame:
     return counts.groupBy("value").agg(F.sum("cnt").cast("long").alias("cnt"))
 
 
-def maintain_value_distribution(
-    stream: DataFrame,
+def apply_value_batch(
+    batch_df: DataFrame,
+    epoch_id: int,
     state_dir: str,
-    checkpoint_dir: str,
     value_col: str = "value",
     keep_generations: int = 2,
     reference_counts: DataFrame | None = None,
     monitor_dir: str | None = None,
     metric: str = "ks",
     quantize: float | None = None,
-) -> StreamingQuery:
-    """Start the distribution-maintenance job: each micro-batch folds to
-    (value, cnt) partials and merges into the generational state. The fold
+) -> None:
+    """One epoch of distribution maintenance: fold the batch to (value,
+    cnt) partials and merge them into the generational state. The fold
     is an associative sum, so replayed / out-of-order batches converge to
     the batch fix point.
 
@@ -66,43 +65,28 @@ def maintain_value_distribution(
 
     With ``reference_counts`` + ``monitor_dir`` set, each epoch ALSO
     appends its drift readout (the single ``metric`` row, stamped with the
-    epoch) to an exactly-once history log — epoch-keyed CAS slots, the
-    admitted-events discipline — so the drift trajectory over time is a
-    queryable table (``drift_history``), not just a point-in-time probe.
-    A retried epoch re-publishes into its own slot: a no-op."""
-
-    def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        v = F.col(value_col)
-        if quantize is not None:
-            v = F.floor(v / quantize) * quantize
-        delta = (
-            batch_df.groupBy(v.alias("value"))
-            .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        )
-        # count partials are NOT replay-idempotent: the epoch guard makes
-        # a foreachBatch retry of a committed merge a no-op
-        merge_into_bucketed_state(
-            delta, state_dir, ("value",), _fold, keep_generations,
-            epoch_id=epoch_id,
-        )
-        if reference_counts is not None and monitor_dir is not None:
-            row = drift_from_state(
-                batch_df.sparkSession, state_dir, reference_counts, metric=metric
-            ).withColumn("epoch", F.lit(epoch_id).cast("long"))
-            publish_epoch(row.coalesce(1), monitor_dir, epoch_id)
-
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
+    epoch) to an exactly-once history log — epoch-keyed CAS slots, read
+    back with generations.admitted_events — so the drift trajectory over
+    time is a queryable table, not just a point-in-time probe. A retried
+    epoch re-publishes into its own slot: a no-op."""
+    v = F.col(value_col)
+    if quantize is not None:
+        v = F.floor(v / quantize) * quantize
+    delta = (
+        batch_df.groupBy(v.alias("value"))
+        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
-
-
-def drift_history(spark: SparkSession, monitor_dir: str) -> DataFrame | None:
-    """The per-epoch drift trajectory: union of committed epoch slots
-    (uncommitted/crashed slots invisible), one metric row per epoch."""
-    return admitted_events(spark, monitor_dir)
+    # count partials are NOT replay-idempotent: the epoch guard makes
+    # a foreachBatch retry of a committed merge a no-op
+    merge_into_bucketed_state(
+        delta, state_dir, ("value",), _fold, keep_generations,
+        epoch_id=epoch_id,
+    )
+    if reference_counts is not None and monitor_dir is not None:
+        row = drift_from_state(
+            batch_df.sparkSession, state_dir, reference_counts, metric=metric
+        ).withColumn("epoch", F.lit(epoch_id).cast("long"))
+        publish_epoch(row.coalesce(1), monitor_dir, epoch_id)
 
 
 def drift_from_state(

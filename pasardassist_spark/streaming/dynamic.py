@@ -25,7 +25,6 @@ protocol of streaming/generations.py.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from pasardassist_spark.streaming.generations import (
     latest_unless_replayed,
@@ -60,8 +59,10 @@ def process_collection_batch(
     """One micro-batch of the multiplexed ingest (the foreachBatch body,
     module-level so retry semantics are directly testable): admit
     (batch ∪ pending) events whose collection is registered via an
-    epoch-keyed staged publish; park the rest. A replayed epoch leaves the
-    pending table as its first run wrote it."""
+    epoch-keyed staged publish; park the rest. The control table is
+    broadcast (O(collections) rows), so the filter never shuffles the
+    event stream. A replayed epoch leaves the pending table as its first
+    run wrote it."""
     spark = batch_df.sparkSession
     ctrl = read_state(spark, control_dir)
     pending = read_state(spark, pending_dir)
@@ -75,30 +76,3 @@ def process_collection_batch(
         publish_epoch(admitted, out_dir, epoch_id)
     if not latest_unless_replayed(pending_dir, epoch_id)[1]:
         write_generation(parked, pending_dir, epoch_id=epoch_id)
-
-
-def dynamic_collection_sink(
-    stream: DataFrame,
-    control_dir: str,
-    out_dir: str,
-    pending_dir: str,
-    checkpoint_dir: str,
-    collection_col: str = "event_type",
-) -> StreamingQuery:
-    """Multiplexed ingest: per batch, admit (batch ∪ pending) events whose
-    collection is registered; park the rest. The control table is broadcast
-    (O(collections) rows) — the filter is a broadcast semi-join, never a
-    shuffle of the event stream. The admitted log is exactly-once
-    (generations.publish_epoch)."""
-
-    def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        process_collection_batch(
-            batch_df, epoch_id, control_dir, out_dir, pending_dir, collection_col
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )

@@ -1,8 +1,16 @@
-"""The committed-directory protocol: the one module that knows how a
-committed directory is written, read and guarded against replay. Every
-streaming store calls it — the bucketed state store (ingest.py), the
-control/pending tables (dynamic.py), the heavy-hitter summary and the
-per-epoch logs of the ingest gates and the drift monitor.
+"""The committed-directory protocol: the one module that knows where
+epochs come from and how a committed directory is written, read and
+guarded against replay. Every streaming store calls it — the bucketed
+state store (ingest.py), the control/pending tables (dynamic.py), the
+heavy-hitter summary and the per-epoch logs of the ingest gates and the
+drift monitor.
+
+- **Epochs.** Every stream form is a module-level epoch function
+  ``apply…(batch_df, epoch_id, …)``; :func:`start_epochs` runs it as a
+  checkpointed micro-batch stream. Configuration binds at the call site
+  (``functools.partial`` or a lambda), and the same function replays a
+  batch frame directly, which is how the registry's composites and the
+  replay tests drive it.
 
 - **Staging.** A writer stages in ``<dir>/.<kind>-<pid>``: the Spark write,
   hard links and marker files all land there first. Dot-prefixed names are
@@ -45,12 +53,28 @@ import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
 
 COMMIT_MARKER = "_COMMITTED"
 EPOCH_MARKER = "_EPOCH"  # underscore prefix: invisible to parquet readers
 COMPACT_MANIFEST = "_COMPACTED.json"
 
 _STAGING = re.compile(r"\.[A-Za-z][\w-]*-(\d+)")
+
+
+def start_epochs(
+    stream: DataFrame, checkpoint_dir: str, apply: Callable[[DataFrame, int], None]
+) -> StreamingQuery:
+    """Start ``stream`` as checkpointed micro-batch epochs: Spark calls
+    ``apply(batch_df, epoch_id)`` once per epoch and, after a restart from
+    ``checkpoint_dir``, replays an uncommitted epoch with the same id —
+    which the epoch slots and the replay guard below turn into a no-op."""
+    return (
+        stream.writeStream.foreachBatch(apply)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("update")
+        .start()
+    )
 
 
 def committed_versions(state_dir: str) -> list[str]:

@@ -25,7 +25,6 @@ history; hh_heavy_hitters is the exact batch readout it approximates.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from pasardassist_spark.queries.analytics import (
     SKETCH_CAPACITY,
@@ -56,13 +55,12 @@ def _merge_compact(
 
 
 def apply_batch(
-    spark: SparkSession,
     batch_df: DataFrame,
+    epoch_id: int,
     state_dir: str,
     key_col: str,
-    capacity: int,
-    keep_generations: int,
-    epoch_id: int,
+    capacity: int = SKETCH_CAPACITY,
+    keep_generations: int = 2,
 ) -> None:
     """One epoch's merge: distributed MG fold over the batch (executors do
     the O(batch) work; only the KB summary reaches the driver), per-key
@@ -75,6 +73,7 @@ def apply_batch(
     prev_dir, replayed = latest_unless_replayed(state_dir, epoch_id)
     if replayed:
         return  # replay of an already-applied epoch
+    spark = batch_df.sparkSession
     prev: dict[int, int] = {}
     if prev_dir is not None:
         rows = spark.read.parquet(prev_dir).collect()
@@ -84,32 +83,6 @@ def apply_batch(
     merged = _merge_compact(prev, delta, capacity)
     out = local_frame(spark, sorted(merged.items()), f"{key_col} long, est long")
     write_generation(out, state_dir, keep=keep_generations, epoch_id=epoch_id)
-
-
-def maintain_heavy_hitters(
-    stream: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    key_col: str,
-    capacity: int = SKETCH_CAPACITY,
-    keep_generations: int = 2,
-) -> StreamingQuery:
-    """Start the heavy-hitter maintenance job (see :func:`apply_batch` for
-    the per-epoch merge and its exactly-once contract)."""
-    spark = stream.sparkSession
-
-    def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        apply_batch(
-            spark, batch_df, state_dir, key_col, capacity,
-            keep_generations, epoch_id,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )
 
 
 def heavy_hitters_from_state(

@@ -24,7 +24,6 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from pasardassist_spark.streaming.ingest import (
     merge_into_bucketed_state,
@@ -44,34 +43,26 @@ def _union_sketches(keys: Sequence[str]):
     return fold
 
 
-def maintain_distinct_counts(
-    stream: DataFrame,
+def apply_hll_batch(
+    batch_df: DataFrame,
+    epoch_id: int,
     state_dir: str,
-    checkpoint_dir: str,
     keys: Sequence[str],
     value_col: str,
     keep_generations: int = 2,
-) -> StreamingQuery:
-    """Start the per-group distinct-count maintenance job (see module
-    docstring). ``keys`` group the sketches (e.g. event_type or
+) -> None:
+    """One epoch of the per-group distinct-count monitor (see module
+    docstring): fold the batch to per-group sketch partials and union them
+    into the state. ``keys`` group the sketches (e.g. event_type or
     collection); ``value_col`` is the counted identity (e.g. user_id)."""
     keys = list(keys)
-
-    def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        delta = batch_df.groupBy(*keys).agg(
-            F.hll_sketch_agg(value_col, F.lit(HLL_LG_K)).alias("sk"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-        merge_into_bucketed_state(
-            delta, state_dir, tuple(keys), _union_sketches(keys),
-            keep_generations, epoch_id=epoch_id,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
+    delta = batch_df.groupBy(*keys).agg(
+        F.hll_sketch_agg(value_col, F.lit(HLL_LG_K)).alias("sk"),
+        F.count(F.lit(1)).alias("n_events"),
+    )
+    merge_into_bucketed_state(
+        delta, state_dir, tuple(keys), _union_sketches(keys),
+        keep_generations, epoch_id=epoch_id,
     )
 
 

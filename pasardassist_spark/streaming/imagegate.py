@@ -33,14 +33,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql import DataFrame, functions as F
 
-from pasardassist_spark.streaming.generations import (
-    admitted_events,
-    committed_epoch,
-    publish_epoch,
-)
+from pasardassist_spark.streaming.generations import committed_epoch, publish_epoch
 from pasardassist_spark.streaming.ingest import (
     merge_into_bucketed_state,
     read_state,
@@ -157,31 +152,3 @@ def apply_image_batch(
         adm_bands.drop("doc_id").distinct(), bands_dir, ("band", "val"),
         DataFrame.distinct, keep_generations,
     )
-
-
-def maintain_image_gate(
-    stream: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    admitted_dir: str,
-    max_dist: int = MAX_DIST,
-    keep_generations: int = 2,
-) -> StreamingQuery:
-    """Start the image-ingest gate (see module docstring)."""
-
-    def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        apply_image_batch(
-            batch_df, epoch_id, state_dir, admitted_dir, max_dist,
-            keep_generations,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )
-
-
-def admitted_images(spark: SparkSession, admitted_dir: str) -> DataFrame | None:
-    return admitted_events(spark, admitted_dir)

@@ -68,6 +68,7 @@ from pasardassist_spark.streaming.generations import (
     publish,
     read_marker,
     read_state,
+    start_epochs,
     write_markers,
 )
 
@@ -351,23 +352,18 @@ def maintain_latest_state(
             )
             write(batch_latest, state_dir, keys, fold, keep_generations)
 
-    return (
-        stream.writeStream.foreachBatch(_merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )
+    return start_epochs(stream, checkpoint_dir, _merge_batch)
 
 
-def maintain_entity_state(
-    stream: DataFrame,
+def apply_entity_batch(
+    batch_df: DataFrame,
+    epoch_id: int,
     state_dir: str,
-    checkpoint_dir: str,
     keep_generations: int = 2,
-) -> StreamingQuery:
-    """ST4 as a true state MACHINE (not just row argmax): each micro-batch
-    is folded by ``fold_entity_state`` (status argmax + additive counters +
-    extrema — the reference's per-event $set/$inc mutations,
+) -> None:
+    """One epoch of ST4 as a true state MACHINE (not just row argmax): the
+    batch is folded by ``fold_entity_state`` (status argmax + additive
+    counters + extrema — the reference's per-event $set/$inc mutations,
     tasks.service.ts:367-373,585-591) and merged associatively into the
     bucketed state table, whose fold is ``merge_entity_states``. fold ⊕
     merge associativity makes replay and out-of-order arrival converge to
@@ -378,17 +374,9 @@ def maintain_entity_state(
         merge_entity_states,
     )
 
-    def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        merge_into_bucketed_state(
-            fold_entity_state(batch_df), state_dir, ("user_id",),
-            merge_entity_states, keep_generations, epoch_id=epoch_id,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
+    merge_into_bucketed_state(
+        fold_entity_state(batch_df), state_dir, ("user_id",),
+        merge_entity_states, keep_generations, epoch_id=epoch_id,
     )
 
 

@@ -22,7 +22,6 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from pasardassist_spark.streaming.ingest import (
     merge_into_bucketed_state,
@@ -39,35 +38,26 @@ def _fold(keys: Sequence[str]):
     return fold
 
 
-def maintain_k_anonymity(
-    stream: DataFrame,
-    qi: Sequence[str],
+def apply_kanon_batch(
+    batch_df: DataFrame,
+    epoch_id: int,
     state_dir: str,
-    checkpoint_dir: str,
+    qi: Sequence[str],
     keep_generations: int = 2,
-) -> StreamingQuery:
-    """Start the class-size maintenance job: each micro-batch folds to
-    per-QI partial counts and merges them into the bucketed generational
-    state (epoch-guarded, so a foreachBatch retry of a committed merge
-    is a no-op). QI columns must be non-null on the stream (the state
-    store's key contract); derive an explicit bucket upstream, exactly
-    as the batch shelf's banding does."""
+) -> None:
+    """One epoch of class-size maintenance: fold the batch to per-QI
+    partial counts and merge them into the bucketed generational state
+    (epoch-guarded, so a foreachBatch retry of a committed merge is a
+    no-op). QI columns must be non-null on the stream (the state store's
+    key contract); derive an explicit bucket upstream, exactly as the
+    batch shelf's banding does."""
     keys = tuple(qi)
-
-    def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        delta = batch_df.groupBy(*keys).agg(
-            F.count(F.lit(1)).cast("long").alias("class_size")
-        )
-        merge_into_bucketed_state(
-            delta, state_dir, keys, _fold(keys), keep_generations,
-            epoch_id=epoch_id,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
+    delta = batch_df.groupBy(*keys).agg(
+        F.count(F.lit(1)).cast("long").alias("class_size")
+    )
+    merge_into_bucketed_state(
+        delta, state_dir, keys, _fold(keys), keep_generations,
+        epoch_id=epoch_id,
     )
 
 

@@ -26,7 +26,6 @@ alternative; see hll_user_rollup).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from pasardassist_spark.streaming.ingest import (
     merge_into_bucketed_state,
@@ -68,37 +67,26 @@ def _fold(partials: DataFrame) -> DataFrame:
     )
 
 
-def maintain_collection_stats(
-    lineitem_stream: DataFrame,
-    orders: DataFrame,
+def apply_stats_batch(
+    batch_df: DataFrame,
+    epoch_id: int,
     state_dir: str,
-    checkpoint_dir: str,
+    orders: DataFrame,
     keep_generations: int = 2,
-) -> StreamingQuery:
-    """Start the incremental stats maintenance job: each micro-batch of
-    lineitem rows joins the static orders dim, folds to per-(suppkey,
-    custkey) partials, and merges them into the bucketed generational
-    state. Restart-safe via the checkpointed source offsets; the merge is
+) -> None:
+    """One epoch of incremental stats maintenance: the batch's lineitem
+    rows join the static orders dim, fold to per-(suppkey, custkey)
+    partials, and merge into the bucketed generational state. The merge is
     associative, so replayed batches converge."""
-    o = orders.select("o_orderkey", "o_custkey")
-
-    def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        delta = _partials(batch_df, o)
-        # volume partial must carry the widened sum type on both sides of
-        # the later merge union
-        delta = delta.withColumn("volume", F.col("volume").cast("decimal(28,4)"))
-        # sum partials are NOT replay-idempotent: the epoch guard makes a
-        # foreachBatch retry of a committed merge a no-op
-        merge_into_bucketed_state(
-            delta, state_dir, _KEYS, _fold, keep_generations,
-            epoch_id=epoch_id,
-        )
-
-    return (
-        lineitem_stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
+    delta = _partials(batch_df, orders.select("o_orderkey", "o_custkey"))
+    # volume partial must carry the widened sum type on both sides of
+    # the later merge union
+    delta = delta.withColumn("volume", F.col("volume").cast("decimal(28,4)"))
+    # sum partials are NOT replay-idempotent: the epoch guard makes a
+    # foreachBatch retry of a committed merge a no-op
+    merge_into_bucketed_state(
+        delta, state_dir, _KEYS, _fold, keep_generations,
+        epoch_id=epoch_id,
     )
 
 

@@ -5,6 +5,7 @@ generation audit on a really-maintained distribution state."""
 from __future__ import annotations
 
 import os
+from functools import partial
 
 from pyspark.sql import functions as F
 
@@ -27,8 +28,8 @@ def test_snapshot_diff_classification_and_nullsafe(spark):
 
 
 def test_state_diff_audits_generations(spark, tmp_path):
-    from pasardassist_spark.streaming.drift import maintain_value_distribution
-    from pasardassist_spark.streaming.generations import committed_versions
+    from pasardassist_spark.streaming.drift import apply_value_batch
+    from pasardassist_spark.streaming.generations import committed_versions, start_epochs
 
     src = str(tmp_path / "src")
     os.makedirs(src)
@@ -46,10 +47,10 @@ def test_state_diff_audits_generations(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = maintain_value_distribution(
-        stream, str(tmp_path / "state"), str(tmp_path / "ckpt"),
+    q = start_epochs(stream, str(tmp_path / "ckpt"), partial(
+        apply_value_batch, state_dir=str(tmp_path / "state"),
         keep_generations=10,
-    )
+    ))
     q.processAllAvailable()
     q.stop()
     vs = committed_versions(str(tmp_path / "state"))

@@ -6,6 +6,7 @@ poisoning the epoch."""
 from __future__ import annotations
 
 import os
+from functools import partial
 
 import pandas as pd
 import pytest
@@ -178,10 +179,8 @@ def _sequential_reference(spark, chunks):
 
 
 def test_doc_gate_equals_sequential_replay(spark, sf_dir, tmp_path):
-    from pasardassist_spark.streaming.docgate import (
-        admitted_clean_docs,
-        maintain_doc_gate,
-    )
+    from pasardassist_spark.streaming.docgate import apply_doc_batch
+    from pasardassist_spark.streaming.generations import admitted_events, start_epochs
 
     rows, marks = _corpus(spark, sf_dir)
     chunks = _chunk_frames(spark, rows)
@@ -199,16 +198,15 @@ def test_doc_gate_equals_sequential_replay(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = maintain_doc_gate(
-        stream,
-        str(tmp_path / "state"),
-        str(tmp_path / "ckpt"),
-        str(tmp_path / "admitted"),
-    )
+    q = start_epochs(stream, str(tmp_path / "ckpt"), partial(
+        apply_doc_batch,
+        state_dir=str(tmp_path / "state"),
+        admitted_dir=str(tmp_path / "admitted"),
+    ))
     q.processAllAvailable()
     q.stop()
 
-    adm = admitted_clean_docs(spark, str(tmp_path / "admitted"))
+    adm = admitted_events(spark, str(tmp_path / "admitted"))
     got_rows = {r.doc_id: r for r in adm.collect()}
     got = set(got_rows)
     want = _sequential_reference(spark, chunks)
@@ -238,10 +236,8 @@ def test_doc_gate_equals_sequential_replay(spark, sf_dir, tmp_path):
 
 
 def test_doc_gate_replayed_epoch_is_noop(spark, sf_dir, tmp_path):
-    from pasardassist_spark.streaming.docgate import (
-        admitted_clean_docs,
-        apply_doc_batch,
-    )
+    from pasardassist_spark.streaming.docgate import apply_doc_batch
+    from pasardassist_spark.streaming.generations import admitted_events
 
     rows, _marks = _corpus(spark, sf_dir)
     chunks = _chunk_frames(spark, rows, n_chunks=2)
@@ -249,18 +245,18 @@ def test_doc_gate_replayed_epoch_is_noop(spark, sf_dir, tmp_path):
     admitted = str(tmp_path / "admitted")
 
     apply_doc_batch(chunks[0], 0, state, admitted)
-    first = {r.doc_id for r in admitted_clean_docs(spark, admitted).collect()}
+    first = {r.doc_id for r in admitted_events(spark, admitted).collect()}
     # replay epoch 0 (simulated foreachBatch retry) — decision unchanged
     apply_doc_batch(chunks[0], 0, state, admitted)
-    again = {r.doc_id for r in admitted_clean_docs(spark, admitted).collect()}
+    again = {r.doc_id for r in admitted_events(spark, admitted).collect()}
     assert again == first
 
     apply_doc_batch(chunks[1], 1, state, admitted)
-    both = {r.doc_id for r in admitted_clean_docs(spark, admitted).collect()}
+    both = {r.doc_id for r in admitted_events(spark, admitted).collect()}
     assert first <= both
     # replaying an OLD epoch after a newer one is also a no-op
     apply_doc_batch(chunks[0], 0, state, admitted)
-    final = {r.doc_id for r in admitted_clean_docs(spark, admitted).collect()}
+    final = {r.doc_id for r in admitted_events(spark, admitted).collect()}
     assert final == both
 
 
@@ -273,11 +269,8 @@ def test_mbox_archive_through_doc_gate(spark, sf_dir, tmp_path):
 
     from pasardassist_spark.operators.emailtext import encode_email
     from pasardassist_spark.sources.mbox import read_mbox, write_mbox
-    from pasardassist_spark.streaming.docgate import (
-        admitted_clean_docs,
-        apply_doc_batch,
-        gopher_keep,
-    )
+    from pasardassist_spark.streaming.docgate import apply_doc_batch, gopher_keep
+    from pasardassist_spark.streaming.generations import admitted_events
 
     texts = [
         r.text
@@ -299,7 +292,7 @@ def test_mbox_archive_through_doc_gate(spark, sf_dir, tmp_path):
         F.col("raw").alias("payload"),
     )
     apply_doc_batch(back, 0, str(tmp_path / "state"), str(tmp_path / "adm"))
-    adm = admitted_clean_docs(spark, str(tmp_path / "adm")).collect()
+    adm = admitted_events(spark, str(tmp_path / "adm")).collect()
     assert all(r.fmt == "email" for r in adm)
     got = {" ".join(r.text.split()) for r in adm}
     want = {" ".join(t.split()) for t in texts}
@@ -317,11 +310,8 @@ def test_all_rejected_first_epoch_then_normal_epoch(spark, sf_dir, tmp_path):
     must leave the dedup state readable: the empty delta is a no-op
     merge, never an empty generation (which a later read_state could
     not re-read — the round-13 UNABLE_TO_INFER_SCHEMA regression)."""
-    from pasardassist_spark.streaming.docgate import (
-        admitted_clean_docs,
-        apply_doc_batch,
-        gopher_keep,
-    )
+    from pasardassist_spark.streaming.docgate import apply_doc_batch, gopher_keep
+    from pasardassist_spark.streaming.generations import admitted_events
 
     state = str(tmp_path / "state")
     adm = str(tmp_path / "adm")
@@ -351,5 +341,5 @@ def test_all_rejected_first_epoch_then_normal_epoch(spark, sf_dir, tmp_path):
         "doc_id long, payload binary",
     )
     apply_doc_batch(ok, 1, state, adm)  # must not raise
-    got = admitted_clean_docs(spark, adm)
+    got = admitted_events(spark, adm)
     assert got is not None and got.count() == 3

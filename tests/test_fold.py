@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 from decimal import Decimal as D
+from functools import partial
 
 from pyspark.sql import functions as F
 
@@ -38,9 +39,10 @@ def test_fold_is_associative(spark, sf_dir):
 
 def test_streaming_entity_fold_equals_batch(spark, sf_dir, tmp_path):
     from pasardassist_spark.streaming import (
-        maintain_entity_state,
+        apply_entity_batch,
         read_event_stream,
         read_state,
+        start_epochs,
     )
 
     ev = load(spark, sf_dir, "events")
@@ -58,7 +60,9 @@ def test_streaming_entity_fold_equals_batch(spark, sf_dir, tmp_path):
             os.rename(os.path.join(staging, pq), os.path.join(src, f"p{i}.parquet"))
 
     stream = read_event_stream(spark, src, max_files_per_trigger=1)
-    q = maintain_entity_state(stream, str(tmp_path / "state"), str(tmp_path / "ckpt"))
+    q = start_epochs(stream, str(tmp_path / "ckpt"), partial(
+        apply_entity_batch, state_dir=str(tmp_path / "state")
+    ))
     q.processAllAvailable()
     q.stop()
     got = read_state(spark, str(tmp_path / "state"))
@@ -114,9 +118,10 @@ def test_streaming_entity_state_replayed_epoch_counts_once(spark, sf_dir, tmp_pa
     replay that epoch; the additive counters (n_clicks, total_purchase)
     must not count it twice."""
     from pasardassist_spark.streaming import (
-        maintain_entity_state,
+        apply_entity_batch,
         read_event_stream,
         read_state,
+        start_epochs,
     )
 
     ev = load(spark, sf_dir, "events")
@@ -137,7 +142,7 @@ def test_streaming_entity_state_replayed_epoch_counts_once(spark, sf_dir, tmp_pa
 
     def drain():
         stream = read_event_stream(spark, src, max_files_per_trigger=1)
-        q = maintain_entity_state(stream, state, ckpt)
+        q = start_epochs(stream, ckpt, partial(apply_entity_batch, state_dir=state))
         q.processAllAvailable()
         q.stop()
 

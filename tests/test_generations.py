@@ -1,9 +1,11 @@
 """The committed-directory protocol has one home: streaming/generations.py.
 
 Pins (a) that no other streaming module stages, commits, renames or checks
-a commit marker itself, and (b) that the one staging rule removes the
-staging directory a dead writer left behind — in the bucketed state store
-and in a per-epoch log alike — and never a live writer's.
+a commit marker itself, (b) that no other package module starts a
+``foreachBatch`` stream (``start_epochs`` is the one starter), and (c)
+that the one staging rule removes the staging directory a dead writer left
+behind — in the bucketed state store and in a per-epoch log alike — and
+never a live writer's.
 """
 
 from __future__ import annotations
@@ -17,7 +19,8 @@ import pytest
 from pyspark.sql import functions as F
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-STREAMING = os.path.join(REPO, "pasardassist_spark", "streaming")
+PACKAGE = os.path.join(REPO, "pasardassist_spark")
+STREAMING = os.path.join(PACKAGE, "streaming")
 
 _CALLS = {"commit", "publish_staged"}
 _OS_CALLS = {"rename", "getpid"}
@@ -87,6 +90,44 @@ def test_scan_flags_every_protocol_step(tmp_path):
         "m.py:9 publish_staged",
         "m.py:10 COMMIT_MARKER",
     ]
+
+
+def _foreach_batch_uses(root: str) -> list[str]:
+    """Every ``foreachBatch`` attribute under ``root`` outside
+    ``streaming/generations.py``, as ``relpath:line``."""
+    starter = os.path.join("streaming", "generations.py")
+    found = []
+    for dirpath, _, files in os.walk(root):
+        for f in files:
+            path = os.path.join(dirpath, f)
+            rel = os.path.relpath(path, root)
+            if not f.endswith(".py") or rel == starter:
+                continue
+            with open(path, encoding="utf-8") as fh:
+                tree = ast.parse(fh.read(), path)
+            found += [
+                f"{rel}:{node.lineno}"
+                for node in ast.walk(tree)
+                if isinstance(node, ast.Attribute) and node.attr == "foreachBatch"
+            ]
+    return sorted(found)
+
+
+def test_only_start_epochs_starts_a_stream():
+    offenders = _foreach_batch_uses(PACKAGE)
+    assert not offenders, f"foreachBatch outside generations.start_epochs: {offenders}"
+
+
+def test_scan_flags_every_foreach_batch(tmp_path):
+    (tmp_path / "streaming").mkdir()
+    start = (
+        "def start(stream, apply):\n"
+        "    return stream.writeStream.foreachBatch(apply).start()\n"
+    )
+    (tmp_path / "streaming" / "gate.py").write_text(start)
+    (tmp_path / "streaming" / "generations.py").write_text(start)
+    (tmp_path / "q.py").write_text("fb = writer.foreachBatch\n")
+    assert _foreach_batch_uses(str(tmp_path)) == ["q.py:1", "streaming/gate.py:2"]
 
 
 def _dead_pid() -> int:

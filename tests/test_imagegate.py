@@ -7,6 +7,7 @@ duplicates."""
 from __future__ import annotations
 
 import os
+from functools import partial
 
 import pytest
 
@@ -16,11 +17,8 @@ from pasardassist_spark.operators.multimodal import (
     synth_raster,
 )
 from pasardassist_spark.operators import imagecodec as IC
-from pasardassist_spark.streaming.imagegate import (
-    admitted_images,
-    apply_image_batch,
-    maintain_image_gate,
-)
+from pasardassist_spark.streaming.generations import admitted_events, start_epochs
+from pasardassist_spark.streaming.imagegate import apply_image_batch
 
 SEED_MOD = 23  # dense planted duplicates over 100 docs
 MARK = (5, 2)  # near-dup corner marks
@@ -84,7 +82,7 @@ def test_chunked_equals_sequential_replay(spark, tmp_path):
             "doc_id long, payload binary",
         )
         apply_image_batch(batch, ep, state, adm)
-    got = {r.doc_id for r in admitted_images(spark, adm).collect()}
+    got = {r.doc_id for r in admitted_events(spark, adm).collect()}
     want = _sequential_reference(n, chunks)
     assert got == want
     assert 0 < len(got) < n, "gate admitted everything or nothing"
@@ -111,9 +109,11 @@ def test_stream_gate_equals_batch_function(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
-    q = maintain_image_gate(
-        stream, str(tmp_path / "state"), str(tmp_path / "ckpt"), str(tmp_path / "adm")
-    )
+    q = start_epochs(stream, str(tmp_path / "ckpt"), partial(
+        apply_image_batch,
+        state_dir=str(tmp_path / "state"),
+        admitted_dir=str(tmp_path / "adm"),
+    ))
     try:
         q.processAllAvailable()
     finally:
@@ -123,7 +123,7 @@ def test_stream_gate_equals_batch_function(spark, tmp_path):
         apply_image_batch(chunk, ep, str(tmp_path / "bstate"), str(tmp_path / "badm"))
 
     def admitted(d):
-        return sorted(r.doc_id for r in admitted_images(spark, str(tmp_path / d)).collect())
+        return sorted(r.doc_id for r in admitted_events(spark, str(tmp_path / d)).collect())
 
     def bands(d):
         st = read_state(spark, os.path.join(str(tmp_path / d), "bands"))
@@ -140,11 +140,11 @@ def test_replayed_epoch_is_noop(spark, tmp_path):
     corpus = _corpus(spark, 40)
     state, adm = str(tmp_path / "state"), str(tmp_path / "adm")
     apply_image_batch(corpus, 0, state, adm)
-    first = {r.doc_id for r in admitted_images(spark, adm).collect()}
+    first = {r.doc_id for r in admitted_events(spark, adm).collect()}
     b1 = read_state(spark, os.path.join(state, "bands")).count()
 
     apply_image_batch(corpus, 0, state, adm)
-    assert {r.doc_id for r in admitted_images(spark, adm).collect()} == first
+    assert {r.doc_id for r in admitted_events(spark, adm).collect()} == first
     assert read_state(spark, os.path.join(state, "bands")).count() == b1
 
 
@@ -170,6 +170,6 @@ def test_cross_container_duplicate_rejected(spark, tmp_path):
         "doc_id long, payload binary",
     )
     apply_image_batch(b1, 1, state, adm)
-    got = {r.doc_id for r in admitted_images(spark, adm).collect()}
+    got = {r.doc_id for r in admitted_events(spark, adm).collect()}
     assert 2 not in got and 3 not in got
     assert 1 in got and 4 in got

@@ -5,15 +5,18 @@ with checkpointed recovery across the source/sink boundary."""
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import functions as F
 
 from pasardassist_spark.sources.blocklog import (
     BlockLogDataSource,
     write_block_page,
 )
+from pasardassist_spark.streaming.generations import start_epochs
 from pasardassist_spark.streaming.hll import (
+    apply_hll_batch,
     distinct_counts_from_state,
-    maintain_distinct_counts,
 )
 
 
@@ -46,9 +49,10 @@ def test_blocklog_feeds_distinct_monitor_across_restart(spark, tmp_path):
             .option("step", 25)
             .load()
         )
-        return maintain_distinct_counts(
-            stream, state, ckpt, ["event_type"], "address"
-        )
+        return start_epochs(stream, ckpt, partial(
+            apply_hll_batch, state_dir=state, keys=["event_type"],
+            value_col="address",
+        ))
 
     q = start()
     q.processAllAvailable()

@@ -81,6 +81,29 @@ def test_latest_per_key_single_shuffle(spark, sf_dir):
     assert "WindowGroupLimit" in p
 
 
+def test_latest_per_key_limits_each_key_before_the_shuffle(spark):
+    """latest_per_key's skew story: the executed plan holds a partial
+    WindowGroupLimit below the key's hash exchange (each map task ships at
+    most one row per key) and the final one above it."""
+    from pyspark.sql import functions as F
+
+    from pasardassist_spark.operators.latest import latest_per_key
+
+    df = spark.range(20000).select(
+        (F.col("id") % 50).alias("k"), F.col("id").alias("ts")
+    ).repartition(4)
+    out = latest_per_key(df, ["k"], [F.desc("ts")])
+    assert len(out.collect()) == 50
+    final = out._jdf.queryExecution().executedPlan().toString()
+    final = final.split("== Initial Plan ==")[0]
+    lines = final.splitlines()
+    limits = [i for i, ln in enumerate(lines) if "WindowGroupLimit" in ln]
+    (exchange,) = [i for i, ln in enumerate(lines) if "Exchange hashpartitioning(k#" in ln]
+    assert len(limits) == 2, final
+    assert lines[limits[0]].rstrip().endswith("Final") and limits[0] < exchange
+    assert lines[limits[1]].rstrip().endswith("Partial") and limits[1] > exchange
+
+
 def test_minhash_has_no_cartesian_product(spark, sf_dir):
     """LSH candidate generation must never plan an all-pairs product of
     documents, and since the signature rewrite there is no crossJoin row

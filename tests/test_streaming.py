@@ -5,6 +5,7 @@ reference's DataCheckService reconciliation idea turned into a test."""
 from __future__ import annotations
 
 import os
+from functools import partial
 
 import pytest
 from pyspark.sql import functions as F
@@ -192,8 +193,9 @@ def test_dynamic_registration_mid_stream(spark, sf_dir, tmp_path):
     all without restarting the one multiplexed query."""
     from pasardassist_spark.streaming import (
         admitted_events,
-        dynamic_collection_sink,
+        process_collection_batch,
         register_collection,
+        start_epochs,
     )
 
     ev = load(spark, sf_dir, "events")
@@ -222,7 +224,9 @@ def test_dynamic_registration_mid_stream(spark, sf_dir, tmp_path):
     register_collection(spark, control, t_first)
     drop_file(df1, 0)
     stream = read_event_stream(spark, src, max_files_per_trigger=1)
-    q = dynamic_collection_sink(stream, control, out, pending, str(tmp_path / "ckpt"))
+    q = start_epochs(stream, str(tmp_path / "ckpt"), partial(
+        process_collection_batch, control_dir=control, out_dir=out, pending_dir=pending
+    ))
     q.processAllAvailable()
 
     admitted1 = admitted_events(spark, out)
@@ -567,9 +571,10 @@ def test_incremental_collection_stats_equals_batch(spark, sf_dir, tmp_path):
     import os
 
     from pasardassist_spark.queries.aggregates import a11_collection_stats
+    from pasardassist_spark.streaming import start_epochs
     from pasardassist_spark.streaming.stats import (
+        apply_stats_batch,
         collection_stats_from_state,
-        maintain_collection_stats,
     )
 
     li = load(spark, sf_dir, "lineitem")
@@ -598,10 +603,10 @@ def test_incremental_collection_stats_equals_batch(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = maintain_collection_stats(
-        stream, load(spark, sf_dir, "orders"),
-        str(tmp_path / "state"), str(tmp_path / "ckpt"),
-    )
+    q = start_epochs(stream, str(tmp_path / "ckpt"), partial(
+        apply_stats_batch, state_dir=str(tmp_path / "state"),
+        orders=load(spark, sf_dir, "orders"),
+    ))
     q.processAllAvailable()
     q.stop()
     # >1 generation committed => the merge path really ran incrementally

@@ -6,7 +6,9 @@ vector in a later epoch must move it (latest-epoch-wins merge)."""
 from __future__ import annotations
 
 import os
+from functools import partial
 
+from pasardassist_spark.streaming.generations import start_epochs
 from pasardassist_spark.tables import load
 
 
@@ -35,9 +37,9 @@ def _chunked_file_source(spark, df, tmp_path, n_chunks=3):
 def test_streaming_ivf_index_equals_batch_build(spark, sf_dir, tmp_path):
     from pasardassist_spark.operators.similarity import ivf_assignments
     from pasardassist_spark.streaming.annindex import (
+        apply_ivf_batch,
         index_from_state,
         ivf_search_maintained,
-        maintain_ivf_index,
     )
     from pasardassist_spark.operators import similarity as S
 
@@ -52,7 +54,9 @@ def test_streaming_ivf_index_equals_batch_build(spark, sf_dir, tmp_path):
         .parquet(src)
     )
     state = str(tmp_path / "state")
-    q = maintain_ivf_index(stream, state, str(tmp_path / "ckpt"), cent)
+    q = start_epochs(stream, str(tmp_path / "ckpt"), partial(
+        apply_ivf_batch, state_dir=state, centroids=cent
+    ))
     q.processAllAvailable()
     q.stop()
 
@@ -85,8 +89,8 @@ def test_streaming_ivf_reingest_moves_vector(spark, sf_dir, tmp_path):
         ivf_assignments,
     )
     from pasardassist_spark.streaming.annindex import (
+        apply_ivf_batch,
         index_from_state,
-        maintain_ivf_index,
     )
 
     emb = load(spark, sf_dir, "embeddings")
@@ -113,7 +117,9 @@ def test_streaming_ivf_reingest_moves_vector(spark, sf_dir, tmp_path):
         .parquet(src)
     )
     state = str(tmp_path / "state")
-    q = maintain_ivf_index(stream, state, str(tmp_path / "ckpt"), cent)
+    q = start_epochs(stream, str(tmp_path / "ckpt"), partial(
+        apply_ivf_batch, state_dir=state, centroids=cent
+    ))
     q.processAllAvailable()
     q.stop()
 

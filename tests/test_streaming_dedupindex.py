@@ -6,6 +6,7 @@ merges)."""
 from __future__ import annotations
 
 import os
+from functools import partial
 
 from pyspark.sql import functions as F
 
@@ -56,10 +57,8 @@ def _sequential_reference(spark, chunks, text_col, id_col):
 
 
 def test_streaming_gate_equals_sequential_replay(spark, sf_dir, tmp_path):
-    from pasardassist_spark.streaming.dedupindex import (
-        admitted_docs,
-        maintain_dedup_gate,
-    )
+    from pasardassist_spark.streaming.dedupindex import apply_dedup_batch
+    from pasardassist_spark.streaming.generations import admitted_events, start_epochs
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     rows = docs.orderBy("doc_id").collect()
@@ -84,18 +83,17 @@ def test_streaming_gate_equals_sequential_replay(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = maintain_dedup_gate(
-        stream,
-        str(tmp_path / "state"),
-        str(tmp_path / "ckpt"),
-        str(tmp_path / "admitted"),
-    )
+    q = start_epochs(stream, str(tmp_path / "ckpt"), partial(
+        apply_dedup_batch,
+        state_dir=str(tmp_path / "state"),
+        admitted_dir=str(tmp_path / "admitted"),
+    ))
     q.processAllAvailable()
     q.stop()
 
     got = {
         r.doc_id
-        for r in admitted_docs(spark, str(tmp_path / "admitted")).collect()
+        for r in admitted_events(spark, str(tmp_path / "admitted")).collect()
     }
     want = _sequential_reference(spark, chunks, "text", "doc_id")
     assert got == want
@@ -103,10 +101,8 @@ def test_streaming_gate_equals_sequential_replay(spark, sf_dir, tmp_path):
 
 
 def test_replayed_epoch_is_noop(spark, sf_dir, tmp_path):
-    from pasardassist_spark.streaming.dedupindex import (
-        admitted_docs,
-        apply_dedup_batch,
-    )
+    from pasardassist_spark.streaming.dedupindex import apply_dedup_batch
+    from pasardassist_spark.streaming.generations import admitted_events
     from pasardassist_spark.streaming.ingest import read_state
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text").limit(50)
@@ -114,14 +110,14 @@ def test_replayed_epoch_is_noop(spark, sf_dir, tmp_path):
     adm = str(tmp_path / "admitted")
 
     apply_dedup_batch(docs, 0, state, adm, "text", "doc_id")
-    first = {r.doc_id for r in admitted_docs(spark, adm).collect()}
+    first = {r.doc_id for r in admitted_events(spark, adm).collect()}
     h1 = read_state(spark, os.path.join(state, "hashes")).count()
     s1 = read_state(spark, os.path.join(state, "sigs")).count()
 
     # replay of epoch 0: same admitted set, index unchanged — even though
     # the index now already contains this batch's own evidence
     apply_dedup_batch(docs, 0, state, adm, "text", "doc_id")
-    again = {r.doc_id for r in admitted_docs(spark, adm).collect()}
+    again = {r.doc_id for r in admitted_events(spark, adm).collect()}
     assert again == first
     assert read_state(spark, os.path.join(state, "hashes")).count() == h1
     assert read_state(spark, os.path.join(state, "sigs")).count() == s1
@@ -129,7 +125,7 @@ def test_replayed_epoch_is_noop(spark, sf_dir, tmp_path):
     # the next epoch still applies on top
     more = load(spark, sf_dir, "documents").select("doc_id", "text").limit(80)
     apply_dedup_batch(more, 1, state, adm, "text", "doc_id")
-    final = {r.doc_id for r in admitted_docs(spark, adm).collect()}
+    final = {r.doc_id for r in admitted_events(spark, adm).collect()}
     assert first <= final
     # every doc of epoch 1 that reuses epoch-0 content is gated out
     assert len(final) < 80 + len(first)

@@ -5,9 +5,11 @@ micro-batches against the frozen 'view' reference distribution."""
 from __future__ import annotations
 
 import os
+from functools import partial
 
 from pyspark.sql import functions as F
 
+from pasardassist_spark.streaming.generations import admitted_events, start_epochs
 from pasardassist_spark.tables import load
 
 
@@ -18,8 +20,8 @@ def test_streaming_drift_equals_batch_ks(spark, sf_dir, tmp_path):
         stat_ks_test,
     )
     from pasardassist_spark.streaming.drift import (
+        apply_value_batch,
         drift_from_state,
-        maintain_value_distribution,
     )
 
     ev = load(spark, sf_dir, "events")
@@ -52,9 +54,9 @@ def test_streaming_drift_equals_batch_ks(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = maintain_value_distribution(
-        stream, str(tmp_path / "state"), str(tmp_path / "ckpt")
-    )
+    q = start_epochs(stream, str(tmp_path / "ckpt"), partial(
+        apply_value_batch, state_dir=str(tmp_path / "state")
+    ))
     q.processAllAvailable()
     q.stop()
 
@@ -111,8 +113,8 @@ def test_drift_from_state_psi_metric(spark, sf_dir, tmp_path):
     import pytest as _pytest
 
     from pasardassist_spark.streaming.drift import (
+        apply_value_batch,
         drift_from_state,
-        maintain_value_distribution,
     )
 
     src = str(tmp_path / "src")
@@ -124,9 +126,9 @@ def test_drift_from_state_psi_metric(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = maintain_value_distribution(
-        stream, str(tmp_path / "state"), str(tmp_path / "ckpt")
-    )
+    q = start_epochs(stream, str(tmp_path / "ckpt"), partial(
+        apply_value_batch, state_dir=str(tmp_path / "state")
+    ))
     q.processAllAvailable()
     q.stop()
     ref = spark.createDataFrame(
@@ -147,7 +149,7 @@ def test_state_time_travel_reads_pinned_generation(spark, tmp_path):
     instead of serving a different snapshot."""
     import pytest as _pytest
 
-    from pasardassist_spark.streaming.drift import maintain_value_distribution
+    from pasardassist_spark.streaming.drift import apply_value_batch
     from pasardassist_spark.streaming.generations import committed_versions
     from pasardassist_spark.streaming.ingest import read_state
 
@@ -168,10 +170,10 @@ def test_state_time_travel_reads_pinned_generation(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = maintain_value_distribution(
-        stream, str(tmp_path / "state"), str(tmp_path / "ckpt"),
+    q = start_epochs(stream, str(tmp_path / "ckpt"), partial(
+        apply_value_batch, state_dir=str(tmp_path / "state"),
         keep_generations=10,
-    )
+    ))
     q.processAllAvailable()
     q.stop()
 
@@ -205,9 +207,8 @@ def test_drift_history_one_row_per_epoch(spark, sf_dir, tmp_path):
     final row equals the point-in-time readout."""
     from pasardassist_spark.queries.matching import KS_SAMPLE_A, KS_SAMPLE_B
     from pasardassist_spark.streaming.drift import (
+        apply_value_batch,
         drift_from_state,
-        drift_history,
-        maintain_value_distribution,
     )
 
     ev = load(spark, sf_dir, "events")
@@ -240,14 +241,14 @@ def test_drift_history_one_row_per_epoch(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = maintain_value_distribution(
-        stream, str(tmp_path / "state"), str(tmp_path / "ckpt"),
+    q = start_epochs(stream, str(tmp_path / "ckpt"), partial(
+        apply_value_batch, state_dir=str(tmp_path / "state"),
         reference_counts=reference, monitor_dir=str(tmp_path / "mon"),
-    )
+    ))
     q.processAllAvailable()
     q.stop()
 
-    hist = drift_history(spark, str(tmp_path / "mon"))
+    hist = admitted_events(spark, str(tmp_path / "mon"))
     h = sorted(hist.collect(), key=lambda r: r.epoch)
     assert [r.epoch for r in h] == [0, 1, 2]
     # n_a grows monotonically as the live sample accumulates
@@ -305,8 +306,8 @@ def test_quantized_monitor_bounds_state_and_scores_sanely(spark, sf_dir, tmp_pat
     the eps floor dominates cannot occur on shared bins)."""
     from pasardassist_spark.queries.matching import KS_SAMPLE_A
     from pasardassist_spark.streaming.drift import (
+        apply_value_batch,
         drift_from_state,
-        maintain_value_distribution,
     )
     from pasardassist_spark.streaming.ingest import read_state
 
@@ -319,10 +320,9 @@ def test_quantized_monitor_bounds_state_and_scores_sanely(spark, sf_dir, tmp_pat
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = maintain_value_distribution(
-        stream, str(tmp_path / "state"), str(tmp_path / "ckpt"),
-        quantize=50.0,
-    )
+    q = start_epochs(stream, str(tmp_path / "ckpt"), partial(
+        apply_value_batch, state_dir=str(tmp_path / "state"), quantize=50.0,
+    ))
     q.processAllAvailable()
     q.stop()
     st = read_state(spark, str(tmp_path / "state"))

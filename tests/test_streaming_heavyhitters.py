@@ -6,6 +6,7 @@ and the merge-compact core must match the guarantee on adversarial dicts."""
 from __future__ import annotations
 
 import os
+from functools import partial
 
 from pyspark.sql import functions as F
 
@@ -29,9 +30,10 @@ def test_merge_compact_bounds():
 
 
 def test_streaming_heavy_hitters_guarantee(spark, sf_dir, tmp_path):
+    from pasardassist_spark.streaming.generations import start_epochs
     from pasardassist_spark.streaming.heavyhitters import (
+        apply_batch,
         heavy_hitters_from_state,
-        maintain_heavy_hitters,
     )
 
     ev = load(spark, sf_dir, "events").select("user_id")
@@ -63,10 +65,10 @@ def test_streaming_heavy_hitters_guarantee(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = maintain_heavy_hitters(
-        stream, str(tmp_path / "state"), str(tmp_path / "ckpt"),
-        "user_id", capacity=capacity,
-    )
+    q = start_epochs(stream, str(tmp_path / "ckpt"), partial(
+        apply_batch, state_dir=str(tmp_path / "state"), key_col="user_id",
+        capacity=capacity,
+    ))
     q.processAllAvailable()
     q.stop()
 
@@ -100,21 +102,21 @@ def test_heavy_hitter_retry_is_noop(spark, tmp_path):
 
     state = str(tmp_path / "state")
     b1 = spark.createDataFrame([(1,)] * 5 + [(2,)] * 3, "user_id long")
-    apply_batch(spark, b1, state, "user_id", 8, 5, epoch_id=0)
+    apply_batch(b1, 0, state, "user_id", 8, 5)
     first = {
         r.user_id: r.est
         for r in heavy_hitters_from_state(spark, state).collect()
     }
     assert first == {1: 5, 2: 3}
     # retry of epoch 0: a no-op, not a double count
-    apply_batch(spark, b1, state, "user_id", 8, 5, epoch_id=0)
+    apply_batch(b1, 0, state, "user_id", 8, 5)
     assert {
         r.user_id: r.est
         for r in heavy_hitters_from_state(spark, state).collect()
     } == first
     # epoch 1 applies normally
     b2 = spark.createDataFrame([(2,)] * 4, "user_id long")
-    apply_batch(spark, b2, state, "user_id", 8, 5, epoch_id=1)
+    apply_batch(b2, 1, state, "user_id", 8, 5)
     assert {
         r.user_id: r.est
         for r in heavy_hitters_from_state(spark, state).collect()

@@ -6,13 +6,15 @@ be exactly-once under a foreachBatch replay."""
 from __future__ import annotations
 
 import os
+from functools import partial
 
 from pyspark.sql import functions as F
 
+from pasardassist_spark.streaming.generations import start_epochs
 from pasardassist_spark.streaming.hll import (
     HLL_LG_K,
+    apply_hll_batch,
     distinct_counts_from_state,
-    maintain_distinct_counts,
 )
 from pasardassist_spark.tables import load
 
@@ -39,9 +41,9 @@ def test_streaming_estimate_equals_batch_sketch(spark, sf_dir, tmp_path):
         .parquet(src)
     )
     state = str(tmp_path / "state")
-    q = maintain_distinct_counts(
-        stream, state, str(tmp_path / "ckpt"), ["event_type"], "user_id"
-    )
+    q = start_epochs(stream, str(tmp_path / "ckpt"), partial(
+        apply_hll_batch, state_dir=state, keys=["event_type"], value_col="user_id"
+    ))
     q.processAllAvailable()
     q.stop()
 
@@ -77,27 +79,15 @@ def test_streaming_estimate_equals_batch_sketch(spark, sf_dir, tmp_path):
 def test_replayed_epoch_is_exactly_once(spark, sf_dir, tmp_path):
     """n_events is a SUM — a replayed epoch would double it without the
     epoch guard; the estimate is union-idempotent either way."""
-    from pasardassist_spark.streaming.ingest import merge_into_bucketed_state
-    from pasardassist_spark.streaming.hll import _union_sketches
-
     ev = load(spark, sf_dir, "events").select("event_type", "user_id").limit(200)
     state = str(tmp_path / "state")
-    delta = ev.groupBy("event_type").agg(
-        F.hll_sketch_agg("user_id", F.lit(HLL_LG_K)).alias("sk"),
-        F.count(F.lit(1)).alias("n_events"),
-    )
-    merge_into_bucketed_state(
-        delta, state, ("event_type",), _union_sketches(["event_type"]),
-        2, epoch_id=0,
-    )
+    apply_hll_batch(ev, 0, state, ["event_type"], "user_id")
     first = {
         r.event_type: (r.est_distinct, r.n_events)
         for r in distinct_counts_from_state(spark, state).collect()
     }
-    merge_into_bucketed_state(  # replay of epoch 0: must be a no-op
-        delta, state, ("event_type",), _union_sketches(["event_type"]),
-        2, epoch_id=0,
-    )
+    # replay of epoch 0: must be a no-op
+    apply_hll_batch(ev, 0, state, ["event_type"], "user_id")
     again = {
         r.event_type: (r.est_distinct, r.n_events)
         for r in distinct_counts_from_state(spark, state).collect()

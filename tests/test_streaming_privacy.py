@@ -4,12 +4,15 @@ replay, and its below-k readout drives the ST6 alerting channel."""
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import functions as F
 
+from pasardassist_spark.streaming.generations import start_epochs
 from pasardassist_spark.streaming.privacy import (
+    apply_kanon_batch,
     below_k_readout,
     k_anonymity_from_state,
-    maintain_k_anonymity,
 )
 from pasardassist_spark.tables import load
 
@@ -41,7 +44,9 @@ def test_incremental_equals_batch_over_micro_batches(spark, sf_dir, tmp_path):
         .select(*QI)
     )
     state = str(tmp_path / "state")
-    q = maintain_k_anonymity(stream, QI, state, str(tmp_path / "ckpt"))
+    q = start_epochs(stream, str(tmp_path / "ckpt"), partial(
+        apply_kanon_batch, state_dir=state, qi=QI
+    ))
     q.processAllAvailable()
     q.stop()
     got = {
@@ -71,7 +76,9 @@ def test_below_k_readout_drives_alert_channel(spark, sf_dir, tmp_path):
     ev, src = _src(spark, sf_dir, tmp_path, 1)
     stream = spark.readStream.schema(ev.schema).parquet(src).select(*QI)
     state = str(tmp_path / "state")
-    q = maintain_k_anonymity(stream, QI, state, str(tmp_path / "ckpt"))
+    q = start_epochs(stream, str(tmp_path / "ckpt"), partial(
+        apply_kanon_batch, state_dir=state, qi=QI
+    ))
     q.processAllAvailable()
     q.stop()
 
