@@ -537,16 +537,10 @@ def _sub_pixels(pixel: int, pred: int) -> int:
     return out
 
 
-def _ct_delta(t: int, c: int) -> int:
-    """ColorTransformDelta: signed(int8 t) * signed(int8 c) >> 5."""
-    ts = t - 256 if t >= 128 else t
-    cs = c - 256 if c >= 128 else c
-    return (ts * cs) >> 5
-
-
 def _ct_delta_vec(t: np.ndarray, c: np.ndarray) -> np.ndarray:
-    """_ct_delta over int32 arrays (numpy >> on negatives is arithmetic,
-    matching the scalar semantics)."""
+    """ColorTransformDelta over int32 arrays: signed(int8 t) * signed(int8 c)
+    >> 5, where t is already 0..255 and c is masked to its low byte (numpy
+    >> on negatives is arithmetic, as the spec's shift is)."""
     ts = np.where(t >= 128, t - 256, t)
     cs = np.where((c & 0xFF) >= 128, (c & 0xFF) - 256, c & 0xFF)
     return (ts * cs) >> 5

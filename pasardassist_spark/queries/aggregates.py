@@ -92,14 +92,6 @@ def a3_distinct_buyers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def approx_distinct_buyers(o: DataFrame) -> DataFrame:
-    """The raw 100 TB operator: approx_count_distinct (HLL) per status —
-    what production runs instead of the exact distinct scan."""
-    return o.groupBy("o_orderstatus").agg(
-        F.approx_count_distinct("o_custkey").alias("approx_buyers")
-    )
-
-
 @query(
     "a3_approx_distinct",
     oracle="""
@@ -117,8 +109,8 @@ def a3_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     change it), which makes `|approx - exact| <= 3*rsd*exact` a
     deterministic certificate (default rsd 0.05 -> 15% tolerance,
     ~9 sigma; observed error here is <2%). The exact count doubles as
-    the oracle-checkable payload; production runs the approx-only raw
-    form (approx_distinct_buyers above, error-bounded in tests/)."""
+    the oracle-checkable payload; production at scale keeps only the
+    ``approx_count_distinct`` column."""
     o = load(spark, sf_dir, "orders")
     return (
         o.groupBy("o_orderstatus")

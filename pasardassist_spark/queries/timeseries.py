@@ -45,21 +45,6 @@ def scalar_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def day_rollup_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ST3 batch twin: tumbling-day rollup with exact per-day countDistinct
-    (streaming aggs can't do exact distinct; the streaming form carries an
-    HLL sketch instead).  Registry-wise this is merged into
-    ``st3_stream_rollup`` — same oracle shape, the registered entry runs the
-    REAL streaming path, and the batch/streaming equality is pytest-checked
-    (tests/test_streaming.py)."""
-    ev = load(spark, sf_dir, "events")
-    return ev.groupBy(F.date_trunc("day", F.col("ts")).alias("day")).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum(dec2("value")).cast("double").alias("total_value"),
-        F.countDistinct("user_id").alias("n_users"),
-    )
-
-
 @query(
     "st1_stream_replay",
     oracle="""
@@ -456,8 +441,9 @@ def streaming_watermark_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sess_gap_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap sessionization (30-min inactivity closes a session): the lag ->
     marker -> running-sum -> aggregate shape, one hash shuffle by user. The
-    streaming twin (applyInPandasWithState, streaming/sessions.py) is
-    equivalence-tested against this batch form in tests/test_sessions.py."""
+    streaming twin (Spark's native session window, streaming/sessions.py)
+    is equivalence-tested against this batch form in tests/test_sessions.py,
+    the exact-gap boundary included."""
     from pasardassist_spark.streaming.sessions import sessionize_batch
 
     ev = load(spark, sf_dir, "events")

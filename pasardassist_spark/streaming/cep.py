@@ -1,12 +1,12 @@
 """Streaming CEP — operators/cep.py:match_pattern's streaming twin.
 
-Contiguous row-pattern matching over a live event stream with the same
-FINAL-emission discipline as streaming sessionization: a match row leaves
-the operator only once the event-time watermark has passed its LAST
-event's timestamp. At that point no admissible late event can insert
-between the matched rows (any such event would need a timestamp inside
-the match span, which is entirely below the watermark), so contiguity is
-sealed and append mode needs no retractions. Latency = watermark delay.
+Contiguous row-pattern matching over a live event stream, FINAL emission
+only: a match row leaves the operator only once the event-time watermark
+has passed its LAST event's timestamp. At that point no admissible late
+event can insert between the matched rows (any such event would need a
+timestamp inside the match span, which is entirely below the watermark),
+so contiguity is sealed and append mode needs no retractions. Latency =
+watermark delay.
 
 State per key: the not-yet-sealed events plus the last k-1 sealed events
 (a future arrival can still extend a pattern that starts on the sealed
@@ -16,6 +16,11 @@ Python fold never re-evaluates Spark expressions and state carries three
 long arrays, not event payloads. An emitted-through marker (ts, id) makes
 re-evaluation of the sealed tail idempotent: a match is emitted exactly
 once, in event-time order.
+
+This is the package's one hand-written ``applyInPandasWithState`` fold:
+no built-in streaming operator matches contiguous row patterns, whereas
+sessions and debounce bursts are Spark's native session windows
+(streaming/sessions.py).
 """
 
 from __future__ import annotations

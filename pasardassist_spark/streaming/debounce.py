@@ -1,172 +1,32 @@
-"""Streaming event debounce — the stateful twin of the batch
+"""Streaming event debounce — the stream twin of the batch
 ``dedup_debounce`` query (queries/analytics.py): within each
 (user, event_type), only the event opening a burst is emitted, with the
-count of events it suppressed, once the watermark proves the burst can
-no longer grow.
-
-Same finality contract as streaming/sessions.py: a burst leaves state
-only when `last_event + gap < watermark`, so no admissible late event
-can extend it or merge two pending bursts — emissions are append-mode
-FINAL rows, never retracted. A late event that bridges two pending
-bursts repairs them by merging (the opener of the merged burst is the
-earliest event, exactly as the batch window form computes).
-
-State per key is the open-burst list — O(bursts within the watermark
-horizon), bounded by the gap/watermark ratio, independent of history.
+count of events it suppressed. A burst is a gap session
+(``sessions.gap_window``), so the engine's session-window state gives the
+finality contract of streaming/sessions.py: a burst is emitted only once
+the watermark passes its end, and a late event that bridges two pending
+bursts merges them first (the opener of the merged burst is the earliest
+event, in the batch window order (ts, event_id)).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import (
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+
+from pasardassist_spark.streaming.sessions import gap_window
 
 DEBOUNCE_GAP_S = 300
-
-OUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("event_id", LongType()),
-        StructField("ts", TimestampType()),
-        StructField("n_suppressed", LongType()),
-    ]
-)
-
-# open bursts: parallel arrays of (opener_us, opener_event_id, last_us, n)
-_STATE_SCHEMA = StructType(
-    [
-        StructField("open_us", StringType()),  # csv of longs (see note)
-        StructField("opener_id", StringType()),
-        StructField("last_us", StringType()),
-        StructField("n", StringType()),
-    ]
-)
-# NB: arrays-of-long in GroupState hit Arrow schema quirks on some Spark
-# builds for nested types; csv-of-longs keeps the state payload trivially
-# portable and is KB-scale regardless (bursts within the watermark horizon).
-
-
-def _pack(xs: list[int]) -> str:
-    return ",".join(str(x) for x in xs)
-
-
-def _unpack(s: str) -> list[int]:
-    return [int(x) for x in s.split(",")] if s else []
-
-
-def _merge_bursts(
-    bursts: list[tuple[int, int, int, int]], gap_us: int
-) -> list[tuple[int, int, int, int]]:
-    """Sweep-merge (opener_us, opener_id, last_us, n) bursts: adjacent
-    bursts merge when the gap between them is <= gap_us. Sorting by
-    (opener_us, opener_id) makes the merged opener the earliest event
-    (ties by id), matching the batch window order (ts, event_id)."""
-    bursts.sort(key=lambda b: (b[0], b[1]))
-    out: list[tuple[int, int, int, int]] = []
-    for b in bursts:
-        if out and b[0] - out[-1][2] <= gap_us:
-            a = out[-1]
-            out[-1] = (a[0], a[1], max(a[2], b[2]), a[3] + b[3])
-        else:
-            out.append(b)
-    return out
-
-
-def _fold_debounce(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    user, etype = key
-    gap_us = DEBOUNCE_GAP_S * 1_000_000
-
-    bursts: list[tuple[int, int, int, int]] = []
-    if state.exists:
-        o, i, l, n = state.get
-        bursts = list(
-            zip(_unpack(o), _unpack(i), _unpack(l), _unpack(n))
-        )
-
-    if not state.hasTimedOut:
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        bursts.extend(
-            (int(us), int(eid), int(us), 1)
-            for us, eid in zip(rows["us"], rows["event_id"])
-        )
-
-    bursts = _merge_bursts(bursts, gap_us)
-
-    wm_us = state.getCurrentWatermarkMs() * 1000
-    final = [b for b in bursts if b[2] + gap_us < wm_us]
-    remaining = [b for b in bursts if b[2] + gap_us >= wm_us]
-
-    if remaining:
-        state.update(
-            (
-                _pack([b[0] for b in remaining]),
-                _pack([b[1] for b in remaining]),
-                _pack([b[2] for b in remaining]),
-                _pack([b[3] for b in remaining]),
-            )
-        )
-        next_ms = min(b[2] for b in remaining) // 1000 + gap_us // 1000 + 1
-        state.setTimeoutTimestamp(
-            max(next_ms, state.getCurrentWatermarkMs() + 1)
-        )
-    elif state.exists:
-        state.remove()
-
-    if final:
-        yield pd.DataFrame(
-            [
-                (
-                    user,
-                    etype,
-                    eid,
-                    # tz-aware: a NAIVE stamp would be reinterpreted in
-                    # the session timezone, shifting the instant anywhere
-                    # the session is not pinned to UTC
-                    pd.Timestamp(open_us, unit="us", tz="UTC"),
-                    n - 1,
-                )
-                for (open_us, eid, _last, n) in final
-            ],
-            columns=[
-                "user_id",
-                "event_type",
-                "event_id",
-                "ts",
-                "n_suppressed",
-            ],
-        )
 
 
 def debounce_stream(stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
     """Streaming debounce over an event stream with a ``ts`` column:
-    append-mode FINAL burst-opener rows, each with its suppression
-    count. Equivalence with the batch form is pytested
-    (tests/test_streaming_debounce.py)."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    ev = stream.withWatermark("ts", watermark).select(
-        "user_id",
-        "event_type",
-        "event_id",
-        "ts",
-        F.unix_micros(F.col("ts")).alias("us"),
-    )
-    return ev.groupBy("user_id", "event_type").applyInPandasWithState(
-        _fold_debounce,
-        OUT_SCHEMA,
-        _STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
+    append-mode FINAL burst-opener rows, each with its suppression count."""
+    return (
+        stream.withWatermark("ts", watermark)
+        .groupBy("user_id", "event_type", gap_window("ts", DEBOUNCE_GAP_S))
+        .agg(
+            F.min(F.struct("ts", "event_id")).alias("opener"),
+            (F.count(F.lit(1)) - 1).alias("n_suppressed"),
+        )
+        .select("user_id", "event_type", "opener.event_id", "opener.ts", "n_suppressed")
     )

@@ -381,8 +381,9 @@ def apply_entity_batch(
 
 
 def streaming_day_rollup(stream: DataFrame, watermark: str = "2 days") -> DataFrame:
-    """ST3: tumbling-day rollup with late-data watermark — the streaming
-    twin of queries/timeseries.day_rollup_batch (equality tested in §5.2)."""
+    """ST3: tumbling-day rollup with late-data watermark. ``st3_stream_rollup``
+    replays the events log through it and checks the rows against the batch
+    day rollup (its DuckDB oracle)."""
     return (
         stream.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 day").alias("w"))

@@ -1,59 +1,45 @@
-"""Gap sessionization — the custom stateful operator path (SURVEY.md §2.9).
+"""Gap sessionization: a session ends when a user is idle for more than
+``GAP_SECONDS`` (the reference has no session concept; a training-data
+event pipeline needs one for engagement features and sampling).
 
-The reference has no session concept; a training-data event pipeline needs
-one (per-user activity sessions feed engagement features and sampling). Two
-implementations with a tested equivalence:
+- ``sessionize_batch``: lag/gap marker, running sum to session ids, one
+  aggregation — one hash shuffle by user, and the form the DuckDB oracle
+  of ``sess_gap_sessionize`` mirrors.
+- ``sessionize_stream``: the same rows from Spark's native gap window
+  (``F.session_window``) as an append-mode streaming aggregation. The
+  engine keeps the in-flight sessions in its state store, merges two of
+  them when a late-but-admissible event bridges their gap, and emits a
+  session only once the watermark passes its end (last event + gap), so
+  every emitted row is FINAL and append mode needs no retractions. Pinned
+  by tests/test_sessions.py::test_late_event_merges_pending_sessions.
 
-- ``sessionize_batch``: the declarative form — lag/gap marker, running sum
-  to session ids, one aggregation. Pure window + groupBy: Catalyst plans a
-  single hash shuffle by user. This is also the DuckDB-oracle-checkable
-  form (``sess_gap_sessionize``).
-- ``sessionize_stream``: the streaming form via ``applyInPandasWithState``
-  — the escape hatch for stateful logic Structured Streaming's built-in
-  windows cannot express (a session's end depends on the NEXT event's gap,
-  not a fixed window).
-
-Emission contract (the guarantee that replaced the r5 "no retraction"
-limitation): an emitted session is FINAL. A session row leaves the
-operator only once the event-time watermark has passed ``session_end +
-gap`` — at that point every event Spark can still admit has
-``ts >= watermark > session_end + gap``, so no admissible late event can
-extend the session or merge it with a neighbor. Until then sessions live
-in state as mergeable intervals, and a late-but-within-watermark event
-that lands in the gap between two of them repairs the history by MERGING
-them (the case that previously produced a wrong early emission). Append
-mode is therefore sound without retractions; the cost is emission latency
-of exactly the watermark delay, and state of O(sessions inside the
-watermark horizon) per user. Pinned by
-tests/test_sessions.py::test_late_event_merges_pending_sessions.
-
-The streaming fold assumes batches arrive watermark-respecting (late rows
-beyond the watermark are dropped by Spark before the operator); within a
-batch, rows are folded as singleton intervals, so intra-batch order is
-irrelevant.
+Both forms build a session row from ``_session_aggs``, and ``gap_window``
+is the one place the boundary rule lives (debounce uses it too).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
-
-from pyspark.sql import DataFrame, Window as W, functions as F
+from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
 GAP_SECONDS = 1800
 
-SESSION_SCHEMA = (
-    "user_id long, session_start long, session_end long, n_events long, total_value double"
-)
-# Sessions-in-flight as parallel arrays (one entry per unfinalized session,
-# sorted by start): applyInPandasWithState state must be a fixed struct, and
-# arrays make the open-session/pending-session distinction unnecessary —
-# the open session is just the youngest interval.
-_STATE_SCHEMA = (
-    "starts array<long>, lasts array<long>, ns array<long>, totals array<double>"
-)
+
+def gap_window(ts: str, gap_seconds: int) -> Column:
+    """Spark's gap window for ``ts``: each event spans [ts, ts + gap) and
+    windows merge when one starts AT or before another's end, so an event
+    exactly ``gap_seconds`` after its predecessor joins its session and only
+    a GREATER gap opens a new one — the batch rule."""
+    return F.session_window(ts, f"{gap_seconds} seconds")
+
+
+def _session_aggs() -> list[Column]:
+    us = F.unix_micros(F.col("ts"))
+    return [
+        F.min(us).alias("session_start"),
+        F.max(us).alias("session_end"),
+        F.count(F.lit(1)).alias("n_events"),
+        F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
+    ]
 
 
 def sessionize_batch(ev: DataFrame, gap_seconds: int = GAP_SECONDS) -> DataFrame:
@@ -66,106 +52,15 @@ def sessionize_batch(ev: DataFrame, gap_seconds: int = GAP_SECONDS) -> DataFrame
     sess = ev.withColumn("_new", marker).withColumn(
         "_sid", F.sum("_new").over(w.rowsBetween(W.unboundedPreceding, 0))
     )
-    return sess.groupBy("user_id", "_sid").agg(
-        F.min(us).alias("session_start"),
-        F.max(us).alias("session_end"),
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
-    ).drop("_sid")
-
-
-def _merge_intervals(
-    sessions: list[tuple[int, int, int, float]], gap_us: int
-) -> list[tuple[int, int, int, float]]:
-    """Sweep-merge (start, last, n, total) intervals: two sessions are one
-    whenever the inter-session gap is <= gap_us. Merging pre-folded
-    aggregates is exact because every interval's internal event chain
-    already satisfies the gap rule, and a bridging event shrinks only the
-    INTER-interval gap."""
-    sessions.sort(key=lambda s: (s[0], s[1]))
-    out: list[tuple[int, int, int, float]] = []
-    for s in sessions:
-        if out and s[0] - out[-1][1] <= gap_us:
-            a = out[-1]
-            out[-1] = (min(a[0], s[0]), max(a[1], s[1]), a[2] + s[2], a[3] + s[3])
-        else:
-            out.append(s)
-    return out
-
-
-def _fold_session(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    (user,) = key
-    gap_us = GAP_SECONDS * 1_000_000
-
-    sessions: list[tuple[int, int, int, float]] = []
-    if state.exists:
-        starts, lasts, ns, totals = state.get
-        sessions = [
-            (int(s), int(l), int(n), float(t))
-            for s, l, n, t in zip(starts, lasts, ns, totals)
-        ]
-
-    if not state.hasTimedOut:
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        # every event is a singleton interval; the sweep below does all
-        # session formation AND late-event repair in one pass
-        sessions.extend(
-            (int(us), int(us), 1, float(v))
-            for us, v in zip(rows["us"], rows["value"])
-        )
-
-    sessions = _merge_intervals(sessions, gap_us)
-
-    # FINALITY GATE: emit only sessions the watermark has sealed.
-    wm_us = state.getCurrentWatermarkMs() * 1000
-    final = [s for s in sessions if s[1] + gap_us < wm_us]
-    remaining = [s for s in sessions if s[1] + gap_us >= wm_us]
-
-    if remaining:
-        state.update((
-            [s[0] for s in remaining],
-            [s[1] for s in remaining],
-            [s[2] for s in remaining],
-            [s[3] for s in remaining],
-        ))
-        # wake when the earliest in-flight session becomes final; must sit
-        # beyond the current watermark or Spark rejects the timestamp.
-        next_final_ms = min(s[1] for s in remaining) // 1000 + gap_us // 1000 + 1
-        state.setTimeoutTimestamp(max(next_final_ms, state.getCurrentWatermarkMs() + 1))
-    elif state.exists:
-        state.remove()
-
-    if final:
-        yield pd.DataFrame(
-            [(user, s, l, n, t) for (s, l, n, t) in final],
-            columns=["user_id", "session_start", "session_end", "n_events", "total_value"],
-        )
+    return sess.groupBy("user_id", "_sid").agg(*_session_aggs()).drop("_sid")
 
 
 def sessionize_stream(stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Streaming sessionization over an event stream with a ``ts`` column.
-    Append-mode with FINAL emissions: a session row is produced only once
-    the watermark proves no admissible event can extend or merge it (see
-    module docstring). Latency = watermark delay; in exchange, downstream
-    consumers never see a session retracted or superseded."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    ev = (
+    """Streaming sessionization over an event stream with a ``ts`` column:
+    append-mode FINAL session rows, the columns of ``sessionize_batch``."""
+    return (
         stream.withWatermark("ts", watermark)
-        .select(
-            "user_id",
-            "event_id",
-            "ts",  # the watermarked event-time column must reach the operator
-            F.unix_micros(F.col("ts")).alias("us"),
-            F.col("value").cast("double").alias("value"),
-        )
-    )
-    return ev.groupBy("user_id").applyInPandasWithState(
-        _fold_session,
-        SESSION_SCHEMA,
-        _STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
+        .groupBy("user_id", gap_window("ts", GAP_SECONDS))
+        .agg(*_session_aggs())
+        .drop("session_window")
     )

@@ -1,14 +1,78 @@
-"""Streaming sessionization (applyInPandasWithState) must emit exactly the
-sessions the batch window form computes."""
+"""Streaming sessionization (a native session-window aggregation) must emit
+exactly the sessions the batch window form computes, with the same gap
+boundary, and only once the watermark seals them. A source scan keeps
+hand-written state machines (``applyInPandasWithState``) to streaming/cep.py,
+the one pattern no built-in streaming operator expresses."""
 
 from __future__ import annotations
 
+import ast
 import os
+import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
-from pasardassist_spark.streaming.sessions import sessionize_batch, sessionize_stream
+from pasardassist_spark.streaming.sessions import (
+    GAP_SECONDS,
+    gap_window,
+    sessionize_batch,
+    sessionize_stream,
+)
 from pasardassist_spark.tables import load
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PACKAGE = os.path.join(REPO, "pasardassist_spark")
+US = 1_000_000
+# case rows start here (s): well above the epoch-0 initial watermark
+BASE_S = 100_000
+EVENT_COLUMNS = (
+    "event_id long, ts long, user_id long, event_type string, value double, props string"
+)
+
+
+def stream_rows(spark, tmp_path, batches, form, name):
+    """Run ``form`` over ``batches`` of (event_id, ts_us, user_id,
+    event_type, value) rows, one micro-batch each, then over a far-future
+    sentinel that moves the watermark past every case row. Returns the rows
+    emitted before the sentinel and all rows emitted; every case row is
+    also written to ``tmp_path/sf/events.parquet`` for the batch form."""
+    from pasardassist_spark.streaming import read_event_stream
+
+    src, sf = tmp_path / "src", tmp_path / "sf"
+    src.mkdir()
+    sf.mkdir()
+
+    def drop(rows, path):
+        df = spark.createDataFrame(
+            [(eid, t * 1000, u, et, v, "{}") for eid, t, u, et, v in rows], EVENT_COLUMNS
+        )
+        staging = str(tmp_path / "staging")
+        df.coalesce(1).write.parquet(staging)
+        (pq,) = [f for f in os.listdir(staging) if f.endswith(".parquet")]
+        os.rename(os.path.join(staging, pq), str(path))
+        shutil.rmtree(staging)
+
+    for i, rows in enumerate(batches):
+        drop(rows, src / f"p{i}.parquet")
+    drop([r for rows in batches for r in rows], sf / "events.parquet")
+
+    stream = read_event_stream(spark, str(src), max_files_per_trigger=1)
+    q = (
+        form(stream).writeStream.outputMode("append")
+        .format("memory")
+        .queryName(name)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        early = spark.table(name).collect()
+        drop([(0, 10 * 86400 * US, 99, "view", 0.0)], src / f"p{len(batches)}.parquet")
+        q.processAllAvailable()
+        return early, spark.table(name).collect()
+    finally:
+        q.stop()
 
 
 def test_stream_sessions_equal_batch(spark, sf_dir, tmp_path):
@@ -72,33 +136,55 @@ def test_stream_sessions_equal_batch(spark, sf_dir, tmp_path):
 
 
 def test_sessionize_agrees_with_builtin_session_window(spark, sf_dir):
-    """Cross-validation: the hand-rolled lag/running-sum sessionization
-    must produce the same (user, n_events, total) session multiset as
-    Spark's built-in session_window aggregation. (Boundary semantics
-    differ only for a gap of EXACTLY 30 min — measure-zero with
-    microsecond timestamps, absent from this data.)"""
-    from pasardassist_spark.streaming.sessions import sessionize_batch
-    from pasardassist_spark.tables import load
-
+    """Cross-validation: the lag/running-sum sessionize_batch must produce
+    the same session rows as Spark's built-in session window under
+    ``gap_window``, with start and end read off the window itself (it
+    closes at last event + gap)."""
     ev = load(spark, sf_dir, "events")
-    ours = sorted(
-        (r.user_id, r.n_events, round(r.total_value, 6))
-        for r in sessionize_batch(ev).collect()
-    )
-    builtin = sorted(
-        (r.user_id, r.n_events, round(r.total_value, 6))
-        for r in ev.groupBy(
-            F.session_window("ts", "30 minutes").alias("w"), "user_id"
-        )
+    w = F.col("w")
+    builtin = (
+        ev.groupBy("user_id", gap_window("ts", GAP_SECONDS).alias("w"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_value"),
+            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
         )
-        .collect()
+        .select(
+            "user_id",
+            F.unix_micros(w.start).alias("session_start"),
+            (F.unix_micros(w.end) - GAP_SECONDS * US).alias("session_end"),
+            "n_events",
+            "total_value",
+        )
     )
-    assert ours == builtin
+    ours = sorted(tuple(r) for r in sessionize_batch(ev).collect())
+    assert ours == sorted(tuple(r) for r in builtin.collect())
+    assert ours
+
+
+@pytest.mark.parametrize("past_gap_us, n_sessions", [(0, 1), (1, 2)])
+def test_stream_gap_boundary_equals_batch(spark, tmp_path, past_gap_us, n_sessions):
+    """An event exactly GAP_SECONDS after its predecessor stays in the
+    session; one microsecond later opens a new one. The stream form draws
+    the boundary where sessionize_batch does."""
+    t0 = BASE_S * US
+    t1 = t0 + GAP_SECONDS * US + past_gap_us
+    _, got = stream_rows(
+        spark, tmp_path, [[(1, t0, 1, "view", 1.0), (2, t1, 1, "view", 2.0)]],
+        sessionize_stream, f"sess_boundary_{past_gap_us}",
+    )
+    want = sessionize_batch(load(spark, str(tmp_path / "sf"), "events")).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+    assert len(got) == n_sessions
+
+
+def test_stream_schema_is_the_session_row(spark, tmp_path):
+    stream = spark.readStream.schema(
+        "event_id long, ts timestamp, user_id long, event_type string, value double"
+    ).parquet(str(tmp_path))
+    assert sessionize_stream(stream).schema.simpleString() == (
+        "struct<user_id:bigint,session_start:bigint,session_end:bigint,"
+        "n_events:bigint,total_value:double>"
+    )
 
 
 def test_late_event_merges_pending_sessions(spark, tmp_path):
@@ -157,3 +243,38 @@ def test_late_event_merges_pending_sessions(spark, tmp_path):
     ]
     # one FINAL session spanning the bridge, all three events, exact sum
     assert got == [(B * US, (B + 3000) * US, 3, 7.0)]
+
+
+def _state_machines(root: str) -> list[str]:
+    """Every ``applyInPandasWithState`` attribute under ``root`` outside
+    ``streaming/cep.py``, as ``relpath:line``."""
+    cep = os.path.join("streaming", "cep.py")
+    found = []
+    for dirpath, _, files in os.walk(root):
+        for f in files:
+            path = os.path.join(dirpath, f)
+            rel = os.path.relpath(path, root)
+            if not f.endswith(".py") or rel == cep:
+                continue
+            with open(path, encoding="utf-8") as fh:
+                tree = ast.parse(fh.read(), path)
+            found += [
+                f"{rel}:{node.lineno}"
+                for node in ast.walk(tree)
+                if isinstance(node, ast.Attribute) and node.attr == "applyInPandasWithState"
+            ]
+    return sorted(found)
+
+
+def test_only_cep_hand_writes_a_state_machine():
+    offenders = _state_machines(PACKAGE)
+    assert not offenders, f"applyInPandasWithState outside streaming/cep.py: {offenders}"
+
+
+def test_scan_flags_every_state_machine(tmp_path):
+    (tmp_path / "streaming").mkdir()
+    fold = "def run(ev, f):\n    return ev.groupBy('k').applyInPandasWithState(f)\n"
+    (tmp_path / "streaming" / "sessions.py").write_text(fold)
+    (tmp_path / "streaming" / "cep.py").write_text(fold)
+    (tmp_path / "q.py").write_text("fold = grouped.applyInPandasWithState\n")
+    assert _state_machines(str(tmp_path)) == ["q.py:1", "streaming/sessions.py:2"]

@@ -1,15 +1,18 @@
-"""Streaming debounce (applyInPandasWithState) must emit exactly the
-burst-opener rows the batch window form computes."""
+"""Streaming debounce (a native session-window aggregation) must emit
+exactly the burst-opener rows the batch window form computes, with the same
+gap boundary, and only once the watermark seals a burst."""
 
 from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from pasardassist_spark.queries.analytics import dedup_debounce
-from pasardassist_spark.streaming.debounce import debounce_stream
+from pasardassist_spark.streaming.debounce import DEBOUNCE_GAP_S, debounce_stream
 from pasardassist_spark.tables import load
+from test_sessions import BASE_S, US, stream_rows
 
 
 def test_stream_debounce_equals_batch(spark, sf_dir, tmp_path):
@@ -73,3 +76,48 @@ def test_stream_debounce_equals_batch(spark, sf_dir, tmp_path):
     }
     assert got == want
     assert len(got) > 0
+
+
+@pytest.mark.parametrize("past_gap_us, n_bursts", [(0, 1), (1, 2)])
+def test_stream_gap_boundary_equals_batch(spark, tmp_path, past_gap_us, n_bursts):
+    """An event exactly DEBOUNCE_GAP_S after its predecessor stays in the
+    burst; one microsecond later opens a new one, as in dedup_debounce's
+    window rule on the same rows."""
+    t0 = BASE_S * US
+    t1 = t0 + DEBOUNCE_GAP_S * US + past_gap_us
+    _, got = stream_rows(
+        spark, tmp_path, [[(1, t0, 1, "view", 0.0), (2, t1, 1, "view", 0.0)]],
+        debounce_stream, f"debounce_boundary_{past_gap_us}",
+    )
+    want = dedup_debounce(spark, str(tmp_path / "sf")).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+    assert len(got) == n_bursts
+
+
+def test_late_event_merges_pending_bursts(spark, tmp_path):
+    """Two bursts more than DEBOUNCE_GAP_S apart wait in state; a late event
+    within the gap of both merges them into one burst before anything is
+    emitted, and the merged opener is the earliest event."""
+    t0 = BASE_S * US
+    early, got = stream_rows(
+        spark,
+        tmp_path,
+        [
+            [(1, t0, 1, "view", 0.0), (2, t0 + 400 * US, 1, "view", 0.0)],
+            [(3, t0 + 200 * US, 1, "view", 0.0)],
+        ],
+        debounce_stream,
+        "debounce_late_bridge",
+    )
+    assert early == []
+    assert [(r.event_id, r.n_suppressed) for r in got] == [(1, 2)]
+
+
+def test_stream_schema_is_the_opener_row(spark, tmp_path):
+    stream = spark.readStream.schema(
+        "event_id long, ts timestamp, user_id long, event_type string, value double"
+    ).parquet(str(tmp_path))
+    assert debounce_stream(stream).schema.simpleString() == (
+        "struct<user_id:bigint,event_type:string,event_id:bigint,ts:timestamp,"
+        "n_suppressed:bigint>"
+    )
